@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_cdc_redshift_spark.plans import SPECS  # noqa: E402
 from kafka_cdc_redshift_spark.plans.catalog import warm_fixtures  # noqa: E402
-from kafka_cdc_redshift_spark.session import build_session  # noqa: E402
+from kafka_cdc_redshift_spark.session import build_session, host_sizing  # noqa: E402
 
 
 def default_detail_path() -> str:
@@ -33,7 +33,7 @@ def default_detail_path() -> str:
     clobbered the 32-core detail, so PERF_r12 had no per-query table)."""
     from __spark_entry__ import ROUND
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_sizing()[0]
     return f"BENCH_DETAIL_r{ROUND:02d}_c{cpus}.json"
 
 

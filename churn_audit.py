@@ -33,6 +33,7 @@ from kafka_cdc_redshift_spark.streaming.dedup_ingest import DedupIngest
 from kafka_cdc_redshift_spark.streaming.retrieval_ingest import RetrievalIngest
 from kafka_cdc_redshift_spark.streaming.store import AppendLog
 from kafka_cdc_redshift_spark.functions.similarity import subvector_codebooks
+from kafka_cdc_redshift_spark.session import host_sizing
 
 
 def _count(spark, log, table):
@@ -169,7 +170,7 @@ def main():
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(host_sizing()[0])
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("churn_audit")

@@ -63,8 +63,12 @@ def merge_changes(
       * "anti_join": target LEFT ANTI updates.keys ∪ surviving updates —
         with `broadcast_updates` the target never shuffles at all; preferred
         for a small rate-limited batch against a huge keyed target (the
-        100 TB streaming shape). Note: consumes `updates` twice, so cache
-        the batch upstream (the streaming shell does).
+        100 TB streaming shape). The key side is taken from `updates`
+        BEFORE the LWW dedup (dedup keeps one row per key and drops no
+        key, so the key set is the same), so only the incoming side pays
+        the dedup window. `updates` is still evaluated twice, once per
+        side: keep its lineage cheap or cached (the streaming shell
+        passes rows parsed from its cached batch).
     """
     keys = list(keys)
     tiebreak = [c for c in ("data_index_aws",) if c in updates.columns]
@@ -104,10 +108,12 @@ def merge_changes(
             )
         return winners.select(*target.columns)
 
+    join_side = updates.select(*keys)
+    if broadcast_updates:
+        join_side = F.broadcast(join_side)
+    survivors = target.join(join_side, on=keys, how="left_anti")
     if dedup_updates:
         updates = lww_dedup(updates, keys, order)
-    join_side = F.broadcast(updates.select(*keys)) if broadcast_updates else updates.select(*keys)
-    survivors = target.join(join_side, on=keys, how="left_anti")
     incoming = updates if skip_delete else updates.filter(F.col(op_col) != delete_op)
     drop_cols = [c for c in (op_col, "ts_ms", "data_index_aws") if c in incoming.columns]
     incoming = incoming.drop(*drop_cols)

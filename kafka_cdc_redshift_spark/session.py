@@ -11,8 +11,53 @@ cluster (rule of thumb: 2-3x total cores, AQE coalesces the excess).
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
+
+#: the heap the engine was tuned with; hosts with less memory get less
+_HEAP_CAP_MB = 20 * 1024
+#: share of MemAvailable the pre-touched driver heap may commit
+_HEAP_SHARE = 0.6
+
+
+def session_sizing(
+    env: Mapping[str, str], host_cpus: int, mem_available_kb: int | None,
+) -> tuple[int, str]:
+    """(task slots, driver heap) for a local session. `SPARK_GRAFT_CPUS`
+    and `SPARK_GRAFT_DRIVER_MEM` in `env` win; otherwise the host decides:
+    every CPU this process may run on, and a heap of min(20g, 60% of
+    MemAvailable). The heap is pre-touched at JVM start, so a default
+    larger than the free memory would stop the JVM from starting at all.
+    `mem_available_kb=None` (no /proc/meminfo) keeps the 20g cap."""
+    cpus = int(env.get("SPARK_GRAFT_CPUS") or host_cpus)
+    mem = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        mb = _HEAP_CAP_MB
+        if mem_available_kb is not None:
+            mb = max(512, min(mb, int(mem_available_kb * _HEAP_SHARE) // 1024))
+        mem = f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
+    return cpus, mem
+
+
+def _mem_available_kb() -> int | None:
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def host_sizing() -> tuple[int, str]:
+    """`session_sizing` for this process's environment and host."""
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API outside Linux
+        cpus = os.cpu_count() or 1
+    return session_sizing(os.environ, cpus, _mem_available_kb())
 
 
 def build_session(
@@ -21,9 +66,9 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_sizing()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
     # Fixed, pre-touched heap. With a large -Xmx and a small initial heap,
     # G1 grows the committed heap in multi-GiB steps during allocation-heavy
     # (JSON parse) queries; 32 task threads then page-fault fresh kernel
@@ -33,7 +78,7 @@ def build_session(
     # deterministic bench ordering made the expansion always land on the
     # same query. -Xms == -Xmx + AlwaysPreTouch commits every heap page once
     # at startup (~1-2 s) and removes the stalls entirely (12/12 stable runs).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g")
+    # The heap is sized to fit the host (see session_sizing).
     jvm_opts = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
     if extra_conf and "spark.driver.extraJavaOptions" in extra_conf:
         extra_conf = dict(extra_conf)

@@ -21,7 +21,7 @@ from __future__ import annotations
 import concurrent.futures as cf
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from pyspark.sql import functions as F
@@ -403,42 +403,49 @@ class CdcBatchProcessor:
         return passing
 
     # -- per-table task ----------------------------------------------------
-    def _batch_route_counts(self, batch_df: DataFrame) -> dict | None:
-        """One routing census for the whole batch: rows per (db, table)
-        under the format's FULL routing decision — keys plus the fused
-        parser's op-code / control-record / non-empty-array predicates,
-        so a positive count genuinely implies a non-empty parse (a count
-        over keys alone would let an op-filtered-out event — a Canal DDL,
-        an unknown Debezium op — publish empty target versions). Replaces
-        the per-rule isEmpty probe job for exact-match rules — at an
-        N-rule fan-out, 1 job instead of N. Returns None for formats
-        without a declared census (those rules keep the per-rule probe)."""
+    def _batch_route_counts(
+        self, batch_df: DataFrame,
+    ) -> tuple[int, dict | None]:
+        """The batch's entry census, ONE grouped aggregation over the
+        cached batch: returns (total rows, routed rows per (db, table)).
+        It is the first action on the persisted batch, so it also
+        materializes the cache every rule task then reads, and the total
+        decides whether the batch is empty.
+
+        A row counts as routed under the format's FULL routing decision —
+        keys plus the fused parser's op-code / control-record /
+        non-empty-array predicates — so a positive count genuinely
+        implies a non-empty parse (a count over keys alone would let an
+        op-filtered-out event — a Canal DDL, an unknown Debezium op —
+        publish empty target versions). Exact-match rules read their
+        count here instead of running their own isEmpty probe: at an
+        N-rule fan-out, 1 job instead of N. Formats without a declared
+        census get (batch_df.count(), None) and keep the per-rule
+        probe."""
         spec = _ROUTE_CENSUS.get(self.cdc_format)
         if spec is None:
-            return None
-        v = F.col("value")
-        df = batch_df.select(
-            F.get_json_object(v, spec["db"]).alias("__db"),
-            F.get_json_object(v, spec["tb"]).alias("__tb"),
-            F.get_json_object(v, spec["op"]).alias("__op"),
-            *(
-                [F.get_json_object(v, spec["ctl"]).alias("__ctl")]
-                if "ctl" in spec else []
-            ),
-            *(
-                [F.get_json_object(v, spec["array"]).alias("__arr")]
-                if "array" in spec else []
-            ),
-        ).filter(F.col("__op").isin(*spec["ops"]))
+            return batch_df.count(), None
+
+        def field(path: str):
+            return F.get_json_object(F.col("value"), path)
+
+        routed = field(spec["op"]).isin(*spec["ops"])
         if "ctl" in spec:
-            df = df.filter(F.col("__ctl") != "control")
+            routed &= field(spec["ctl"]) != "control"
         if "array" in spec:
-            df = df.filter(F.json_array_length("__arr") > 0)
-        return {
-            (r["__db"], r["__tb"]): r["cnt"]
-            for r in df.groupBy("__db", "__tb")
+            routed &= F.json_array_length(field(spec["array"])) > 0
+        rows = (
+            batch_df.groupBy(
+                field(spec["db"]).alias("db"),
+                field(spec["tb"]).alias("tb"),
+                # a NULL predicate (missing field, non-JSON row) is unrouted
+                F.coalesce(routed, F.lit(False)).alias("routed"),
+            )
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
+        )
+        return sum(r["cnt"] for r in rows), {
+            (r["db"], r["tb"]): r["cnt"] for r in rows if r["routed"]
         }
 
     def _run_table(
@@ -529,7 +536,10 @@ class CdcBatchProcessor:
                     skip_delete=rule.skip_delete,
                 )
             elif not rule.only_save_delete:
-                updates = lww_dedup(parsed, list(rule.primary_key), order)
+                # the merge takes the converted rows un-deduped: its
+                # anti-join key side needs no LWW window (dedup keeps one
+                # row per key and drops no key), only the incoming side does
+                updates = parsed
                 target = self.store.read(self.spark, rule.target_name)
                 if target is not None:
                     bookkeeping = {"op", "ts_ms", "data_index_aws"}
@@ -556,6 +566,7 @@ class CdcBatchProcessor:
                                 )
                             target = target.drop(*d.drop)
                 if target is None:
+                    updates = lww_dedup(updates, list(rule.primary_key), order)
                     out = updates.filter("op != 'd'").drop(
                         *[c for c in ("op", "ts_ms", "data_index_aws") if c in updates.columns]
                     )
@@ -566,14 +577,15 @@ class CdcBatchProcessor:
                         list(rule.primary_key),
                         skip_delete=rule.skip_delete,
                         order_by=order,
-                        dedup_updates=False,
+                        dedup_updates=True,
                         broadcast_updates=True,
                     )
+                # the row count rides the publish write itself (no re-read
+                # or second evaluation of the merge)
+                written = Observation()
+                out = out.observe(written, F.count(F.lit(1)).alias("n"))
                 self.store.publish(out, rule.target_name)
-                # row count from the published files' parquet footers — the
-                # publish write already computed the merge once; counting the
-                # plan again would re-run the whole join (2x per batch)
-                n = self.store.read(self.spark, rule.target_name).count()
+                n = written.get["n"]
             if rule.scd2_history:
                 # SCD2 dimension history alongside the latest-state target:
                 # close the open version for every batch key, append the
@@ -999,21 +1011,17 @@ class CdcBatchProcessor:
     # -- batch loop --------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int,
                       *, batch_timeout_sec: float | None = None) -> list[TaskStatus]:
-        if batch_df.isEmpty():
-            self.batch_statuses.append([])
-            return []
         batch_df = batch_df.persist()
         group = f"cdc-batch-{batch_id}"
         pool = cf.ThreadPoolExecutor(max_workers=self.max_workers)
         try:
-            batch_df.count()  # materialize the cache once for all tasks
-            # one routing census for all rules (multi-rule fan-outs only:
-            # with a single rule the census job would just replace the
-            # one probe job it saves)
-            route_counts = (
-                self._batch_route_counts(batch_df)
-                if len(self.rules) > 1 else None
-            )
+            # one census job over the whole batch: materializes the cache
+            # for all tasks, decides emptiness and yields the per-table
+            # routed counts that spare exact-match rules their probe job
+            total, route_counts = self._batch_route_counts(batch_df)
+            if not total:  # empty batch: nothing to merge or maintain
+                self.batch_statuses.append([])
+                return []
             futs = [
                 pool.submit(
                     self._run_table, batch_df, rule, group, batch_id,

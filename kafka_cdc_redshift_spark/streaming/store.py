@@ -8,6 +8,14 @@ flips a pointer file, so readers never observe a partial write and a failed
 batch leaves the previous version intact (same effect as the reference's
 BEGIN...END).
 
+The pointer, `<table>/_current.json`, holds:
+  * `version`: the live `version=N` directory;
+  * `schema`: that version's schema as Spark JSON, all fields nullable (as
+    Spark writes parquet), so `read` opens the version without a
+    schema-inference job; a pointer without it falls back to inference;
+  * `batch_id` / `folded_ids` (optional): the replay guards, see
+    `last_batch_id` and `folded_batch_ids`.
+
 At scale the store maps onto any table format with atomic commit (Delta/
 Iceberg swap, or HDFS rename); version dirs keep history for replay audits.
 """
@@ -19,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _adhoc_batch_id() -> str:
@@ -40,12 +49,17 @@ class ParquetTargetStore:
     def _meta_path(self, table: str) -> str:
         return os.path.join(self.root, table, "_current.json")
 
-    def current_version(self, table: str) -> int | None:
+    def _pointer(self, table: str) -> dict:
+        """The table's pointer contents (see the module docstring); {}
+        when the table has none."""
         try:
             with open(self._meta_path(table)) as f:
-                return json.load(f)["version"]
-        except (FileNotFoundError, KeyError, json.JSONDecodeError):
-            return None
+                return json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return {}
+
+    def current_version(self, table: str) -> int | None:
+        return self._pointer(table).get("version")
 
     def last_batch_id(self, table: str):
         """The foreachBatch batch_id recorded with the current version, or
@@ -56,11 +70,7 @@ class ParquetTargetStore:
         extra scan or shuffle. Maintenance republishes (compaction, delta
         folds) carry the pointer FORWARD (see `publish`): a rewrite that
         moves no data must not erase the replay guard."""
-        try:
-            with open(self._meta_path(table)) as f:
-                return json.load(f).get("batch_id")
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
+        return self._pointer(table).get("batch_id")
 
     def folded_batch_ids(self, table: str) -> list:
         """Batch ids whose deltas were folded into the CURRENT base version
@@ -69,11 +79,7 @@ class ParquetTargetStore:
         retiring the delta manifest, readers must not resolve those
         deltas a second time — `read` excludes any committed delta whose
         id appears here, and the next fold retires the leftovers."""
-        try:
-            with open(self._meta_path(table)) as f:
-                return json.load(f).get("folded_ids", [])
-        except (FileNotFoundError, json.JSONDecodeError):
-            return []
+        return self._pointer(table).get("folded_ids", [])
 
     def exists(self, table: str) -> bool:
         return self.current_version(table) is not None or bool(
@@ -88,9 +94,14 @@ class ParquetTargetStore:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         base = None
-        p = self.path(table)
-        if p:
-            base = spark.read.parquet(p)
+        meta = self._pointer(table)  # version and schema from ONE read
+        if meta.get("version") is not None:
+            reader = spark.read
+            if "schema" in meta:  # no schema-inference job
+                reader = reader.schema(T.StructType.fromJson(meta["schema"]))
+            base = reader.parquet(
+                os.path.join(self.root, table, f"version={meta['version']}")
+            )
         log, ids = self._live_append_ids(table)
         if not ids:
             return base
@@ -185,7 +196,10 @@ class ParquetTargetStore:
         out = os.path.join(self.root, table, f"version={nxt}")
         self._write_version(df, table, out, nxt)
         tmp = self._meta_path(table) + ".tmp"
-        meta = {"version": nxt}
+        # parquet files hold every field as nullable; record the schema
+        # the same way so a read with it equals an inferred read
+        schema = json.loads(df._jdf.schema().asNullable().json())
+        meta = {"version": nxt, "schema": schema}
         if batch_id is None:
             batch_id = self.last_batch_id(table)  # carry forward
         if folded_ids is None:

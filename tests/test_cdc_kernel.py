@@ -80,6 +80,38 @@ def test_merge_skip_delete_keeps_deletes(spark, sf_dir):
     assert merged.select("o_orderkey").distinct().count() == n_orders
 
 
+@pytest.mark.parametrize("skip_delete", [False, True])
+def test_anti_join_key_side_under_duplicate_keys(spark, skip_delete):
+    """The anti-join's broadcast key side is taken before the LWW dedup,
+    so it carries a key once per event. With several events per key in
+    one batch — insert->update->delete of key 1, delete->re-insert of
+    key 2 (a target row) — it must still merge exactly like the
+    single-window union."""
+    target = spark.createDataFrame(
+        [(2, "t2"), (3, "t3"), (5, "t5")], "k long, v string"
+    )
+    updates = spark.createDataFrame(
+        [
+            (1, "a", "c", 10), (1, "b", "u", 11), (1, "b", "d", 12),
+            (2, "t2", "d", 10), (2, "n2", "c", 11),
+            (4, "x", "c", 10), (4, "y", "u", 11),
+            (5, "t5", "d", 10),
+        ],
+        "k long, v string, op string, ts_ms long",
+    )
+
+    def merged(**kw):
+        out = merge_changes(target, updates, ["k"], skip_delete=skip_delete, **kw)
+        return sorted(map(tuple, out.collect()))
+
+    expected = merged(strategy="union_window")
+    assert merged(strategy="anti_join", broadcast_updates=True) == expected
+    assert expected == (
+        [(1, "b"), (2, "n2"), (3, "t3"), (4, "y"), (5, "t5")] if skip_delete
+        else [(2, "n2"), (3, "t3"), (4, "y")]
+    )
+
+
 def test_latest_deletes(spark, sf_dir):
     cl = synth_orders_changelog(spark, sf_dir)
     dels = latest_deletes(cl, ["o_orderkey"], ["ts_ms"])

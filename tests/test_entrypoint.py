@@ -436,7 +436,9 @@ def test_bench_round_label_from_explicit_marker():
     assert isinstance(entry.ROUND, int)
     # cpu-qualified since r13 (r12 verdict: the driver's 8-core scaling
     # run overwrote the 32-core detail, losing the per-query evidence)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from kafka_cdc_redshift_spark.session import host_sizing
+
+    cpus = host_sizing()[0]
     assert (
         bench.default_detail_path()
         == f"BENCH_DETAIL_r{entry.ROUND:02d}_c{cpus}.json"

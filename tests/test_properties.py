@@ -92,10 +92,15 @@ def test_lww_dedup_is_per_key_argmax(spark, cl):
 def test_merge_strategies_agree_and_match_model(spark, t, cl):
     target, changes = _t_df(spark, t), _cl_df(spark, cl)
     exp = _apply_model(t, cl)
-    for strategy in ("union_window", "anti_join"):
-        merged = merge_changes(target, changes, ["k"], strategy=strategy)
+    for strategy, broadcast in (
+        ("union_window", False), ("anti_join", False), ("anti_join", True),
+    ):
+        merged = merge_changes(
+            target, changes, ["k"], strategy=strategy,
+            broadcast_updates=broadcast,
+        )
         got = {r.k: r.v for r in merged.collect()}
-        assert got == exp, strategy
+        assert got == exp, (strategy, broadcast)
 
 
 @given(t=targets, cl=changelogs)

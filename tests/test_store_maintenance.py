@@ -777,3 +777,160 @@ def test_maintenance_marker_simultaneous_begin_race(tmp_path):
         assert outcomes == ["refused", "won"], results
         refused = next(r for r in results if r[0] == "refused")
         assert "force=True" in refused[1]
+
+
+# -- schema-carrying version pointers ---------------------------------------
+def _assert_pointer_read_matches_inference(spark, store, table):
+    """`store.read` opens the version with the schema its pointer recorded;
+    that must equal what schema inference gives (all fields nullable, as
+    parquet holds them) and return the same rows."""
+    import json
+    import os
+
+    with open(os.path.join(store.root, table, "_current.json")) as f:
+        assert "schema" in json.load(f)
+    got = store.read(spark, table)
+    inferred = spark.read.parquet(store.path(table))
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, inferred.collect()), key=repr
+    )
+    return got
+
+
+def test_pointer_schema_plain_publish(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    store = ParquetTargetStore(str(tmp_path / "s"))
+    # non-nullable top-level, struct, array-element and map-value fields
+    df = spark.range(3).select(
+        F.col("id").alias("pid"),
+        F.struct(F.col("id").alias("x")).alias("s"),
+        F.array(F.col("id")).alias("a"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+    )
+    assert not df.schema["pid"].nullable
+    store.publish(df, "t")
+    got = _assert_pointer_read_matches_inference(spark, store, "t")
+    assert got.schema["pid"].nullable
+    assert got.schema["a"].dataType.containsNull
+
+
+def test_pointer_schema_evolved_target(spark, tmp_path):
+    """The shape of test_schema_evolution_adds_and_drops_columns: the
+    second version's pointer carries the evolved schema (a dropped, b
+    added), not the first's."""
+    import json
+
+    from pyspark.sql import types as T
+
+    store = ParquetTargetStore(str(tmp_path / "store"))
+    v1 = T.StructType([T.StructField("pid", T.LongType()),
+                       T.StructField("a", T.StringType())])
+    v2 = T.StructType([T.StructField("pid", T.LongType()),
+                       T.StructField("b", T.LongType())])
+    rule = SyncRule(db="d", table="t", primary_key=("pid",))
+
+    def env(after, ts):
+        return json.dumps({"before": None, "after": after, "op": "c",
+                           "source": {"db": "d", "table": "t"}, "ts_ms": ts})
+
+    for i, (schema, after) in enumerate(
+        [(v1, {"pid": 1, "a": "x"}), (v2, {"pid": 2, "b": 9})]
+    ):
+        CdcBatchProcessor(
+            spark, [rule], store, payload_schemas={"t": schema}
+        ).process_batch(
+            spark.createDataFrame([(env(after, i + 1),)], "value string"), i
+        )
+    got = _assert_pointer_read_matches_inference(spark, store, "t")
+    assert got.columns == ["pid", "b"]
+    assert {r.pid: r.b for r in got.collect()} == {1: None, 2: 9}
+
+
+def test_pointer_schema_after_compaction(spark, tmp_path):
+    store = ParquetTargetStore(str(tmp_path / "s"))
+    store.publish(_many_files(_rows(spark, [(i, "x") for i in range(50)])), "t")
+    v = compact_table(store, spark, "t", target_bytes=1 << 30,
+                      min_files_to_compact=2)
+    assert v == 1, "compaction must actually run for this test"
+    assert _assert_pointer_read_matches_inference(spark, store, "t").count() == 50
+
+
+def test_pointer_schema_after_append_fold(spark, tmp_path):
+    store = ParquetTargetStore(str(tmp_path / "s"))
+    store.publish_append(_rows(spark, [(1, "a")]), "log", 0)
+    store.publish_append(
+        spark.createDataFrame(
+            [Row(pid=2, val="b", extra=9)], "pid long, val string, extra long"
+        ),
+        "log", 1,
+    )
+    assert store.fold_deltas(spark, "log") == 0
+    got = _assert_pointer_read_matches_inference(spark, store, "log")
+    assert {r.pid: r.extra for r in got.collect()} == {1: None, 2: 9}
+
+
+def test_pointer_schema_bucketed_store(spark, tmp_path):
+    from kafka_cdc_redshift_spark.streaming.store import BucketedTargetStore
+
+    store = BucketedTargetStore(
+        str(tmp_path / "store"), {"t": ["pid"]}, num_buckets=2
+    )
+    store.publish(_rows(spark, [(1, "a"), (2, "b")]), "t")
+    store.publish(_rows(spark, [(1, "c"), (3, "d")]), "t")
+    # the catalog entry serves the bucketed scan; without it (another
+    # session, a crashed publish) the pointer's schema opens the files
+    _assert_pointer_read_matches_inference(spark, store, "t")
+    spark.sql(f"DROP TABLE {store._catalog_name('t', 1)}")
+    got = _assert_pointer_read_matches_inference(spark, store, "t")
+    assert sorted(r.val for r in got.collect()) == ["c", "d"]
+
+
+def test_legacy_pointer_without_schema_still_reads(spark, tmp_path):
+    import json
+
+    store = ParquetTargetStore(str(tmp_path / "s"))
+    store.publish(_rows(spark, [(1, "a"), (2, "b")]), "t", batch_id=4)
+    with open(store._meta_path("t"), "w") as f:
+        json.dump({"version": 0, "batch_id": 4}, f)
+    got = store.read(spark, "t")
+    assert got.schema == spark.read.parquet(store.path("t")).schema
+    assert sorted(r.pid for r in got.collect()) == [1, 2]
+    assert store.last_batch_id("t") == 4
+    # the next publish records a schema again
+    store.publish(_rows(spark, [(3, "c")]), "t")
+    _assert_pointer_read_matches_inference(spark, store, "t")
+
+
+def test_task_rows_equal_target_rows(spark, tmp_path):
+    """`TaskStatus.rows` is observed on the publish write; it equals the
+    target's row count, 0 included (a batch deleting every key), and the
+    observation never blocks the batch."""
+    import json
+
+    rule = SyncRule(db="d", table="t", primary_key=("pid",))
+    store = ParquetTargetStore(str(tmp_path / "s"))
+    schema = spark.createDataFrame([], "pid long, val string").schema
+    proc = CdcBatchProcessor(spark, [rule], store, payload_schemas={"t": schema})
+
+    def batch(*events):
+        return spark.createDataFrame(
+            [(json.dumps({
+                "before": {"pid": p, "val": v} if op == "d" else None,
+                "after": None if op == "d" else {"pid": p, "val": v},
+                "source": {"db": "d", "table": "t"}, "op": op, "ts_ms": ts,
+            }),) for p, v, op, ts in events],
+            "value string",
+        )
+
+    batches = [
+        batch((1, "a", "c", 1), (2, "b", "c", 1), (3, "c", "c", 1)),
+        batch((2, "b2", "u", 2), (4, "d", "c", 2), (1, "a", "d", 2)),
+        batch((2, "b2", "d", 3), (3, "c", "d", 3), (4, "d", "d", 3)),
+    ]
+    for i, b in enumerate(batches):
+        [status] = proc.process_batch(b, i, batch_timeout_sec=300)
+        assert status.status == "finished"
+        assert status.rows == store.read(spark, "t").count()
+    assert status.rows == 0

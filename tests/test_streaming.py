@@ -674,13 +674,17 @@ def test_routing_census_short_circuit_matches_probe_path(spark, sf_dir, tmp_path
     assert store.read(spark, "ghost") is None
     assert store.read(spark, "ghost2") is None
 
-    # census-free twin (single-rule processors never build the census):
-    # target contents must be identical
+    # census-free twin: regex-spelled rules skip the census and run their
+    # own isEmpty probe; target contents must be identical
+    probed = [
+        SyncRule(db="salesdb", table="^orders$", primary_key=("o_orderkey",),
+                 target_table="orders"),
+        rules[2],
+    ]
     store2 = ParquetTargetStore(str(tmp_path / "store2"))
-    for rule in (rules[0], rules[2]):
-        CdcBatchProcessor(
-            spark, [rule], store2, payload_schemas=schemas
-        ).process_batch(topic, 0)
+    CdcBatchProcessor(
+        spark, probed, store2, payload_schemas=schemas
+    ).process_batch(topic, 0)
     for t in ("orders", "cust_rx"):
         a = sorted(map(tuple, store.read(spark, t).collect()))
         b = sorted(map(tuple, store2.read(spark, t).collect()))
@@ -959,3 +963,93 @@ def test_state_sketch_guards_survive_partial_commit_retry(
                            .select("o_orderpriority", "n", "sum", "sumsq")
                            .collect()))
     assert got_stats == want_stats and got_stats
+
+
+def _job_stage_sites(spark, fn):
+    """Run `fn`; return, per Spark job it started, the top frame of each
+    of the job's stages' call sites (the Spark API method that submitted
+    it, e.g. `...DataFrameReader.parquet(...)`)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    start = jsc.dagScheduler().numTotalJobs()
+    fn()
+    end = jsc.dagScheduler().numTotalJobs()
+    jsc.listenerBus().waitUntilEmpty()
+    status = jsc.statusStore()
+    jobs = []
+    for job_id in range(start, end):
+        info = sc.statusTracker().getJobInfo(job_id)
+        stages = list(info.stageIds) if info is not None else []
+        jobs.append([
+            status.lastStageAttempt(s).details().split("\n", 1)[0]
+            for s in stages
+        ])
+    return jobs
+
+
+def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
+    """A steady copy-on-write micro-batch of the 2-rule fan-out runs at
+    most 9 Spark jobs: one entry census, and per table the broadcast of
+    the key side and the publish write. No target read infers its schema
+    (the version pointer carries it), and the row count rides the write."""
+    batches = [
+        # orders inserts + customer snapshot, then updates, then deletes
+        # (each later batch re-upserts the customer images too)
+        synth_debezium_topic(spark, sf_dir, ops=(op,)) for op in ("c", "u", "d")
+    ]
+    batches = [
+        spark.createDataFrame([(r.value,) for r in b.collect()], "value string")
+        for b in batches
+    ]
+    jobs = [
+        _job_stage_sites(spark, lambda: processor.process_batch(b, i))
+        for i, b in enumerate(batches)
+    ]
+    assert all(
+        s.status == "finished"
+        for statuses in processor.batch_statuses for s in statuses
+    )
+    for steady in jobs[1:]:
+        assert len(steady) <= 9, steady
+    sites = [site for batch in jobs for job in batch for site in job]
+    assert sites  # the call sites were recorded
+    assert not [s for s in sites if "DataFrameReader.parquet" in s]
+
+
+def test_empty_batch_runs_nothing(spark, tmp_path, processor):
+    """An empty batch returns no statuses and triggers no maintenance."""
+    ran = []
+    processor._maybe_compact = lambda: ran.append("compact")
+    processor._maybe_fold_backstop = lambda: ran.append("fold")
+    processor._maybe_prune_versions = lambda: ran.append("prune")
+    empty = spark.createDataFrame([], "value string")
+    assert processor.process_batch(empty, 0) == []
+    assert processor.batch_statuses == [[]]
+    assert ran == []
+
+
+def test_unroutable_batch_is_no_data_for_every_rule(spark, sf_dir, tmp_path):
+    """Rows no rule routes (unknown op, another db, not JSON) make every
+    rule report no-data — single-rule processors included, which take the
+    census too — and create no target directory."""
+    orders = {"o_orderkey": 1, "o_custkey": 1}
+    batch = _topic_df(spark, [
+        _env("salesdb", "orders", orders, op="x"),
+        _env("otherdb", "orders", orders),
+        _env("otherdb", "customer", {"c_custkey": 1}),
+    ]).union(spark.createDataFrame([("not json",)], ["value"]))
+    schemas = {
+        "orders": load_table(spark, sf_dir, "orders").schema,
+        "customer": load_table(spark, sf_dir, "customer").schema,
+    }
+    root = tmp_path / "store"
+    for rules in (RULES, RULES[:1]):
+        proc = CdcBatchProcessor(
+            spark, rules, ParquetTargetStore(str(root)),
+            payload_schemas=schemas,
+        )
+        statuses = proc.process_batch(batch, 0)
+        assert sorted((s.table, s.status) for s in statuses) == sorted(
+            (r.target_name, "no-data") for r in rules
+        )
+    assert not {"orders", "customer"} & set(os.listdir(root))
