@@ -95,8 +95,12 @@ class SyncRule:
     # incremental aggregate maintenance: keep <table>_stats — mergeable
     # per-group stats of `stats_value_column` grouped by
     # `stats_group_columns` — folded algebraically per batch
-    # (functions/incremental.py), batch-id-guarded like scd2_history.
-    # Contract: append-only feeds (each non-delete image counted once).
+    # (functions/incremental.py). Every derived table below (this one,
+    # _ndv, _qsk, _cms, _topk, _sample, _bloom, _state_*) is its own
+    # batch-id-guarded fold (streaming/job.py _EVENT_FOLDS /
+    # _STATE_FOLDS), so an at-least-once retry folds each table at most
+    # once. Contract: append-only feeds (each non-delete image counted
+    # once).
     stats_group_columns: tuple[str, ...] = ()
     stats_value_column: str | None = None
     # ...and <table>_ndv: per-group DISTINCT count of this column kept as
@@ -108,21 +112,18 @@ class SyncRule:
     # mergeable log-bucket histogram sketch (functions/incremental
     # group_quantile_sketch — counts add, so batches fold in
     # O(|groups|+|batch|) and read-time estimates are deterministic).
-    # Requires stats_group_columns; batch-id-guarded like the stats/ndv
-    # tables (count addition is not idempotent).
+    # Requires stats_group_columns.
     stats_quantile_column: str | None = None
     # ...and <table>_cms + <table>_topk: per-group Count-Min frequency
     # sketch of this column plus the standing top-m candidate set
     # (functions/incremental group_freq_sketch / topk_candidates —
     # counters add, so batches fold in O(|groups|+|batch|); estimates
-    # are one-sided >= truth). Requires stats_group_columns;
-    # batch-id-guarded (counter addition is not idempotent).
+    # are one-sided >= truth). Requires stats_group_columns.
     stats_topk_column: str | None = None
     # ...and <table>_sample: per-group KMV bottom-k uniform sample of
     # this column's distinct values plus an oracle-replayable NDV
     # estimator (functions/incremental group_sample_sketch — min-of-
-    # union folds, so merging is associative+commutative+IDEMPOTENT;
-    # the batch-id guard is belt-and-braces here, like the HLL table).
+    # union folds, so merging is associative+commutative+IDEMPOTENT).
     # Requires stats_group_columns.
     stats_sample_column: str | None = None
     # ...and <table>_bloom: a standing Bloom membership bitset over this
@@ -139,8 +140,8 @@ class SyncRule:
     # group_stats_cdc — requires a before-emitting source, e.g. real
     # Debezium; updates without a before image degrade to append
     # semantics for that row). Requires stats_group_columns +
-    # stats_value_column; batch-id-guarded (signed addition is not
-    # idempotent). The plain <table>_stats stays an EVENT census.
+    # stats_value_column and a Debezium-format source. The plain
+    # <table>_stats stays an EVENT census.
     stats_current_state: bool = False
     # streaming BM25 inverted-index ingest (streaming/retrieval_ingest):
     # append each batch's (doc, dl, term, tf) postings to a standing

@@ -128,27 +128,6 @@ def bloom_hit_col(
     return hit
 
 
-def ngram_bloom(
-    eval_df: DataFrame,
-    *,
-    text_col: str = "text",
-    n: int = 3,
-    m: int = BLOOM_M,
-    d: int = BLOOM_D,
-) -> DataFrame:
-    """Bloom over an eval corpus' distinct word n-gram hashes — the
-    compressed stand-in for `contamination_score`'s broadcast hash
-    relation. One pass over the eval text; output is m bits, however
-    large the suite."""
-    gh = (
-        spread(eval_df)
-        .select(F.explode_outer(shingles_col(text_col, n)).alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(hash60(F.col("g")).alias("gh"))
-    )
-    return bloom_from_hashes(gh, "gh", m=m, d=d)
-
-
 def contamination_prefilter(
     train: DataFrame,
     bloom: DataFrame,

@@ -88,15 +88,6 @@ def alter_table_ddl(table: str, source: T.StructType, target: T.StructType) -> l
     return stmts
 
 
-def evolve_dataframe(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Managed-table evolution: reshape `df` to target ∪ new columns —
-    new columns appended, dropped columns null-filled on the target side is
-    the sink's concern; here we align the write side."""
-    cols = [f.name for f in target.fields if f.name in df.columns]
-    new = [c for c in df.columns if c not in {f.name for f in target.fields}]
-    return df.select(*cols, *new)
-
-
 # ---------------------------------------------------------------------------
 # Live-catalog reverse normalization: pg_table_def type strings -> StructType
 #

@@ -72,11 +72,6 @@ def safe_cast_integer(col, target: str = "smallint") -> "F.Column":
     return F.when(t.rlike("^[0-9]+$"), t).cast(target)
 
 
-def epoch_millis_to_timestamp(col) -> "F.Column":
-    """Mongo ts_ms -> timestamp (mongo_redshift_sink.py:129)."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-
-
 def apply_rule_conversions(df: DataFrame, rule: SyncRule) -> DataFrame:
     """All per-rule conversions in declaration order."""
     df = normalize_super_columns(df, rule.super_columns)

@@ -1,4 +1,4 @@
-"""Kafka source builders (streaming + bounded batch).
+"""Kafka source builder (streaming).
 
 Parity with the reference's reader (glue/cdc_redshift.py:92-105):
 subscribe one or more topics, cap per-trigger intake, choose offset origin by
@@ -50,15 +50,5 @@ def read_stream(spark: SparkSession, **kwargs) -> DataFrame:
     """Streaming source -> DataFrame[value: string] (S1+S2)."""
     reader = spark.readStream.format("kafka")
     for k, v in kafka_options(**kwargs).items():
-        reader = reader.option(k, v)
-    return reader.load().select(F.col("value").cast("string").alias("value"))
-
-
-def read_batch(spark: SparkSession, **kwargs) -> DataFrame:
-    """Bounded batch read over the same topics (backfill / replay)."""
-    opts = kafka_options(**kwargs)
-    opts.pop("maxOffsetsPerTrigger", None)
-    reader = spark.read.format("kafka")
-    for k, v in opts.items():
         reader = reader.option(k, v)
     return reader.load().select(F.col("value").cast("string").alias("value"))

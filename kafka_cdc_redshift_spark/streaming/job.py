@@ -27,8 +27,10 @@ from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from ..config import SyncRule
+from ..functions import incremental as inc
+from ..functions.membership import bloom_from_hashes, merge_blooms
 from ..operators.dedup import latest_deletes, lww_dedup
-from ..operators.merge import merge_changes
+from ..operators.merge import merge_changes, scd2_merge_batch
 from ..operators.normalize import (
     route_parse_canal,
     route_parse_debezium,
@@ -88,6 +90,72 @@ _ROUTE_CENSUS = {
         "ops": ("insert", "update", "replace", "delete"),
     },
 }
+
+
+def _bloom_sketch(obs: DataFrame, keys, col: str) -> DataFrame:
+    vals = obs.select(F.col(col).cast("long").alias("v"))
+    return bloom_from_hashes(vals.filter(F.col("v").isNotNull()), "v")
+
+
+def _bloom_fold(prev: DataFrame | None, batch: DataFrame, keys) -> DataFrame:
+    return batch if prev is None else merge_blooms(prev, batch)
+
+
+#: the derived tables a rule's stats_* fields enable, folded per batch
+#: in this order: (suffix, SyncRule field that enables the table and
+#: names its column, batch sketch fn(src, group keys, column), fold fn
+#: (previous table or None, batch sketch, group keys)). Every fold runs
+#: through its own batch-id guard (_fold_table): foreachBatch is
+#: at-least-once, and count/sum/counter folds are not idempotent.
+#: EVENT tables fold the batch's non-delete images (each one observation;
+#: append-only contract). _topk has no batch sketch: it re-ranks
+#: (standing candidates UNION batch values) by the _cms folded just
+#: before it. The bloom is table-global; every other event table needs
+#: stats_group_columns.
+_EVENT_FOLDS = (
+    ("_stats", "stats_value_column", inc.group_stats, inc.merge_group_stats),
+    ("_ndv", "stats_distinct_column",
+     inc.group_distinct_sketch, inc.merge_distinct_sketches),
+    ("_qsk", "stats_quantile_column",
+     inc.group_quantile_sketch, inc.merge_quantile_sketches),
+    ("_cms", "stats_topk_column",
+     inc.group_freq_sketch, inc.merge_freq_sketches),
+    ("_topk", "stats_topk_column", None, inc.topk_candidates),
+    ("_sample", "stats_sample_column",
+     inc.group_sample_sketch, inc.merge_sample_sketches),
+    ("_bloom", "stats_bloom_column", _bloom_sketch, _bloom_fold),
+)
+
+#: CURRENT-STATE tables (stats_current_state): the signed retract/assert
+#: census of the batch's before/after images, so they track updates and
+#: deletes. Same entry shape; the family needs stats_group_columns,
+#: stats_value_column and a before-emitting source (_BEFORE_FORMATS).
+_STATE_FOLDS = (
+    ("_state_stats", "stats_value_column",
+     inc.group_stats_cdc, inc.merge_group_stats_cdc),
+    ("_state_cms", "stats_topk_column",
+     inc.group_freq_sketch_cdc, inc.merge_freq_sketches_cdc),
+    ("_state_qsketch", "stats_quantile_column",
+     inc.group_quantile_sketch_cdc, inc.merge_quantile_sketches_cdc),
+)
+_BEFORE_FORMATS = ("FLINK-CDC", "MSK-DEBEZIUM-CDC")
+
+
+def _derived_folds(rule: SyncRule, cdc_format: str) -> tuple[list, list]:
+    """The rule's enabled (_EVENT_FOLDS, _STATE_FOLDS) entries, in fold
+    order — the one place that decides which derived tables exist."""
+    grouped = bool(rule.stats_group_columns)
+    event = [
+        e for e in _EVENT_FOLDS
+        if getattr(rule, e[1]) and (grouped or e[0] == "_bloom")
+    ]
+    state = []
+    if (
+        grouped and rule.stats_value_column and rule.stats_current_state
+        and cdc_format in _BEFORE_FORMATS
+    ):
+        state = [e for e in _STATE_FOLDS if getattr(rule, e[1])]
+    return event, state
 
 
 @dataclass
@@ -612,340 +680,17 @@ class CdcBatchProcessor:
                         tiebreak_cols=tiebreak,
                     )
                 else:
-                    from ..operators.merge import scd2_merge_batch
-
-                    # foreachBatch is at-least-once and this path is read-
-                    # modify-append: skip a batch whose id is already
-                    # committed in the history's version pointer (recorded
-                    # atomically with the publish below), so a checkpoint
-                    # retry can never re-close or re-append what attempt
-                    # one already landed
-                    if (
-                        batch_id is None
-                        or self.store.last_batch_id(htable) != batch_id
-                    ):
-                        prev_hist = self.store.read(self.spark, htable)
-                        new_hist = scd2_merge_batch(
-                            prev_hist, parsed, list(rule.primary_key),
-                            order_col=self.order_by[0],
-                            tiebreak_cols=tiebreak,
-                        )
-                        self.store.publish(new_hist, htable, batch_id=batch_id)
-            if rule.stats_group_columns and rule.stats_value_column:
-                # incremental aggregate maintenance (functions/incremental):
-                # fold the batch's mergeable per-group stats into
-                # <table>_stats algebraically — O(|groups| + |batch|) per
-                # ingest, the corpus never rescanned. Batch-id-guarded like
-                # the SCD2 history: a checkpoint retry of a batch whose
-                # stats already committed is skipped, so at-least-once
-                # delivery cannot double-count. Contract: append-only feed
-                # (each non-delete image is one observation).
-                from ..functions.incremental import group_stats, merge_group_stats
-
-                stable = f"{rule.target_name}_stats"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(stable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    bs = group_stats(
-                        obs, list(rule.stats_group_columns),
-                        rule.stats_value_column,
-                    )
-                    prev_stats = self.store.read(self.spark, stable)
-                    self.store.publish(
-                        merge_group_stats(
-                            prev_stats, bs, list(rule.stats_group_columns)
+                    # copy-on-write history is read-modify-append: the
+                    # guard keeps a checkpoint retry from re-closing or
+                    # re-appending what attempt one already landed
+                    self._fold_table(
+                        htable, batch_id,
+                        lambda prev: scd2_merge_batch(
+                            prev, parsed, list(rule.primary_key),
+                            order_col=self.order_by[0], tiebreak_cols=tiebreak,
                         ),
-                        stable, batch_id=batch_id,
                     )
-            if (
-                rule.stats_group_columns
-                and rule.stats_value_column
-                and rule.stats_current_state
-                and fmt in ("FLINK-CDC", "MSK-DEBEZIUM-CDC")
-            ):
-                # CURRENT-STATE stats through updates/deletes: re-parse
-                # this rule's slice WITH before images (only this rule
-                # pays the extra parse) and fold the signed retract/
-                # assert census into <table>_state_stats. Batch-id-
-                # guarded: signed addition is not idempotent.
-                from ..functions.incremental import (
-                    group_stats_cdc,
-                    merge_group_stats_cdc,
-                )
-
-                # Each state table is batch-id-guarded INDEPENDENTLY and at
-                # the SAME nesting level: a retry of a batch that crashed
-                # after the stats publish but before the cms/qsketch
-                # publishes must still fold this batch's signed delta into
-                # the tables that missed it. Nesting the sketch guards
-                # inside the stats guard would skip them forever once the
-                # stats table shows the batch as committed (the contract
-                # AnnIngest.process_batch keeps for its codes table).
-                cstable = f"{rule.target_name}_state_stats"
-                cmtable = (
-                    f"{rule.target_name}_state_cms"
-                    if rule.stats_topk_column else None
-                )
-                cqtable = (
-                    f"{rule.target_name}_state_qsketch"
-                    if rule.stats_quantile_column else None
-                )
-
-                def _needs(table: str | None) -> bool:
-                    return table is not None and (
-                        batch_id is None
-                        or self.store.last_batch_id(table) != batch_id
-                    )
-
-                need_cs = _needs(cstable)
-                need_cm = _needs(cmtable)
-                need_cq = _needs(cqtable)
-                if need_cs or need_cm or need_cq:
-                    schema = self.payload_schemas.get(rule.target_name)
-                    if schema is None:
-                        schema = infer_payload_schema(
-                            batch_df, fmt, rule.db, rule.table,
-                            table_is_regex=is_regex,
-                            sample_limit=self.infer_sample_limit,
-                        )
-                    if schema is not None:  # else: no routed rows -> no delta
-                        withb = route_parse_debezium(
-                            batch_df, rule.db, rule.table, schema,
-                            table_is_regex=is_regex, emit_before=True,
-                        )
-                        # no rule typeconv here: the census casts the
-                        # value itself, and conversions applied to the
-                        # FLAT columns but not the nested before image
-                        # would break the retract/assert symmetry
-                        if need_cs:
-                            delta = group_stats_cdc(
-                                withb,
-                                list(rule.stats_group_columns),
-                                rule.stats_value_column,
-                            )
-                            prev_cs = self.store.read(self.spark, cstable)
-                            self.store.publish(
-                                merge_group_stats_cdc(
-                                    prev_cs, delta,
-                                    list(rule.stats_group_columns),
-                                ),
-                                cstable, batch_id=batch_id,
-                            )
-                        if need_cm:
-                            # current-state heavy hitters: CMS counters
-                            # are sums, and sums retract — the signed
-                            # twin of the <table>_cms event sketch,
-                            # riding the same before-image parse.
-                            from ..functions.incremental import (
-                                group_freq_sketch_cdc,
-                                merge_freq_sketches_cdc,
-                            )
-
-                            cdelta = group_freq_sketch_cdc(
-                                withb,
-                                list(rule.stats_group_columns),
-                                rule.stats_topk_column,
-                            )
-                            prev_cm = self.store.read(
-                                self.spark, cmtable
-                            )
-                            self.store.publish(
-                                merge_freq_sketches_cdc(
-                                    prev_cm, cdelta,
-                                    list(rule.stats_group_columns),
-                                ),
-                                cmtable, batch_id=batch_id,
-                            )
-                        if need_cq:
-                            # current-state quantile histogram: bucket
-                            # counts are sums too, so the same signed
-                            # fold keeps read-time quantile estimates
-                            # tracking the live table
-                            from ..functions.incremental import (
-                                group_quantile_sketch_cdc,
-                                merge_quantile_sketches_cdc,
-                            )
-
-                            qdelta = group_quantile_sketch_cdc(
-                                withb,
-                                list(rule.stats_group_columns),
-                                rule.stats_quantile_column,
-                            )
-                            prev_cq = self.store.read(
-                                self.spark, cqtable
-                            )
-                            self.store.publish(
-                                merge_quantile_sketches_cdc(
-                                    prev_cq, qdelta,
-                                    list(rule.stats_group_columns),
-                                ),
-                                cqtable, batch_id=batch_id,
-                            )
-            if rule.stats_group_columns and rule.stats_distinct_column:
-                # mergeable HLL distinct-count maintenance: the census
-                # column algebraic parts can't carry. The register union
-                # is idempotent, so even the batch-id guard is belt-and-
-                # braces here — a replayed batch folds to the same sketch.
-                from ..functions.incremental import (
-                    group_distinct_sketch,
-                    merge_distinct_sketches,
-                )
-
-                ntable = f"{rule.target_name}_ndv"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(ntable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    bsk = group_distinct_sketch(
-                        obs, list(rule.stats_group_columns),
-                        rule.stats_distinct_column,
-                    )
-                    prev_sk = self.store.read(self.spark, ntable)
-                    self.store.publish(
-                        merge_distinct_sketches(
-                            prev_sk, bsk, list(rule.stats_group_columns)
-                        ),
-                        ntable, batch_id=batch_id,
-                    )
-            if rule.stats_group_columns and rule.stats_quantile_column:
-                # mergeable quantile-sketch maintenance: log-bucket counts
-                # add, so the fold is algebraic like group_stats — and like
-                # it, NOT idempotent, hence the same batch-id guard.
-                from ..functions.incremental import (
-                    group_quantile_sketch,
-                    merge_quantile_sketches,
-                )
-
-                qtable = f"{rule.target_name}_qsk"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(qtable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    bq = group_quantile_sketch(
-                        obs, list(rule.stats_group_columns),
-                        rule.stats_quantile_column,
-                    )
-                    prev_q = self.store.read(self.spark, qtable)
-                    self.store.publish(
-                        merge_quantile_sketches(
-                            prev_q, bq, list(rule.stats_group_columns)
-                        ),
-                        qtable, batch_id=batch_id,
-                    )
-            if rule.stats_group_columns and rule.stats_topk_column:
-                # mergeable Count-Min heavy-hitters maintenance: counters
-                # add (batch-id-guarded like group_stats — addition is not
-                # idempotent); <table>_topk re-ranks (standing candidates
-                # UNION batch distinct values) by the merged sketch, so
-                # the candidate set a sketch alone can't enumerate is
-                # maintained in O(|groups|*m + |batch distinct|).
-                from ..functions.incremental import (
-                    group_freq_sketch,
-                    merge_freq_sketches,
-                    topk_candidates,
-                )
-
-                ctable = f"{rule.target_name}_cms"
-                ttable = f"{rule.target_name}_topk"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(ctable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    bc = group_freq_sketch(
-                        obs, list(rule.stats_group_columns),
-                        rule.stats_topk_column,
-                    )
-                    prev_c = self.store.read(self.spark, ctable)
-                    merged_c = merge_freq_sketches(
-                        prev_c, bc, list(rule.stats_group_columns)
-                    )
-                    self.store.publish(merged_c, ctable, batch_id=batch_id)
-                    cand = topk_candidates(
-                        self.store.read(self.spark, ttable),
-                        obs,
-                        self.store.read(self.spark, ctable),
-                        list(rule.stats_group_columns),
-                        rule.stats_topk_column,
-                    )
-                    self.store.publish(cand, ttable, batch_id=batch_id)
-            if rule.stats_group_columns and rule.stats_sample_column:
-                # mergeable KMV uniform-sample maintenance: min-of-union
-                # folds, so the merge is idempotent — like the HLL table,
-                # the batch-id guard here is belt-and-braces, not load-
-                # bearing. <table>_sample keeps the k smallest-hashed
-                # distinct values per group (uniform sample + an oracle-
-                # replayable NDV estimator).
-                from ..functions.incremental import (
-                    group_sample_sketch,
-                    merge_sample_sketches,
-                )
-
-                mtable = f"{rule.target_name}_sample"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(mtable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    bm = group_sample_sketch(
-                        obs, list(rule.stats_group_columns),
-                        rule.stats_sample_column,
-                    )
-                    prev_m = self.store.read(self.spark, mtable)
-                    self.store.publish(
-                        merge_sample_sketches(
-                            prev_m, bm, list(rule.stats_group_columns)
-                        ),
-                        mtable, batch_id=batch_id,
-                    )
-            if rule.stats_bloom_column:
-                # standing Bloom membership bitset over every value this
-                # table has ever ingested: bit_or folding is idempotent
-                # (like the KMV sample), so the guard is belt-and-braces;
-                # a probe miss certifies "never seen" in O(1) with zero
-                # reads of the target
-                from ..functions.membership import (
-                    bloom_from_hashes,
-                    merge_blooms,
-                )
-
-                btable = f"{rule.target_name}_bloom"
-                if (
-                    batch_id is None
-                    or self.store.last_batch_id(btable) != batch_id
-                ):
-                    obs = (
-                        parsed.filter(F.col("op") != "d")
-                        if "op" in parsed.columns else parsed
-                    )
-                    vals = obs.select(
-                        F.col(rule.stats_bloom_column).cast("long").alias("v")
-                    ).filter(F.col("v").isNotNull())
-                    bb = bloom_from_hashes(vals, "v")
-                    prev_b = self.store.read(self.spark, btable)
-                    self.store.publish(
-                        bb if prev_b is None else merge_blooms(prev_b, bb),
-                        btable, batch_id=batch_id,
-                    )
+            self._fold_derived(batch_df, rule, parsed, batch_id, is_regex)
             if rule.dedup_ingest or rule.bm25_ingest or rule.ann_ingest:
                 # CDC-correct ingest feed for the derived-state family:
                 # the batch's LWW-LATEST image per key (a micro-batch
@@ -1007,6 +752,81 @@ class CdcBatchProcessor:
             return TaskStatus(rule.target_name, "finished", rows=n)
         except Exception as e:  # noqa: BLE001 - reported to fail-fast logic
             return TaskStatus(rule.target_name, "error", error=repr(e))
+
+    def _needs(self, table: str, batch_id) -> bool:
+        """False when `table`'s pointer already records `batch_id` (it is
+        committed atomically with the publish: see store.last_batch_id)."""
+        return batch_id is None or self.store.last_batch_id(table) != batch_id
+
+    def _fold_table(self, table: str, batch_id, build) -> None:
+        """The read-fold-publish step of a table the batch folds into:
+        publish `build(previous version or None)` with `batch_id` in the
+        same pointer flip, unless this table already holds the batch.
+        Each table carries its own guard, so a retry after a crash
+        between two tables' publishes folds exactly the tables that
+        missed the batch — one guard shared by several tables would skip
+        the later ones for good."""
+        if self._needs(table, batch_id):
+            prev = self.store.read(self.spark, table)
+            self.store.publish(build(prev), table, batch_id=batch_id)
+
+    def _fold_derived(
+        self, batch_df: DataFrame, rule: SyncRule, parsed: DataFrame,
+        batch_id, is_regex: bool,
+    ) -> None:
+        """Fold the batch into the rule's derived tables (_derived_folds)
+        in O(|groups| + |batch|) each, the corpus never rescanned."""
+        event, state = _derived_folds(rule, self.cdc_format)
+        keys = list(rule.stats_group_columns)
+        obs = (
+            parsed.filter(F.col("op") != "d")
+            if "op" in parsed.columns else parsed
+        )
+        for suffix, field, sketch, fold in event:
+            col = getattr(rule, field)
+            if sketch is None:  # _topk, ranked by the _cms just folded
+                cms = f"{rule.target_name}_cms"
+                self._fold_table(
+                    rule.target_name + suffix, batch_id,
+                    lambda prev: fold(
+                        prev, obs, self.store.read(self.spark, cms), keys, col
+                    ),
+                )
+            else:
+                self._fold_table(
+                    rule.target_name + suffix, batch_id,
+                    lambda prev: fold(prev, sketch(obs, keys, col), keys),
+                )
+        # the state family shares one re-parse WITH before images (only
+        # this rule pays it, and only while some state table still needs
+        # the batch). No rule typeconv here: the census casts the value
+        # itself, and conversions applied to the FLAT columns but not the
+        # nested before image would break the retract/assert symmetry.
+        state = [
+            e for e in state
+            if self._needs(rule.target_name + e[0], batch_id)
+        ]
+        if not state:
+            return
+        schema = self.payload_schemas.get(rule.target_name)
+        if schema is None:
+            schema = infer_payload_schema(
+                batch_df, self.cdc_format, rule.db, rule.table,
+                table_is_regex=is_regex,
+                sample_limit=self.infer_sample_limit,
+            )
+            if schema is None:  # no routed rows -> no delta
+                return
+        withb = route_parse_debezium(
+            batch_df, rule.db, rule.table, schema,
+            table_is_regex=is_regex, emit_before=True,
+        )
+        for suffix, field, sketch, fold in state:
+            col = getattr(rule, field)
+            self._fold_table(
+                rule.target_name + suffix, batch_id,
+                lambda prev: fold(prev, sketch(withb, keys, col), keys),
+            )
 
     # -- batch loop --------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int,
@@ -1083,21 +903,20 @@ class CdcBatchProcessor:
                 # longer chain here is pre-existing history.
                 if t not in self._prune_warned:
                     self._prune_warned.add(t)
-                    if hasattr(self.store, "versions_on_disk"):
-                        chain = len(self.store.versions_on_disk(t))
-                        if chain > self.keep_versions + 1:
-                            import logging
+                    chain = len(self.store.versions_on_disk(t))
+                    if chain > self.keep_versions + 1:
+                        import logging
 
-                            logging.getLogger(__name__).warning(
-                                "retention: table %r has %d version dirs "
-                                "(pre-existing history); keep_versions=%d "
-                                "will prune all but the newest %d (plus a "
-                                "%.0fs grace window). Set "
-                                "keep_versions='all' to keep every "
-                                "version for replay audits.",
-                                t, chain, self.keep_versions,
-                                self.keep_versions, self.prune_grace_sec,
-                            )
+                        logging.getLogger(__name__).warning(
+                            "retention: table %r has %d version dirs "
+                            "(pre-existing history); keep_versions=%d "
+                            "will prune all but the newest %d (plus a "
+                            "%.0fs grace window). Set "
+                            "keep_versions='all' to keep every "
+                            "version for replay audits.",
+                            t, chain, self.keep_versions,
+                            self.keep_versions, self.prune_grace_sec,
+                        )
                 # spark is passed EXPLICITLY: this runs on pool worker
                 # threads where getActiveSession() is None (thread-local
                 # through py4j), which silently skipped the bucketed
@@ -1112,23 +931,32 @@ class CdcBatchProcessor:
         # concurrent like the other maintenance: at wide fan-outs the
         # rmtree of a full copy-on-write version dir per table is the
         # cost, and the dirs are disjoint
-        self._for_each_table(prune, self._maintained_tables())
+        self._for_each_table(prune, list(self._maintained_tables()))
 
-    def _maintained_tables(self) -> list[str]:
-        """Every table the rules can actually have created — the target
-        plus only the suffix tables the rule's flags enable (the same
-        conditions _maybe_compact applies). At a 100-rule fan-out the
-        unconditional 4-per-rule enumeration queued 300 no-op
-        maintenance tasks per batch against tables that cannot exist."""
-        out: list[str] = []
+    def _maintained_tables(self) -> dict[str, tuple]:
+        """{table: z-order columns} for every table the rules can have
+        published — the one list prune, fold backstop and compaction
+        share: the target (clustered by the rule's zorder_columns), the
+        suffix tables the rule's flags enable, and its derived tables
+        from the same _derived_folds that _run_table folds, so no
+        published table escapes maintenance. One entry per table NAME,
+        first rule wins: two rules sharing a table (a shared target, or
+        a target colliding with another rule's suffix table) must not
+        maintain it twice concurrently, racing its pointer, and the
+        winning clustering is the one a config reader sees first."""
+        out: dict[str, tuple] = {}
         for rule in self.rules:
-            out.append(rule.target_name)
-            if rule.save_delete or rule.only_save_delete:
-                out.append(f"{rule.target_name}_delete")
-            if rule.scd2_history:
-                out.append(f"{rule.target_name}_history")
-            if rule.quality_gate:
-                out.append(f"{rule.target_name}_rejected")
+            t = rule.target_name
+            out.setdefault(t, tuple(rule.zorder_columns))
+            event, state = _derived_folds(rule, self.cdc_format)
+            for suffix, on in (
+                ("_delete", rule.save_delete or rule.only_save_delete),
+                ("_history", rule.scd2_history),
+                ("_rejected", rule.quality_gate),
+                *((e[0], True) for e in event + state),
+            ):
+                if on:
+                    out.setdefault(t + suffix, ())
         return out
 
     def _maybe_fold_backstop(self) -> None:
@@ -1138,7 +966,7 @@ class CdcBatchProcessor:
         maintenance, not data loss: recorded and retried next batch, like
         compaction."""
         cap = self.max_deltas_before_fold
-        if not cap or not hasattr(self.store, "delta_count"):
+        if not cap:
             return
 
         def fold(t: str) -> None:
@@ -1148,34 +976,28 @@ class CdcBatchProcessor:
             except Exception as e:  # noqa: BLE001 - maintenance only
                 self.compact_errors.append((t, repr(e)))
 
-        self._for_each_table(fold, self._maintained_tables())
+        self._for_each_table(fold, list(self._maintained_tables()))
 
-    def _for_each_table(self, fn, tables) -> None:
+    def _for_each_table(self, fn, items) -> None:
         """Run independent per-table maintenance CONCURRENTLY on the
         processor's pool width. The r11 fan-out probe measured the
         serial per-table fold tail at 18.5 s of a 45.6 s wall (40%)
         for 30 merge-on-read tables — at the reference's ~100-rule
         shape a serial maintenance loop walls O(tables), while each
         table's fold/compact is an independent Spark job that local[*]
-        (or a cluster) overlaps fine. Distinct tables touch disjoint
+        (or a cluster) overlaps fine. `items` must be distinct tables
+        (or rules owning distinct state): distinct tables touch disjoint
         directories/manifests, so concurrency is safe by construction;
         `fn` must record its own errors (maintenance never fails the
         batch)."""
-        # dedupe identical items while preserving order (two rules
-        # sharing a target must not maintain the same table
-        # concurrently). NOTE: this is item-level — callers passing
-        # non-string items must dedupe by TABLE NAME themselves
-        # (_maybe_compact does: its (table, zcols) tuples can differ
-        # while naming the same table; r11 ADVICE)
-        tables = list(dict.fromkeys(tables))
-        if len(tables) <= 1:
-            for t in tables:
+        if len(items) <= 1:
+            for t in items:
                 fn(t)
             return
         with cf.ThreadPoolExecutor(
-            max_workers=min(self.max_workers, len(tables))
+            max_workers=min(self.max_workers, len(items))
         ) as pool:
-            list(pool.map(fn, tables))
+            list(pool.map(fn, items))
 
     def _maybe_compact(self) -> None:
         if not self.compact_every_n_batches:
@@ -1186,44 +1008,6 @@ class CdcBatchProcessor:
         self._batches_since_compact = 0
         from ..operators.layout import compact_table
 
-        # gather every rule's maintainable tables first, then fold/compact
-        # them CONCURRENTLY (pool-wide): each is an independent Spark job
-        # over its own directories, and the r11 fan-out probe showed the
-        # serial loop dominating maintenance wall at wide fan-outs
-        all_tables: list[tuple[str, tuple]] = []
-        for rule in self.rules:
-            # (table, clustering): the delete log is append-only event data
-            # — size-compact it, but only the keyed target gets the rule's
-            # z-order clustering restored
-            all_tables.append((rule.target_name, tuple(rule.zorder_columns)))
-            if rule.save_delete or rule.only_save_delete:
-                all_tables.append((f"{rule.target_name}_delete", ()))
-            if rule.scd2_history:
-                # the history accrues per-batch state too (file-sets under
-                # copy-on-write, deltas under merge-on-read) — same cycle
-                all_tables.append((f"{rule.target_name}_history", ()))
-            if rule.quality_gate:
-                # the quarantine appends one delta per batch under both
-                # store modes — without a fold its read cost grows without
-                # bound, exactly like the delete log
-                all_tables.append((f"{rule.target_name}_rejected", ()))
-
-        # dedupe by TABLE NAME, not by (table, zcols) item (r11 ADVICE):
-        # _for_each_table's generic dedupe is on the full item, so two
-        # rules sharing a target_name with different zorder_columns — or
-        # a target colliding with another rule's _delete/_history suffix
-        # table — would fold/compact the same table concurrently, racing
-        # its manifest/version pointer. The FIRST rule's clustering wins
-        # — a deliberate choice where the old serial loop compacted the
-        # table once per rule and the LAST rule's clustering happened to
-        # stick (an accident of iteration order, never a contract);
-        # first-wins at least makes the winner the rule a config reader
-        # sees first.
-        seen_tables: dict[str, tuple] = {}
-        for t, zcols in all_tables:
-            seen_tables.setdefault(t, zcols)
-        all_tables = list(seen_tables.items())
-
         def maintain(item: tuple[str, tuple]) -> None:
             t, zcols = item
             # maintenance must not fail a batch whose data work already
@@ -1233,11 +1017,11 @@ class CdcBatchProcessor:
             # compact_table degrades it to size-only compaction with a
             # warning, so small files cannot accrue indefinitely.
             try:
-                if hasattr(self.store, "fold_deltas"):
-                    # merge-on-read: materialize base from the
-                    # accumulated deltas first, then size/cluster-
-                    # compact the fresh base like any other table
-                    self.store.fold_deltas(self.spark, t)
+                # fold any accumulated deltas (merge-on-read targets;
+                # append tables under either store mode) into the base
+                # first, then size/cluster-compact the fresh base like
+                # any other table
+                self.store.fold_deltas(self.spark, t)
                 compact_table(
                     self.store, self.spark, t,
                     target_bytes=self.compact_target_bytes,
@@ -1246,7 +1030,9 @@ class CdcBatchProcessor:
             except Exception as e:  # noqa: BLE001
                 self.compact_errors.append((t, repr(e)))
 
-        self._for_each_table(maintain, all_tables)
+        # every table folds/compacts CONCURRENTLY: each is an independent
+        # Spark job over its own directories
+        self._for_each_table(maintain, list(self._maintained_tables().items()))
 
         def maintain_ingestors(rule: SyncRule) -> None:
             # one serial chain PER RULE (maintain may swap the version
@@ -1282,11 +1068,11 @@ class CdcBatchProcessor:
                         (f"{rule.target_name}{label}", repr(e))
                     )
 
-        ingest_rules = [
+        ingest_rules = dict.fromkeys(
             r for r in self.rules
             if r.ann_ingest or r.dedup_ingest or r.bm25_ingest
-        ]
-        self._for_each_table(maintain_ingestors, ingest_rules)
+        )
+        self._for_each_table(maintain_ingestors, list(ingest_rules))
 
 
 def run_file_stream(

@@ -444,17 +444,26 @@ def test_processor_retention_defaults_bounded_without_compaction(spark, tmp_path
 def test_processor_keep_versions_prunes_on_compaction_cycle(spark, tmp_path):
     """keep_versions wires prune_versions into the job's maintenance
     cycle: after the compaction batch, the target's chain is at most
-    keep_versions dirs; without the knob the chain keeps everything."""
+    keep_versions dirs; without the knob the chain keeps everything.
+    The maintenance enumeration covers EVERY table the shell publishes —
+    here a stats rule's derived tables (event and current-state) —
+    so none of them leaks one version dir per batch."""
     import json
-
-    from kafka_cdc_redshift_spark.operators.merge import merge_changes
+    import os
 
     for keep, expect_bounded in ((2, True), (None, False)):
         root = tmp_path / f"store_{keep}"
         store = ParquetTargetStore(str(root))
         rule = SyncRule(db="d", table="t", primary_key=("pid",))
+        srule = SyncRule(
+            db="d", table="s", primary_key=("sid",),
+            stats_group_columns=("grp",), stats_value_column="amt",
+            stats_distinct_column="amt", stats_quantile_column="amt",
+            stats_topk_column="amt", stats_sample_column="amt",
+            stats_bloom_column="amt", stats_current_state=True,
+        )
         proc = CdcBatchProcessor(
-            spark, [rule], store,
+            spark, [rule, srule], store,
             compact_every_n_batches=3, keep_versions=keep,
             prune_grace_sec=0,  # toy run: prune must act immediately
         )
@@ -468,6 +477,11 @@ def test_processor_keep_versions_prunes_on_compaction_cycle(spark, tmp_path):
                     "after": {"pid": 1, "val": f"v{b}"},
                     "source": {"db": "d", "table": "t"},
                     "op": "u", "ts_ms": b,
+                }),), (json.dumps({
+                    "before": None,
+                    "after": {"sid": b, "grp": f"g{b % 2}", "amt": b},
+                    "source": {"db": "d", "table": "s"},
+                    "op": "c", "ts_ms": b,
                 }),)], "value string",
             )
             proc.process_batch(batch, b)
@@ -477,6 +491,13 @@ def test_processor_keep_versions_prunes_on_compaction_cycle(spark, tmp_path):
             assert len(chain) <= 2, chain
         else:
             assert len(chain) > 2, chain
+        tables = set(proc._maintained_tables())
+        on_disk = {d for d in os.listdir(root) if not d.startswith("_")}
+        assert on_disk == tables
+        assert {"s_stats", "s_topk", "s_bloom", "s_state_qsketch"} <= tables
+        if expect_bounded:
+            chains = {t: store.versions_on_disk(t) for t in tables}
+            assert all(len(c) <= 2 for c in chains.values()), chains
         live = store.read(spark, rule.target_name)
         assert [(r.pid, r.val) for r in live.collect()] == [(1, "v5")]
 

@@ -864,6 +864,21 @@ def test_state_sketch_guards_survive_partial_commit_retry(
     sketch tables must still fold the batch's signed delta — each state
     table is independently batch-id-guarded at the same nesting level
     (a nested guard would skip them forever: silent divergence)."""
+    _partial_commit_retry(spark, sf_dir, tmp_path, "orders_state_cms")
+
+
+def test_topk_guard_survives_partial_commit_retry(spark, sf_dir, tmp_path):
+    """<table>_topk is published right after <table>_cms under its own
+    guard: a crash between the two publishes must not lose the batch's
+    candidate values on the retry (the _cms guard alone would skip
+    them for good)."""
+    _partial_commit_retry(spark, sf_dir, tmp_path, "orders_topk")
+
+
+def _partial_commit_retry(spark, sf_dir, tmp_path, crash_table):
+    """Crash the first publish aimed at `crash_table` in batch 2, retry
+    the batch under the same id, and check every sketch table against
+    its oracle (and, for `orders_topk`, against a crash-free run)."""
     from kafka_cdc_redshift_spark.functions.incremental import (
         group_freq_sketch,
         group_quantile_sketch,
@@ -883,22 +898,19 @@ def test_state_sketch_guards_survive_partial_commit_retry(
             stats_current_state=True,
         )
     ]
-    proc = CdcBatchProcessor(
-        spark, rules, store,
-        payload_schemas={"orders": load_table(spark, sf_dir, "orders").schema},
-    )
+    schemas = {"orders": load_table(spark, sf_dir, "orders").schema}
+    proc = CdcBatchProcessor(spark, rules, store, payload_schemas=schemas)
     topic = synth_debezium_before_topic(spark, sf_dir)
     inserts = topic.filter(F.col("value").contains('"op":"c"'))
     churn = topic.filter(~F.col("value").contains('"op":"c"'))
     proc.process_batch(inserts, 1)
 
-    # inject the crash: first publish aimed at the CMS table dies, so
-    # batch 2 lands in _state_stats but in neither sketch table
+    # inject the crash: the first publish aimed at `crash_table` dies
     orig_publish = store.publish
     armed = {"on": True}
 
     def flaky_publish(df, table, *a, **kw):
-        if armed["on"] and table == "orders_state_cms":
+        if armed["on"] and table == crash_table:
             armed["on"] = False
             raise RuntimeError("injected crash")
         return orig_publish(df, table, *a, **kw)
@@ -907,14 +919,31 @@ def test_state_sketch_guards_survive_partial_commit_retry(
     with pytest.raises(RuntimeError, match="injected crash"):
         proc.process_batch(churn, 2)
     store.publish = orig_publish
-    assert store.last_batch_id("orders_state_stats") == 2
-    assert store.last_batch_id("orders_state_cms") != 2
-    assert store.last_batch_id("orders_state_qsketch") != 2
+    if crash_table == "orders_state_cms":
+        # batch 2 landed in _state_stats but in neither sketch table
+        assert store.last_batch_id("orders_state_stats") == 2
+        assert store.last_batch_id("orders_state_cms") != 2
+        assert store.last_batch_id("orders_state_qsketch") != 2
+    else:
+        # batch 2 landed in _cms but not in _topk
+        assert store.last_batch_id("orders_cms") == 2
+        assert store.last_batch_id("orders_topk") != 2
 
     # the checkpoint retry re-delivers batch 2 under the same id: the
-    # sketches fold it, the stats table (already committed) must not
+    # tables that missed it fold it, the committed ones must not
     # double-fold
     proc.process_batch(churn, 2)
+
+    if crash_table == "orders_topk":
+        clean = ParquetTargetStore(str(tmp_path / "clean"))
+        ref = CdcBatchProcessor(spark, rules, clean, payload_schemas=schemas)
+        ref.process_batch(inserts, 1)
+        ref.process_batch(churn, 2)
+
+        def topk(s):
+            return sorted(map(tuple, s.read(spark, "orders_topk").collect()))
+
+        assert topk(store) == topk(clean) and topk(clean)
 
     orders = load_table(spark, sf_dir, "orders")
     live = orders.filter(F.col("o_orderkey") % 7 != 0)
