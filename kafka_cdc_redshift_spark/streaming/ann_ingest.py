@@ -51,7 +51,7 @@ from ..functions.similarity import (
     pq_encode,
     pq_shortlist_rerank,
 )
-from .store import AppendLog
+from .store import AppendLog, write_json_atomic
 from .tombstones import SEQ_COL, TombstoneSet, resolve_compact, stamp_seq
 
 _CENTROID_BATCH = "__centroids__"  # singleton "batch" id for the centroid table
@@ -421,13 +421,9 @@ class VersionedAnnIndex:
             return None
 
     def _flip(self, version: int, watermark) -> None:
-        import json
-        import os
-
-        tmp = self._pointer_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "watermark": watermark}, f)
-        os.replace(tmp, self._pointer_path())
+        write_json_atomic(
+            self._pointer_path(), {"version": version, "watermark": watermark}
+        )
 
     def _index(self, version: int) -> AnnIngest:
         return AnnIngest(

@@ -59,7 +59,7 @@ from ..functions.dedup_text import (
     minhash_lsh_pairs,
     shingle_sketches,
 )
-from .store import AppendLog
+from .store import AppendLog, write_json_atomic
 from .tombstones import (
     SEQ_COL,
     TombstoneSet,
@@ -165,13 +165,7 @@ class DedupIngest:
         return os.path.join(self.log.root, f"{self.name}_lsh_params.json")
 
     def _write_params(self) -> None:
-        import json
-        import os
-
-        tmp = self._params_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._params(), f)
-        os.replace(tmp, self._params_path())
+        write_json_atomic(self._params_path(), self._params())
 
     def _check_or_adopt_params(self) -> None:
         import json

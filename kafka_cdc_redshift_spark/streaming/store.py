@@ -9,12 +9,24 @@ batch leaves the previous version intact (same effect as the reference's
 BEGIN...END).
 
 The pointer, `<table>/_current.json`, holds:
-  * `version`: the live `version=N` directory;
+  * `version`: the live `version=N` directory (the table's BASE);
   * `schema`: that version's schema as Spark JSON, all fields nullable (as
     Spark writes parquet), so `read` opens the version without a
     schema-inference job; a pointer without it falls back to inference;
   * `batch_id` / `folded_ids` (optional): the replay guards, see
     `last_batch_id` and `folded_batch_ids`.
+
+Besides the base, a table may hold DELTAS: one batch each, committed
+O(|batch|) into the store's one delta log (an `AppendLog`; `_append/` for
+the copy-on-write store, `_delta/` for merge-on-read). `read` resolves
+base ∪ live deltas by the table's delta kind, recorded at its first
+delta publish in `<log>/<table>/_config.json` (no file reads as append):
+  * `append` (`publish_append`; delete log, quarantine): the union;
+  * `merge` (`publish_delta`): latest delta wins per key;
+  * `scd2` (`publish_scd2_delta`): one `scd2_merge_batch` over the base.
+A table keeps one kind and one key list; a publish of another refuses.
+`fold_deltas` (the maintenance cycle) materializes the resolved view as
+the next base version and retires the folded deltas.
 
 At scale the store maps onto any table format with atomic commit (Delta/
 Iceberg swap, or HDFS rename); version dirs keep history for replay audits.
@@ -24,10 +36,20 @@ from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` so a reader sees the old file or the
+    new one, never a partial write: a temp file, then one os.replace."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _adhoc_batch_id() -> str:
@@ -42,9 +64,12 @@ def _adhoc_batch_id() -> str:
 
 
 class ParquetTargetStore:
+    _DELTA_DIR = "_append"  # the delta log's directory under root
+
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        self._delta = AppendLog(os.path.join(root, self._DELTA_DIR))
 
     def _meta_path(self, table: str) -> str:
         return os.path.join(self.root, table, "_current.json")
@@ -82,8 +107,9 @@ class ParquetTargetStore:
         return self._pointer(table).get("folded_ids", [])
 
     def exists(self, table: str) -> bool:
-        return self.current_version(table) is not None or bool(
-            self._live_append_ids(table)[1]
+        meta = self._pointer(table)
+        return meta.get("version") is not None or bool(
+            self._live_delta_ids(table, meta)
         )
 
     def path(self, table: str) -> str | None:
@@ -94,7 +120,7 @@ class ParquetTargetStore:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         base = None
-        meta = self._pointer(table)  # version and schema from ONE read
+        meta = self._pointer(table)  # version, schema, folded ids: ONE read
         if meta.get("version") is not None:
             reader = spark.read
             if "schema" in meta:  # no schema-inference job
@@ -102,82 +128,158 @@ class ParquetTargetStore:
             base = reader.parquet(
                 os.path.join(self.root, table, f"version={meta['version']}")
             )
-        log, ids = self._live_append_ids(table)
-        if not ids:
+        deltas = self._read_deltas(spark, table, meta)
+        if deltas is None:
             return base
-        # per-batch reads + unionByName so columns added across batches
-        # null-fill instead of failing the multi-dir scan
-        from functools import reduce
+        cfg = self._load_config(table) or {"kind": "append"}
+        if cfg["kind"] == "merge":
+            # merge-on-read's `publish_delta` deltas: a batch supersedes
+            # everything before it for its keys, so the row from the
+            # latest delta (base = -1) wins per key
+            if base is not None:
+                deltas = deltas.unionByName(
+                    base.withColumn("__seq", F.lit(-1)),
+                    allowMissingColumns=True,
+                )
+            w = Window.partitionBy(*cfg["keys"]).orderBy(F.desc("__seq"))
+            res = (
+                deltas.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+            )
+            if not cfg.get("skip_delete", False) and "op" in res.columns:
+                res = res.filter(F.col("op").isNull() | (F.col("op") != "d"))
+            return res.drop("__rn", "__seq", *self._BOOK)  # absent: no-op
+        deltas = deltas.drop("__seq")
+        if cfg["kind"] == "scd2":
+            from ..operators.merge import scd2_merge_batch
 
-        parts = ([base] if base is not None else []) + [
-            spark.read.parquet(os.path.join(log.root, table, f"batch={b}"))
-            for b in ids
+            return scd2_merge_batch(
+                base, deltas, cfg["keys"],
+                order_col=cfg.get("order_col", "ts_ms"),
+                tiebreak_cols=[
+                    c for c in cfg.get("tiebreak", ()) if c in deltas.columns
+                ],
+            )
+        if base is None:
+            return deltas
+        return base.unionByName(deltas, allowMissingColumns=True)
+
+    # -- deltas: the one delta log ------------------------------------------
+    # A table that only ever GROWS (delete log, quarantine) would cost a
+    # read-union-dedup-republish of O(|table-ever|) per batch under
+    # copy-on-write, so its batches land in the delta log instead and the
+    # maintenance cycle folds them into the base version — under both
+    # target_store_modes. Merge-on-read adds keyed and SCD2 deltas.
+    def _config_path(self, table: str) -> str:
+        return os.path.join(self._delta.root, table, "_config.json")
+
+    def _load_config(self, table: str) -> dict | None:
+        """The table's delta config (persisted: `read` must resolve after a
+        restart without re-learning keys from the caller); None when the
+        table has none, which reads as kind `append`."""
+        try:
+            with open(self._config_path(table)) as f:
+                cfg = json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return None
+        # configs written before `kind` was recorded: keyless = append
+        cfg.setdefault("kind", "merge" if cfg.get("keys") else "append")
+        return cfg
+
+    def _ensure_config(self, table: str, cfg: dict) -> None:
+        """Record `cfg` at the table's first delta publish; refuse a
+        publish whose kind or keys differ from the recorded ones."""
+        prev = self._load_config(table)
+        if prev is None:
+            os.makedirs(os.path.join(self._delta.root, table), exist_ok=True)
+            write_json_atomic(self._config_path(table), cfg)
+        elif (prev["kind"], prev.get("keys")) != (cfg["kind"], cfg["keys"]):
+            raise ValueError(
+                f"table {table!r} delta config mismatch: {prev} vs {cfg}"
+            )
+
+    def has_applied(self, table: str, batch_id) -> bool:
+        """True when `batch_id`'s delta is committed OR was folded into the
+        base version. The fold records every folded id — not just the
+        last — atomically with the base pointer, so the guard spans folds
+        AND the fold's publish/retire crash window: re-applying an
+        append or SCD2 batch over its own folded effect is NOT a no-op
+        (base ∪ delta duplicates its rows), and the fold's retire erases
+        the manifest's memory of it."""
+        meta = self._pointer(table)
+        return (
+            self._delta.has_batch(table, batch_id)
+            or meta.get("batch_id") == batch_id
+            or batch_id in meta.get("folded_ids", [])
+        )
+
+    def _live_delta_ids(self, table: str, meta: dict) -> list:
+        """Committed delta ids minus those the pointer `meta` records as
+        folded into the base — a fold that crashed between its base
+        publish and manifest retire leaves folded-but-committed deltas,
+        which a reader must not resolve twice."""
+        folded = set(meta.get("folded_ids", []))
+        return [b for b in self._delta.committed(table) if b not in folded]
+
+    def _read_deltas(self, spark: SparkSession, table: str,
+                     meta: dict) -> DataFrame | None:
+        """The live deltas, each row tagged with its delta's commit
+        position `__seq`; None when there are none. One read per batch
+        directory + unionByName, so columns added across batches
+        null-fill instead of failing one multi-directory scan."""
+        parts = [
+            spark.read.parquet(
+                os.path.join(self._delta.root, table, f"batch={b}")
+            ).withColumn("__seq", F.lit(i))
+            for i, b in enumerate(self._live_delta_ids(table, meta))
         ]
+        if not parts:
+            return None
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
 
-    # -- append-shaped side tables (delete log, quarantine) ----------------
-    # The copy-on-write store's answer to tables that only ever GROW: a
-    # read-union-dedup-republish per batch costs O(|table-ever|) per batch,
-    # so appends land in an AppendLog instead (O(|batch|) written) and the
-    # maintenance cycle folds them into the base version. Same shape the
-    # merge-on-read store uses for its delete log; here it rides the plain
-    # store so BOTH target_store_modes get append-cost quarantine/delete
-    # publishes.
-    def _append_log(self) -> "AppendLog":
-        return AppendLog(os.path.join(self.root, "_append"))
-
-    def _live_append_ids(self, table: str):
-        log = self._append_log()
-        folded = set(self.folded_batch_ids(table))
-        return log, [b for b in log.committed(table) if b not in folded]
-
     def delta_count(self, table: str) -> int:
         """Committed-but-unfolded deltas for `table` — the read-amplification
         gauge the job's fold backstop polls."""
-        return len(self._live_append_ids(table)[1])
+        return len(self._live_delta_ids(table, self._pointer(table)))
 
     def publish_append(self, rows: DataFrame, table: str, batch_id) -> None:
         """Append one batch's rows to `table` (delete-log shape: no keys,
-        no resolution). Replay-guarded by the append manifest AND — so the
-        guard spans folds — by the base pointer's batch_id / folded_ids.
+        no resolution), O(|rows|) written, replay-guarded by
+        `has_applied`.
 
         batch_id=None (direct/process-style calls with no stream identity)
         appends under a generated unique id: there is nothing to guard a
         replay against, and committing the literal None would make every
         LATER None-id append look like a replay and silently drop it."""
-        log = self._append_log()
+        self._ensure_config(table, {"kind": "append", "keys": None})
         if batch_id is None:
-            log.append(rows, table, _adhoc_batch_id())
+            batch_id = _adhoc_batch_id()
+        elif self.has_applied(table, batch_id):
             return
-        if log.has_batch(table, batch_id) or (
-            self.last_batch_id(table) == batch_id
-            or batch_id in self.folded_batch_ids(table)
-        ):
-            return
-        log.append(rows, table, batch_id)
+        self._delta.append(rows, table, batch_id)
 
     def fold_deltas(self, spark: SparkSession, table: str) -> int | None:
-        """Fold committed append deltas into the next base version and
-        retire them — run from the maintenance cycle. Crash-safe in either
-        order: the publish records the folded ids atomically with the
-        pointer flip, `read` excludes folded-but-unretired deltas, and the
-        next fold retires those leftovers before folding anything new."""
-        log = self._append_log()
-        committed = log.committed(table)
+        """Materialize the resolved view as the next base version and
+        retire the folded deltas — run from the maintenance cycle.
+        Crash-safe in either order: the publish records EVERY folded
+        batch id atomically with the pointer flip, `read` excludes
+        folded-but-unretired deltas, and the next fold retires those
+        leftovers before folding anything new."""
+        committed = self._delta.committed(table)
         if not committed:
             return None
         folded = set(self.folded_batch_ids(table))
         leftovers = [b for b in committed if b in folded]
         if leftovers:  # heal a crash between a prior fold's publish+retire
-            log.retire(table, leftovers)
+            self._delta.retire(table, leftovers)
         ids = [b for b in committed if b not in folded]
         if not ids:
             return None
         resolved = self.read(spark, table)
         v = self.publish(resolved, table, batch_id=ids[-1], folded_ids=ids)
-        log.retire(table, ids)
+        self._delta.retire(table, ids)
         return v
 
     def publish(self, df: DataFrame, table: str, *, batch_id=None,
@@ -195,7 +297,6 @@ class ParquetTargetStore:
         nxt = 0 if prev is None else prev + 1
         out = os.path.join(self.root, table, f"version={nxt}")
         self._write_version(df, table, out, nxt)
-        tmp = self._meta_path(table) + ".tmp"
         # parquet files hold every field as nullable; record the schema
         # the same way so a read with it equals an inferred read
         schema = json.loads(df._jdf.schema().asNullable().json())
@@ -208,9 +309,7 @@ class ParquetTargetStore:
             meta["batch_id"] = batch_id
         if folded_ids:
             meta["folded_ids"] = list(folded_ids)
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path(table))  # atomic pointer flip
+        write_json_atomic(self._meta_path(table), meta)  # the pointer flip
         return nxt
 
     def _write_version(self, df: DataFrame, table: str, out: str, version: int) -> None:
@@ -389,7 +488,8 @@ class AppendLog:
     """Append-only parquet log with atomic per-batch commits — the state
     backend for streaming operators whose state GROWS (the dedup-ingest
     band index / sketch tables, streaming/dedup_ingest.py) where the
-    versioned store's full republish would cost O(corpus) per batch.
+    versioned store's full republish would cost O(corpus) per batch, and
+    each target store's delta log.
 
     Layout: `root/table/batch=<id>/` parquet per appended batch plus a
     `_manifest.json` listing committed batch ids, rewritten atomically
@@ -419,12 +519,6 @@ class AppendLog:
             return m
         except (FileNotFoundError, KeyError, json.JSONDecodeError):
             return {"batches": []}
-
-    def _write_manifest(self, table: str, m: dict) -> None:
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path(table))
 
     def committed(self, table: str) -> list:
         return self._manifest(table)["batches"]
@@ -514,10 +608,10 @@ class AppendLog:
                         " force=True to take the marker over."
                     )
             nonce = f"{os.getpid()}-{uuid.uuid4().hex[:16]}"
-            tmp = self._maintenance_path(scope) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"op": op, "nonce": nonce, "pid": os.getpid()}, f)
-            os.replace(tmp, self._maintenance_path(scope))
+            write_json_atomic(
+                self._maintenance_path(scope),
+                {"op": op, "nonce": nonce, "pid": os.getpid()},
+            )
             return nonce
 
     def end_maintenance(self, scope: str, nonce: str | None = None) -> None:
@@ -587,7 +681,7 @@ class AppendLog:
         m = self._manifest(table)
         m["batches"] = m["batches"] + [batch_id]
         m["segments"] = self.segments(table) + [f"batch={batch_id}"]
-        self._write_manifest(table, m)
+        write_json_atomic(self._manifest_path(table), m)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Union of all committed data (None before the first commit).
@@ -669,7 +763,7 @@ class AppendLog:
             )
         m["segments"] = [f"seg={n}"]
         m["next_seg"] = n + 1
-        self._write_manifest(table, m)
+        write_json_atomic(self._manifest_path(table), m)
         for s in segs:
             shutil.rmtree(
                 os.path.join(self.root, table, s), ignore_errors=True
@@ -703,7 +797,7 @@ class AppendLog:
         drop = {f"batch={b}" for b in batch_ids}
         m["batches"] = [b for b in m["batches"] if b not in set(batch_ids)]
         m["segments"] = [s for s in segs if s not in drop]
-        self._write_manifest(table, m)
+        write_json_atomic(self._manifest_path(table), m)
         for b in batch_ids:
             shutil.rmtree(
                 os.path.join(self.root, table, f"batch={b}"),
@@ -715,65 +809,25 @@ class MergeOnReadTargetStore(ParquetTargetStore):
     """Keyed target store with MERGE-ON-READ publishes — the scale answer
     to the one O(|target|) cost left in the streaming hot path.
 
-    The plain store (and the reference's DELETE+INSERT transaction) is
-    copy-on-write: every micro-batch rewrites the whole target, so batch
-    cost grows with the TABLE, not the batch. Here a batch instead
-    appends its LWW-deduped changelog as a DELTA (`publish_delta`,
-    O(|batch|) written, atomic per-batch commit via `AppendLog`), and
-    `read` resolves base ∪ deltas lazily: per key, the row from the most
-    recent delta wins (matching `merge_changes`, where a batch always
-    supersedes the target for its keys), delete images tombstone, and
-    bookkeeping columns never surface. `fold_deltas` (the maintenance
-    cycle) materializes the resolved view as the next base version and
-    retires the folded deltas — copy-on-write's cost, paid once per N
-    batches instead of every batch. This is exactly the copy-on-write vs
-    merge-on-read trade a transactional table format (Hudi/Iceberg/Delta)
-    exposes; the store keeps the same atomic-pointer publish contract so
-    either mode slots under the identical processor loop.
+    The base store is copy-on-write for keyed tables: every micro-batch
+    rewrites the whole target, so batch cost grows with the TABLE, not
+    the batch. Here a batch instead commits its LWW-deduped changelog
+    (`publish_delta`) or its raw SCD2 events (`publish_scd2_delta`) as a
+    delta, O(|batch|) written, and `read` resolves base ∪ deltas lazily;
+    bookkeeping columns (`_BOOK`) never surface. `fold_deltas` pays the
+    copy-on-write cost once per N batches instead of every batch — the
+    copy-on-write vs merge-on-read trade a transactional table format
+    (Hudi/Iceberg/Delta) exposes, under the same atomic-pointer publish.
 
     Read cost is bounded by the deltas since the last fold (cap it with
     the job's `compact_every_n_batches`, plus the delta-count backstop
-    `max_deltas_before_fold`); a crash between the fold's base publish
-    and delta retirement is safe for EVERY table kind — the fold records
-    the folded batch ids atomically with the base pointer and `read`
-    excludes them, so keyed, SCD2, and pure-append resolutions all see
-    each delta exactly once. Schema evolution: added columns appear at read via
-    null-filled alignment; a DROPPED column disappears only when a fold
-    materializes the narrower schema.
+    `max_deltas_before_fold`). Schema evolution: added columns appear at
+    read via null-filled alignment; a DROPPED column disappears only when
+    a fold materializes the narrower schema.
     """
 
+    _DELTA_DIR = "_delta"
     _BOOK = ("op", "ts_ms", "data_index_aws")
-
-    def __init__(self, root: str):
-        super().__init__(root)
-        self._delta = AppendLog(os.path.join(root, "_delta"))
-
-    # -- per-table merge config (persisted: read() must work after a
-    # restart without re-learning keys from the caller) -------------------
-    def _config_path(self, table: str) -> str:
-        return os.path.join(self._delta.root, table, "_config.json")
-
-    def _load_config(self, table: str) -> dict | None:
-        try:
-            with open(self._config_path(table)) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return None
-
-    def _ensure_config(self, table: str, cfg: dict) -> None:
-        prev = self._load_config(table)
-        if prev is None:
-            os.makedirs(os.path.join(self._delta.root, table), exist_ok=True)
-            tmp = self._config_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cfg, f)
-            os.replace(tmp, self._config_path(table))
-        elif prev.get("kind", "merge") != cfg.get("kind", "merge") or (
-            prev["keys"] != cfg["keys"]
-        ):
-            raise ValueError(
-                f"table {table!r} delta config mismatch: {prev} vs {cfg}"
-            )
 
     def publish_delta(
         self, updates: DataFrame, table: str, batch_id, *,
@@ -790,9 +844,8 @@ class MergeOnReadTargetStore(ParquetTargetStore):
             {"kind": "merge", "keys": list(keys),
              "skip_delete": bool(skip_delete)},
         )
-        if self.has_applied(table, batch_id):
-            return
-        self._delta.append(updates, table, batch_id)
+        if not self.has_applied(table, batch_id):
+            self._delta.append(updates, table, batch_id)
 
     def publish_scd2_delta(
         self, events: DataFrame, table: str, batch_id, *,
@@ -807,178 +860,11 @@ class MergeOnReadTargetStore(ParquetTargetStore):
         property tests pin the split-invariance this relies on). The
         per-batch cost of the copy-on-write path — read the whole
         history, close, append, republish — becomes O(|batch|) written.
-
-        Replay: guarded by `has_applied` (delta manifest OR the base
-        version's batch_id pointer) — unlike keyed-merge resolution,
-        re-applying an SCD2 batch over its own folded effect is NOT
-        idempotent, so the fold records the last folded batch id in the
-        base pointer and the single-uncommitted-batch property of
-        foreachBatch checkpoints covers the rest (the same argument the
-        copy-on-write SCD2 path documents)."""
+        Replay-guarded by `has_applied`, which spans folds."""
         self._ensure_config(
             table,
             {"kind": "scd2", "keys": list(keys), "order_col": order_col,
              "tiebreak": list(tiebreak_cols)},
         )
-        if self.has_applied(table, batch_id):
-            return
-        self._delta.append(events, table, batch_id)
-
-    def exists(self, table: str) -> bool:
-        return super().exists(table) or bool(self._live_delta_ids(table))
-
-    def has_applied(self, table: str, batch_id) -> bool:
-        """True when `batch_id`'s delta is committed OR was folded into the
-        base version (the fold records every folded id — not just the
-        last — atomically with the base pointer, so the guard spans folds
-        AND the fold's publish/retire crash window)."""
-        return self._delta.has_batch(table, batch_id) or (
-            self.last_batch_id(table) == batch_id
-        ) or (batch_id in self.folded_batch_ids(table))
-
-    def _live_delta_ids(self, table: str) -> list:
-        """Committed delta ids minus any already folded into the current
-        base — a fold that crashed between its base publish and manifest
-        retire leaves folded-but-committed deltas, which a reader must
-        not resolve twice (for append/SCD2 tables that means duplicates,
-        not a no-op)."""
-        folded = set(self.folded_batch_ids(table))
-        return [b for b in self._delta.committed(table) if b not in folded]
-
-    def last_delta_batch_id(self, table: str):
-        ids = self._live_delta_ids(table)
-        return ids[-1] if ids else None
-
-    def delta_count(self, table: str) -> int:
-        """Committed-but-unfolded deltas for `table` — the read-amplification
-        gauge the job's fold backstop polls."""
-        return len(self._live_delta_ids(table))
-
-    def publish_append(self, rows: DataFrame, table: str, batch_id) -> None:
-        """Pure-append table (no keys, no resolution — the delete log
-        shape): O(|rows|) written per batch. Replay-guarded by
-        `has_applied`, which spans folds: unlike keyed-merge resolution,
-        re-reading an append delta whose rows were already folded into
-        base is NOT a no-op (base ∪ delta duplicates every row), so the
-        manifest guard alone — which the fold's retire erases — is not
-        enough. batch_id=None appends under a generated unique id (no
-        stream identity -> no replay to guard; see the copy-on-write
-        store's publish_append)."""
-        cfg = {"keys": None}
-        prev = self._load_config(table)
-        if prev is None:
-            os.makedirs(os.path.join(self._delta.root, table), exist_ok=True)
-            tmp = self._config_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cfg, f)
-            os.replace(tmp, self._config_path(table))
-        elif prev["keys"] is not None:
-            raise ValueError(
-                f"table {table!r} is a keyed merge table, not an append table"
-            )
-        if batch_id is None:
-            self._delta.append(rows, table, _adhoc_batch_id())
-            return
-        if self.has_applied(table, batch_id):
-            return
-        self._delta.append(rows, table, batch_id)
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        base = super().read(spark, table)
-        ids = self._live_delta_ids(table)
-        if not ids:
-            return base
-        cfg = self._load_config(table)
-        keys = cfg["keys"]
-        skip_delete = cfg.get("skip_delete", False)
-        from functools import reduce
-
-        from pyspark.sql import Window
-
-        if keys is None:  # pure-append table: no resolution
-            # per-batch reads (not one multi-dir scan) so columns added
-            # across batches null-fill via unionByName, same contract as
-            # the keyed/scd2 paths
-            parts = ([base] if base is not None else []) + [
-                spark.read.parquet(
-                    os.path.join(self._delta.root, table, f"batch={b}")
-                )
-                for b in ids
-            ]
-            return reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-
-        if cfg.get("kind") == "scd2":
-            from ..operators.merge import scd2_merge_batch
-
-            parts = [
-                spark.read.parquet(
-                    os.path.join(self._delta.root, table, f"batch={b}")
-                )
-                for b in ids
-            ]
-            events = reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
-            return scd2_merge_batch(
-                base, events, keys,
-                order_col=cfg.get("order_col", "ts_ms"),
-                tiebreak_cols=[
-                    c for c in cfg.get("tiebreak", ())
-                    if c in events.columns
-                ],
-            )
-
-        parts = [
-            spark.read.parquet(
-                os.path.join(self._delta.root, table, f"batch={b}")
-            ).withColumn("__seq", F.lit(i))
-            for i, b in enumerate(ids)
-        ]
-        deltas = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-        )
-        if base is not None:
-            allr = deltas.unionByName(
-                base.withColumn("__seq", F.lit(-1)),
-                allowMissingColumns=True,
-            )
-        else:
-            allr = deltas
-        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        res = (
-            allr.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-        )
-        if not skip_delete and "op" in res.columns:
-            res = res.filter(F.col("op").isNull() | (F.col("op") != "d"))
-        drop = ["__rn", "__seq"] + [c for c in self._BOOK if c in res.columns]
-        return res.drop(*drop)
-
-    def fold_deltas(self, spark: SparkSession, table: str) -> int | None:
-        """Materialize the resolved view as the next base version and
-        retire the folded deltas — the merge-on-read maintenance step,
-        run from the job's periodic compaction cycle. Crash-safe in
-        either order: the fold's publish records EVERY folded batch id
-        atomically with the pointer flip, `read` excludes folded-but-
-        still-committed deltas (so a crash between the publish and the
-        manifest retire cannot double-resolve append/SCD2 deltas), and
-        the next fold retires those leftovers before folding new ones.
-        The recorded ids also make `has_applied` span the fold — the
-        replay guard non-idempotent resolutions (SCD2, pure append)
-        need."""
-        committed = self._delta.committed(table)
-        if not committed:
-            return None
-        folded = set(self.folded_batch_ids(table))
-        leftovers = [b for b in committed if b in folded]
-        if leftovers:  # heal a prior fold's publish/retire crash window
-            self._delta.retire(table, leftovers)
-        ids = [b for b in committed if b not in folded]
-        if not ids:
-            return None
-        resolved = self.read(spark, table)
-        v = self.publish(resolved, table, batch_id=ids[-1], folded_ids=ids)
-        self._delta.retire(table, ids)
-        return v
+        if not self.has_applied(table, batch_id):
+            self._delta.append(events, table, batch_id)

@@ -275,3 +275,51 @@ def test_mor_scd2_history_equals_cow_and_full_rebuild(spark, sf_dir, tmp_path):
     assert hist(mor) == want
     proc_mor.process_batch(b2, 1)
     assert hist(mor) == want
+
+
+def test_delta_kind_refusals_leave_deltas_unchanged(spark, tmp_path):
+    """A table keeps the delta kind and keys of its first publish: a
+    publish of another kind, or with other keys, raises and commits
+    nothing."""
+    store = MergeOnReadTargetStore(str(tmp_path / "mor"))
+    ups = _updates(spark, [(1, "a", "c", 1)])
+    store.publish_delta(ups, "keyed", 0, keys=["pid"])
+    store.publish_append(ups, "log", 0)
+    refusals = {
+        "append onto a keyed table":
+            lambda: store.publish_append(ups, "keyed", 1),
+        "keyed onto an append table":
+            lambda: store.publish_delta(ups, "log", 1, keys=["pid"]),
+        "keyed with other keys":
+            lambda: store.publish_delta(ups, "keyed", 1, keys=["val"]),
+    }
+    for case, publish in refusals.items():
+        with pytest.raises(ValueError):
+            publish()
+        assert store._delta.committed("keyed") == [0], case
+        assert store._delta.committed("log") == [0], case
+
+
+def test_one_delta_log_per_store(spark, tmp_path):
+    """Each store keeps its deltas in ONE log — copy-on-write under
+    `_append/<table>/`, merge-on-read under `_delta/<table>/`, the
+    layouts a store reopens from — and a merge-on-read store never opens
+    the copy-on-write one."""
+    ups = _updates(spark, [(1, "a", "c", 1)])
+    cow_root = tmp_path / "cow"
+    cow = ParquetTargetStore(str(cow_root))
+    cow.publish_append(ups, "log", 0)
+    assert (cow_root / "_append" / "log" / "batch=0").is_dir()
+
+    mor_root = tmp_path / "mor"
+    mor = MergeOnReadTargetStore(str(mor_root))
+    mor.publish_delta(ups, "t", 0, keys=["pid"])
+    mor.publish_append(ups, "log", 0)
+    assert (mor_root / "_delta" / "t" / "batch=0").is_dir()
+    assert (mor_root / "_delta" / "log" / "batch=0").is_dir()
+    for table in ("t", "log", "absent"):
+        mor.exists(table)
+        mor.read(spark, table)
+        mor.delta_count(table)
+        mor.fold_deltas(spark, table)
+    assert not (mor_root / "_append").exists()
