@@ -12,7 +12,9 @@ error — a bloom MISS is a certified true negative, a hit might be a
 false positive. At 100 TB the overwhelming majority of training
 shingles miss, so the bloom turns the exact membership join into a
 map-side pre-filter: clean docs never shuffle at all, and the exact
-join runs only over the bloom-positive sliver.
+join runs only over the bloom-positive sliver. That pre-filter is
+`contamination_prefilter_from_hashes`, over the (doc_id, gh) relation
+`curation.doc_shingle_hashes` builds.
 
 Everything here is engine-portable by construction, like the
 incremental sketch family (`functions/incremental.py`): positions come
@@ -34,10 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import spread
-from .dedup_text import shingles_col
 from .incremental import CMS_A, CMS_B, CMS_P
-from .text import hash60
 
 BLOOM_M = 8192  # bits; FP rate ~ (1 - e^(-d*n/m))^d — size to the eval set
 BLOOM_D = 4  # probes per value (reuses the 4 CMS hash rows)
@@ -128,39 +127,6 @@ def bloom_hit_col(
     return hit
 
 
-def contamination_prefilter(
-    train: DataFrame,
-    bloom: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    m: int = BLOOM_M,
-    d: int = BLOOM_D,
-) -> DataFrame:
-    """Per-document bloom-screened contamination counts:
-    (doc_id, n_shingles, bloom_matched) for docs with >= n tokens.
-    `bloom_matched` is a guaranteed UPPER bound on the exact match count
-    (one-sided; the audit query pins bloom_matched >= n_matched), so
-    `bloom_matched = 0` certifies a doc clean with zero join work —
-    route only the rest through the exact `contamination_score` join.
-
-    Plan shape: the train side explodes to (doc, gh) exactly like
-    contamination_score, then a 1-row broadcast nested-loop join
-    attaches the bitset and the d probes evaluate map-side — no shuffle
-    of eval data at all, and the per-doc rollup is the only exchange."""
-    tr = (
-        spread(train)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(shingles_col(text_col, n)).alias("g"),
-        )
-        .filter(F.col("g").isNotNull())
-        .select("doc_id", hash60(F.col("g")).alias("gh"))
-    )
-    return contamination_prefilter_from_hashes(tr, bloom, m=m, d=d)
-
-
 def contamination_prefilter_from_hashes(
     tr: DataFrame,
     bloom: DataFrame,
@@ -168,11 +134,20 @@ def contamination_prefilter_from_hashes(
     m: int = BLOOM_M,
     d: int = BLOOM_D,
 ) -> DataFrame:
-    """`contamination_prefilter` over an ALREADY-BUILT (doc_id, gh)
-    relation (curation.doc_shingle_hashes) — the bloom-vs-exact audit
-    runs both probes over the same corpus, so it builds the explode once,
-    checkpoints it, and threads it through here and
-    `contamination_score_from_hashes`."""
+    """Per-document bloom-screened contamination counts:
+    (doc_id, n_shingles, bloom_matched) over an ALREADY-BUILT (doc_id,
+    gh) relation — build it with curation.doc_shingle_hashes, the one
+    tokenize + shingle + hash60 spelling. `bloom_matched` is a
+    guaranteed UPPER bound on the exact match count (one-sided; the
+    audit query pins bloom_matched >= n_matched), so `bloom_matched = 0`
+    certifies a doc clean with zero join work — route only the rest
+    through the exact `contamination_score_from_hashes` join. The
+    bloom-vs-exact audit builds the explode once, checkpoints it, and
+    threads it through both.
+
+    Plan shape: a 1-row broadcast nested-loop join attaches the bitset
+    and the d probes evaluate map-side — no shuffle of eval data at
+    all, and the per-doc rollup is the only exchange."""
     probed = tr.join(F.broadcast(bloom)).withColumn(
         "__hit", bloom_hit_col(F.col("gh"), F.col("bloom"), m=m, d=d)
     )

@@ -52,7 +52,7 @@ from ..functions.similarity import (
     pq_shortlist_rerank,
 )
 from .store import AppendLog, write_json_atomic
-from .tombstones import SEQ_COL, TombstoneSet, resolve_compact, stamp_seq
+from .tombstones import SEQ_COL, TombstoneSet, stamp_seq
 
 _CENTROID_BATCH = "__centroids__"  # singleton "batch" id for the centroid table
 _CODEBOOK_BATCH = "__codebooks__"  # singleton "batch" id for the PQ codebooks
@@ -329,15 +329,10 @@ class AnnIngest:
         tombstones truncate. Committed batch ids survive compaction, so
         replay skipping is unaffected; centroids/codebooks are
         single-segment by construction and never qualify."""
-        resolve_compact(
-            self.log, spark, self.cells_table, self._dead,
+        self._dead.fold(
+            spark, (self.cells_table, self.codes_table),
             min_segments=min_segments,
         )
-        resolve_compact(
-            self.log, spark, self.codes_table, self._dead,
-            min_segments=min_segments,
-        )
-        self._dead.truncate(spark)
 
 
 class VersionedAnnIndex:
@@ -597,19 +592,15 @@ class VersionedAnnIndex:
         ptr = self._pointer()
         if ptr is None:
             raise ValueError(f"index {self.name!r} has no published version")
-        nonce = self.log.begin_maintenance(
-            self.name, "ann_rebuild", force=force
-        )
-        try:
+        with self.log.maintenance(self.name, "ann_rebuild", force=force):
             cur = self._index(ptr["version"])
-            old_ids = [
-                b for b in self.log.committed(cur.cells_table)
-                if isinstance(b, int)
-            ]
             fence = {
-                t: [b for b in self.log.committed(t) if isinstance(b, int)]
+                t: self.log.committed(t)
                 for t in (cur.cells_table, cur.codes_table)
             }
+            old_ids = [
+                b for b in fence[cur.cells_table] if isinstance(b, int)
+            ]
             # snapshot the LIVE corpus: tombstoned (updated/deleted)
             # vectors must not be resurrected into the new version
             corpus = cur.live_cells(spark)
@@ -632,16 +623,8 @@ class VersionedAnnIndex:
                 if stale:
                     self.log.retire(table, stale)
             idx.process_batch(corpus, snap_id, seq=new_wm if new_wm else 0)
-            for t, ids in fence.items():
-                if [b for b in self.log.committed(t)
-                        if isinstance(b, int)] != ids:
-                    raise RuntimeError(
-                        f"ann rebuild: a concurrent batch committed to "
-                        f"{t!r} during the snapshot — the pointer was NOT "
-                        "flipped (old version fully live); stop the "
-                        "ingest and re-run the rebuild"
-                    )
+            # a marker-ignoring writer's batch aborts the flip: the old
+            # version stays fully live, the retry absorbs the batch
+            self.log.check_fence(fence)
             self._flip(new_version, new_wm)
-        finally:
-            self.log.end_maintenance(self.name, nonce)
         return new_version

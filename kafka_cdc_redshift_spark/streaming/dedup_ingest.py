@@ -48,6 +48,9 @@ surface built on the same streaming shell (streaming/job.py).
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,7 +68,6 @@ from .tombstones import (
     TombstoneSet,
     frozen_before,
     resolve,
-    resolve_compact,
     stamp_seq,
     tombstone_rows,
 )
@@ -104,7 +106,6 @@ class DedupIngest:
         band_size: int = 2,
         threshold: float = 0.5,
         max_bucket: int | None = None,
-        within_batch: bool = True,
     ):
         self.log = log
         self.name = name
@@ -115,7 +116,6 @@ class DedupIngest:
         self.band_size = band_size
         self.threshold = threshold
         self.max_bucket = max_bucket
-        self.within_batch = within_batch
         self._dead = TombstoneSet(log, name, "doc_id")
 
     @property
@@ -159,22 +159,28 @@ class DedupIngest:
             "max_bucket": self.max_bucket,
         }
 
-    def _params_path(self) -> str:
-        import os
+    _PARAMS_FILE = "{}_lsh_params.json"
 
-        return os.path.join(self.log.root, f"{self.name}_lsh_params.json")
+    def _params_path(self) -> str:
+        return os.path.join(self.log.root, self._PARAMS_FILE.format(self.name))
+
+    @classmethod
+    def stored_params(cls, log: AppendLog, name: str) -> dict | None:
+        """The standing LSH params manifest of state `name`, or None
+        when it has none yet."""
+        path = os.path.join(log.root, cls._PARAMS_FILE.format(name))
+        try:
+            with open(path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
 
     def _write_params(self) -> None:
         write_json_atomic(self._params_path(), self._params())
 
     def _check_or_adopt_params(self) -> None:
-        import json
-        import os
-
-        path = self._params_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                stored = json.load(f)
+        stored = self.stored_params(self.log, self.name)
+        if stored is not None:
             if stored != self._params():
                 diffs = {
                     k: (stored.get(k), self._params()[k])
@@ -264,17 +270,15 @@ class DedupIngest:
                 F.greatest("doc_new", "doc_old").alias("doc_b"),
                 "jaccard",
             )
-        if self.within_batch:
-            intra = minhash_lsh_pairs(batch, **kw)
-            pairs = intra if pairs is None else pairs.unionByName(intra)
-        if pairs is not None:
-            self.log.append(
-                stamp_seq(
-                    pairs.withColumn("found_by_batch", F.lit(batch_id)),
-                    batch_id,
-                ),
-                self.pairs_table, batch_id,
-            )
+        intra = minhash_lsh_pairs(batch, **kw)
+        pairs = intra if pairs is None else pairs.unionByName(intra)
+        self.log.append(
+            stamp_seq(
+                pairs.withColumn("found_by_batch", F.lit(batch_id)),
+                batch_id,
+            ),
+            self.pairs_table, batch_id,
+        )
         self.log.append(
             stamp_seq(
                 lsh_band_index(
@@ -305,27 +309,12 @@ class DedupIngest:
         current images — a later tombstone on either side supersedes it;
         if the new images still match, the updating batch re-found the
         pair at its own seq)."""
-        if pairs is None or tombs is None:
+        if tombs is None:
             return pairs
-        from .tombstones import tombs_fit_broadcast
-
-        tmax = tombs.groupBy("doc_id").agg(F.max(SEQ_COL).alias("__ds"))
-        # churn-sized by construction (see tombstones.resolve): pin the
-        # broadcast so the serving plan never degrades to a corpus-wide
-        # shuffle on AQE's stats estimate — but size-gated, so a
-        # deployment whose fold cadence lets churn accumulate falls
-        # back to the shuffle join instead of a broadcast OOM
-        pin = tombs_fit_broadcast(tombs)
         for side in ("doc_a", "doc_b"):
-            t = tmax.select(
-                F.col("doc_id").alias(side), F.col("__ds").alias(f"__ds_{side}")
+            pairs = resolve(
+                pairs, tombs.withColumnRenamed("doc_id", side), side
             )
-            if pin:
-                t = F.broadcast(t)
-            pairs = pairs.join(t, side, "left").filter(
-                F.col(f"__ds_{side}").isNull()
-                | (F.col(SEQ_COL) >= F.col(f"__ds_{side}"))
-            ).drop(f"__ds_{side}")
         return pairs
 
     def pairs(self, spark: SparkSession) -> DataFrame | None:
@@ -446,29 +435,21 @@ class DedupIngest:
         if max_bucket is not self._UNSET:
             new["max_bucket"] = max_bucket
         # single-writer marker: concurrent process_batch refuses from
-        # here on (r10 verdict item #4). A crash INSIDE the swap region
-        # leaves the marker standing — the safe direction, ingest stays
-        # refused until the re-run (force=True after confirming the
-        # crashed run is dead: r11 ADVICE nonce ownership) completes —
-        # while a pre-swap validation failure removes it (state
-        # unchanged). The nonce scopes every clear to THIS run's marker:
-        # if another run took ours over, clearing would resume ingest
-        # under ITS half-swap.
-        self._migrate_swap_started = False
-        nonce = self.log.begin_maintenance(
+        # here on (r10 verdict item #4). A failure after the FIRST table
+        # swap leaves the marker standing (`hold`) — the safe direction,
+        # ingest stays refused until the re-run (force=True after
+        # confirming the crashed run is dead: r11 ADVICE nonce
+        # ownership) completes — while an earlier failure removes it
+        # (state unchanged). The nonce scopes every clear to THIS run's
+        # marker: if another run took ours over, clearing would resume
+        # ingest under ITS half-swap.
+        with self.log.maintenance(
             self.name, "migrate_lsh", force=force
-        )
-        try:
-            self._migrate_lsh_body(corpus, new)
-        except BaseException:
-            if not self._migrate_swap_started:
-                self.log.end_maintenance(self.name, nonce)
-            raise
-        self.log.end_maintenance(self.name, nonce)
+        ) as hold:
+            self._migrate_lsh_body(corpus, new, hold)
 
-    def _migrate_lsh_body(self, corpus: DataFrame, new: dict) -> None:
+    def _migrate_lsh_body(self, corpus: DataFrame, new: dict, hold) -> None:
         spark = corpus.sparkSession
-        self._migrate_swap_started = False
         # fold tombstones + segments so the rewrite sees live state only
         self.compact_state(spark, min_segments=1)
         # single-writer fence: freeze the committed-batch ids of every
@@ -584,14 +565,7 @@ class DedupIngest:
         # the migration with ZERO tables swapped — no mixed-params
         # window — then fence each individual swap too (expect_batches)
         # to narrow the residual race to the swap itself
-        for table in fence:
-            if self.log.committed(table) != fence[table]:
-                raise RuntimeError(
-                    f"migrate_lsh: a concurrent batch committed to "
-                    f"{table!r} during the rebuild — state is unchanged; "
-                    "stop the ingest and re-run the migration"
-                )
-        self._migrate_swap_started = True
+        self.log.check_fence(fence)
         for table, df in (
             (self.sketches_table, new_sk),
             (self.bands_table, new_bands),
@@ -608,6 +582,7 @@ class DedupIngest:
                 # ever found) has nothing to compact-swap; the re-tuned
                 # parameters may now admit pairs, so append them
                 self.log.append(df, table, "lsh-migrate")
+            hold()  # from the first swap on, the tables mix params
         self.n = new["n"]
         self.num_hashes = new["num_hashes"]
         self.band_size = new["band_size"]
@@ -625,17 +600,9 @@ class DedupIngest:
         sketches/pairs physically drop and the fully-applied tombstones
         truncate. AppendLog.compact keeps the committed-batch ids, so
         replays after maintenance are still skipped."""
-        for t in (self.bands_table, self.sketches_table):
-            resolve_compact(
-                self.log, spark, t, self._dead, min_segments=min_segments
-            )
-        dead = self._dead.read(spark)
-        if dead is None or dead.isEmpty():
-            self.log.compact(spark, self.pairs_table,
-                             min_segments=min_segments)
-        else:
-            self.log.compact(
-                spark, self.pairs_table, min_segments=1,
-                transform=lambda df: self._resolve_pairs(df, dead),
-            )
-        self._dead.truncate(spark)
+        self._dead.fold(
+            spark,
+            (self.bands_table, self.sketches_table,
+             (self.pairs_table, self._resolve_pairs)),
+            min_segments=min_segments,
+        )

@@ -19,6 +19,7 @@ tests, which exercises identical trigger/checkpoint semantics).
 from __future__ import annotations
 
 import concurrent.futures as cf
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -40,7 +41,10 @@ from ..operators.normalize import (
 from ..operators.schema_evolution import cast_to_target, diff_schemas
 from ..operators.typeconv import apply_rule_conversions
 from ..sources.infer import infer_payload_schema
-from .store import ParquetTargetStore
+from .ann_ingest import VersionedAnnIndex
+from .dedup_ingest import DedupIngest
+from .retrieval_ingest import RetrievalIngest
+from .store import AppendLog, ParquetTargetStore
 
 # fused route+parse: one JSON tokenization per topic row per table task
 # (replaces the two-step route_* probe + parse_* from_json — see
@@ -170,10 +174,72 @@ class TaskStatus:
 # dedup_lsh_* keys: library semantics except max_bucket, which defaults
 # BOUNDED (the hot-bucket guard on by default in production; 0/"none"
 # in config = unbounded exact recall). A standing params manifest
-# always outranks these — see _dedup_ingestor.
+# always outranks these — see _dedup_ingest.
 SHELL_LSH_DEFAULTS = {
     "n": 3, "num_hashes": 12, "band_size": 2, "threshold": 0.5,
     "max_bucket": 64,
+}
+
+
+def _dedup_ingest(rule: SyncRule, log: AppendLog) -> DedupIngest:
+    # LSH tuning resolution, in precedence order (r11 verdict item + the
+    # r12 upgrade-compat review):
+    #   1. EXPLICIT per-rule dedup_lsh_* keys — authoritative; a mismatch
+    #      against a standing manifest refuses at ingest, pointing at
+    #      migrate_lsh (the no-silent-mix contract).
+    #   2. the state's standing params MANIFEST — an upgraded deployment
+    #      with no config change keeps the exact parameters its index
+    #      was built with (flipping the shell default must not brick
+    #      pre-existing state behind the manifest refusal).
+    #   3. SHELL_LSH_DEFAULTS — new state with no keys gets the BOUNDED
+    #      max_bucket: at corpus scale an unbounded boilerplate band
+    #      bucket makes the candidate join quadratic in one reducer, and
+    #      a knob the production path cannot reach without code is not
+    #      a knob.
+    stored = DedupIngest.stored_params(log, rule.target_name)
+    base = stored if stored is not None else SHELL_LSH_DEFAULTS
+    explicit = {
+        k: v for k, v in (
+            ("n", rule.dedup_lsh_n),
+            ("num_hashes", rule.dedup_lsh_num_hashes),
+            ("band_size", rule.dedup_lsh_band_size),
+            ("threshold", rule.dedup_lsh_threshold),
+        ) if v is not None
+    }
+    if rule.dedup_lsh_max_bucket != "unset":
+        explicit["max_bucket"] = rule.dedup_lsh_max_bucket
+    return DedupIngest(
+        log, name=rule.target_name, id_col=rule.primary_key[0],
+        text_col=rule.dedup_text_column, **{**base, **explicit},
+    )
+
+
+#: the derived-state ingest family, one entry per SyncRule flag: (state
+#: dir under the store root, build(rule, AppendLog) -> ingestor). Each
+#: ingestor takes the same per-batch feed (process_batch(docs, batch_id,
+#: tombstones=...)) and maintenance (compact_state(spark)) — the
+#: merge-on-read tombstone contract of streaming/tombstones.py.
+_INGESTS = {
+    # streaming near-dup ingest: deduped against the LIVE standing
+    # corpus (doc-free: persisted band index + sketches) and within
+    # itself, then folded into the corpus state
+    "dedup_ingest": ("_dedup_state", _dedup_ingest),
+    # streaming BM25 ingest: postings append O(|batch|), the corpus
+    # never re-tokenized
+    "bm25_ingest": ("_bm25_state", lambda rule, log: RetrievalIngest(
+        log, name=rule.target_name, id_col=rule.primary_key[0],
+        text_col=rule.bm25_text_column, positions=rule.bm25_positions,
+    )),
+    # streaming ANN ingest: the batch's vectors assign against the
+    # persisted centroids, O(|batch| x k), the corpus never re-assigned;
+    # the first batch bootstraps the centroids, drift rebuilds ride the
+    # maintenance cycle (VersionedAnnIndex.maintain)
+    "ann_ingest": ("_ann_state", lambda rule, log: VersionedAnnIndex(
+        log, name=rule.target_name, id_col=rule.primary_key[0],
+        vec_col=rule.ann_vec_column, n_centroids=rule.ann_n_centroids,
+        drift_floor=rule.ann_drift_floor, pq_n_sub=rule.ann_pq_n_sub,
+        pq_n_codes=rule.ann_pq_n_codes,
+    )),
 }
 
 
@@ -270,121 +336,19 @@ class CdcBatchProcessor:
         self._batches_since_compact = 0
         self.batch_statuses: list[list[TaskStatus]] = []  # per processed batch
         self.compact_errors: list[tuple[str, str]] = []  # (table, error)
-        self._dedup_ingestors: dict[str, object] = {}  # rule target -> DedupIngest
-        self._ann_ingestors: dict[str, object] = {}  # rule target -> VersionedAnnIndex
-        self._bm25_ingestors: dict[str, object] = {}  # rule target -> RetrievalIngest
+        # (_INGESTS flag, rule target) -> derived-state ingestor
+        self._ingestors: dict[tuple[str, str], object] = {}
 
-    def _dedup_ingestor(self, rule: SyncRule):
-        """Lazily build one DedupIngest per dedup_ingest rule, stateful in
-        an AppendLog under the store root (survives restarts; replay-
-        idempotent via its committed-batch manifest)."""
-        ing = self._dedup_ingestors.get(rule.target_name)
+    def _ingestor(self, rule: SyncRule, kind: str):
+        """Lazily build the rule's `kind` ingestor (an `_INGESTS` flag),
+        stateful in an AppendLog under the store root (survives
+        restarts; replay-idempotent via its committed-batch manifest)."""
+        key = (kind, rule.target_name)
+        ing = self._ingestors.get(key)
         if ing is None:
-            import os
-
-            from .dedup_ingest import DedupIngest
-            from .store import AppendLog
-
-            # LSH tuning resolution, in precedence order (r11 verdict
-            # item + the r12 upgrade-compat review):
-            #   1. EXPLICIT per-rule dedup_lsh_* keys — authoritative; a
-            #      mismatch against a standing manifest refuses at
-            #      ingest, pointing at migrate_lsh (the no-silent-mix
-            #      contract).
-            #   2. the state's standing params MANIFEST — an upgraded
-            #      deployment with no config change keeps the exact
-            #      parameters its index was built with (flipping the
-            #      shell default must not brick pre-existing state
-            #      behind the manifest refusal).
-            #   3. SHELL_LSH_DEFAULTS — new state with no keys gets the
-            #      BOUNDED max_bucket: at corpus scale an unbounded
-            #      boilerplate band bucket makes the candidate join
-            #      quadratic in one reducer, and a knob the production
-            #      path cannot reach without code is not a knob.
-            log = AppendLog(os.path.join(self.store.root, "_dedup_state"))
-            manifested = self._read_lsh_manifest(log, rule.target_name)
-            base = manifested if manifested is not None else dict(SHELL_LSH_DEFAULTS)
-            explicit = {
-                k: v for k, v in (
-                    ("n", rule.dedup_lsh_n),
-                    ("num_hashes", rule.dedup_lsh_num_hashes),
-                    ("band_size", rule.dedup_lsh_band_size),
-                    ("threshold", rule.dedup_lsh_threshold),
-                ) if v is not None
-            }
-            if rule.dedup_lsh_max_bucket != "unset":
-                explicit["max_bucket"] = rule.dedup_lsh_max_bucket
-            params = {**base, **explicit}
-            ing = DedupIngest(
-                log,
-                name=rule.target_name,
-                id_col=rule.primary_key[0],
-                text_col=rule.dedup_text_column,
-                **params,
-            )
-            self._dedup_ingestors[rule.target_name] = ing
-        return ing
-
-    @staticmethod
-    def _read_lsh_manifest(log, name: str) -> dict | None:
-        """The standing LSH params manifest for state `name`, or None.
-        Read through a throwaway DedupIngest's path helper so the path
-        spelling has exactly one owner (dedup_ingest._params_path)."""
-        import json
-
-        from .dedup_ingest import DedupIngest
-
-        probe = DedupIngest(log, name=name)
-        try:
-            with open(probe._params_path()) as f:
-                m = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError, OSError):
-            return None
-        return m if isinstance(m, dict) else None
-
-    def _ann_ingestor(self, rule: SyncRule):
-        """Lazily build one VersionedAnnIndex per ann_ingest rule, stateful
-        in an AppendLog under the store root (survives restarts; replay-
-        idempotent via manifest + post-rebuild watermark)."""
-        ann = self._ann_ingestors.get(rule.target_name)
-        if ann is None:
-            import os
-
-            from .ann_ingest import VersionedAnnIndex
-            from .store import AppendLog
-
-            ann = VersionedAnnIndex(
-                AppendLog(os.path.join(self.store.root, "_ann_state")),
-                name=rule.target_name,
-                id_col=rule.primary_key[0],
-                vec_col=rule.ann_vec_column,
-                n_centroids=rule.ann_n_centroids,
-                drift_floor=rule.ann_drift_floor,
-                pq_n_sub=rule.ann_pq_n_sub,
-                pq_n_codes=rule.ann_pq_n_codes,
-            )
-            self._ann_ingestors[rule.target_name] = ann
-        return ann
-
-    def _bm25_ingestor(self, rule: SyncRule):
-        """Lazily build one RetrievalIngest per bm25_ingest rule, stateful
-        in an AppendLog under the store root (survives restarts; replay-
-        idempotent via its committed-batch manifest)."""
-        ing = self._bm25_ingestors.get(rule.target_name)
-        if ing is None:
-            import os
-
-            from .retrieval_ingest import RetrievalIngest
-            from .store import AppendLog
-
-            ing = RetrievalIngest(
-                AppendLog(os.path.join(self.store.root, "_bm25_state")),
-                name=rule.target_name,
-                id_col=rule.primary_key[0],
-                text_col=rule.bm25_text_column,
-                positions=rule.bm25_positions,
-            )
-            self._bm25_ingestors[rule.target_name] = ing
+            state_dir, build = _INGESTS[kind]
+            log = AppendLog(os.path.join(self.store.root, state_dir))
+            ing = self._ingestors[key] = build(rule, log)
         return ing
 
     def migrate_bm25_positions(self, target_name: str) -> None:
@@ -411,7 +375,7 @@ class CdcBatchProcessor:
                 f"target {target_name!r} has no published rows to "
                 "rebuild positions from"
             )
-        self._bm25_ingestor(rule).migrate_positions(
+        self._ingestor(rule, "bm25_ingest").migrate_positions(
             corpus.select(rule.primary_key[0], rule.bm25_text_column)
         )
 
@@ -691,7 +655,8 @@ class CdcBatchProcessor:
                         ),
                     )
             self._fold_derived(batch_df, rule, parsed, batch_id, is_regex)
-            if rule.dedup_ingest or rule.bm25_ingest or rule.ann_ingest:
+            kinds = [k for k in _INGESTS if getattr(rule, k)]
+            if kinds:
                 # CDC-correct ingest feed for the derived-state family:
                 # the batch's LWW-LATEST image per key (a micro-batch
                 # routinely carries several images of one pk — only the
@@ -712,33 +677,9 @@ class CdcBatchProcessor:
                     .select(rule.primary_key[0])
                     if has_op else None
                 )
-                if rule.dedup_ingest:
-                    # streaming near-dup ingest (streaming/dedup_ingest):
-                    # deduped against the LIVE standing corpus (doc-free:
-                    # persisted band index + sketches) and within itself,
-                    # then folded into the corpus state
-                    self._dedup_ingestor(rule).process_batch(
+                for kind in kinds:
+                    self._ingestor(rule, kind).process_batch(
                         docs, batch_id, tombstones=tombs
-                    )
-                if rule.bm25_ingest:
-                    # streaming BM25 ingest (streaming/retrieval_ingest):
-                    # postings append O(|batch|), the corpus never
-                    # re-tokenized; churn rides the tombstone fold
-                    self._bm25_ingestor(rule).process_batch(
-                        docs, batch_id, tombstones=tombs
-                    )
-                if rule.ann_ingest:
-                    # streaming ANN ingest (streaming/ann_ingest.py):
-                    # assign the batch's vectors against the persisted
-                    # centroids and append to the standing IVF index —
-                    # O(|batch| x k), the corpus never re-assigned. The
-                    # first batch bootstraps the centroids; drift
-                    # rebuilds ride the maintenance cycle.
-                    self._ann_ingestor(rule).process_batch(
-                        docs.select(
-                            rule.primary_key[0], rule.ann_vec_column
-                        ),
-                        batch_id, tombstones=tombs,
                     )
             if rule.save_delete or rule.only_save_delete:
                 dels = latest_deletes(parsed, list(rule.primary_key), order)
@@ -1039,38 +980,31 @@ class CdcBatchProcessor:
             # compact_state then folds), run concurrently ACROSS rules —
             # each rule's ingestors own disjoint AppendLog state, the
             # same independence the per-table loop above exploits
-            if rule.ann_ingest:
-                # the drift loop rides the same maintenance economics as
-                # re-clustering: measure, and rebuild+swap only when the
-                # size-weighted centroid similarity fell below the rule's
-                # floor (streaming/ann_ingest.VersionedAnnIndex.maintain)
-                try:
-                    self._ann_ingestor(rule).maintain(self.spark)
-                except Exception as e:  # noqa: BLE001
-                    self.compact_errors.append(
-                        (f"{rule.target_name}_ann_index", repr(e))
-                    )
-            # AppendLog-backed operator state accrues one directory per
-            # ingested batch; the same maintenance cycle segment-merges it
-            # (AppendLog.compact keeps the committed-batch ids, so replay
-            # skipping survives — the r5 compaction-vs-replay lesson)
-            for flag, getter, label in (
-                (rule.dedup_ingest, self._dedup_ingestor, "_dedup_state"),
-                (rule.bm25_ingest, self._bm25_ingestor, "_bm25_state"),
-                (rule.ann_ingest, self._ann_ingestor, "_ann_state"),
-            ):
-                if not flag:
+            for kind, (state_dir, _build) in _INGESTS.items():
+                if not getattr(rule, kind):
                     continue
-                try:
-                    getter(rule).compact_state(self.spark)
-                except Exception as e:  # noqa: BLE001
-                    self.compact_errors.append(
-                        (f"{rule.target_name}{label}", repr(e))
-                    )
+                # the ANN drift loop rides the same maintenance economics
+                # as re-clustering: measure, and rebuild+swap only when
+                # the size-weighted centroid similarity fell below the
+                # rule's floor (VersionedAnnIndex.maintain). Then the
+                # AppendLog-backed state, which accrues one directory per
+                # ingested batch, segment-merges and folds its
+                # tombstones (AppendLog.compact keeps the committed-batch
+                # ids, so replay skipping survives — the r5
+                # compaction-vs-replay lesson)
+                steps = [(state_dir, "compact_state")]
+                if kind == "ann_ingest":
+                    steps.insert(0, ("_ann_index", "maintain"))
+                for label, step in steps:
+                    try:
+                        getattr(self._ingestor(rule, kind), step)(self.spark)
+                    except Exception as e:  # noqa: BLE001
+                        self.compact_errors.append(
+                            (f"{rule.target_name}{label}", repr(e))
+                        )
 
         ingest_rules = dict.fromkeys(
-            r for r in self.rules
-            if r.ann_ingest or r.dedup_ingest or r.bm25_ingest
+            r for r in self.rules if any(getattr(r, k) for k in _INGESTS)
         )
         self._for_each_table(maintain_ingestors, list(ingest_rules))
 

@@ -58,7 +58,7 @@ from ..functions.retrieval import (
     term_freqs,
 )
 from .store import AppendLog
-from .tombstones import SEQ_COL, TombstoneSet, resolve_compact, stamp_seq
+from .tombstones import SEQ_COL, TombstoneSet, stamp_seq
 
 
 class RetrievalIngest:
@@ -308,28 +308,21 @@ class RetrievalIngest:
         if "positions" in existing.columns:
             self.positions = True  # already positional: no-op upgrade
             return
-        nonce = self.log.begin_maintenance(
+        with self.log.maintenance(
             self.name, "migrate_positions", force=force
-        )
-        swapped = False
-        try:
+        ):
             # fold tombstones + merge segments so the rewrite sees
             # exactly the live posting set (floor=1: single segment
             # still folds)
             self.compact_state(spark, min_segments=1)
-            fence = list(self.log.committed(self.tf_table))
-            swapped = self._migrate_positions_body(corpus, fence)
-        except BaseException:
-            if not swapped:
-                self.log.end_maintenance(self.name, nonce)
-            raise
-        self.log.end_maintenance(self.name, nonce)
+            self._migrate_positions_body(
+                corpus, self.log.committed(self.tf_table)
+            )
         self.positions = True
 
-    def _migrate_positions_body(self, corpus: DataFrame, fence) -> bool:
-        """Validations + rebuild + the fenced swap; returns True once the
-        swap has begun (the caller keeps the maintenance marker on
-        failure from that point on)."""
+    def _migrate_positions_body(self, corpus: DataFrame, fence) -> None:
+        """Validations + rebuild + the fenced swap (the swap itself is
+        atomic: any failure leaves the tf-only layout standing)."""
         spark = corpus.sparkSession
         live = self.log.read(spark, self.tf_table)
         live_ids = live.select("doc_id").distinct()
@@ -379,12 +372,6 @@ class RetrievalIngest:
                 "drifted text would be silently wrong"
             )
         positions = rebuilt.select("doc_id", "term", "positions")
-        if self.log.committed(self.tf_table) != fence:
-            raise RuntimeError(
-                f"migrate_positions: a concurrent batch committed to "
-                f"{self.tf_table!r} during the rebuild — state is "
-                "unchanged; stop the ingest and re-run the migration"
-            )
         self.log.compact(
             spark,
             self.tf_table,
@@ -394,7 +381,6 @@ class RetrievalIngest:
             ).select("doc_id", "dl", "term", "tf", "positions", SEQ_COL),
             expect_batches=fence,
         )
-        return True
 
     def drop_positions(self, spark: SparkSession, *,
                        force: bool = False) -> None:
@@ -413,27 +399,18 @@ class RetrievalIngest:
             self.positions = False
             return
         # same single-writer enforcement as migrate_positions: marker
-        # refuses concurrent ingest, fence aborts on a marker-ignoring
-        # writer with state unchanged
-        nonce = self.log.begin_maintenance(
+        # refuses concurrent ingest; the projection reads the state it
+        # swaps, so compact's own pre-swap recheck is the whole fence
+        with self.log.maintenance(
             self.name, "drop_positions", force=force
-        )
-        try:
+        ):
             self.compact_state(spark, min_segments=1)
-            fence = list(self.log.committed(self.tf_table))
             self.log.compact(
                 spark,
                 self.tf_table,
                 min_segments=1,
                 transform=lambda df: df.drop("positions"),
-                expect_batches=fence,
             )
-        except BaseException:
-            # any failure here left the old manifest standing (the swap
-            # is atomic), so state is unchanged — safe to clear
-            self.log.end_maintenance(self.name, nonce)
-            raise
-        self.log.end_maintenance(self.name, nonce)
         self.positions = False
 
     def compact_state(
@@ -445,13 +422,7 @@ class RetrievalIngest:
         batch ids survive, so post-maintenance replays are still
         skipped; a crash between the two state folds just leaves the
         tombstones standing for the next cycle (resolution stays lazy)."""
-        resolve_compact(
-            self.log, spark, self.tf_table, self._dead,
-            min_segments=min_segments,
-        )
-        resolve_compact(
-            self.log, spark, self.dl_table, self._dead,
-            min_segments=min_segments,
-        )
         self.log.compact(spark, self.stats_table, min_segments=min_segments)
-        self._dead.truncate(spark)
+        self._dead.fold(
+            spark, (self.tf_table, self.dl_table), min_segments=min_segments
+        )

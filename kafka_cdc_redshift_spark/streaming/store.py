@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -525,17 +526,21 @@ class AppendLog:
 
     # -- single-writer maintenance marker (r10 verdict item #4) --------
     # Migrations and other swap-based maintenance document "run from the
-    # maintenance cycle, not concurrently with process_batch"; these
-    # three methods turn that contract from prose into a refusal. The
-    # marker is a file so it fences SEPARATE PROCESSES too, and it is
-    # deliberately left behind by a crash: the safe direction is "ingest
-    # refuses until the migration is re-run to completion" (the retry
-    # takes the marker over and removes it on success), never "ingest
-    # silently races a half-swapped layout".
+    # maintenance cycle, not concurrently with process_batch"; the marker
+    # turns that contract from prose into a refusal, and `check_fence`
+    # catches a writer that ignored it. Swap-based maintenance brackets
+    # its body with `maintenance(...)`. The marker is a file so it
+    # fences SEPARATE PROCESSES too, and it is deliberately left behind
+    # by a process death — and by a failure after the body's first
+    # non-atomic swap (`hold()`): the safe direction is "ingest refuses
+    # until the migration is re-run to completion" (the retry takes the
+    # marker over with force=True and removes it on success), never
+    # "ingest silently races a half-swapped layout".
 
     def _maintenance_path(self, scope: str) -> str:
         return os.path.join(self.root, f"{scope}__MAINTENANCE")
 
+    @contextmanager
     def _marker_mutex(self, scope: str):
         """Exclusive flock around marker read-modify-write — without it
         begin_maintenance is check-then-replace and two SIMULTANEOUS
@@ -547,19 +552,14 @@ class AppendLog:
         the rest of AppendLog's atomicity (os.replace); a shared object
         store needs a conditional-put marker instead."""
         import fcntl
-        from contextlib import contextmanager
 
-        @contextmanager
-        def mutex():
-            os.makedirs(self.root, exist_ok=True)
-            with open(self._maintenance_path(scope) + ".lock", "a") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
-                try:
-                    yield
-                finally:
-                    fcntl.flock(lock, fcntl.LOCK_UN)
-
-        return mutex()
+        os.makedirs(self.root, exist_ok=True)
+        with open(self._maintenance_path(scope) + ".lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(lock, fcntl.LOCK_UN)
 
     def active_maintenance(self, scope: str) -> str | None:
         """The operation name of an in-flight (or crashed) maintenance
@@ -643,6 +643,40 @@ class AppendLog:
             except FileNotFoundError:
                 pass
 
+    @contextmanager
+    def maintenance(self, scope: str, op: str, *, force: bool = False):
+        """Hold `scope`'s maintenance marker for the body (see
+        `begin_maintenance` for `force`). The marker is cleared on any
+        exit, unless the body called the yielded `hold()` and then
+        failed: a run that has begun a multi-table swap leaves the marker
+        standing, so ingest stays refused until a force=True re-run
+        heals the state."""
+        nonce = self.begin_maintenance(scope, op, force=force)
+        held = []
+        try:
+            yield lambda: held.append(True)
+        except BaseException:
+            if not held:
+                self.end_maintenance(scope, nonce)
+            raise
+        self.end_maintenance(scope, nonce)
+
+    def check_fence(self, fence: dict) -> None:
+        """Single-writer fence for state derived from an earlier read:
+        refuse unless every `{table: committed ids}` entry still
+        matches. A batch committed since the read would be clobbered by
+        a swap of the derived state — its data AND its replay-guard
+        id."""
+        for table, ids in fence.items():
+            found = self.committed(table)
+            if found != list(ids):
+                raise RuntimeError(
+                    f"a concurrent batch committed to {table!r} since the "
+                    f"state was read (committed batches changed: expected "
+                    f"{list(ids)}, found {found}) — state is unchanged; "
+                    "stop the ingest and re-run the maintenance"
+                )
+
     def check_no_maintenance(self, scope: str) -> None:
         """Ingest-side guard: refuse to append state while a maintenance
         marker stands — a batch committed between a migration's state
@@ -706,7 +740,7 @@ class AppendLog:
 
         `transform` (df -> df), applied to the union before the merged
         segment is written, lets maintenance REWRITE state while it
-        merges — the tombstone fold (streaming/tombstones.resolve_compact)
+        merges — the tombstone fold (streaming/tombstones.TombstoneSet.fold)
         drops dead rows here. With a transform the floor drops to 1: a
         single-segment table still needs its rewrite applied.
 
@@ -725,15 +759,10 @@ class AppendLog:
         AND its replay-guard id."""
         import shutil
 
+        if expect_batches is not None:
+            self.check_fence({table: expect_batches})
         m = self._manifest(table)
         segs = self.segments(table)
-        if expect_batches is not None and m["batches"] != list(expect_batches):
-            raise RuntimeError(
-                f"compact({table!r}): committed batches changed since the "
-                f"rewrite was derived (expected {list(expect_batches)}, "
-                f"found {m['batches']}) — a concurrent append raced this "
-                "swap; state is unchanged, re-run the maintenance"
-            )
         # floor of 2: a single segment is already compact — re-merging it
         # every maintenance cycle would be pure rewrite churn
         floor = 1 if transform is not None else 2

@@ -24,10 +24,11 @@ resolution happens lazily:
     must survive their own batch's tombstone);
   * an update is delete+insert: tombstone at seq s kills state from
     seqs < s, the new image's rows carry seq s;
-  * maintenance (`resolve_compact`) physically drops dead rows while
-    keeping committed batch ids (replays stay skipped), then truncates
-    the fully-applied tombstones — steady-state tombstone volume is
-    "churn since the last maintenance cycle", not corpus history.
+  * maintenance (`TombstoneSet.fold`) reads the tombstones once,
+    physically drops dead rows from every state table while keeping
+    committed batch ids (replays stay skipped), then truncates the
+    fully-applied tombstones — steady-state tombstone volume is "churn
+    since the last maintenance cycle", not corpus history.
 
 Re-applying a tombstone is idempotent by construction (live rows have
 seq >= their own batch's tombstones), so every crash window in the
@@ -96,11 +97,7 @@ def tombs_fit_broadcast(tombs: DataFrame, *, headroom: int = 4) -> bool:
 
 
 def resolve(
-    state: DataFrame | None,
-    tombs: DataFrame | None,
-    id_col: str,
-    *,
-    broadcast_tombs: bool | None = None,
+    state: DataFrame | None, tombs: DataFrame | None, id_col: str
 ) -> DataFrame | None:
     """The live rows of `state` under `tombs`: a row survives iff no
     tombstone for its id has seq > the row's seq. One combinable max-agg
@@ -111,18 +108,14 @@ def resolve(
     between maintenance folds it is bounded by churn-since-last-fold
     (truncate_after_fold), never corpus size, so the serving read's
     plan should not HOPE AQE notices — the same reasoning as
-    lm_surprisal_flags(broadcast_lm=True). `broadcast_tombs=None`
-    (default) gates the pin on the optimizer's size estimate
-    (tombs_fit_broadcast), so accumulated churn degrades to a shuffle
-    join rather than a broadcast OOM; True pins unconditionally, False
-    forces the shuffle (the state side then co-locates when bucketed
-    by id)."""
+    lm_surprisal_flags(broadcast_lm=True). The pin is gated on the
+    optimizer's size estimate (tombs_fit_broadcast), so accumulated
+    churn degrades to a shuffle join rather than a broadcast OOM (the
+    state side then co-locates when bucketed by id)."""
     if state is None or tombs is None:
         return state
     tmax = tombs.groupBy(id_col).agg(F.max(SEQ_COL).alias("__dead_seq"))
-    if broadcast_tombs is None:
-        broadcast_tombs = tombs_fit_broadcast(tombs)
-    if broadcast_tombs:
+    if tombs_fit_broadcast(tombs):
         tmax = F.broadcast(tmax)
     return (
         state.join(tmax, id_col, "left")
@@ -170,17 +163,12 @@ class TombstoneSet:
         return self.log.read(spark, self.table)
 
     def resolve(
-        self, spark: SparkSession, state: DataFrame | None, *,
-        broadcast_tombs: bool | None = None,
+        self, spark: SparkSession, state: DataFrame | None
     ) -> DataFrame | None:
-        return resolve(
-            state, self.read(spark), self.id_col,
-            broadcast_tombs=broadcast_tombs,
-        )
+        return resolve(state, self.read(spark), self.id_col)
 
     def resolve_frozen(
-        self, spark: SparkSession, state: DataFrame | None, batch_id, *,
-        broadcast_tombs: bool | None = None,
+        self, spark: SparkSession, state: DataFrame | None, batch_id
     ) -> DataFrame | None:
         """Live rows as of the START of `batch_id` — both the state and
         the tombstones are frozen to seq < batch_id, so a retried batch
@@ -189,47 +177,46 @@ class TombstoneSet:
             frozen_before(state, batch_id),
             frozen_before(self.read(spark), batch_id),
             self.id_col,
-            broadcast_tombs=broadcast_tombs,
         )
 
-    def is_empty(self, spark: SparkSession) -> bool:
-        t = self.read(spark)
-        return t is None or t.isEmpty()
+    def fold(
+        self, spark: SparkSession, tables, *, min_segments: int = 8
+    ) -> None:
+        """Maintenance, the delete half of the merge-on-read fold: merge
+        each state table's segments AND physically drop its tombstoned
+        rows, then truncate the fully-applied tombstones. `tables` holds
+        table names, or `(table, resolver)` pairs for state whose rows
+        die by another rule than `resolve` on `id_col` — resolver(df,
+        tombstones) -> live df.
 
-    def truncate(self, spark: SparkSession) -> None:
-        """Drop all tombstone ROWS while keeping committed batch ids —
-        run only after every state table has been resolve-compacted, at
-        which point the tombstones are fully applied. A replayed old
-        batch re-appends its tombstones (its id was truncated out of the
-        per-batch dirs but not the manifest — `has_batch` still skips
-        it), and even a re-applied tombstone is idempotent: live rows
-        carry seq >= their own batch's tombstones."""
-        if self.read(spark) is None:
-            return
-        self.log.compact(
-            spark, self.table, min_segments=1,
-            transform=lambda df: df.limit(0),
-        )
-
-
-def resolve_compact(
-    log: AppendLog,
-    spark: SparkSession,
-    table: str,
-    tombs: TombstoneSet,
-    *,
-    min_segments: int = 8,
-) -> None:
-    """Maintenance: merge `table`'s segments AND physically drop its
-    tombstoned rows (the delete half of the merge-on-read fold). When
-    tombstones exist the rewrite runs regardless of the segment floor —
-    clearing the tombstones afterwards is only sound once every state
-    row they kill is gone."""
-    dead = tombs.read(spark)
-    if dead is None or dead.isEmpty():
-        log.compact(spark, table, min_segments=min_segments)
-        return
-    log.compact(
-        spark, table, min_segments=1,
-        transform=lambda df: resolve(df, dead, tombs.id_col),
-    )
+        The tombstones are read once per fold. When any exist, every
+        table is rewritten regardless of the segment floor — truncating
+        is only sound once every state row they kill is gone; a crash
+        between the table rewrites just leaves the tombstones standing
+        for the next cycle (resolution stays lazy). The truncate drops
+        all tombstone ROWS while keeping committed batch ids: a replayed
+        old batch is still skipped by `has_batch`, and even a re-applied
+        tombstone is idempotent (live rows carry seq >= their own
+        batch's tombstones). It is fenced on the tombstone ids read
+        here, so tombstones committed mid-fold are never dropped
+        unapplied."""
+        dead_ids = self.log.committed(self.table)
+        dead = self.read(spark)
+        live = dead is not None and not dead.isEmpty()
+        for entry in tables:
+            table, res = entry if isinstance(entry, tuple) else (
+                entry, lambda df, t: resolve(df, t, self.id_col)
+            )
+            if live:
+                self.log.compact(
+                    spark, table, min_segments=1,
+                    transform=lambda df, res=res: res(df, dead),
+                )
+            else:
+                self.log.compact(spark, table, min_segments=min_segments)
+        if dead is not None:
+            self.log.compact(
+                spark, self.table, min_segments=1,
+                transform=lambda df: df.limit(0),
+                expect_batches=dead_ids,
+            )

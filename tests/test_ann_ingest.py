@@ -242,7 +242,7 @@ def test_ann_ingest_properties_driven_e2e(spark, sf_dir, tmp_path):
     b1 = env.filter(F.crc32(F.col("value")) % 2 == 1)
     s0 = proc.process_batch(b0, 0)
     assert [x.status for x in s0] == ["finished"]
-    ann = proc._ann_ingestor(rules[0])
+    ann = proc._ingestor(rules[0], "ann_ingest")
     assert ann.current_version() >= 0
     s1 = proc.process_batch(b1, 1)
     assert [x.status for x in s1] == ["finished"]

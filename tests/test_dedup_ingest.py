@@ -200,7 +200,7 @@ def test_e2e_cdc_stream_dedup_ingest(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(180)
 
-    ing = proc._dedup_ingestor(rules[0])
+    ing = proc._ingestor(rules[0], "dedup_ingest")
     got = sorted(map(_pair_key, ing.pairs(spark).collect()))
     want = sorted(
         map(_pair_key, dedup_text.minhash_lsh_pairs(docs).collect())

@@ -377,7 +377,7 @@ sync_table_list = [\\
         + [(100, near_a), (101, near_b)],
         "doc_id long, text string",
     )
-    ing = processor._dedup_ingestor(processor.rules[0])
+    ing = processor._ingestor(processor.rules[0], "dedup_ingest")
     got_pairs = {
         (r.doc_a, r.doc_b) for r in ing.pairs(spark).collect()
     }
@@ -392,7 +392,7 @@ sync_table_list = [\\
     queries = spark.createDataFrame(
         [(0, "alpha beta"), (1, "omega")], "q_id int, q_text string"
     )
-    bm = processor._bm25_ingestor(processor.rules[0])
+    bm = processor._ingestor(processor.rules[0], "bm25_ingest")
     got_topk = sorted(
         (r.q_id, r.doc_id, r.n_terms, r.score, r.rnk)
         for r in bm.topk(queries, k=5).collect()
@@ -404,7 +404,7 @@ sync_table_list = [\\
     assert got_topk == want_topk and got_topk
 
     # ANN index serves k neighbors per query from the streamed cells
-    ann = processor._ann_ingestors[processor.rules[0].target_name]
+    ann = processor._ingestors[("ann_ingest", processor.rules[0].target_name)]
     qv = spark.createDataFrame(
         [(0, [0.1] * 8)], "q_id long, q_emb array<double>"
     )
@@ -538,7 +538,7 @@ def test_dedup_lsh_params_properties_drivable(spark, tmp_path):
     proc.process_batch(batch(docs1), 0)
     proc.process_batch(batch(docs2), 1)
 
-    ing = proc._dedup_ingestors["docs"]
+    ing = proc._ingestors[("dedup_ingest", "docs")]
     assert (ing.num_hashes, ing.band_size, ing.threshold,
             ing.max_bucket) == (18, 3, 0.4, 5)
     with open(ing._params_path()) as f:
@@ -607,7 +607,7 @@ def test_dedup_lsh_shell_defaults_and_upgrade_compat(spark, tmp_path):
     store = ParquetTargetStore(str(tmp_path / "fresh"))
     proc = CdcBatchProcessor(spark, [plain], store, prune_grace_sec=0)
     proc.process_batch(batch([(1, "alpha beta gamma one two three")]), 0)
-    ing = proc._dedup_ingestors["docs"]
+    ing = proc._ingestors[("dedup_ingest", "docs")]
     assert ing._params() == SHELL_LSH_DEFAULTS
     assert ing.max_bucket == 64
 
@@ -627,7 +627,7 @@ def test_dedup_lsh_shell_defaults_and_upgrade_compat(spark, tmp_path):
     assert legacy.max_bucket is None  # the library default
     proc2 = CdcBatchProcessor(spark, [plain], store2, prune_grace_sec=0)
     proc2.process_batch(batch([(2, "delta epsilon zeta four five six")]), 1)
-    ing2 = proc2._dedup_ingestors["docs"]
+    ing2 = proc2._ingestors[("dedup_ingest", "docs")]
     assert ing2.max_bucket is None  # manifest outranks the shell default
     assert ing2._params() == legacy._params()
 

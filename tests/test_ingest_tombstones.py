@@ -293,7 +293,7 @@ def test_tombstone_broadcast_degrades_to_shuffle_when_oversized(spark):
     relation's estimate outgrows the broadcast budget — here simulated
     by disabling autoBroadcastJoinThreshold, which the gate honors —
     resolve must degrade to a shuffle join instead of OOMing the
-    executors, with no caller changes. An explicit True still pins."""
+    executors, with no caller changes."""
     from kafka_cdc_redshift_spark.streaming.tombstones import resolve
 
     state = spark.createDataFrame(
@@ -308,11 +308,6 @@ def test_tombstone_broadcast_degrades_to_shuffle_when_oversized(spark):
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" not in plan
-        pinned = (
-            resolve(state, tombs, "doc_id", broadcast_tombs=True)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "BroadcastHashJoin" in pinned
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # default conf: churn-sized tombstones keep the pinned broadcast
@@ -1026,3 +1021,50 @@ def test_migration_crash_takeover_requires_force(spark, docs, tmp_path):
     DedupIngest(log, name="docs", **new_kw).process_batch(
         _mk(spark, [(98, "post-heal ingest works")]), 2
     )
+
+
+def test_migrate_lsh_holds_marker_after_partial_swap(
+    spark, docs, tmp_path, monkeypatch
+):
+    """The one failure that must leave the maintenance marker standing:
+    migrate_lsh swaps three tables one by one, so a crash after the
+    FIRST swap leaves the state mixing old and new parameters. Ingest
+    must stay refused until a force=True re-run heals it to the
+    one-shot pairs under the new tuning and clears the marker."""
+    log = AppendLog(str(tmp_path / "state"))
+    ing = DedupIngest(log, name="docs")
+    ing.process_batch(docs, 0)
+    live_df = _mk(spark, _texts(docs).items())
+    new_kw = dict(num_hashes=18, band_size=3, threshold=0.4)
+    sketch_segs = log.segments(ing.sketches_table)
+    band_segs = log.segments(ing.bands_table)
+
+    real = AppendLog.compact
+
+    def crash_on_bands_swap(self, spark_, table, **kw):
+        if table == ing.bands_table and kw.get("expect_batches") is not None:
+            raise RuntimeError("simulated crash mid-migration")
+        return real(self, spark_, table, **kw)
+
+    monkeypatch.setattr(AppendLog, "compact", crash_on_bands_swap)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        ing.migrate_lsh(live_df, **new_kw)
+    monkeypatch.setattr(AppendLog, "compact", real)
+
+    # the sketches swapped, the bands did not: the marker stands
+    assert log.segments(ing.sketches_table) != sketch_segs
+    assert log.segments(ing.bands_table) == band_segs
+    assert log.active_maintenance("docs") == "migrate_lsh"
+    with pytest.raises(RuntimeError, match="maintenance"):
+        DedupIngest(log, name="docs").process_batch(
+            _mk(spark, [(98, "refused")]), 1
+        )
+
+    # the takeover re-run heals to the one-shot pairs and clears it
+    DedupIngest(log, name="docs").migrate_lsh(live_df, force=True, **new_kw)
+    assert log.active_maintenance("docs") is None
+    healed = DedupIngest(log, name="docs", **new_kw)
+    want = sorted(map(_pair_key,
+                      dedup_text.minhash_lsh_pairs(live_df, **new_kw)
+                      .collect()))
+    assert sorted(map(_pair_key, healed.pairs(spark).collect())) == want

@@ -260,7 +260,7 @@ def test_e2e_cdc_stream_bm25_ingest(spark, sf_dir, tmp_path, sf_queries):
     )
     q.awaitTermination(180)
 
-    ing = proc._bm25_ingestor(rules[0])
+    ing = proc._ingestor(rules[0], "bm25_ingest")
     got = sorted(map(_score_key, ing.topk(sf_queries, k=10).collect()))
     want = sorted(
         map(
@@ -487,7 +487,7 @@ def test_shell_migrate_bm25_positions_config_flip(spark, sf_dir, tmp_path):
         "lang", "source", "n_chars",
     )
     with pytest.raises(Exception, match="migrate_positions"):
-        proc2._bm25_ingestor(pos_rule).process_batch(
+        proc2._ingestor(pos_rule, "bm25_ingest").process_batch(
             store.read(spark, "documents").limit(0), 99
         )
     proc2.migrate_bm25_positions("documents")
@@ -496,7 +496,7 @@ def test_shell_migrate_bm25_positions_config_flip(spark, sf_dir, tmp_path):
     phrases = spark.createDataFrame(
         [(0, " ".join(t[11].split()[:2]))], "phrase_id int, phrase string"
     )
-    ing = proc2._bm25_ingestor(pos_rule)
+    ing = proc2._ingestor(pos_rule, "bm25_ingest")
     want = {
         (r.phrase_id, r.doc_id, r.n_occurrences)
         for r in retrieval.phrase_match(
