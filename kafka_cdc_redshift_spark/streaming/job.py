@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import concurrent.futures as cf
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -160,6 +161,27 @@ def _derived_folds(rule: SyncRule, cdc_format: str) -> tuple[list, list]:
     ):
         state = [e for e in _STATE_FOLDS if getattr(rule, e[1])]
     return event, state
+
+
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
+
+@contextmanager
+def _job_group(sc, group: str, description: str):
+    """Tag the Spark jobs this thread submits in the body with `group`
+    (so `cancelJobGroup` and `getJobIdsForGroup` see them), then restore
+    the thread's prior group: the stream thread's own jobs (Structured
+    Streaming tags them with the query's run id) must not inherit the
+    batch's."""
+    prior = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
+    sc.setJobGroup(group, description, interruptOnCancel=True)
+    try:
+        yield
+    finally:
+        for key, value in zip(_JOB_GROUP_KEYS, prior):
+            sc.setLocalProperty(key, value)  # None clears it
 
 
 @dataclass
@@ -779,7 +801,10 @@ class CdcBatchProcessor:
             # one census job over the whole batch: materializes the cache
             # for all tasks, decides emptiness and yields the per-table
             # routed counts that spare exact-match rules their probe job
-            total, route_counts = self._batch_route_counts(batch_df)
+            with _job_group(
+                self.spark.sparkContext, group, f"cdc batch {batch_id} census"
+            ):
+                total, route_counts = self._batch_route_counts(batch_df)
             if not total:  # empty batch: nothing to merge or maintain
                 self.batch_statuses.append([])
                 return []

@@ -16,6 +16,13 @@ The pointer, `<table>/_current.json`, holds:
   * `batch_id` / `folded_ids` (optional): the replay guards, see
     `last_batch_id` and `folded_batch_ids`.
 
+An `AppendLog` manifest (`<log>/<table>/_manifest.json`) records, beside
+its committed batch ids and segment list, each listed segment's schema in
+the pointer's spelling, so `AppendLog.read` and the delta reads below
+open the state this store wrote without a schema-inference job; a
+segment without one (written before schemas were recorded) falls back
+to inference.
+
 Besides the base, a table may hold DELTAS: one batch each, committed
 O(|batch|) into the store's one delta log (an `AppendLog`; `_append/` for
 the copy-on-write store, `_delta/` for merge-on-read). `read` resolves
@@ -51,6 +58,13 @@ def write_json_atomic(path: str, obj) -> None:
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
+
+
+def _schema_json(df: DataFrame) -> dict:
+    """`df`'s schema as Spark JSON with every field nullable, the way the
+    parquet files Spark writes hold it: a read opened with it equals an
+    inferred read, without the inference job."""
+    return json.loads(df._jdf.schema().asNullable().json())
 
 
 def _adhoc_batch_id() -> str:
@@ -226,12 +240,12 @@ class ParquetTargetStore:
                      meta: dict) -> DataFrame | None:
         """The live deltas, each row tagged with its delta's commit
         position `__seq`; None when there are none. One read per batch
-        directory + unionByName, so columns added across batches
-        null-fill instead of failing one multi-directory scan."""
+        directory, opened with that delta's recorded schema, +
+        unionByName, so columns added across batches null-fill instead
+        of failing one multi-directory scan."""
         parts = [
-            spark.read.parquet(
-                os.path.join(self._delta.root, table, f"batch={b}")
-            ).withColumn("__seq", F.lit(i))
+            self._delta.read(spark, table, [f"batch={b}"])
+            .withColumn("__seq", F.lit(i))
             for i, b in enumerate(self._live_delta_ids(table, meta))
         ]
         if not parts:
@@ -298,10 +312,7 @@ class ParquetTargetStore:
         nxt = 0 if prev is None else prev + 1
         out = os.path.join(self.root, table, f"version={nxt}")
         self._write_version(df, table, out, nxt)
-        # parquet files hold every field as nullable; record the schema
-        # the same way so a read with it equals an inferred read
-        schema = json.loads(df._jdf.schema().asNullable().json())
-        meta = {"version": nxt, "schema": schema}
+        meta = {"version": nxt, "schema": _schema_json(df)}
         if batch_id is None:
             batch_id = self.last_batch_id(table)  # carry forward
         if folded_ids is None:
@@ -492,14 +503,23 @@ class AppendLog:
     versioned store's full republish would cost O(corpus) per batch, and
     each target store's delta log.
 
-    Layout: `root/table/batch=<id>/` parquet per appended batch plus a
-    `_manifest.json` listing committed batch ids, rewritten atomically
-    (os.replace) AFTER the batch directory is fully written — readers
-    only ever see committed directories, and a crash mid-write leaves an
-    uncommitted directory that the retry overwrites in place (the batch
-    directory is keyed by batch_id, so re-appending the same batch is
-    idempotent). Per-ingest write cost is O(|batch|); the standing state
-    is never rewritten. This is the minimal form of what a transactional
+    Layout: `root/table/batch=<id>/` parquet per appended batch (and
+    `seg=<n>/` per compaction) plus a `_manifest.json`, rewritten
+    atomically (os.replace) AFTER the segment directory is fully
+    written — readers only ever see committed directories, and a crash
+    mid-write leaves an uncommitted directory that the retry overwrites
+    in place (the batch directory is keyed by batch_id, so re-appending
+    the same batch is idempotent). The manifest holds:
+      * `batches`: the committed batch ids (the replay guard);
+      * `segments`: the directories backing the table (legacy manifests
+        derive one `batch=<id>` per batch);
+      * `next_seg`: the next compaction segment number;
+      * `schemas`: each listed segment's schema as written, all fields
+        nullable (the version pointer's spelling), so `read` opens the
+        segments without a schema-inference job; a segment without an
+        entry falls back to inference.
+    Per-ingest write cost is O(|batch|); the standing state is never
+    rewritten. This is the minimal form of what a transactional
     table format (Delta/Iceberg) calls an append commit; at 100 TB the
     same tables map onto real format appends, and periodic compaction of
     small batch files rides `operators/layout.compact_table`'s shape.
@@ -692,14 +712,17 @@ class AppendLog:
                 "retry the batch."
             )
 
+    @staticmethod
+    def _segments(m: dict) -> list:
+        return m.get("segments", [f"batch={b}" for b in m["batches"]])
+
     def segments(self, table: str) -> list:
         """Storage directory names backing the table. Distinct from
         `committed`: compaction merges segments but NEVER forgets batch
         ids — `has_batch` (the replay guard) must survive maintenance,
         the lesson of the r5 compaction/replay bug. Legacy manifests
         (pre-segments) derive one segment per batch."""
-        m = self._manifest(table)
-        return m.get("segments", [f"batch={b}" for b in m["batches"]])
+        return self._segments(self._manifest(table))
 
     def has_batch(self, table: str, batch_id) -> bool:
         return batch_id in self.committed(table)
@@ -710,22 +733,34 @@ class AppendLog:
         directory and the manifest add is a set-insert."""
         if self.has_batch(table, batch_id):
             return
-        out = os.path.join(self.root, table, f"batch={batch_id}")
-        df.write.mode("overwrite").parquet(out)
+        seg = f"batch={batch_id}"
+        df.write.mode("overwrite").parquet(os.path.join(self.root, table, seg))
         m = self._manifest(table)
+        m["segments"] = self._segments(m) + [seg]
         m["batches"] = m["batches"] + [batch_id]
-        m["segments"] = self.segments(table) + [f"batch={batch_id}"]
+        m.setdefault("schemas", {})[seg] = _schema_json(df)
         write_json_atomic(self._manifest_path(table), m)
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Union of all committed data (None before the first commit).
-        Uncommitted/partial directories are invisible: the reader lists
-        the manifest's segments, not the filesystem."""
-        segs = self.segments(table)
+    def read(self, spark: SparkSession, table: str,
+             segments=None) -> DataFrame | None:
+        """Union of all committed data, or of just the listed `segments`
+        (None before the first commit). Uncommitted/partial directories
+        are invisible: the reader lists the manifest's segments, not the
+        filesystem. When every segment read recorded the same schema the
+        scan opens with it; otherwise (a legacy segment, or schemas that
+        differ across segments) parquet infers it."""
+        m = self._manifest(table)
+        segs = self._segments(m) if segments is None else list(segments)
         if not segs:
             return None
-        paths = [os.path.join(self.root, table, s) for s in segs]
-        return spark.read.parquet(*paths)
+        schemas = m.get("schemas", {})
+        schema = schemas.get(segs[0])
+        reader = spark.read
+        if schema is not None and all(schemas.get(s) == schema for s in segs):
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(
+            *(os.path.join(self.root, table, s) for s in segs)
+        )
 
     def compact(
         self, spark: SparkSession, table: str, *, min_segments: int = 8,
@@ -762,7 +797,7 @@ class AppendLog:
         if expect_batches is not None:
             self.check_fence({table: expect_batches})
         m = self._manifest(table)
-        segs = self.segments(table)
+        segs = self._segments(m)
         # floor of 2: a single segment is already compact — re-merging it
         # every maintenance cycle would be pure rewrite churn
         floor = 1 if transform is not None else 2
@@ -781,10 +816,7 @@ class AppendLog:
         # writers refuse first; this catches the rest up to the final
         # os.replace). State is unchanged on refusal: re-run.
         cur = self._manifest(table)
-        cur_segs = cur.get(
-            "segments", [f"batch={b}" for b in cur["batches"]]
-        )
-        if cur["batches"] != m["batches"] or cur_segs != segs:
+        if cur["batches"] != m["batches"] or self._segments(cur) != segs:
             raise RuntimeError(
                 f"compact({table!r}): a concurrent append committed "
                 "during the rewrite (manifest changed under the swap); "
@@ -792,6 +824,7 @@ class AppendLog:
             )
         m["segments"] = [f"seg={n}"]
         m["next_seg"] = n + 1
+        m["schemas"] = {f"seg={n}": _schema_json(df)}  # merged ones drop
         write_json_atomic(self._manifest_path(table), m)
         for s in segs:
             shutil.rmtree(
@@ -814,7 +847,7 @@ class AppendLog:
         import shutil
 
         m = self._manifest(table)
-        segs = self.segments(table)
+        segs = self._segments(m)
         gone = [b for b in batch_ids if f"batch={b}" not in segs]
         if gone:
             # a compacted segment can't give individual batches back —
@@ -826,6 +859,8 @@ class AppendLog:
         drop = {f"batch={b}" for b in batch_ids}
         m["batches"] = [b for b in m["batches"] if b not in set(batch_ids)]
         m["segments"] = [s for s in segs if s not in drop]
+        schemas = m.get("schemas", {})
+        m["schemas"] = {s: schemas[s] for s in m["segments"] if s in schemas}
         write_json_atomic(self._manifest_path(table), m)
         for b in batch_ids:
             shutil.rmtree(

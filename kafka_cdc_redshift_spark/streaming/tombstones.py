@@ -24,11 +24,14 @@ resolution happens lazily:
     must survive their own batch's tombstone);
   * an update is delete+insert: tombstone at seq s kills state from
     seqs < s, the new image's rows carry seq s;
-  * maintenance (`TombstoneSet.fold`) reads the tombstones once,
-    physically drops dead rows from every state table while keeping
-    committed batch ids (replays stay skipped), then truncates the
-    fully-applied tombstones — steady-state tombstone volume is "churn
-    since the last maintenance cycle", not corpus history.
+  * maintenance (`TombstoneSet.fold`) reads the tombstones once; when
+    any rows exist it physically drops dead rows from every state table
+    while keeping committed batch ids (replays stay skipped), then
+    truncates the fully-applied tombstones — steady-state tombstone
+    volume is "churn since the last maintenance cycle", not corpus
+    history. With no tombstone rows nothing is rewritten: every table,
+    the tombstone table included, only merges its segments under the
+    `min_segments` floor.
 
 Re-applying a tombstone is idempotent by construction (live rows have
 seq >= their own batch's tombstones), so every crash window in the
@@ -189,17 +192,20 @@ class TombstoneSet:
         die by another rule than `resolve` on `id_col` — resolver(df,
         tombstones) -> live df.
 
-        The tombstones are read once per fold. When any exist, every
-        table is rewritten regardless of the segment floor — truncating
-        is only sound once every state row they kill is gone; a crash
-        between the table rewrites just leaves the tombstones standing
-        for the next cycle (resolution stays lazy). The truncate drops
-        all tombstone ROWS while keeping committed batch ids: a replayed
-        old batch is still skipped by `has_batch`, and even a re-applied
-        tombstone is idempotent (live rows carry seq >= their own
-        batch's tombstones). It is fenced on the tombstone ids read
-        here, so tombstones committed mid-fold are never dropped
-        unapplied."""
+        The tombstones are read once per fold. When any rows exist,
+        every table is rewritten regardless of the segment floor —
+        truncating is only sound once every state row they kill is gone;
+        a crash between the table rewrites just leaves the tombstones
+        standing for the next cycle (resolution stays lazy). The
+        truncate drops all tombstone ROWS while keeping committed batch
+        ids: a replayed old batch is still skipped by `has_batch`, and
+        even a re-applied tombstone is idempotent (live rows carry seq
+        >= their own batch's tombstones). It is fenced on the tombstone
+        ids read here, so tombstones committed mid-fold are never
+        dropped unapplied. With no tombstone rows there is nothing to
+        drop or truncate: the tombstone table's (empty) segments merge
+        under the floor like any state table's, and a standing fold
+        writes nothing."""
         dead_ids = self.log.committed(self.table)
         dead = self.read(spark)
         live = dead is not None and not dead.isEmpty()
@@ -214,9 +220,11 @@ class TombstoneSet:
                 )
             else:
                 self.log.compact(spark, table, min_segments=min_segments)
-        if dead is not None:
+        if live:
             self.log.compact(
                 spark, self.table, min_segments=1,
                 transform=lambda df: df.limit(0),
                 expect_batches=dead_ids,
             )
+        else:
+            self.log.compact(spark, self.table, min_segments=min_segments)

@@ -14,8 +14,8 @@ from kafka_cdc_redshift_spark.sources import load_table
 from kafka_cdc_redshift_spark.streaming.dedup_ingest import DedupIngest
 from kafka_cdc_redshift_spark.streaming.store import AppendLog
 
-# multi-minute churn/e2e module: excluded from the driver's bounded
-# verify window (pytest.ini addopts); the full suite runs it with -m ""
+# multi-minute churn/e2e module: marked slow, but it runs in the default
+# suite like every test; deselect it for a quick loop with -m "not slow"
 pytestmark = pytest.mark.slow
 
 

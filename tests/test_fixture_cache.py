@@ -7,9 +7,9 @@ import sys
 
 import pytest
 
-# subprocess two-session lifecycle probes take 1-2 min each: excluded from
-# the driver's bounded verify window (pytest.ini addopts); the full suite
-# runs them with -m ""
+# subprocess two-session lifecycle probes take 1-2 min each: marked slow,
+# but they run in the default suite like every test; deselect them for a
+# quick loop with -m "not slow"
 pytestmark = pytest.mark.slow
 
 SCRIPT = r"""

@@ -18,8 +18,8 @@ from hypothesis import strategies as st
 from kafka_cdc_redshift_spark.operators.dedup import lww_dedup
 from kafka_cdc_redshift_spark.operators.merge import merge_changes
 
-# multi-minute hypothesis folds: excluded from the driver's bounded
-# verify window (pytest.ini addopts); the full suite runs it with -m ""
+# multi-minute hypothesis folds: marked slow, but they run in the default
+# suite like every test; deselect them for a quick loop with -m "not slow"
 pytestmark = pytest.mark.slow
 
 # rows: (key, ts, value, op); (key, ts) unique so LWW winners are unambiguous

@@ -924,6 +924,127 @@ def test_legacy_pointer_without_schema_still_reads(spark, tmp_path):
     _assert_pointer_read_matches_inference(spark, store, "t")
 
 
+# -- schema-carrying AppendLog manifests ------------------------------------
+def _manifest(log, table):
+    import json
+
+    with open(log._manifest_path(table)) as f:
+        return json.load(f)
+
+
+def _strip_schemas(log, table):
+    """Rewrite `table`'s manifest as one written before segment schemas
+    were recorded."""
+    import json
+
+    m = _manifest(log, table)
+    del m["schemas"]
+    with open(log._manifest_path(table), "w") as f:
+        json.dump(m, f)
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_append_log_manifest_without_schemas_still_reads(spark, tmp_path):
+    """A manifest with no recorded schemas (a pre-upgrade state) reads
+    the same rows by inference; the next append records its segment's
+    schema, and a compaction leaves one segment with one schema."""
+    import os
+
+    from kafka_cdc_redshift_spark.streaming.store import AppendLog
+
+    log = AppendLog(str(tmp_path / "log"))
+    for b in range(3):
+        log.append(_rows(spark, [(b, f"v{b}")]), "t", b)
+    m = _manifest(log, "t")
+    assert list(m["schemas"]) == m["segments"]
+    want = _sorted_rows(log.read(spark, "t"))
+    _strip_schemas(log, "t")
+    got = log.read(spark, "t")
+    assert got.schema == spark.read.parquet(
+        *(os.path.join(log.root, "t", s) for s in log.segments("t"))
+    ).schema
+    assert _sorted_rows(got) == want
+
+    log.append(_rows(spark, [(3, "v3")]), "t", 3)
+    assert list(_manifest(log, "t")["schemas"]) == ["batch=3"]
+    assert _sorted_rows(log.read(spark, "t")) == want + [(3, "v3")]
+    assert log.compact(spark, "t", min_segments=2) == 4
+    m = _manifest(log, "t")
+    assert m["segments"] == ["seg=0"] and list(m["schemas"]) == ["seg=0"]
+    assert _sorted_rows(log.read(spark, "t")) == want + [(3, "v3")]
+    assert log.committed("t") == [0, 1, 2, 3]
+
+
+def test_mor_deltas_without_schemas_still_read(spark, tmp_path):
+    store = MergeOnReadTargetStore(str(tmp_path / "mor"))
+    schema = "pid long, val string, op string, ts_ms long"
+    store.publish_delta(
+        spark.createDataFrame([(1, "a", "c", 1), (2, "b", "c", 1)], schema),
+        "t", 0, keys=["pid"],
+    )
+    store.publish_delta(
+        spark.createDataFrame([(2, None, "d", 2), (3, "c", "c", 2)], schema),
+        "t", 1, keys=["pid"],
+    )
+    want = store.read(spark, "t")
+    want_rows = _sorted_rows(want)
+    assert want_rows == [(1, "a"), (3, "c")]
+    _strip_schemas(store._delta, "t")
+    got = store.read(spark, "t")
+    assert got.schema == want.schema and _sorted_rows(got) == want_rows
+
+
+def test_append_log_schemas_follow_segments(spark, tmp_path):
+    """`retire` and `compact` drop the schema entries of the segments
+    they remove: the manifest records a schema for exactly its listed
+    segments."""
+    from kafka_cdc_redshift_spark.streaming.store import AppendLog
+
+    log = AppendLog(str(tmp_path / "log"))
+    for b in range(4):
+        log.append(_rows(spark, [(b, f"v{b}")]), "t", b)
+    log.retire("t", [0, 1])
+    m = _manifest(log, "t")
+    assert m["segments"] == ["batch=2", "batch=3"]
+    assert list(m["schemas"]) == m["segments"]
+    assert log.compact(spark, "t", min_segments=2) == 2
+    m = _manifest(log, "t")
+    assert m["segments"] == ["seg=0"] and list(m["schemas"]) == ["seg=0"]
+    assert _sorted_rows(log.read(spark, "t")) == [(2, "v2"), (3, "v3")]
+
+
+def test_mor_delta_added_column_reads_like_inference(spark, tmp_path):
+    """Each delta opens with its own recorded schema: a delta that adds
+    a column resolves exactly as the inferred read does, the older
+    delta's rows null-filled."""
+    store = MergeOnReadTargetStore(str(tmp_path / "mor"))
+    store.publish_delta(
+        spark.createDataFrame(
+            [(1, "a", "c", 1), (2, "b", "c", 1)],
+            "pid long, val string, op string, ts_ms long",
+        ),
+        "t", 0, keys=["pid"],
+    )
+    store.publish_delta(
+        spark.createDataFrame(
+            [(3, "c", 9, "c", 2)],
+            "pid long, val string, extra long, op string, ts_ms long",
+        ),
+        "t", 1, keys=["pid"],
+    )
+    m = _manifest(store._delta, "t")
+    assert m["schemas"]["batch=0"] != m["schemas"]["batch=1"]
+    got = store.read(spark, "t")
+    _strip_schemas(store._delta, "t")
+    inferred = store.read(spark, "t")
+    assert got.schema == inferred.schema
+    assert _sorted_rows(got) == _sorted_rows(inferred)
+    assert {r.pid: r.extra for r in got.collect()} == {1: None, 2: None, 3: 9}
+
+
 def test_task_rows_equal_target_rows(spark, tmp_path):
     """`TaskStatus.rows` is observed on the publish write; it equals the
     target's row count, 0 included (a batch deleting every key), and the

@@ -997,7 +997,15 @@ def _partial_commit_retry(spark, sf_dir, tmp_path, crash_table):
 def _job_stage_sites(spark, fn):
     """Run `fn`; return, per Spark job it started, the top frame of each
     of the job's stages' call sites (the Spark API method that submitted
-    it, e.g. `...DataFrameReader.parquet(...)`)."""
+    it, e.g. `...DataFrameReader.parquet(...)`).
+
+    A stage the status store no longer holds is left out: past
+    `spark.ui.retainedStages` the store evicts SKIPPED stage records
+    first, and under adaptive execution a shuffle stage a later job of
+    the same query reuses is re-recorded as skipped by that job. Such a
+    stage belongs to a multi-stage query job; the single-stage schema-
+    inference job and a write's result stage are never skipped, so
+    they always report their call site."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     start = jsc.dagScheduler().numTotalJobs()
@@ -1012,6 +1020,7 @@ def _job_stage_sites(spark, fn):
         jobs.append([
             status.lastStageAttempt(s).details().split("\n", 1)[0]
             for s in stages
+            if sc.statusTracker().getStageInfo(s) is not None
         ])
     return jobs
 
@@ -1043,6 +1052,111 @@ def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
     sites = [site for batch in jobs for job in batch for site in job]
     assert sites  # the call sites were recorded
     assert not [s for s in sites if "DataFrameReader.parquet" in s]
+
+
+def test_standing_ann_read_job_budget(spark, sf_dir, tmp_path):
+    """A standing read of tombstoned ANN state runs only the jobs its
+    answer needs: replaying both batches, the maintenance fold and the
+    live-cell read open every segment with the schema its manifest
+    recorded (no parquet inference job), and a fold over tombstones the
+    last fold already truncated writes nothing."""
+    from kafka_cdc_redshift_spark.streaming.ann_ingest import AnnIngest
+    from kafka_cdc_redshift_spark.streaming.store import AppendLog
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5) + 1.0]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
+    )
+    updated = emb.filter(F.col("vec_id") % 10 == 3).select(
+        "vec_id", F.reverse("embedding").alias("embedding")
+    )
+    tombs = emb.filter(
+        (F.col("vec_id") % 10 == 3) | (F.col("vec_id") % 10 == 7)
+    ).select("vec_id")
+    log = AppendLog(str(tmp_path / "state"))
+    AnnIngest(log, centroids=cents)
+    live = []
+
+    def serve():
+        ann = AnnIngest(log)
+        ann.process_batch(emb, 0)
+        ann.process_batch(updated, 1, tombstones=tombs)
+        ann.compact_state(spark, min_segments=2)
+        live.append(sorted(r.vec_id for r in ann.live_cells(spark).collect()))
+
+    serve()  # builds the state; its fold drops the dead rows
+    jobs = _job_stage_sites(spark, serve)
+    want = sorted(i for i in range(40) if i % 10 != 7)
+    assert live == [want, want]
+    sites = [site for job in jobs for site in job]
+    assert sites  # the call sites were recorded
+    assert not [
+        s for s in sites
+        if "DataFrameReader.parquet" in s or "DataFrameWriter.parquet" in s
+    ], sites
+
+
+def test_mor_read_and_fold_infer_no_schema(spark, tmp_path):
+    """Merge-on-read deltas open with the schema each delta recorded at
+    commit: resolving base ∪ 2 deltas and folding them run no parquet
+    schema-inference job."""
+    from kafka_cdc_redshift_spark.streaming import MergeOnReadTargetStore
+
+    store = MergeOnReadTargetStore(str(tmp_path / "mor"))
+    schema = "pid long, val string, op string, ts_ms long"
+    store.publish(spark.createDataFrame([(1, "a")], "pid long, val string"), "t")
+    store.publish_delta(
+        spark.createDataFrame([(1, "b", "u", 2), (2, "c", "c", 2)], schema),
+        "t", 0, keys=["pid"],
+    )
+    store.publish_delta(
+        spark.createDataFrame([(2, None, "d", 3), (3, "e", "c", 3)], schema),
+        "t", 1, keys=["pid"],
+    )
+    counts = []
+    jobs = _job_stage_sites(spark, lambda: (
+        counts.append(store.read(spark, "t").count()),
+        store.fold_deltas(spark, "t"),
+    ))
+    assert counts == [2] and store.delta_count("t") == 0
+    assert {(r.pid, r.val) for r in store.read(spark, "t").collect()} == {
+        (1, "b"), (3, "e")
+    }
+    sites = [site for job in jobs for site in job]
+    assert sites
+    assert not [s for s in sites if "DataFrameReader.parquet" in s], sites
+
+
+def test_batch_jobs_carry_batch_job_group(spark, sf_dir, processor):
+    """Every Spark job a steady batch starts, the entry census and cache
+    build included, carries the batch's job group, and the group does
+    not leak onto later jobs of the calling thread."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    batches = [
+        spark.createDataFrame(
+            [(r.value,) for r in synth_debezium_topic(
+                spark, sf_dir, ops=(op,)).collect()],
+            "value string",
+        )
+        for op in ("c", "u")
+    ]
+    processor.process_batch(batches[0], 0)
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    start = jsc.dagScheduler().numTotalJobs()
+    processor.process_batch(batches[1], 1)
+    end = jsc.dagScheduler().numTotalJobs()
+    spark.range(1).count()  # a later job on this thread
+    jsc.listenerBus().waitUntilEmpty()
+    assert end > start
+    assert set(range(start, end)) <= set(sc.statusTracker().getJobIdsForGroup(
+        "cdc-batch-1"
+    ))
+    assert end not in sc.statusTracker().getJobIdsForGroup("cdc-batch-1")
+    assert sc.getLocalProperty("spark.jobGroup.id") == prior
 
 
 def test_empty_batch_runs_nothing(spark, tmp_path, processor):
