@@ -9,8 +9,9 @@ the same code runs under batch (`spark.read`) and Structured Streaming
 (dedup, similarity search, text analysis, multimodal columns).
 
 Layout:
-  sources/    Kafka + file readers, CDC envelope schemas, changelog synthesis
-  operators/  routing, normalize, dedup, merge, typeconv, schema evolution
+  sources/    Kafka + file readers, the CDC format table (envelope schemas,
+              routing paths, op codes), changelog synthesis
+  operators/  fused route+parse, dedup, merge, typeconv, schema evolution
   functions/  text analysis, text dedup (minhash/simhash/jaccard), similarity
   streaming/  foreachBatch shell: triggers, fan-out, fail-fast, sinks
   plans/      the query catalog exposed through __spark_entry__.py

@@ -94,7 +94,7 @@ from .config import load_properties, parse_sync_rules
 from .sources import kafka
 from .sources.secrets import resolve_credentials
 from .streaming.catalog_sink import CatalogMergeSink
-from .streaming.job import CdcBatchProcessor, run_file_stream
+from .streaming.job import CdcBatchProcessor, run_file_stream, start_batches
 from .streaming.sinks import BulkLoadOptions, JdbcMergeSink
 from .streaming.store import (
     BucketedTargetStore,
@@ -208,15 +208,14 @@ def start_query(spark: SparkSession, props: dict[str, str],
         float(props["batch_timeout_sec"]) if props.get("batch_timeout_sec") else None
     )
     ckpt = props["checkpoint_location"]
+    trigger = dict(
+        available_now=(interval == "availableNow"),
+        processing_time=interval,
+        batch_timeout_sec=timeout,
+    )
     if props.get("source_dir"):
         return run_file_stream(
-            spark,
-            props["source_dir"],
-            processor,
-            ckpt,
-            available_now=(interval == "availableNow"),
-            processing_time=None if interval == "availableNow" else interval,
-            batch_timeout_sec=timeout,
+            spark, props["source_dir"], processor, ckpt, **trigger
         )
     stream = kafka.read_stream(
         spark,
@@ -226,20 +225,7 @@ def start_query(spark: SparkSession, props: dict[str, str],
         starting_offsets=props.get("startingOffsets", "earliest"),
         consumer_group=props.get("consumer_group") or None,
     )
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: processor.process_batch(
-                df, bid, batch_timeout_sec=timeout
-            )
-        )
-        .option("checkpointLocation", ckpt)
-    )
-    if interval == "availableNow":
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=interval)
-    return writer.start()
+    return start_batches(stream, processor, ckpt, **trigger)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -1,14 +1,10 @@
 from .dedup import lww_dedup, latest_deletes  # noqa: F401
 from .merge import merge_changes  # noqa: F401
 from .normalize import (  # noqa: F401
-    parse_debezium,
-    parse_dms,
-    parse_canal,
-    parse_mongo,
-    coalesce_delete_image,
+    explode_canal,
+    route_parse,
     route_parse_debezium,
     route_parse_dms,
     route_parse_canal,
     route_parse_mongo,
 )
-from .routing import route_debezium, route_dms, route_canal, route_mongo  # noqa: F401

@@ -1,6 +1,6 @@
 """Envelope parsing + normalization to a unified flat changelog.
 
-Output contract of every parse_* function — the engine's internal changelog
+Output contract of `route_parse` — the engine's internal changelog
 relation:
 
     <payload columns...>, op: string in {'c','u','d','r'}, ts_ms: long
@@ -10,6 +10,18 @@ This mirrors the reference's flatten step (`from_json` + select("kdata.*"),
 cdc_util/redshift_sink.py:594) but with a STATIC payload schema — no per-batch
 `spark.read.json` inference pass (redshift_sink.py:592), which at scale is a
 full extra scan of every micro-batch.
+
+Route and parse are fused into ONE from_json per topic row. Routing by
+`get_json_object` probes and then parsing tokenizes each envelope up to 5x:
+3 routing probes, the op filter pushed below the flatten projection
+(re-parsing with a pruned schema), and the full parse itself. With the
+routing + op conjuncts on the parsed struct, Catalyst pushes them below the
+projection as ONE pruned (metadata-only) parse — non-matching rows of the
+multiplexed topic are eliminated without ever building the payload struct,
+and only matching rows pay the full parse. Replaces the reference's
+per-table regex-UDF route + re-inferred from_json
+(cdc_util/redshift_sink.py:18-51,585,592-594). Each format's paths, op
+codes and flatten come from its spec (sources/envelopes.CDC_FORMATS).
 """
 
 from __future__ import annotations
@@ -20,118 +32,33 @@ from pyspark.sql import types as T
 
 from ..sources import envelopes
 
-# op-code normalization (P9): reference filters op IN ('c','u','d','r') /
-# DMS operation IN (load,insert,update,delete) / Canal type IN (INSERT,...)
-# (cdc_util/redshift_sink.py:200-226)
-_DMS_OP = {"load": "r", "insert": "c", "update": "u", "delete": "d"}
-_CANAL_OP = {"INSERT": "c", "UPDATE": "u", "DELETE": "d"}
-_MONGO_OP = {"insert": "c", "update": "u", "replace": "u", "delete": "d"}
 
+def route_parse(
+    df: DataFrame, fmt: str, db: str, table: str,
+    payload: T.StructType | None = None, *, value_col: str = "value",
+    table_is_regex: bool = False, emit_before: bool = False,
+) -> DataFrame:
+    """Route the `fmt` envelopes of (db, table) out of a multiplexed topic
+    and flatten them, in one parse. `payload` is the row-image StructType
+    (unused by MONGO-CDC, whose doc stays raw JSON).
 
-def coalesce_delete_image(df: DataFrame) -> DataFrame:
-    """Debezium delete rows have after=null; copy `before` into `after` so the
-    delete carries full column values. Replaces the reference's Python UDF
-    JSON-rewrite (cdc_util/redshift_sink.py:54-67) with a native coalesce —
-    no Python round-trip, stays in whole-stage codegen."""
-    return df.withColumn("after", F.coalesce(F.col("after"), F.col("before")))
-
-
-def parse_debezium(df: DataFrame, payload: T.StructType, *, value_col: str = "value") -> DataFrame:
-    """JSON -> flat changelog for Debezium/Flink-CDC (redshift_sink.py:202-205,594)."""
-    env = envelopes.debezium_schema(payload)
-    parsed = df.select(F.from_json(F.col(value_col), env).alias("k"))
-    parsed = parsed.select("k.*").filter(F.col("op").isin("c", "u", "d", "r"))
-    parsed = coalesce_delete_image(parsed)
-    return parsed.select("after.*", "op", "ts_ms")
-
-
-def parse_dms(df: DataFrame, payload: T.StructType, *, value_col: str = "value") -> DataFrame:
-    """DMS: data + metadata.timestamp (ISO string) as event time
-    (redshift_sink.py:196-201). ts_ms derived from the ISO timestamp."""
-    env = envelopes.dms_schema(payload)
-    parsed = df.select(F.from_json(F.col(value_col), env).alias("k")).select("k.*")
-    op = F.col("metadata.operation")
-    parsed = parsed.filter(op.isin(*_DMS_OP))
-    return parsed.select(
-        "data.*",
-        _map_expr(op, _DMS_OP).alias("op"),
-        F.unix_millis(F.to_timestamp(F.col("metadata.timestamp"))).alias("ts_ms"),
-    )
-
-
-def parse_canal(df: DataFrame, payload: T.StructType, *, value_col: str = "value",
-                pre_parsed: bool = False) -> DataFrame:
-    """Canal: `data` is an array of row images — posexplode keeps the position
-    as `data_index_aws`, the dedup tiebreak (redshift_sink.py:401-407)."""
-    if pre_parsed:
-        parsed = df
-    else:
-        env = envelopes.canal_schema(payload)
-        parsed = df.select(F.from_json(F.col(value_col), env).alias("k")).select("k.*")
-    op = F.col("type")
-    parsed = parsed.filter(op.isin(*_CANAL_OP))
-    # posexplode_OUTER, then drop null-payload rows on the generated index:
-    # a plain posexplode makes InferFiltersFromGenerate add size(data)>0 /
-    # isnotnull(data), and predicate pushdown substitutes the FULL-schema
-    # from_json into that filter below this projection — every envelope gets
-    # JSON-parsed ~3x (NOTES.md pathology #2). The index filter is
-    # equivalent (empty/null arrays yield a null index) and, being on a
-    # generated column, cannot be pushed below the parse.
-    exploded = parsed.select(
-        F.posexplode_outer("data").alias("data_index_aws", "row"),
-        _map_expr(op, _CANAL_OP).alias("op"),
-        F.col("ts").alias("ts_ms"),
-    ).filter(F.col("data_index_aws").isNotNull())
-    return exploded.select("row.*", "op", "ts_ms", "data_index_aws")
-
-
-def parse_mongo(df: DataFrame, *, value_col: str = "value") -> DataFrame:
-    """Mongo change stream -> (doc_id, doc, op, ts_ms). The doc stays a raw
-    JSON string (SUPER duality, mongo_redshift_sink.py:157-168); doc_id is
-    extracted natively instead of via the reference's regex UDF
-    (mongo_redshift_sink.py:33-43): scalar `_id` taken verbatim, compound
-    `_id` objects kept as canonical JSON."""
-    env = envelopes.mongo_schema()
-    parsed = df.select(F.from_json(F.col(value_col), env).alias("k")).select("k.*")
-    parsed = parsed.filter(F.col("operationType").isin(*_MONGO_OP))
-    doc_id = F.coalesce(
-        F.get_json_object(F.col("documentKey"), "$._id"),
-        F.col("documentKey"),
-    )
-    return parsed.select(
-        doc_id.alias("doc_id"),
-        F.coalesce(F.col("fullDocument"), F.lit("[]")).alias("doc"),
-        _map_expr(F.col("operationType"), _MONGO_OP).alias("op"),
-        F.col("ts_ms"),
-        F.to_date(F.from_unixtime(F.col("ts_ms") / 1000)).alias("ts_date"),
-    )
-
-
-def _map_expr(col, mapping: dict[str, str]):
-    expr = None
-    for src, dst in mapping.items():
-        cond = F.when(col == src, F.lit(dst))
-        expr = cond if expr is None else expr.when(col == src, F.lit(dst))
-    return expr
-
-
-def _match(col, value: str, is_regex: bool):
-    return col.rlike(f"^(?:{value})$") if is_regex else (col == F.lit(value))
-
-
-# ---------------------------------------------------------------------------
-# Fused route + parse (single JSON tokenization per topic row)
-#
-# The two-step route_*(get_json_object probes) -> parse_*(from_json) shape
-# tokenizes each envelope up to 5x: 3 routing probes, the op filter pushed
-# below the flatten projection (re-parsing with a pruned schema), and the
-# full parse itself. Fusing both into one from_json lets Catalyst push the
-# routing+op conjuncts below the projection as ONE pruned (metadata-only)
-# parse — non-matching rows of the multiplexed topic are eliminated without
-# ever building the payload struct, and only matching rows pay the full
-# parse. Replaces the reference's per-table regex-UDF route + re-inferred
-# from_json (cdc_util/redshift_sink.py:18-51,585,592-594).
-# ---------------------------------------------------------------------------
+    `emit_before=True` (Debezium formats) additionally carries the
+    envelope's BEFORE image as one nested struct column `_before_img`
+    (null for inserts/snapshots) — the input current-state incremental
+    maintenance needs: an update retracts its before and asserts its after
+    (functions/incremental.group_stats_cdc). Kept nested so the flat
+    payload namespace is untouched; consumers that don't read it pay
+    nothing (column pruning drops it at the parse)."""
+    spec = envelopes.cdc_format(fmt)
+    if spec.typed and payload is None:
+        raise ValueError(f"{fmt} route_parse needs a payload StructType")
+    if emit_before and spec.before is None:
+        raise ValueError(f"{fmt} envelopes carry no before image")
+    k = df.select(F.from_json(F.col(value_col), spec.schema(payload)).alias("k"))
+    k = k.filter(spec.routed(
+        envelopes.parsed_fields("k."), db, table, table_is_regex=table_is_regex
+    ))
+    return spec.flatten(spec, k, "k.", emit_before)
 
 
 def route_parse_debezium(
@@ -139,98 +66,36 @@ def route_parse_debezium(
     value_col: str = "value", table_is_regex: bool = False,
     emit_before: bool = False,
 ) -> DataFrame:
-    """Route + parse a Debezium/Flink-CDC multiplexed topic in one parse.
-
-    `emit_before=True` additionally carries the envelope's BEFORE image
-    as one nested struct column `_before_img` (null for inserts/
-    snapshots) — the input current-state incremental maintenance needs:
-    an update retracts its before and asserts its after
-    (functions/incremental.group_stats_cdc). Kept nested so the flat
-    payload namespace is untouched; consumers that don't read it pay
-    nothing (column pruning drops it at the parse)."""
-    env = envelopes.debezium_schema(payload)
-    k = df.select(F.from_json(F.col(value_col), env).alias("k"))
-    k = k.filter(
-        (F.col("k.source.db") == db)
-        & _match(F.col("k.source.table"), table, table_is_regex)
-        & F.col("k.op").isin("c", "u", "d", "r")
-    )
-    extra = [F.col("k.before").alias("_before_img")] if emit_before else []
-    flat = k.select(
-        F.coalesce(F.col("k.after"), F.col("k.before")).alias("after"),
-        F.col("k.op").alias("op"),
-        F.col("k.ts_ms").alias("ts_ms"),
-        *extra,
-    )
-    return flat.select("after.*", "op", "ts_ms", *(
-        ["_before_img"] if emit_before else []
-    ))
+    return route_parse(df, "FLINK-CDC", db, table, payload, value_col=value_col,
+                       table_is_regex=table_is_regex, emit_before=emit_before)
 
 
 def route_parse_dms(
     df: DataFrame, schema_name: str, table: str, payload: T.StructType, *,
     value_col: str = "value", table_is_regex: bool = False,
 ) -> DataFrame:
-    """Route + parse an AWS DMS topic in one parse; control records dropped
-    (redshift_sink.py:24-29)."""
-    env = envelopes.dms_schema(payload)
-    k = df.select(F.from_json(F.col(value_col), env).alias("k"))
-    op = F.col("k.metadata.operation")
-    k = k.filter(
-        (F.col("k.metadata.schema-name") == schema_name)
-        & _match(F.col("k.metadata.table-name"), table, table_is_regex)
-        & (F.col("k.metadata.record-type") != "control")
-        & op.isin(*_DMS_OP)
-    )
-    return k.select(
-        "k.data.*",
-        _map_expr(op, _DMS_OP).alias("op"),
-        F.unix_millis(F.to_timestamp(F.col("k.metadata.timestamp"))).alias("ts_ms"),
-    )
+    return route_parse(df, "DMS-CDC", schema_name, table, payload,
+                       value_col=value_col, table_is_regex=table_is_regex)
 
 
 def route_parse_canal(
     df: DataFrame, database: str, table: str, payload: T.StructType, *,
     value_col: str = "value", table_is_regex: bool = False,
 ) -> DataFrame:
-    """Route + parse a Canal topic in one parse; data[] posexploded with the
-    positional tiebreak kept (redshift_sink.py:401-407)."""
-    env = envelopes.canal_schema(payload)
-    k = df.select(F.from_json(F.col(value_col), env).alias("k"))
-    op = F.col("k.type")
-    k = k.filter(
-        (F.col("k.database") == database)
-        & _match(F.col("k.table"), table, table_is_regex)
-        & op.isin(*_CANAL_OP)
-    )
-    exploded = k.select(
-        F.posexplode_outer("k.data").alias("data_index_aws", "row"),
-        _map_expr(op, _CANAL_OP).alias("op"),
-        F.col("k.ts").alias("ts_ms"),
-    ).filter(F.col("data_index_aws").isNotNull())  # see parse_canal note
-    return exploded.select("row.*", "op", "ts_ms", "data_index_aws")
+    return route_parse(df, "CANAL-CDC", database, table, payload,
+                       value_col=value_col, table_is_regex=table_is_regex)
 
 
 def route_parse_mongo(
     df: DataFrame, db: str, coll: str, *, value_col: str = "value",
 ) -> DataFrame:
-    """Route + parse a Mongo change-stream topic in one parse
-    (mongo_redshift_sink.py:16-30, 126-131)."""
-    env = envelopes.mongo_schema()
-    k = df.select(F.from_json(F.col(value_col), env).alias("k"))
-    k = k.filter(
-        (F.col("k.ns.db") == db)
-        & (F.col("k.ns.coll") == coll)
-        & F.col("k.operationType").isin(*_MONGO_OP)
-    )
-    doc_id = F.coalesce(
-        F.get_json_object(F.col("k.documentKey"), "$._id"),
-        F.col("k.documentKey"),
-    )
-    return k.select(
-        doc_id.alias("doc_id"),
-        F.coalesce(F.col("k.fullDocument"), F.lit("[]")).alias("doc"),
-        _map_expr(F.col("k.operationType"), _MONGO_OP).alias("op"),
-        F.col("k.ts_ms").alias("ts_ms"),
-        F.to_date(F.from_unixtime(F.col("k.ts_ms") / 1000)).alias("ts_date"),
-    )
+    return route_parse(df, "MONGO-CDC", db, coll, value_col=value_col)
+
+
+def explode_canal(df: DataFrame) -> DataFrame:
+    """Canal envelopes already parsed into top-level columns (data,
+    database, table, type, ts) -> flat changelog: the Canal op filter and
+    flatten of `route_parse`, without routing."""
+    spec = envelopes.cdc_format("CANAL-CDC")
+    kept = df.filter(spec.admits(envelopes.parsed_fields("")))
+    return spec.flatten(spec, kept, "", False)

@@ -24,8 +24,8 @@ from pyspark.sql import types as T
 from ..operators import (
     latest_deletes,
     lww_dedup,
+    explode_canal,
     merge_changes,
-    parse_canal,
     route_parse_canal,
     route_parse_debezium,
     route_parse_dms,
@@ -317,7 +317,7 @@ def q_cdc_safe_cast(spark, sf_dir):
 def q_cdc_canal_explode(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     topic = _fixture(spark, sf_dir, "canal_topic", synth_canal_topic)
-    parsed = parse_canal(topic, orders.schema, pre_parsed=True)
+    parsed = explode_canal(topic)
     winners = lww_dedup(parsed, ["o_orderkey"], ["ts_ms", "data_index_aws"])
     return winners.select("o_orderkey", "o_totalprice")
 

@@ -24,7 +24,10 @@ tables so the DuckDB oracle can replay the identical change log (FIXTURES.md
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -98,9 +101,10 @@ def canal_schema(payload: T.StructType) -> T.StructType:
     )
 
 
-def mongo_schema() -> T.StructType:
+def mongo_schema(payload: T.StructType | None = None) -> T.StructType:
     """Mongo change-stream envelope; fullDocument kept as raw JSON string
-    (doc -> SUPER, mongo_redshift_sink.py:157-168)."""
+    (doc -> SUPER, mongo_redshift_sink.py:157-168), so `payload` is
+    unused."""
     return T.StructType(
         [
             T.StructField("_id", T.StringType(), True),
@@ -120,6 +124,203 @@ def mongo_schema() -> T.StructType:
             T.StructField("ts_ms", T.LongType(), True),
         ]
     )
+
+
+# ---------------------------------------------------------------------------
+# The CDC format table: each cdc_format's routing decision and flatten,
+# declared once. The fused parse (operators/normalize.route_parse), the
+# streaming shell's entry census and schema inference (sources/infer.py)
+# all build their routed predicate from it through a field accessor: a
+# parsed-struct column for the parse, a get_json_object probe over the raw
+# envelope for the census and inference — so the three cannot drift. The
+# reference spells this as per-table routing regexes plus one op filter
+# per format (cdc_util/redshift_sink.py:18-51, 200-226).
+# ---------------------------------------------------------------------------
+
+Field = Callable[[str], Column]
+
+
+def parsed_fields(prefix: str) -> Field:
+    """Accessor for a parsed envelope: dotted path -> struct column."""
+    return lambda path: F.col(prefix + path)
+
+
+def json_fields(value_col: str = "value") -> Field:
+    """Accessor for a raw envelope: dotted path -> get_json_object probe
+    (object-valued paths come back as raw JSON substrings)."""
+    return lambda path: F.get_json_object(F.col(value_col), "$." + path)
+
+
+def _match(col: Column, value: str, is_regex: bool) -> Column:
+    """Table match; a regex rule (reference README.md:42) is anchored."""
+    return col.rlike(f"^(?:{value})$") if is_regex else (col == F.lit(value))
+
+
+def _map_expr(col: Column, mapping: dict[str, str]) -> Column:
+    expr = F  # F.when opens the CASE, Column.when extends it
+    for src, dst in mapping.items():
+        expr = expr.when(col == src, F.lit(dst))
+    return expr
+
+
+@dataclass(frozen=True, eq=False)
+class CdcFormat:
+    """One envelope format; paths are dotted envelope field paths.
+    Compared by identity: formats sharing an envelope share one spec, so
+    a spec is the format's parse-shape key."""
+
+    schema: Callable[..., T.StructType]  # envelope StructType of a payload
+    db: str  # routing keys: db (DMS schema) and table (Mongo collection)
+    table: str
+    op: str  # op-code path, and the source codes the parse keeps -> c/u/d/r
+    ops: dict[str, str]
+    image: tuple[str, ...]  # row image: first non-null path; inference reads it
+    flatten: Callable[..., DataFrame]  # (spec, routed df, prefix, emit_before)
+    control: str | None = None  # record-type path; 'control' records drop
+    array: bool = False  # the image is an array: one changelog row per element
+    before: str | None = None  # before-image path (emit_before)
+    typed: bool = True  # the envelope embeds a payload StructType
+
+    def op_code(self, field: Field) -> Column:
+        """The c/u/d/r op column; the source column itself under an
+        identity map."""
+        src = field(self.op)
+        if all(k == v for k, v in self.ops.items()):
+            return src
+        return _map_expr(src, self.ops)
+
+    def image_of(self, field: Field) -> Column:
+        cols = [field(p) for p in self.image]
+        return cols[0] if len(cols) == 1 else F.coalesce(*cols)
+
+    def admits(self, field: Field, cond: Column | None = None) -> Column:
+        """`cond` AND the gates an envelope must pass to be parsed:
+        control records out, then known op codes only."""
+        gates = [field(self.control) != "control"] if self.control else []
+        for gate in gates + [field(self.op).isin(*self.ops)]:
+            cond = gate if cond is None else cond & gate
+        return cond
+
+    def routed(self, field: Field, db: str, table: str, *,
+               table_is_regex: bool = False) -> Column:
+        """The routing decision: the envelope belongs to (db, table) and
+        passes the gates — exactly the envelopes the parse keeps."""
+        keys = (field(self.db) == db) & _match(
+            field(self.table), table, table_is_regex
+        )
+        return self.admits(field, keys)
+
+    def yields_rows(self, field: Field) -> Column:
+        """The gates plus a non-empty image array (posexplode of an empty
+        or null array yields no row): a raw envelope passing this parses
+        to at least one changelog row."""
+        gate = self.admits(field)
+        if self.array:
+            gate &= F.json_array_length(self.image_of(field)) > 0
+        return gate
+
+
+def _flatten_debezium(spec, k, prefix, emit_before):
+    """Delete rows carry their image in `before`: the image coalesce
+    replaces the reference's Python UDF JSON rewrite
+    (cdc_util/redshift_sink.py:54-67). `emit_before` also carries the
+    before image as one nested column `_before_img`."""
+    field = parsed_fields(prefix)
+    before = ["_before_img"] if emit_before else []
+    flat = k.select(
+        spec.image_of(field).alias("after"),
+        spec.op_code(field).alias("op"),
+        field("ts_ms").alias("ts_ms"),
+        *[field(spec.before).alias(c) for c in before],
+    )
+    return flat.select("after.*", "op", "ts_ms", *before)
+
+
+def _flatten_dms(spec, k, prefix, emit_before):
+    """ts_ms from the ISO metadata.timestamp (redshift_sink.py:196-201)."""
+    field = parsed_fields(prefix)
+    return k.select(
+        f"{prefix}{spec.image[0]}.*",
+        spec.op_code(field).alias("op"),
+        F.unix_millis(F.to_timestamp(field("metadata.timestamp"))).alias("ts_ms"),
+    )
+
+
+def _flatten_canal(spec, k, prefix, emit_before):
+    """posexplode keeps the array position as `data_index_aws`, the
+    dedup tiebreak (redshift_sink.py:401-407)."""
+    field = parsed_fields(prefix)
+    # posexplode_OUTER, then drop null-payload rows on the generated index:
+    # a plain posexplode makes InferFiltersFromGenerate add size(data)>0 /
+    # isnotnull(data), and predicate pushdown substitutes the FULL-schema
+    # from_json into that filter below this projection — every envelope gets
+    # JSON-parsed ~3x (NOTES.md pathology #2). The index filter is
+    # equivalent (empty/null arrays yield a null index) and, being on a
+    # generated column, cannot be pushed below the parse.
+    exploded = k.select(
+        F.posexplode_outer(spec.image_of(field)).alias("data_index_aws", "row"),
+        spec.op_code(field).alias("op"),
+        field("ts").alias("ts_ms"),
+    ).filter(F.col("data_index_aws").isNotNull())
+    return exploded.select("row.*", "op", "ts_ms", "data_index_aws")
+
+
+def _flatten_mongo(spec, k, prefix, emit_before):
+    """(doc_id, doc, op, ts_ms, ts_date). The doc stays a raw JSON string
+    (SUPER duality, mongo_redshift_sink.py:157-168); doc_id is extracted
+    natively instead of via the reference's regex UDF
+    (mongo_redshift_sink.py:33-43): scalar `_id` taken verbatim, compound
+    `_id` objects kept as canonical JSON."""
+    field = parsed_fields(prefix)
+    doc_id = F.coalesce(
+        F.get_json_object(field("documentKey"), "$._id"), field("documentKey")
+    )
+    return k.select(
+        doc_id.alias("doc_id"),
+        F.coalesce(spec.image_of(field), F.lit("[]")).alias("doc"),
+        spec.op_code(field).alias("op"),
+        field("ts_ms").alias("ts_ms"),
+        F.to_date(F.from_unixtime(field("ts_ms") / 1000)).alias("ts_date"),
+    )
+
+
+_DEBEZIUM = CdcFormat(
+    debezium_schema, db="source.db", table="source.table",
+    op="op", ops={"c": "c", "u": "u", "d": "d", "r": "r"},
+    image=("after", "before"), flatten=_flatten_debezium, before="before",
+)
+
+#: cdc_format -> spec (the `cdc_format` job property's values)
+CDC_FORMATS = {
+    "FLINK-CDC": _DEBEZIUM,
+    "MSK-DEBEZIUM-CDC": _DEBEZIUM,
+    "DMS-CDC": CdcFormat(
+        dms_schema, db="metadata.schema-name", table="metadata.table-name",
+        op="metadata.operation",
+        ops={"load": "r", "insert": "c", "update": "u", "delete": "d"},
+        image=("data",), flatten=_flatten_dms, control="metadata.record-type",
+    ),
+    "CANAL-CDC": CdcFormat(
+        canal_schema, db="database", table="table",
+        op="type", ops={"INSERT": "c", "UPDATE": "u", "DELETE": "d"},
+        image=("data",), flatten=_flatten_canal, array=True,
+    ),
+    "MONGO-CDC": CdcFormat(
+        mongo_schema, db="ns.db", table="ns.coll", op="operationType",
+        ops={"insert": "c", "update": "u", "replace": "u", "delete": "d"},
+        image=("fullDocument",), flatten=_flatten_mongo, typed=False,
+    ),
+}
+
+
+def cdc_format(name: str) -> CdcFormat:
+    """The spec of `name`; ValueError naming the known formats."""
+    spec = CDC_FORMATS.get(name)
+    if spec is None:
+        raise ValueError(
+            f"unknown cdc_format {name!r}: use one of {', '.join(CDC_FORMATS)}"
+        )
+    return spec
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,9 @@ mongo_redshift_sink.py:221) — every shipped config relies on it
 
 Spark-first shape of the same capability:
 
-  1. extract the matching rows' payloads as RAW JSON substrings with
-     `get_json_object` routing probes (no full parse, no Python),
+  1. extract the payloads of the rows the parse keeps as RAW JSON
+     substrings with `get_json_object` probes of the format spec's routed
+     predicate (sources/envelopes.CDC_FORMATS; no full parse, no Python),
   2. infer over those strings JVM-side via `DataFrameReader.json` on a
      ``Dataset[String]`` — distributed Jackson inference, no per-row Python
      round-trip (the reference's `.rdd` path serializes every row through
@@ -27,12 +28,9 @@ inference pass regardless of batch size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _match(col, value: str, is_regex: bool):
-    return col.rlike(f"^(?:{value})$") if is_regex else (col == F.lit(value))
+from . import envelopes
 
 
 def payload_strings(
@@ -45,48 +43,22 @@ def payload_strings(
     table_is_regex: bool = False,
 ) -> DataFrame:
     """One-column DataFrame[payload: string] of raw row-image JSON for the
-    rows of a multiplexed topic that route to (db, table).
+    rows of a multiplexed topic that the fused parse would keep for
+    (db, table): the format spec's routed predicate — keys, control-record
+    and op-code gates — so an op-filtered event adds no columns.
 
     `get_json_object` returns the raw JSON substring for object-valued
     paths, so the payload survives un-tokenized for the inference reader
     (a `from_json` would need the very schema we're trying to discover).
+    Debezium deletes carry their image in `before`; Canal's image is the
+    raw top-level data[] array, which the JSON reader explodes into one
+    record per element; Mongo deletes carry no fullDocument and, null,
+    are skipped.
     """
-    v = F.col(value_col)
-    if fmt in ("FLINK-CDC", "MSK-DEBEZIUM-CDC"):
-        cond = (F.get_json_object(v, "$.source.db") == db) & _match(
-            F.get_json_object(v, "$.source.table"), table, table_is_regex
-        )
-        # delete rows carry the image in `before` (delete-image coalesce, P2)
-        payload = F.coalesce(
-            F.get_json_object(v, "$.after"), F.get_json_object(v, "$.before")
-        )
-    elif fmt == "DMS-CDC":
-        cond = (
-            (F.get_json_object(v, "$.metadata.schema-name") == db)
-            & _match(
-                F.get_json_object(v, "$.metadata.table-name"), table, table_is_regex
-            )
-            & (F.get_json_object(v, "$.metadata.record-type") != "control")
-        )
-        payload = F.get_json_object(v, "$.data")
-    elif fmt == "CANAL-CDC":
-        cond = (F.get_json_object(v, "$.database") == db) & _match(
-            F.get_json_object(v, "$.table"), table, table_is_regex
-        )
-        # raw top-level ARRAY of row images; the JSON reader explodes
-        # top-level arrays into one record per element during inference
-        payload = F.get_json_object(v, "$.data")
-    elif fmt == "MONGO-CDC":
-        # route by ns.db/ns.coll, infer over the fullDocument strings
-        # (reference: mongo_redshift_sink.py:221). Delete events carry no
-        # fullDocument and are skipped by the isNotNull filter below —
-        # they contribute no payload columns to infer.
-        cond = (F.get_json_object(v, "$.ns.db") == db) & _match(
-            F.get_json_object(v, "$.ns.coll"), table, table_is_regex
-        )
-        payload = F.get_json_object(v, "$.fullDocument")
-    else:
-        raise ValueError(f"unsupported cdc_format for schema inference: {fmt}")
+    spec = envelopes.cdc_format(fmt)
+    field = envelopes.json_fields(value_col)
+    cond = spec.routed(field, db, table, table_is_regex=table_is_regex)
+    payload = spec.image_of(field)
     return df.filter(cond & payload.isNotNull()).select(payload.alias("payload"))
 
 

@@ -33,69 +33,15 @@ from ..functions import incremental as inc
 from ..functions.membership import bloom_from_hashes, merge_blooms
 from ..operators.dedup import latest_deletes, lww_dedup
 from ..operators.merge import merge_changes, scd2_merge_batch
-from ..operators.normalize import (
-    route_parse_canal,
-    route_parse_debezium,
-    route_parse_dms,
-    route_parse_mongo,
-)
+from ..operators.normalize import route_parse
 from ..operators.schema_evolution import cast_to_target, diff_schemas
 from ..operators.typeconv import apply_rule_conversions
+from ..sources import envelopes
 from ..sources.infer import infer_payload_schema
 from .ann_ingest import VersionedAnnIndex
 from .dedup_ingest import DedupIngest
 from .retrieval_ingest import RetrievalIngest
 from .store import AppendLog, ParquetTargetStore
-
-# fused route+parse: one JSON tokenization per topic row per table task
-# (replaces the two-step route_* probe + parse_* from_json — see
-# operators/normalize.py "Fused route + parse")
-_ROUTE_PARSERS = {
-    "FLINK-CDC": route_parse_debezium,
-    "MSK-DEBEZIUM-CDC": route_parse_debezium,
-    "DMS-CDC": route_parse_dms,
-    "CANAL-CDC": route_parse_canal,
-}
-
-#: per-format JSON paths + predicates of the ROUTING DECISION — not just
-#: the (db, table) keys: the census must apply every filter the fused
-#: parser applies (op-code isin, DMS control-record drop, Canal's
-#: non-empty data[] requirement), or a batch holding only e.g. a Canal
-#: DDL event for the table counts >0 while the parse comes back empty —
-#: and the rule would publish empty target versions / flip batch-id
-#: pointers for a batch that contributed nothing. Used to take ONE
-#: per-batch routing census instead of one isEmpty probe job per rule
-#: (the A1/A2 probe, redshift_sink.py:585). At a reference-shaped ~100-
-#: rule fan-out that is ~100 driver-side jobs per micro-batch replaced
-#: by one combinable count over the cached batch.
-_ROUTE_CENSUS = {
-    "FLINK-CDC": {
-        "db": "$.source.db", "tb": "$.source.table",
-        "op": "$.op", "ops": ("c", "u", "d", "r"),
-    },
-    "MSK-DEBEZIUM-CDC": {
-        "db": "$.source.db", "tb": "$.source.table",
-        "op": "$.op", "ops": ("c", "u", "d", "r"),
-    },
-    "DMS-CDC": {
-        "db": "$.metadata.schema-name", "tb": "$.metadata.table-name",
-        "op": "$.metadata.operation",
-        "ops": ("load", "insert", "update", "delete"),
-        "ctl": "$.metadata.record-type",
-    },
-    "CANAL-CDC": {
-        "db": "$.database", "tb": "$.table",
-        "op": "$.type", "ops": ("INSERT", "UPDATE", "DELETE"),
-        # posexplode of data[] yields zero rows for empty/null/non-array
-        "array": "$.data",
-    },
-    "MONGO-CDC": {
-        "db": "$.ns.db", "tb": "$.ns.coll",
-        "op": "$.operationType",
-        "ops": ("insert", "update", "replace", "delete"),
-    },
-}
-
 
 def _bloom_sketch(obs: DataFrame, keys, col: str) -> DataFrame:
     vals = obs.select(F.col(col).cast("long").alias("v"))
@@ -134,7 +80,7 @@ _EVENT_FOLDS = (
 #: CURRENT-STATE tables (stats_current_state): the signed retract/assert
 #: census of the batch's before/after images, so they track updates and
 #: deletes. Same entry shape; the family needs stats_group_columns,
-#: stats_value_column and a before-emitting source (_BEFORE_FORMATS).
+#: stats_value_column and a format with a before image (CdcFormat.before).
 _STATE_FOLDS = (
     ("_state_stats", "stats_value_column",
      inc.group_stats_cdc, inc.merge_group_stats_cdc),
@@ -143,10 +89,11 @@ _STATE_FOLDS = (
     ("_state_qsketch", "stats_quantile_column",
      inc.group_quantile_sketch_cdc, inc.merge_quantile_sketches_cdc),
 )
-_BEFORE_FORMATS = ("FLINK-CDC", "MSK-DEBEZIUM-CDC")
 
 
-def _derived_folds(rule: SyncRule, cdc_format: str) -> tuple[list, list]:
+def _derived_folds(
+    rule: SyncRule, spec: envelopes.CdcFormat
+) -> tuple[list, list]:
     """The rule's enabled (_EVENT_FOLDS, _STATE_FOLDS) entries, in fold
     order — the one place that decides which derived tables exist."""
     grouped = bool(rule.stats_group_columns)
@@ -157,7 +104,7 @@ def _derived_folds(rule: SyncRule, cdc_format: str) -> tuple[list, list]:
     state = []
     if (
         grouped and rule.stats_value_column and rule.stats_current_state
-        and cdc_format in _BEFORE_FORMATS
+        and spec.before
     ):
         state = [e for e in _STATE_FOLDS if getattr(rule, e[1])]
     return event, state
@@ -288,6 +235,8 @@ class CdcBatchProcessor:
         self.rules = rules
         self.store = store
         self.cdc_format = cdc_format
+        # unknown formats fail here, not inside every rule's first task
+        self._format = envelopes.cdc_format(cdc_format)
         # payload_schemas=None (or a missing table key) = the reference's
         # zero-declaration mode: the schema is re-inferred from each batch
         # (cdc_util/redshift_sink.py:592), so drift is picked up per batch
@@ -457,43 +406,29 @@ class CdcBatchProcessor:
         return passing
 
     # -- per-table task ----------------------------------------------------
-    def _batch_route_counts(
-        self, batch_df: DataFrame,
-    ) -> tuple[int, dict | None]:
+    def _batch_route_counts(self, batch_df: DataFrame) -> tuple[int, dict]:
         """The batch's entry census, ONE grouped aggregation over the
         cached batch: returns (total rows, routed rows per (db, table)).
         It is the first action on the persisted batch, so it also
         materializes the cache every rule task then reads, and the total
         decides whether the batch is empty.
 
-        A row counts as routed under the format's FULL routing decision —
-        keys plus the fused parser's op-code / control-record /
-        non-empty-array predicates — so a positive count genuinely
-        implies a non-empty parse (a count over keys alone would let an
-        op-filtered-out event — a Canal DDL, an unknown Debezium op —
-        publish empty target versions). Exact-match rules read their
-        count here instead of running their own isEmpty probe: at an
-        N-rule fan-out, 1 job instead of N. Formats without a declared
-        census get (batch_df.count(), None) and keep the per-rule
-        probe."""
-        spec = _ROUTE_CENSUS.get(self.cdc_format)
-        if spec is None:
-            return batch_df.count(), None
-
-        def field(path: str):
-            return F.get_json_object(F.col("value"), path)
-
-        routed = field(spec["op"]).isin(*spec["ops"])
-        if "ctl" in spec:
-            routed &= field(spec["ctl"]) != "control"
-        if "array" in spec:
-            routed &= F.json_array_length(field(spec["array"])) > 0
+        A row counts as routed under the format spec's gates — the ones
+        the fused parse applies, plus a non-empty image array — so a
+        positive count implies a non-empty parse (a count over keys alone
+        would let an op-filtered-out event — a Canal DDL, an unknown
+        Debezium op — publish empty target versions). Exact-match rules
+        read their count here instead of running their own isEmpty probe
+        (the A1/A2 probe, redshift_sink.py:585): at an N-rule fan-out, 1
+        job instead of N."""
+        spec = self._format
+        field = envelopes.json_fields()
         rows = (
             batch_df.groupBy(
-                field(spec["db"]).alias("db"),
-                field(spec["tb"]).alias("tb"),
+                field(spec.db).alias("db"),
+                field(spec.table).alias("tb"),
                 # a NULL predicate (missing field, non-JSON row) is unrouted
-                F.coalesce(routed, F.lit(False)).alias("routed"),
+                F.coalesce(spec.yields_rows(field), F.lit(False)).alias("routed"),
             )
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
@@ -503,48 +438,42 @@ class CdcBatchProcessor:
         }
 
     def _run_table(
-        self, batch_df: DataFrame, rule: SyncRule, job_group: str | None = None,
-        batch_id: int | None = None, route_counts: dict | None = None,
+        self, batch_df: DataFrame, rule: SyncRule, job_group: str,
+        batch_id: int, route_counts: dict,
     ) -> TaskStatus:
         try:
-            if job_group is not None:
-                # tag every Spark job this task submits so the batch
-                # watchdog can cancel them (thread-local property;
-                # interruptOnCancel interrupts the running task threads)
-                self.spark.sparkContext.setJobGroup(
-                    job_group, f"cdc sync {rule.target_name}", interruptOnCancel=True
-                )
-            fmt = self.cdc_format
+            # tag every Spark job this task submits so the batch watchdog
+            # can cancel them (thread-local property; interruptOnCancel
+            # interrupts the running task threads)
+            self.spark.sparkContext.setJobGroup(
+                job_group, f"cdc sync {rule.target_name}", interruptOnCancel=True
+            )
             is_regex = any(ch in rule.table for ch in ".*+?[](){}|^$\\")
             # exact-match rules consult the shared routing census instead
             # of running their own probe job; regex rules keep the
             # per-rule probe (rlike dialect stays JVM-side, un-replicated)
-            precounted = (
-                route_counts is not None and not is_regex
-            )
+            precounted = not is_regex
             if precounted and route_counts.get((rule.db, rule.table), 0) == 0:
                 return TaskStatus(rule.target_name, "no-data")
-            if fmt == "MONGO-CDC":
-                parsed = route_parse_mongo(batch_df, rule.db, rule.table)
-            else:
-                schema = self.payload_schemas.get(rule.target_name)
-                if schema is None:
-                    schema = infer_payload_schema(
-                        batch_df, fmt, rule.db, rule.table,
-                        table_is_regex=is_regex,
-                        sample_limit=self.infer_sample_limit,
-                    )
-                    if schema is None:
-                        return TaskStatus(rule.target_name, "no-data")
-                parsed = _ROUTE_PARSERS[fmt](
-                    batch_df, rule.db, rule.table, schema,
+            # the declared payload schema, else one inferred from the
+            # batch; the state folds re-parse with this same schema
+            schema = self.payload_schemas.get(rule.target_name)
+            if schema is None and self._format.typed:
+                schema = infer_payload_schema(
+                    batch_df, self.cdc_format, rule.db, rule.table,
                     table_is_regex=is_regex,
+                    sample_limit=self.infer_sample_limit,
                 )
+                if schema is None:
+                    return TaskStatus(rule.target_name, "no-data")
+            parsed = route_parse(
+                batch_df, self.cdc_format, rule.db, rule.table, schema,
+                table_is_regex=is_regex,
+            )
             if not precounted and parsed.isEmpty():
                 # the A1/A2 empty probe — only rules the census can't
                 # cover pay a probe job (the census applies the parser's
-                # op/control/array predicates too, so a positive count
-                # implies a non-empty parse)
+                # gates too, so a positive count implies a non-empty parse)
                 return TaskStatus(rule.target_name, "no-data")
             parsed = apply_rule_conversions(parsed, rule)
             if rule.quality_gate:
@@ -676,7 +605,7 @@ class CdcBatchProcessor:
                             order_col=self.order_by[0], tiebreak_cols=tiebreak,
                         ),
                     )
-            self._fold_derived(batch_df, rule, parsed, batch_id, is_regex)
+            self._fold_derived(batch_df, rule, parsed, schema, batch_id, is_regex)
             kinds = [k for k in _INGESTS if getattr(rule, k)]
             if kinds:
                 # CDC-correct ingest feed for the derived-state family:
@@ -735,11 +664,11 @@ class CdcBatchProcessor:
 
     def _fold_derived(
         self, batch_df: DataFrame, rule: SyncRule, parsed: DataFrame,
-        batch_id, is_regex: bool,
+        schema: T.StructType | None, batch_id, is_regex: bool,
     ) -> None:
         """Fold the batch into the rule's derived tables (_derived_folds)
         in O(|groups| + |batch|) each, the corpus never rescanned."""
-        event, state = _derived_folds(rule, self.cdc_format)
+        event, state = _derived_folds(rule, self._format)
         keys = list(rule.stats_group_columns)
         obs = (
             parsed.filter(F.col("op") != "d")
@@ -771,17 +700,8 @@ class CdcBatchProcessor:
         ]
         if not state:
             return
-        schema = self.payload_schemas.get(rule.target_name)
-        if schema is None:
-            schema = infer_payload_schema(
-                batch_df, self.cdc_format, rule.db, rule.table,
-                table_is_regex=is_regex,
-                sample_limit=self.infer_sample_limit,
-            )
-            if schema is None:  # no routed rows -> no delta
-                return
-        withb = route_parse_debezium(
-            batch_df, rule.db, rule.table, schema,
+        withb = route_parse(
+            batch_df, self.cdc_format, rule.db, rule.table, schema,
             table_is_regex=is_regex, emit_before=True,
         )
         for suffix, field, sketch, fold in state:
@@ -914,7 +834,7 @@ class CdcBatchProcessor:
         for rule in self.rules:
             t = rule.target_name
             out.setdefault(t, tuple(rule.zorder_columns))
-            event, state = _derived_folds(rule, self.cdc_format)
+            event, state = _derived_folds(rule, self._format)
             for suffix, on in (
                 ("_delete", rule.save_delete or rule.only_save_delete),
                 ("_history", rule.scd2_history),
@@ -1034,26 +954,19 @@ class CdcBatchProcessor:
         self._for_each_table(maintain_ingestors, list(ingest_rules))
 
 
-def run_file_stream(
-    spark: SparkSession,
-    source_dir: str,
+def start_batches(
+    stream: DataFrame,
     processor: CdcBatchProcessor,
     checkpoint_dir: str,
     *,
     available_now: bool = True,
     processing_time: str | None = None,
-    max_files_per_trigger: int | None = None,
     batch_timeout_sec: float | None = None,
 ):
-    """Bounded (availableNow, T2) or continuous (processingTime, T1) stream
-    over a directory of JSON-lines files with checkpointed recovery (T3).
-    Same contract as the Kafka source: one `value: string` column.
-    `max_files_per_trigger` is the file-source analog of the Kafka
-    `maxOffsetsPerTrigger` rate limit (T4): it bounds each micro-batch."""
-    reader = spark.readStream.schema("value string")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.text(source_dir).toDF("value")
+    """Start `stream` (one `value: string` column, any source) as a
+    checkpointed (T3) foreachBatch(processor) query: bounded (availableNow,
+    T2) or continuous (processingTime, T1; default 30 seconds). Returns
+    the StreamingQuery."""
     writer = (
         stream.writeStream.outputMode("append")
         .foreachBatch(
@@ -1068,3 +981,28 @@ def run_file_stream(
     else:
         writer = writer.trigger(processingTime=processing_time or "30 seconds")
     return writer.start()
+
+
+def run_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    processor: CdcBatchProcessor,
+    checkpoint_dir: str,
+    *,
+    available_now: bool = True,
+    processing_time: str | None = None,
+    max_files_per_trigger: int | None = None,
+    batch_timeout_sec: float | None = None,
+):
+    """`start_batches` over a directory of JSON-lines files — the same
+    `value: string` contract as the Kafka source.
+    `max_files_per_trigger` is the file-source analog of the Kafka
+    `maxOffsetsPerTrigger` rate limit (T4): it bounds each micro-batch."""
+    reader = spark.readStream.schema("value string")
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return start_batches(
+        reader.text(source_dir).toDF("value"), processor, checkpoint_dir,
+        available_now=available_now, processing_time=processing_time,
+        batch_timeout_sec=batch_timeout_sec,
+    )

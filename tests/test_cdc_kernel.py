@@ -8,11 +8,10 @@ from pyspark.sql import functions as F
 from kafka_cdc_redshift_spark.operators import (
     lww_dedup,
     latest_deletes,
+    explode_canal,
     merge_changes,
-    parse_debezium,
-    parse_canal,
-    parse_mongo,
-    route_debezium,
+    route_parse_debezium,
+    route_parse_mongo,
 )
 from kafka_cdc_redshift_spark.sources import load_table
 from kafka_cdc_redshift_spark.sources.envelopes import (
@@ -125,8 +124,7 @@ def test_latest_deletes(spark, sf_dir):
 def test_debezium_roundtrip_and_routing(spark, sf_dir):
     topic = synth_debezium_topic(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    routed = route_debezium(topic, "salesdb", "orders")
-    parsed = parse_debezium(routed, orders.schema)
+    parsed = route_parse_debezium(topic, "salesdb", "orders", orders.schema)
     # routing drops the customer envelopes
     n_cl = synth_orders_changelog(spark, sf_dir).count()
     assert parsed.count() == n_cl
@@ -143,7 +141,7 @@ def test_debezium_roundtrip_and_routing(spark, sf_dir):
 def test_canal_posexplode_tiebreak(spark, sf_dir):
     topic = synth_canal_topic(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    parsed = parse_canal(topic, orders.schema, pre_parsed=True)
+    parsed = explode_canal(topic)
     winners = lww_dedup(parsed, ["o_orderkey"], ["ts_ms", "data_index_aws"])
     # second image (price*2) must win via array-position tiebreak
     joined = winners.alias("w").join(orders.alias("o"), "o_orderkey").select(
@@ -161,7 +159,7 @@ def test_mongo_parse(spark):
          '"documentKey":"{\\"_id\\": 1.0}","ns":{"db":"d","coll":"c"},"ts_ms":200}',),
     ]
     df = spark.createDataFrame(rows, ["value"])
-    parsed = parse_mongo(df).orderBy("ts_ms").collect()
+    parsed = route_parse_mongo(df, "d", "c").orderBy("ts_ms").collect()
     assert parsed[0].doc_id == "1.0" and parsed[0].op == "c"
     assert parsed[1].doc == "[]" and parsed[1].op == "d"
 

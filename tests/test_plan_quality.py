@@ -57,6 +57,14 @@ def test_route_parse_single_full_parse(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "cdc_pipeline_dms")
     assert plan.count("from_json(StructField(data,StructType") == 1
     assert "get_json_object" not in plan
+    plan = plan_of(spark, sf_dir, "cdc_canal_json")
+    assert plan.count("from_json(StructField(data,ArrayType") == 1
+    assert "get_json_object" not in plan
+    # Mongo reads documentKey/doc with get_json_object by design (P8);
+    # none of them may probe the raw envelope
+    plan = plan_of(spark, sf_dir, "cdc_pipeline_mongo")
+    assert plan.count("from_json(StructField(_id,StringType") == 1
+    assert "get_json_object(value#" not in plan
 
 
 def test_q3_no_forced_fact_broadcast(spark, sf_dir):

@@ -55,6 +55,30 @@ def test_infer_canal_explodes_toplevel_array(spark):
     assert s.simpleString() == "struct<extra:bigint,pid:bigint,x:string>"
 
 
+def test_infer_reads_only_rows_the_parser_keeps(spark):
+    """Inference and the fused parse share the format's routed predicate:
+    a payload column carried only by an op-filtered event (an unknown
+    Debezium op, a Canal DDL type) stays out of the inferred schema."""
+    from kafka_cdc_redshift_spark.operators import route_parse_debezium
+
+    dz = _topic(spark, [
+        _dz("d", "t", {"pid": 1}),
+        _dz("d", "t", {"pid": 2, "ghost": "x"}, op="x"),
+    ])
+    s = infer_payload_schema(dz, "FLINK-CDC", "d", "t")
+    assert s.simpleString() == "struct<pid:bigint>"
+    assert [r.pid for r in route_parse_debezium(dz, "d", "t", s).collect()] == [1]
+
+    canal = _topic(spark, [
+        json.dumps({"data": [{"pid": 1}], "database": "d", "table": "t",
+                    "type": "INSERT", "ts": 1}),
+        json.dumps({"data": [{"pid": 2, "ghost": "x"}], "database": "d",
+                    "table": "t", "type": "ALTER", "ts": 2}),
+    ])
+    s = infer_payload_schema(canal, "CANAL-CDC", "d", "t")
+    assert s.simpleString() == "struct<pid:bigint>"
+
+
 def test_infer_absent_table_and_garbage_return_none(spark):
     df = _topic(spark, [_dz("d", "t", {"pid": 1}), "junk"])
     assert infer_payload_schema(df, "FLINK-CDC", "d", "nope") is None

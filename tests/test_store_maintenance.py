@@ -360,6 +360,56 @@ def test_routing_census_applies_parser_predicates(spark, tmp_path):
     assert cstat == {"ca": "no-data", "cb": "finished"}
     assert not cproc.store.exists("ca")
 
+    # DMS: a table that receives only control records censuses to zero
+    # (one carries a valid operation, so only the control rule drops it)
+    def dms(table, rtype, op):
+        return json.dumps({
+            "data": {"pid": 1, "val": "z"},
+            "metadata": {"timestamp": "2024-01-01 00:00:00",
+                         "record-type": rtype, "operation": op,
+                         "schema-name": "d", "table-name": table},
+        })
+
+    dproc = CdcBatchProcessor(
+        spark,
+        [SyncRule(db="d", table="da", primary_key=("pid",)),
+         SyncRule(db="d", table="db", primary_key=("pid",))],
+        ParquetTargetStore(str(tmp_path / "d")),
+        cdc_format="DMS-CDC",
+    )
+    dbatch = spark.createDataFrame(
+        [(dms("da", "control", "create-table"),),
+         (dms("da", "control", "insert"),),
+         (dms("db", "data", "insert"),)],
+        "value string",
+    )
+    dstat = {s.table: s.status for s in dproc.process_batch(dbatch, 0)}
+    assert dstat == {"da": "no-data", "db": "finished"}
+    assert not dproc.store.exists("da")
+
+    # MONGO: a collection that receives only an unknown operationType
+    def mongo(coll, op):
+        return json.dumps({
+            "operationType": op, "fullDocument": json.dumps({"pid": 1}),
+            "documentKey": json.dumps({"_id": 1}),
+            "ns": {"db": "d", "coll": coll}, "ts_ms": 1,
+        })
+
+    mproc = CdcBatchProcessor(
+        spark,
+        [SyncRule(db="d", table="ma", primary_key=("doc_id",)),
+         SyncRule(db="d", table="mb", primary_key=("doc_id",))],
+        ParquetTargetStore(str(tmp_path / "m")),
+        cdc_format="MONGO-CDC",
+    )
+    mbatch = spark.createDataFrame(
+        [(mongo("ma", "invalidate"),), (mongo("mb", "insert"),)],
+        "value string",
+    )
+    mstat = {s.table: s.status for s in mproc.process_batch(mbatch, 0)}
+    assert mstat == {"ma": "no-data", "mb": "finished"}
+    assert not mproc.store.exists("ma")
+
 
 def test_prune_versions_retention(spark, tmp_path):
     """The version-chain retention knob (r10 CoW churn audit): pruning

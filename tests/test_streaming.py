@@ -1196,3 +1196,57 @@ def test_unroutable_batch_is_no_data_for_every_rule(spark, sf_dir, tmp_path):
             (r.target_name, "no-data") for r in rules
         )
     assert not {"orders", "customer"} & set(os.listdir(root))
+
+
+@pytest.mark.parametrize("with_exact_rule", [False, True], ids=["probe", "census"])
+def test_regex_mongo_rule_syncs_every_matching_collection(
+    spark, tmp_path, with_exact_rule
+):
+    """A MONGO-CDC rule with a regex collection (`cust_.*`) routes through
+    the same anchored table_is_regex match as every other format, so it
+    syncs the documents of every matching collection. Alone the rule
+    takes its own isEmpty probe; beside an exact rule the batch census
+    decides the exact one."""
+    import json
+
+    def mongo(coll, cid, op="insert"):
+        return {
+            "operationType": op,
+            "fullDocument": None if op == "delete" else json.dumps({"cid": cid}),
+            "documentKey": json.dumps({"_id": cid}),
+            "ns": {"db": "appdb", "coll": coll},
+            "ts_ms": cid + (100 if op == "delete" else 0),
+        }
+
+    rules = [SyncRule(db="appdb", table="cust_.*", primary_key=("doc_id",),
+                      target_table="customers")]
+    if with_exact_rule:
+        rules.append(SyncRule(db="appdb", table="orders", primary_key=("doc_id",)))
+    batch = _topic_df(spark, [
+        mongo("cust_1", 1), mongo("cust_2", 2), mongo("cust_2", 5),
+        mongo("cust_2", 5, op="delete"),
+        mongo("xcust_1", 3),  # the anchored match keeps this one out
+        mongo("orders", 4),
+    ])
+    store = ParquetTargetStore(str(tmp_path / "store"))
+    proc = CdcBatchProcessor(spark, rules, store, cdc_format="MONGO-CDC")
+    statuses = {s.table: s.status for s in proc.process_batch(batch, 0)}
+    assert statuses == {r.target_name: "finished" for r in rules}
+    docs = store.read(spark, "customers").collect()
+    assert sorted(r.doc_id for r in docs) == ["1", "2"]
+
+
+def test_unknown_cdc_format_fails_at_construction(spark, tmp_path):
+    """A cdc_format typo fails when the processor is built, naming the
+    known formats — not inside every rule task of the first non-empty
+    batch."""
+    with pytest.raises(ValueError) as err:
+        CdcBatchProcessor(
+            spark, RULES, ParquetTargetStore(str(tmp_path / "store")),
+            cdc_format="DEBEZIUM",
+        )
+    msg = str(err.value)
+    assert "DEBEZIUM" in msg
+    for name in ("FLINK-CDC", "MSK-DEBEZIUM-CDC", "DMS-CDC", "CANAL-CDC",
+                 "MONGO-CDC"):
+        assert name in msg
