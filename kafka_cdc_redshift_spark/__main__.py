@@ -14,6 +14,10 @@ emr_ec2/cdc_redshift.py, emr_serverless/cdc_redshift.py), with the same
                             CANAL-CDC | MONGO-CDC
   sync_table_list           JSON rule array (S7) — schemas are inferred
                             per batch unless declared (S4 dynamic mode).
+                            A rule's table is an equal name, else a
+                            Python re.fullmatch regex evaluated on the
+                            driver over each batch's table names (escape
+                            `.` for a literal: a\\.b).
                             Per-rule flags: ignore_ddl, save_delete,
                             only_save_delete, skip_delete, scd2_history
                             (maintain <table>_history, SCD type 2),

@@ -2,9 +2,16 @@
 
 Parity with the reference's ``sync_table_list`` JSON (parsed at
 cdc_util/redshift_sink.py:552-579; example config/job-ec2.properties:30-33):
-each rule declares the source db/table (table may be a regex), primary key
-column(s), optional target-table override, delete-handling mode, and
-column-level type annotations (super/json, timestamp, date).
+each rule declares the source db/table, primary key column(s), optional
+target-table override, delete-handling mode, and column-level type
+annotations (super/json, timestamp, date).
+
+A rule's table is interpreted in one place, `SyncRule.matches`: an equal
+name matches, else the name is a Python regex that must match the whole
+table name (`re.fullmatch`; the reference allows regex table names,
+README.md:42). The streaming shell evaluates it on the driver over the
+table names each batch holds, so `a.b` also matches `axb`; spell a literal
+dot `a\\.b`. A name that is not a valid regex (`t[1`) matches only itself.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ class SyncRule:
     """One entry of the sync catalog (cdc_util/redshift_sink.py:552-579)."""
 
     db: str
-    table: str  # exact name or regex (reference allows regex table names, README.md:42)
+    table: str  # equal name, else a whole-name Python regex (see matches)
     primary_key: tuple[str, ...]
     target_table: str | None = None
     ignore_ddl: bool = False      # fixed-schema mode: cast to target types
@@ -160,8 +167,11 @@ class SyncRule:
     def target_name(self) -> str:
         return self.target_table or self.table
 
-    def matches(self, db: str, table: str) -> bool:
-        if db != self.db:
+    def matches(self, db: str | None, table: str | None) -> bool:
+        """Does this rule route (db, table)? An equal name, else
+        `re.fullmatch` of the rule's table; an invalid regex matches only
+        its equal name."""
+        if db != self.db or table is None:
             return False
         if table == self.table:
             return True

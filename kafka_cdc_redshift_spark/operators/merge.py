@@ -169,7 +169,6 @@ def scd2_merge_batch(
     op_col: str = "op",
     delete_op: str = "d",
     tiebreak_cols: Sequence[str] = (),
-    dedup_replayed: bool = False,
 ) -> DataFrame:
     """Incrementally maintain an SCD2 history table from one micro-batch of
     changelog rows (the streaming counterpart of `scd2_history`): close the
@@ -181,38 +180,23 @@ def scd2_merge_batch(
     across batches (the Kafka-partition-by-key contract the reference
     pipeline already relies on).
 
-    Replay safety (foreachBatch is at-least-once) vs cross-batch ties —
-    two regimes, selected by `dedup_replayed`:
-
-    * `dedup_replayed=False` (default — the streaming job's path, which
-      skips replayed batches entirely via the store's transactional
-      batch_id, so each batch is applied EXACTLY once): the close fires
-      whenever the open version started at-or-before the batch
-      (`__batch_start >= valid_from`). The equality case is the
-      cross-batch same-timestamp tie — a genuinely new batch whose first
-      event for a key carries the SAME order_col value as the open
-      version's valid_from (millisecond CDC ties straddling a
-      micro-batch boundary). The open version is closed as a zero-length
-      version exactly like `scd2_history`'s full rebuild does for tied
-      events, preserving the ≤1-open-row-per-key invariant.
-    * `dedup_replayed=True` (no batch tracking, replays possible): the
-      close is STRICT (`__batch_start > valid_from`) so re-applying a
-      batch can never close the batch's own open version; replayed rows
-      are then removed with a full-row dropDuplicates scoped to the
-      touched keys (full-row, so distinct same-timestamp versions are
-      never collapsed). LIMITATION: on order_col alone this path cannot
-      distinguish "re-applied own open version" from "genuinely new
-      tied event", so a cross-batch tie leaves the old row open (two
-      current rows) until a later untied event closes it — with
-      at-least-once delivery and only an event-time column, that
-      ambiguity is inherent; use transactional batch tracking (the
-      default regime) when exact tie semantics matter.
+    Each batch must be applied once: the streaming job skips a replayed
+    batch via the store's transactional batch_id (foreachBatch is
+    at-least-once). The close fires whenever the open version started
+    at-or-before the batch (`__batch_start >= valid_from`). The equality
+    case is the cross-batch same-timestamp tie — a genuinely new batch
+    whose first event for a key carries the SAME order_col value as the
+    open version's valid_from (millisecond CDC ties straddling a
+    micro-batch boundary). The open version is closed as a zero-length
+    version exactly like `scd2_history`'s full rebuild does for tied
+    events, preserving the ≤1-open-row-per-key invariant; a replayed
+    batch can duplicate rows or close a version zero-length, never
+    invert an interval.
 
     Scale shape: the only join is history against the batch's one-row-
     per-key first-event aggregate — broadcastable at any history size
-    (a micro-batch is rate-limited); the batch's own window is batch-local;
-    the replay dedup (when enabled) shuffles only the touched keys'
-    history, never the whole table. `history=None` bootstraps from empty.
+    (a micro-batch is rate-limited); the batch's own window is
+    batch-local. `history=None` bootstraps from empty.
     """
     new_versions = scd2_history(
         batch, keys, order_col=order_col, op_col=op_col, delete_op=delete_op,
@@ -224,34 +208,18 @@ def scd2_merge_batch(
     if history is None:
         return new_versions
     joined = history.join(F.broadcast(first_ts), list(keys), "left")
-    close_cmp = (
-        (F.col("__batch_start") > F.col("valid_from"))
-        if dedup_replayed
-        else (F.col("__batch_start") >= F.col("valid_from"))
-    )
     closed_expr = F.when(
-        F.col("is_current") & F.col("__batch_start").isNotNull() & close_cmp,
+        F.col("is_current") & F.col("__batch_start").isNotNull()
+        & (F.col("__batch_start") >= F.col("valid_from")),
         F.col("__batch_start"),
     ).otherwise(F.col("valid_to"))
-    if not dedup_replayed:
-        closed = (
-            joined.withColumn("valid_to", closed_expr)
-            .withColumn("is_current", F.col("valid_to").isNull())
-            .drop("__batch_start")
-        )
-        # schema drift across batches: columns added to (or dropped from)
-        # the changelog must not break the history — align symmetrically,
-        # null-filling whichever side lacks a column (the SCD2 analog of
-        # the main target's D1-D6 evolution path)
-        return closed.unionByName(new_versions, allowMissingColumns=True)
-    untouched = joined.filter(F.col("__batch_start").isNull()).drop("__batch_start")
-    touched = (
-        joined.filter(F.col("__batch_start").isNotNull())
-        .withColumn("valid_to", closed_expr)
+    closed = (
+        joined.withColumn("valid_to", closed_expr)
         .withColumn("is_current", F.col("valid_to").isNull())
         .drop("__batch_start")
     )
-    merged = touched.unionByName(
-        new_versions, allowMissingColumns=True
-    ).dropDuplicates()
-    return untouched.unionByName(merged, allowMissingColumns=True)
+    # schema drift across batches: columns added to (or dropped from)
+    # the changelog must not break the history — align symmetrically,
+    # null-filling whichever side lacks a column (the SCD2 analog of
+    # the main target's D1-D6 evolution path)
+    return closed.unionByName(new_versions, allowMissingColumns=True)

@@ -26,6 +26,8 @@ codes and flatten come from its spec (sources/envelopes.CDC_FORMATS).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,13 +36,15 @@ from ..sources import envelopes
 
 
 def route_parse(
-    df: DataFrame, fmt: str, db: str, table: str,
+    df: DataFrame, fmt: str, db: str, table: str | Sequence[str],
     payload: T.StructType | None = None, *, value_col: str = "value",
-    table_is_regex: bool = False, emit_before: bool = False,
+    emit_before: bool = False,
 ) -> DataFrame:
     """Route the `fmt` envelopes of (db, table) out of a multiplexed topic
-    and flatten them, in one parse. `payload` is the row-image StructType
-    (unused by MONGO-CDC, whose doc stays raw JSON).
+    and flatten them, in one parse. `table` is one name or a list of names
+    (routed with one `isin`; a rule's regex is resolved to names by
+    `SyncRule.matches`). `payload` is the row-image StructType (unused by
+    MONGO-CDC, whose doc stays raw JSON).
 
     `emit_before=True` (Debezium formats) additionally carries the
     envelope's BEFORE image as one nested struct column `_before_img`
@@ -55,39 +59,37 @@ def route_parse(
     if emit_before and spec.before is None:
         raise ValueError(f"{fmt} envelopes carry no before image")
     k = df.select(F.from_json(F.col(value_col), spec.schema(payload)).alias("k"))
-    k = k.filter(spec.routed(
-        envelopes.parsed_fields("k."), db, table, table_is_regex=table_is_regex
-    ))
+    k = k.filter(spec.routed(envelopes.parsed_fields("k."), db, table))
     return spec.flatten(spec, k, "k.", emit_before)
 
 
 def route_parse_debezium(
-    df: DataFrame, db: str, table: str, payload: T.StructType, *,
-    value_col: str = "value", table_is_regex: bool = False,
-    emit_before: bool = False,
+    df: DataFrame, db: str, table: str | Sequence[str], payload: T.StructType,
+    *, value_col: str = "value", emit_before: bool = False,
 ) -> DataFrame:
     return route_parse(df, "FLINK-CDC", db, table, payload, value_col=value_col,
-                       table_is_regex=table_is_regex, emit_before=emit_before)
+                       emit_before=emit_before)
 
 
 def route_parse_dms(
-    df: DataFrame, schema_name: str, table: str, payload: T.StructType, *,
-    value_col: str = "value", table_is_regex: bool = False,
+    df: DataFrame, schema_name: str, table: str | Sequence[str],
+    payload: T.StructType, *, value_col: str = "value",
 ) -> DataFrame:
     return route_parse(df, "DMS-CDC", schema_name, table, payload,
-                       value_col=value_col, table_is_regex=table_is_regex)
+                       value_col=value_col)
 
 
 def route_parse_canal(
-    df: DataFrame, database: str, table: str, payload: T.StructType, *,
-    value_col: str = "value", table_is_regex: bool = False,
+    df: DataFrame, database: str, table: str | Sequence[str],
+    payload: T.StructType, *, value_col: str = "value",
 ) -> DataFrame:
     return route_parse(df, "CANAL-CDC", database, table, payload,
-                       value_col=value_col, table_is_regex=table_is_regex)
+                       value_col=value_col)
 
 
 def route_parse_mongo(
-    df: DataFrame, db: str, coll: str, *, value_col: str = "value",
+    df: DataFrame, db: str, coll: str | Sequence[str], *,
+    value_col: str = "value",
 ) -> DataFrame:
     return route_parse(df, "MONGO-CDC", db, coll, value_col=value_col)
 

@@ -25,7 +25,7 @@ tables so the DuckDB oracle can replay the identical change log (FIXTURES.md
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -134,7 +134,9 @@ def mongo_schema(payload: T.StructType | None = None) -> T.StructType:
 # parsed-struct column for the parse, a get_json_object probe over the raw
 # envelope for the census and inference — so the three cannot drift. The
 # reference spells this as per-table routing regexes plus one op filter
-# per format (cdc_util/redshift_sink.py:18-51, 200-226).
+# per format (cdc_util/redshift_sink.py:18-51, 200-226); here a table is
+# routed by name, and a rule's regex becomes the names it matches
+# (config.SyncRule.matches).
 # ---------------------------------------------------------------------------
 
 Field = Callable[[str], Column]
@@ -149,11 +151,6 @@ def json_fields(value_col: str = "value") -> Field:
     """Accessor for a raw envelope: dotted path -> get_json_object probe
     (object-valued paths come back as raw JSON substrings)."""
     return lambda path: F.get_json_object(F.col(value_col), "$." + path)
-
-
-def _match(col: Column, value: str, is_regex: bool) -> Column:
-    """Table match; a regex rule (reference README.md:42) is anchored."""
-    return col.rlike(f"^(?:{value})$") if is_regex else (col == F.lit(value))
 
 
 def _map_expr(col: Column, mapping: dict[str, str]) -> Column:
@@ -201,13 +198,13 @@ class CdcFormat:
             cond = gate if cond is None else cond & gate
         return cond
 
-    def routed(self, field: Field, db: str, table: str, *,
-               table_is_regex: bool = False) -> Column:
-        """The routing decision: the envelope belongs to (db, table) and
-        passes the gates — exactly the envelopes the parse keeps."""
-        keys = (field(self.db) == db) & _match(
-            field(self.table), table, table_is_regex
-        )
+    def routed(self, field: Field, db: str, table: str | Sequence[str]) -> Column:
+        """The routing decision: the envelope belongs to `db` and to one
+        of the table names `table` (one name or a list; a rule's regex is
+        resolved to names by `SyncRule.matches`) and passes the gates —
+        exactly the envelopes the parse keeps. One name plans as `=`."""
+        names = [table] if isinstance(table, str) else list(table)
+        keys = (field(self.db) == db) & field(self.table).isin(*names)
         return self.admits(field, keys)
 
     def yields_rows(self, field: Field) -> Column:

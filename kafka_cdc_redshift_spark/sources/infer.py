@@ -27,6 +27,8 @@ inference pass regardless of batch size.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -37,15 +39,15 @@ def payload_strings(
     df: DataFrame,
     fmt: str,
     db: str,
-    table: str,
+    table: str | Sequence[str],
     *,
     value_col: str = "value",
-    table_is_regex: bool = False,
 ) -> DataFrame:
     """One-column DataFrame[payload: string] of raw row-image JSON for the
     rows of a multiplexed topic that the fused parse would keep for
-    (db, table): the format spec's routed predicate — keys, control-record
-    and op-code gates — so an op-filtered event adds no columns.
+    (db, table) — `table` one name or a list of names: the format spec's
+    routed predicate — keys, control-record and op-code gates — so an
+    op-filtered event adds no columns.
 
     `get_json_object` returns the raw JSON substring for object-valued
     paths, so the payload survives un-tokenized for the inference reader
@@ -57,7 +59,7 @@ def payload_strings(
     """
     spec = envelopes.cdc_format(fmt)
     field = envelopes.json_fields(value_col)
-    cond = spec.routed(field, db, table, table_is_regex=table_is_regex)
+    cond = spec.routed(field, db, table)
     payload = spec.image_of(field)
     return df.filter(cond & payload.isNotNull()).select(payload.alias("payload"))
 
@@ -81,21 +83,19 @@ def infer_payload_schema(
     df: DataFrame,
     fmt: str,
     db: str,
-    table: str,
+    table: str | Sequence[str],
     *,
     value_col: str = "value",
-    table_is_regex: bool = False,
     sample_limit: int | None = None,
 ) -> T.StructType | None:
-    """Infer the row-image StructType for (db, table) from the batch itself.
+    """Infer the row-image StructType for (db, table) from the batch itself
+    (`table` one name or a list of names, as `payload_strings`).
 
     Returns None when the batch holds no (parseable) rows for the table —
     callers should treat that as no-data, exactly like the reference's
     empty-filtered-rdd path (redshift_sink.py:585-592).
     """
-    strings = payload_strings(
-        df, fmt, db, table, value_col=value_col, table_is_regex=table_is_regex
-    )
+    strings = payload_strings(df, fmt, db, table, value_col=value_col)
     if sample_limit is not None:
         strings = strings.limit(sample_limit)
     inferred = read_json_strings(df.sparkSession, strings)

@@ -19,6 +19,7 @@ tests, which exercises identical trigger/checkpoint semantics).
 from __future__ import annotations
 
 import concurrent.futures as cf
+import logging
 import os
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -42,6 +43,9 @@ from .ann_ingest import VersionedAnnIndex
 from .dedup_ingest import DedupIngest
 from .retrieval_ingest import RetrievalIngest
 from .store import AppendLog, ParquetTargetStore
+
+_log = logging.getLogger(__name__)
+
 
 def _bloom_sketch(obs: DataFrame, keys, col: str) -> DataFrame:
     vals = obs.select(F.col(col).cast("long").alias("v"))
@@ -406,21 +410,21 @@ class CdcBatchProcessor:
         return passing
 
     # -- per-table task ----------------------------------------------------
-    def _batch_route_counts(self, batch_df: DataFrame) -> tuple[int, dict]:
+    def _batch_census(self, batch_df: DataFrame) -> tuple[int, set]:
         """The batch's entry census, ONE grouped aggregation over the
-        cached batch: returns (total rows, routed rows per (db, table)).
+        cached batch: returns (total rows, the routed (db, table) keys).
         It is the first action on the persisted batch, so it also
         materializes the cache every rule task then reads, and the total
         decides whether the batch is empty.
 
-        A row counts as routed under the format spec's gates — the ones
-        the fused parse applies, plus a non-empty image array — so a
-        positive count implies a non-empty parse (a count over keys alone
-        would let an op-filtered-out event — a Canal DDL, an unknown
-        Debezium op — publish empty target versions). Exact-match rules
-        read their count here instead of running their own isEmpty probe
-        (the A1/A2 probe, redshift_sink.py:585): at an N-rule fan-out, 1
-        job instead of N."""
+        A row is routed under the format spec's gates — the ones the
+        fused parse applies, plus a non-empty image array — so a routed
+        key implies a non-empty parse (keys alone would let an
+        op-filtered-out event — a Canal DDL, an unknown Debezium op —
+        publish empty target versions). Every rule resolves its table
+        names against these keys (SyncRule.matches) instead of running
+        its own isEmpty probe (the A1/A2 probe, redshift_sink.py:585): at
+        an N-rule fan-out, 1 job instead of N."""
         spec = self._format
         field = envelopes.json_fields()
         rows = (
@@ -434,13 +438,18 @@ class CdcBatchProcessor:
             .collect()
         )
         return sum(r["cnt"] for r in rows), {
-            (r["db"], r["tb"]): r["cnt"] for r in rows if r["routed"]
+            (r["db"], r["tb"]) for r in rows if r["routed"]
         }
 
     def _run_table(
         self, batch_df: DataFrame, rule: SyncRule, job_group: str,
-        batch_id: int, route_counts: dict,
+        batch_id: int, names: list[str],
     ) -> TaskStatus:
+        """Sync `rule` from the batch rows of `names`, the routed census
+        tables it matches; none is no-data (a routed table holds at least
+        one row the parse keeps)."""
+        if not names:
+            return TaskStatus(rule.target_name, "no-data")
         try:
             # tag every Spark job this task submits so the batch watchdog
             # can cancel them (thread-local property; interruptOnCancel
@@ -448,33 +457,19 @@ class CdcBatchProcessor:
             self.spark.sparkContext.setJobGroup(
                 job_group, f"cdc sync {rule.target_name}", interruptOnCancel=True
             )
-            is_regex = any(ch in rule.table for ch in ".*+?[](){}|^$\\")
-            # exact-match rules consult the shared routing census instead
-            # of running their own probe job; regex rules keep the
-            # per-rule probe (rlike dialect stays JVM-side, un-replicated)
-            precounted = not is_regex
-            if precounted and route_counts.get((rule.db, rule.table), 0) == 0:
-                return TaskStatus(rule.target_name, "no-data")
             # the declared payload schema, else one inferred from the
             # batch; the state folds re-parse with this same schema
             schema = self.payload_schemas.get(rule.target_name)
             if schema is None and self._format.typed:
                 schema = infer_payload_schema(
-                    batch_df, self.cdc_format, rule.db, rule.table,
-                    table_is_regex=is_regex,
+                    batch_df, self.cdc_format, rule.db, names,
                     sample_limit=self.infer_sample_limit,
                 )
                 if schema is None:
                     return TaskStatus(rule.target_name, "no-data")
             parsed = route_parse(
-                batch_df, self.cdc_format, rule.db, rule.table, schema,
-                table_is_regex=is_regex,
+                batch_df, self.cdc_format, rule.db, names, schema
             )
-            if not precounted and parsed.isEmpty():
-                # the A1/A2 empty probe — only rules the census can't
-                # cover pay a probe job (the census applies the parser's
-                # gates too, so a positive count implies a non-empty parse)
-                return TaskStatus(rule.target_name, "no-data")
             parsed = apply_rule_conversions(parsed, rule)
             if rule.quality_gate:
                 parsed = self._apply_quality_gate(parsed, rule, batch_id)
@@ -605,7 +600,7 @@ class CdcBatchProcessor:
                             order_col=self.order_by[0], tiebreak_cols=tiebreak,
                         ),
                     )
-            self._fold_derived(batch_df, rule, parsed, schema, batch_id, is_regex)
+            self._fold_derived(batch_df, rule, parsed, schema, batch_id, names)
             kinds = [k for k in _INGESTS if getattr(rule, k)]
             if kinds:
                 # CDC-correct ingest feed for the derived-state family:
@@ -664,7 +659,7 @@ class CdcBatchProcessor:
 
     def _fold_derived(
         self, batch_df: DataFrame, rule: SyncRule, parsed: DataFrame,
-        schema: T.StructType | None, batch_id, is_regex: bool,
+        schema: T.StructType | None, batch_id, names: list[str],
     ) -> None:
         """Fold the batch into the rule's derived tables (_derived_folds)
         in O(|groups| + |batch|) each, the corpus never rescanned."""
@@ -701,8 +696,7 @@ class CdcBatchProcessor:
         if not state:
             return
         withb = route_parse(
-            batch_df, self.cdc_format, rule.db, rule.table, schema,
-            table_is_regex=is_regex, emit_before=True,
+            batch_df, self.cdc_format, rule.db, names, schema, emit_before=True
         )
         for suffix, field, sketch, fold in state:
             col = getattr(rule, field)
@@ -719,19 +713,21 @@ class CdcBatchProcessor:
         pool = cf.ThreadPoolExecutor(max_workers=self.max_workers)
         try:
             # one census job over the whole batch: materializes the cache
-            # for all tasks, decides emptiness and yields the per-table
-            # routed counts that spare exact-match rules their probe job
+            # for all tasks, decides emptiness and lists the routed
+            # (db, table) keys each rule resolves its names against, on
+            # the driver — no rule runs its own probe job, and a replay
+            # routes each rule to the same names
             with _job_group(
                 self.spark.sparkContext, group, f"cdc batch {batch_id} census"
             ):
-                total, route_counts = self._batch_route_counts(batch_df)
+                total, routed = self._batch_census(batch_df)
             if not total:  # empty batch: nothing to merge or maintain
                 self.batch_statuses.append([])
                 return []
             futs = [
                 pool.submit(
                     self._run_table, batch_df, rule, group, batch_id,
-                    route_counts,
+                    sorted(t for d, t in routed if rule.matches(d, t)),
                 )
                 for rule in self.rules
             ]
@@ -765,6 +761,14 @@ class CdcBatchProcessor:
         self._maybe_prune_versions()
         return statuses
 
+    def _maintenance_failed(self, table: str, error: Exception) -> None:
+        """Maintenance never fails a batch whose data already committed:
+        the error is recorded in `compact_errors`, logged, and the step
+        retried by the next cycle."""
+        self.compact_errors.append((table, repr(error)))
+        _log.warning("maintenance of %r failed, retried next cycle: %r",
+                     table, error, exc_info=error)
+
     def _maybe_prune_versions(self) -> None:
         """Version-chain retention, enforced after EVERY successful batch
         (not just the compaction cycle — a job with no compaction cadence
@@ -791,9 +795,7 @@ class CdcBatchProcessor:
                     self._prune_warned.add(t)
                     chain = len(self.store.versions_on_disk(t))
                     if chain > self.keep_versions + 1:
-                        import logging
-
-                        logging.getLogger(__name__).warning(
+                        _log.warning(
                             "retention: table %r has %d version dirs "
                             "(pre-existing history); keep_versions=%d "
                             "will prune all but the newest %d (plus a "
@@ -812,7 +814,7 @@ class CdcBatchProcessor:
                     min_age_sec=self.prune_grace_sec, spark=self.spark,
                 )
             except Exception as e:  # noqa: BLE001 - maintenance only
-                self.compact_errors.append((t, repr(e)))
+                self._maintenance_failed(t, e)
 
         # concurrent like the other maintenance: at wide fan-outs the
         # rmtree of a full copy-on-write version dir per table is the
@@ -860,7 +862,7 @@ class CdcBatchProcessor:
                 if self.store.delta_count(t) >= cap:
                     self.store.fold_deltas(self.spark, t)
             except Exception as e:  # noqa: BLE001 - maintenance only
-                self.compact_errors.append((t, repr(e)))
+                self._maintenance_failed(t, e)
 
         self._for_each_table(fold, list(self._maintained_tables()))
 
@@ -914,7 +916,7 @@ class CdcBatchProcessor:
                     zorder_cols=list(zcols) or None,
                 )
             except Exception as e:  # noqa: BLE001
-                self.compact_errors.append((t, repr(e)))
+                self._maintenance_failed(t, e)
 
         # every table folds/compacts CONCURRENTLY: each is an independent
         # Spark job over its own directories
@@ -944,9 +946,7 @@ class CdcBatchProcessor:
                     try:
                         getattr(self._ingestor(rule, kind), step)(self.spark)
                     except Exception as e:  # noqa: BLE001
-                        self.compact_errors.append(
-                            (f"{rule.target_name}{label}", repr(e))
-                        )
+                        self._maintenance_failed(f"{rule.target_name}{label}", e)
 
         ingest_rules = dict.fromkeys(
             r for r in self.rules if any(getattr(r, k) for k in _INGESTS)

@@ -67,6 +67,82 @@ def test_route_parse_single_full_parse(spark, sf_dir):
     assert "get_json_object(value#" not in plan
 
 
+def _table_predicates(df) -> list[str]:
+    """Class names of the predicates over the envelope's `table` field in
+    df's optimized plan: in the plan's JSON each expression tree is a
+    pre-order node list, so a predicate's subject directly follows it."""
+    import json
+
+    found = []
+
+    def walk(x):
+        if isinstance(x, dict):
+            for y in x.values():
+                walk(y)
+        elif isinstance(x, list):
+            for a, b in zip(x, x[1:]):
+                if (
+                    isinstance(a, dict) and isinstance(b, dict)
+                    and b.get("class", "").endswith(".GetStructField")
+                    and b.get("name") == "table"
+                ):
+                    found.append(a["class"].rsplit(".", 1)[-1])
+            for y in x:
+                walk(y)
+
+    walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+    return found
+
+
+def test_shell_routes_table_by_name(spark, tmp_path, monkeypatch):
+    """The shell resolves every rule's table to names on the driver: its
+    fused parse filters the table path with an EqualTo for a literal rule
+    and an In over the matched names for a regex rule, and no routing
+    plan (parse or schema inference) evaluates a regex."""
+    import json
+
+    from kafka_cdc_redshift_spark.config import SyncRule
+    from kafka_cdc_redshift_spark.sources import infer
+    from kafka_cdc_redshift_spark.streaming import job
+    from kafka_cdc_redshift_spark.streaming.store import ParquetTargetStore
+
+    parses, inferences = {}, []
+    real_parse, real_strings = job.route_parse, infer.payload_strings
+
+    def parse(df, fmt, db, table, *a, **k):
+        out = real_parse(df, fmt, db, table, *a, **k)
+        parses[tuple(table)] = out
+        return out
+
+    def strings(*a, **k):
+        out = real_strings(*a, **k)
+        inferences.append(out)
+        return out
+
+    monkeypatch.setattr(job, "route_parse", parse)
+    monkeypatch.setattr(infer, "payload_strings", strings)
+    batch = spark.createDataFrame([(json.dumps({
+        "before": None, "after": {"pid": pid},
+        "source": {"db": "d", "table": table}, "op": "c", "ts_ms": 1,
+    }),) for pid, table in enumerate(("orders", "cust_1", "cust_2", "xcust"))],
+        "value string")
+    rules = [
+        SyncRule(db="d", table="orders", primary_key=("pid",)),
+        SyncRule(db="d", table="cust_.*", primary_key=("pid",),
+                 target_table="customers"),
+    ]
+    proc = job.CdcBatchProcessor(
+        spark, rules, ParquetTargetStore(str(tmp_path / "store"))
+    )
+    assert {s.status for s in proc.process_batch(batch, 0)} == {"finished"}
+    assert sorted(parses) == [("cust_1", "cust_2"), ("orders",)]
+    assert _table_predicates(parses[("orders",)]) == ["EqualTo"]
+    assert _table_predicates(parses[("cust_1", "cust_2")]) == ["In"]
+    assert len(inferences) == 2
+    for df in [*parses.values(), *inferences]:
+        assert "RLike" not in df._jdf.queryExecution().optimizedPlan().toJSON()
+
+
 def test_q3_no_forced_fact_broadcast(spark, sf_dir):
     # only the customer dimension may carry a broadcast HINT; the orders
     # side is fact-sided and must be left to AQE's runtime sizing (a forced

@@ -129,8 +129,6 @@ def test_infer_mongo_fulldocument(spark, sf_dir):
     assert s is not None
     assert set(s.names) == {"c_custkey", "c_name", "c_nationkey", "c_acctbal"}
     assert infer_payload_schema(topic, "MONGO-CDC", "appdb", "nope") is None
-    # regex collection names route the same way as other formats
-    s2 = infer_payload_schema(
-        topic, "MONGO-CDC", "appdb", "cust.*", table_is_regex=True
-    )
+    # a list of collection names routes the same way as other formats
+    s2 = infer_payload_schema(topic, "MONGO-CDC", "appdb", ["customer", "nope"])
     assert s2 is not None and set(s2.names) == set(s.names)

@@ -642,11 +642,11 @@ def test_quality_gate_quarantines_rejected_docs(spark, sf_dir, tmp_path):
 
 
 def test_routing_census_short_circuit_matches_probe_path(spark, sf_dir, tmp_path):
-    """The per-batch routing census (one job) must make the same keep /
+    """The per-batch routing census (one job) must make the keep /
     no-data decisions the per-rule isEmpty probe made: present exact
     table -> merged, absent exact table -> no-data with no target, regex
-    rule -> still probed per rule and merged, and final target state is
-    identical to a census-free run."""
+    rule -> resolved to the census's matching names and merged, and final
+    target state is identical to a run of regex-spelled twins."""
     topic = synth_debezium_topic(spark, sf_dir, include_customer=True)
     schemas = {
         "orders": load_table(spark, sf_dir, "orders").schema,
@@ -674,8 +674,8 @@ def test_routing_census_short_circuit_matches_probe_path(spark, sf_dir, tmp_path
     assert store.read(spark, "ghost") is None
     assert store.read(spark, "ghost2") is None
 
-    # census-free twin: regex-spelled rules skip the census and run their
-    # own isEmpty probe; target contents must be identical
+    # regex-spelled twins resolve through the same census to the same
+    # names; target contents must be identical
     probed = [
         SyncRule(db="salesdb", table="^orders$", primary_key=("o_orderkey",),
                  target_table="orders"),
@@ -1202,11 +1202,10 @@ def test_unroutable_batch_is_no_data_for_every_rule(spark, sf_dir, tmp_path):
 def test_regex_mongo_rule_syncs_every_matching_collection(
     spark, tmp_path, with_exact_rule
 ):
-    """A MONGO-CDC rule with a regex collection (`cust_.*`) routes through
-    the same anchored table_is_regex match as every other format, so it
-    syncs the documents of every matching collection. Alone the rule
-    takes its own isEmpty probe; beside an exact rule the batch census
-    decides the exact one."""
+    """A MONGO-CDC rule with a regex collection (`cust_.*`) resolves to
+    the census's matching collections like every other format, so it
+    syncs the documents of every matching collection, alone or beside an
+    exact rule."""
     import json
 
     def mongo(coll, cid, op="insert"):
@@ -1234,6 +1233,96 @@ def test_regex_mongo_rule_syncs_every_matching_collection(
     assert statuses == {r.target_name: "finished" for r in rules}
     docs = store.read(spark, "customers").collect()
     assert sorted(r.doc_id for r in docs) == ["1", "2"]
+
+
+def test_rule_table_is_an_equal_name_else_a_fullmatch_regex(spark, tmp_path):
+    """A rule's table routes by an equal name, else as a whole-name
+    Python regex over the batch's table names (SyncRule.matches): a
+    literal `t$1` syncs its own row, `a\\.b` only `a.b`, `a.b` also `axb`
+    (the regex reading), and `t[1`, no valid regex, its own row. An
+    envelope without a table name routes to no rule."""
+    tables = ("t$1", "a.b", "axb", "t[1", None)
+    batch = _topic_df(spark, [
+        _env("d", t, {"pid": i, "tb": t}) for i, t in enumerate(tables)
+    ])
+    for i, (table, want) in enumerate((
+        ("t$1", ["t$1"]),
+        (r"a\.b", ["a.b"]),
+        ("a.b", ["a.b", "axb"]),
+        ("t[1", ["t[1"]),
+    )):
+        store = ParquetTargetStore(str(tmp_path / f"s{i}"))
+        rule = SyncRule(db="d", table=table, primary_key=("pid",),
+                        target_table="out")
+        proc = CdcBatchProcessor(spark, [rule], store)
+        assert [s.status for s in proc.process_batch(batch, 0)] == [
+            "finished"
+        ], table
+        got = sorted(r.tb for r in store.read(spark, "out").collect())
+        assert got == want, table
+
+
+def test_regex_rule_runs_the_jobs_of_its_literal_twin(spark, sf_dir, tmp_path):
+    """A regex-spelled rule routes through the batch census like its
+    literal twin: a steady batch under `^orders$` starts exactly as many
+    Spark jobs as under `orders`, and no per-rule isEmpty probe."""
+    schemas = {"orders": load_table(spark, sf_dir, "orders").schema}
+    batches = [
+        spark.createDataFrame(
+            [(r.value,) for r in synth_debezium_topic(
+                spark, sf_dir, ops=(op,), include_customer=False
+            ).collect()],
+            "value string",
+        )
+        for op in ("c", "u")
+    ]
+    steady = {}
+    for table in ("orders", "^orders$"):
+        proc = CdcBatchProcessor(
+            spark,
+            [SyncRule(db="salesdb", table=table, primary_key=("o_orderkey",),
+                      target_table="orders")],
+            ParquetTargetStore(str(tmp_path / f"s{len(steady)}")),
+            payload_schemas=schemas,
+        )
+        proc.process_batch(batches[0], 0)
+        steady[table] = _job_stage_sites(
+            spark, lambda: proc.process_batch(batches[1], 1)
+        )
+        assert [s.status for b in proc.batch_statuses for s in b] == [
+            "finished", "finished"
+        ], table
+    assert len(steady["^orders$"]) == len(steady["orders"]), steady
+    sites = [site for jobs in steady.values() for job in jobs for site in job]
+    assert sites and not [s for s in sites if "isEmpty" in s], sites
+
+
+def test_maintenance_failure_is_recorded_and_logged(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A maintenance step that fails does not fail the batch: the error
+    lands in `compact_errors` and as a warning of the job's logger."""
+    import logging
+
+    store = ParquetTargetStore(str(tmp_path / "store"))
+
+    def prune_versions(table, **kw):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(store, "prune_versions", prune_versions)
+    proc = CdcBatchProcessor(
+        spark, [SyncRule(db="d", table="t", primary_key=("pid",))], store
+    )
+    with caplog.at_level(logging.WARNING, logger="kafka_cdc_redshift_spark"):
+        statuses = proc.process_batch(
+            _topic_df(spark, [_env("d", "t", {"pid": 1})]), 0
+        )
+    assert [s.status for s in statuses] == ["finished"]
+    assert proc.compact_errors == [("t", "OSError('disk gone')")]
+    assert [
+        r.getMessage() for r in caplog.records
+        if r.name == "kafka_cdc_redshift_spark.streaming.job"
+    ] == ["maintenance of 't' failed, retried next cycle: OSError('disk gone')"]
 
 
 def test_unknown_cdc_format_fails_at_construction(spark, tmp_path):
