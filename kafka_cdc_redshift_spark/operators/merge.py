@@ -7,9 +7,12 @@ SQL-in-Redshift transaction (cdc_util/redshift_sink.py:477-509):
     end;
 
 Net effect: target := (target MINUS all batch pks) UNION (surviving non-delete
-rows). Expressed natively as a left-anti join + unionByName — Catalyst picks
-the join strategy; the batch side is typically small relative to the target,
-so we broadcast it when its plan allows.
+rows). Expressed natively either as one LWW window over target ∪ batch
+(`union_window`: one hash shuffle, the batch evaluated once) or as a
+left-anti join + unionByName (`anti_join`: the batch's keys broadcast, the
+target scanned in place). A NULL key matches nothing, as in the
+reference's `t.pk = s.pk`: a target row with a NULL key survives every
+batch under both strategies.
 
 Delete-mode matrix (SURVEY §3.2; run_task dispatch redshift_sink.py:599-607):
   default            : apply deletes
@@ -19,15 +22,23 @@ Delete-mode matrix (SURVEY §3.2; run_task dispatch redshift_sink.py:599-607):
   save_delete        : also emit last delete image per key -> <table>_delete
   only_save_delete   : emit ONLY the delete stream, no merge
 
-Scale notes: the anti-join shuffles on the pk unless the updates side is
-broadcastable. For a partitioned target table, pre-partitioning both sides by
-pk (bucketing) turns this into a co-located join; at 100 TB the right shape
-is `updates` (≤ rate-limit rows) broadcast against a pk-pruned target scan.
+Scale notes: which strategy wins depends on the target's size next to the
+batch's. `union_window` moves the whole target through one shuffle (AQE
+coalesces its output into few files) but evaluates the batch once and starts
+one job fewer. The anti-join shuffles on the pk unless the updates side is
+broadcastable; broadcast, the target never moves, but the key side is a job
+of its own over a second evaluation of the batch. The streaming shell merges
+every copy-on-write target with `union_window`, measured faster on targets of
+well under a megabyte, where the per-job floor dominates. At 100 TB the
+expected shape is still `updates` (≤ rate-limit rows) broadcast against a
+pk-pruned target scan; that large-target side is unmeasured.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,23 +67,25 @@ def merge_changes(
 
     Strategies:
       * "union_window" (default): target ∪ updates -> one LWW window per key
-        (updates always outrank target rows), winners minus deletes. The
-        updates lineage is evaluated ONCE and the whole merge is a single
-        hash shuffle — preferred when the batch isn't tiny relative to the
-        target, or when updates sit on an expensive lineage (JSON parse).
+        (updates always outrank target rows), winners minus deletes; a
+        target row whose key holds a NULL is kept beside the window's
+        winner. The updates lineage is evaluated ONCE and the whole merge
+        is a single hash shuffle — preferred when the batch isn't tiny
+        relative to the target, or when updates sit on an expensive
+        lineage (the streaming shell's JSON parse of its cached batch).
       * "anti_join": target LEFT ANTI updates.keys ∪ surviving updates —
-        with `broadcast_updates` the target never shuffles at all; preferred
-        for a small rate-limited batch against a huge keyed target (the
-        100 TB streaming shape). The key side is taken from `updates`
-        BEFORE the LWW dedup (dedup keeps one row per key and drops no
-        key, so the key set is the same), so only the incoming side pays
-        the dedup window. `updates` is still evaluated twice, once per
-        side: keep its lineage cheap or cached (the streaming shell
-        passes rows parsed from its cached batch).
+        with `broadcast_updates` the target never shuffles at all;
+        preferred for a small rate-limited batch against a huge keyed
+        target (the 100 TB streaming shape). The key side is taken from
+        `updates` BEFORE the LWW dedup (dedup keeps one row per key and
+        drops no key, so the key set is the same), so only the incoming
+        side pays the dedup window. `updates` is evaluated twice, once
+        per side, and the key side's broadcast is a job of its own: keep
+        the lineage cheap.
     """
     keys = list(keys)
     tiebreak = [c for c in ("data_index_aws",) if c in updates.columns]
-    order = list(order_by) + tiebreak
+    order = list(dict.fromkeys([*order_by, *tiebreak]))
     if strategy == "auto":
         strategy = "anti_join" if broadcast_updates else "union_window"
 
@@ -97,10 +110,13 @@ def merge_changes(
             F.desc("__is_new"),
             *[F.desc_nulls_last(f"__o_{c}") for c in order],
         )
+        # a NULL key equals no key, so the window's winner does not
+        # replace a target row whose key holds one (anti_join keeps it too)
+        null_key = reduce(or_, [F.col(k).isNull() for k in keys])
         winners = (
             t_side.unionByName(u_side)
             .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
+            .filter((F.col("__rn") == 1) | ((F.col("__is_new") == 0) & null_key))
         )
         if not skip_delete:
             winners = winners.filter(

@@ -166,7 +166,10 @@ def cast_to_target(
     """ignore_ddl (fixed-schema) mode: cast incoming columns to the target's
     types (redshift_schema_evolution.py:137-155). String->integral gets the
     reference's defensive digit-guard (:149-153) via try_cast semantics.
-    `passthrough` columns (bookkeeping: op/ts_ms) are kept uncast."""
+    `passthrough` columns (bookkeeping: op/ts_ms) are kept uncast. A target
+    column the batch lacks is NULL, typed as the target's — the reference's
+    INSERT column list leaves it unset — so the result carries every
+    target column."""
     out = []
     by_name = {f.name: f for f in target.fields}
     for c in df.columns:
@@ -186,4 +189,8 @@ def cast_to_target(
             out.append(guarded.cast(dst).alias(c))
         else:
             out.append(F.col(c).cast(dst).alias(c))
+    out += [
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in target.fields if f.name not in df.columns
+    ]
     return df.select(*out)

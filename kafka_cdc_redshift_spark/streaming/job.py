@@ -514,9 +514,13 @@ class CdcBatchProcessor:
                     skip_delete=rule.skip_delete,
                 )
             elif not rule.only_save_delete:
-                # the merge takes the converted rows un-deduped: its
-                # anti-join key side needs no LWW window (dedup keeps one
-                # row per key and drops no key), only the incoming side does
+                # the merge takes the converted rows un-deduped: its LWW
+                # window over target ∪ updates is one hash shuffle, so the
+                # batch is parsed once. That shuffle moves the whole target:
+                # it wins while the target is small enough that moving it
+                # costs less than the extra job and second parse of the
+                # anti-join's broadcast key side; a large target is
+                # unmeasured
                 updates = parsed
                 target = self.store.read(self.spark, rule.target_name)
                 if target is not None:
@@ -526,7 +530,8 @@ class CdcBatchProcessor:
                     )
                     if rule.ignore_ddl:
                         # fixed-schema mode: cast incoming to the target's
-                        # types, extra columns dropped
+                        # types, extra columns dropped and missing target
+                        # columns null-filled with the target's types
                         # (redshift_schema_evolution.py:137-155)
                         updates = cast_to_target(
                             updates, target.schema, passthrough=tuple(bookkeeping)
@@ -555,8 +560,7 @@ class CdcBatchProcessor:
                         list(rule.primary_key),
                         skip_delete=rule.skip_delete,
                         order_by=order,
-                        dedup_updates=True,
-                        broadcast_updates=True,
+                        strategy="union_window",
                     )
                 # the row count rides the publish write itself (no re-read
                 # or second evaluation of the merge)
@@ -638,7 +642,12 @@ class CdcBatchProcessor:
                 self.store.publish_append(dels, dtable, batch_id)
             return TaskStatus(rule.target_name, "finished", rows=n)
         except Exception as e:  # noqa: BLE001 - reported to fail-fast logic
-            return TaskStatus(rule.target_name, "error", error=repr(e))
+            _log.error("sync of %r failed in batch %s", rule.target_name,
+                       batch_id, exc_info=e)
+            # repr() of a PySpark error is its bare class name
+            return TaskStatus(
+                rule.target_name, "error", error=f"{type(e).__name__}: {e}"
+            )
 
     def _needs(self, table: str, batch_id) -> bool:
         """False when `table`'s pointer already records `batch_id` (it is
@@ -756,9 +765,13 @@ class CdcBatchProcessor:
         self.batch_statuses.append(statuses)
         if errors:
             raise RuntimeError(f"batch {batch_id} failed: {errors}")
-        self._maybe_compact()
-        self._maybe_fold_backstop()
-        self._maybe_prune_versions()
+        with _job_group(
+            self.spark.sparkContext, f"cdc-maint-{batch_id}",
+            f"cdc batch {batch_id} maintenance",
+        ):
+            self._maybe_compact()
+            self._maybe_fold_backstop()
+            self._maybe_prune_versions()
         return statuses
 
     def _maintenance_failed(self, table: str, error: Exception) -> None:
@@ -877,15 +890,25 @@ class CdcBatchProcessor:
         (or rules owning distinct state): distinct tables touch disjoint
         directories/manifests, so concurrency is safe by construction;
         `fn` must record its own errors (maintenance never fails the
-        batch)."""
+        batch). Every item runs under the caller's job group: a pool
+        thread does not inherit the caller's local properties, so each
+        worker copies them before it submits a job."""
         if len(items) <= 1:
             for t in items:
                 fn(t)
             return
+        sc = self.spark.sparkContext
+        group = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
+
+        def run(item) -> None:
+            for key, value in zip(_JOB_GROUP_KEYS, group):
+                sc.setLocalProperty(key, value)
+            fn(item)
+
         with cf.ThreadPoolExecutor(
             max_workers=min(self.max_workers, len(items))
         ) as pool:
-            list(pool.map(fn, items))
+            list(pool.map(run, items))
 
     def _maybe_compact(self) -> None:
         if not self.compact_every_n_batches:

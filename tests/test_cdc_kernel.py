@@ -111,6 +111,48 @@ def test_anti_join_key_side_under_duplicate_keys(spark, skip_delete):
     )
 
 
+@pytest.mark.parametrize("skip_delete", [False, True])
+def test_null_key_never_matches_under_both_strategies(spark, skip_delete):
+    """A NULL key equals no key (the reference's `WHERE t.pk = s.pk`):
+    the target row with a NULL key survives the batch, and the batch's
+    NULL-key image is appended beside it — under both strategies, so the
+    streaming shell's choice between them changes no result."""
+    target = spark.createDataFrame(
+        [(None, "t_null"), (1, "t1"), (2, "t2")], "k long, v string"
+    )
+    updates = spark.createDataFrame(
+        [(None, "u_null", "u", 10), (1, "u1", "u", 10), (3, "u3", "d", 10)],
+        "k long, v string, op string, ts_ms long",
+    )
+
+    def merged(**kw):
+        out = merge_changes(target, updates, ["k"], skip_delete=skip_delete, **kw)
+        return sorted(map(tuple, out.collect()), key=lambda r: (r[0] or 0, r[1]))
+
+    expected = [(None, "t_null"), (None, "u_null"), (1, "u1"), (2, "t2")]
+    if skip_delete:
+        expected.append((3, "u3"))
+    assert merged(strategy="union_window") == expected
+    assert merged(strategy="anti_join", broadcast_updates=True) == expected
+
+
+def test_union_window_takes_tiebreak_in_order_by(spark):
+    """The streaming shell's order already ends in the data_index_aws
+    tiebreak that merge_changes appends itself; the window orders by it
+    once instead of failing on a duplicate column."""
+    target = spark.createDataFrame([(1, "t1")], "k long, v string")
+    updates = spark.createDataFrame(
+        [(1, "a", "u", 10, 2), (1, "b", "u", 10, 1)],
+        "k long, v string, op string, ts_ms long, data_index_aws long",
+    )
+    for strategy in ("union_window", "anti_join"):
+        out = merge_changes(
+            target, updates, ["k"], order_by=("ts_ms", "data_index_aws"),
+            strategy=strategy,
+        )
+        assert [tuple(r) for r in out.collect()] == [(1, "a")], strategy
+
+
 def test_latest_deletes(spark, sf_dir):
     cl = synth_orders_changelog(spark, sf_dir)
     dels = latest_deletes(cl, ["o_orderkey"], ["ts_ms"])

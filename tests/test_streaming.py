@@ -220,6 +220,64 @@ def test_ignore_ddl_casts_to_fixed_target_schema(spark, tmp_path):
     assert out == {1: 5, 2: 7, 3: None}  # digit-guard: garbage -> NULL
 
 
+def _ignore_ddl_batch_without_qty(spark, tmp_path):
+    """A (pid, qty) target and an ignore_ddl processor whose batch carries
+    no qty column: (store, processor, batch)."""
+    from pyspark.sql import types as T
+
+    store = ParquetTargetStore(str(tmp_path / "store"))
+    fixed = T.StructType([T.StructField("pid", T.LongType()),
+                          T.StructField("qty", T.IntegerType())])
+    boot = CdcBatchProcessor(
+        spark, [SyncRule(db="d", table="t", primary_key=("pid",))],
+        store, payload_schemas={"t": fixed},
+    )
+    boot.process_batch(_topic_df(spark, [_env("d", "t", {"pid": 1, "qty": 5})]), 0)
+    narrow = T.StructType([T.StructField("pid", T.LongType())])
+    rule = SyncRule(db="d", table="t", primary_key=("pid",), ignore_ddl=True)
+    proc = CdcBatchProcessor(spark, [rule], store, payload_schemas={"t": narrow})
+    batch = _topic_df(spark, [_env("d", "t", {"pid": 2}, ts=2)])
+    return store, proc, batch
+
+
+def test_ignore_ddl_null_fills_missing_target_column(spark, tmp_path):
+    """ignore_ddl=true with a batch lacking a target column: the target
+    stays authoritative and the absent column lands NULL, typed as the
+    target's, as the reference's INSERT column list leaves it."""
+    store, proc, batch = _ignore_ddl_batch_without_qty(spark, tmp_path)
+    proc.process_batch(batch, 1)
+    tgt = store.read(spark, "t")
+    assert tgt.dtypes == [("pid", "bigint"), ("qty", "int")]
+    assert {r.pid: r.qty for r in tgt.collect()} == {1: 5, 2: None}
+
+
+def test_batch_error_names_its_cause(spark, tmp_path, monkeypatch, caplog):
+    """A failed table task records the exception's type and message, not
+    the bare repr of a PySpark error, in its TaskStatus and in the error
+    that stops the query; the traceback goes to the module logger. The
+    failure is the ignore_ddl batch above with its missing column left
+    out of the cast, as the cast did before it null-filled."""
+    import logging
+
+    from kafka_cdc_redshift_spark.streaming import job
+
+    cast = job.cast_to_target
+    monkeypatch.setattr(
+        job, "cast_to_target",
+        lambda df, target, **kw: cast(df, target, **kw).drop(
+            *[f.name for f in target.fields if f.name not in df.columns]
+        ),
+    )
+    _, proc, batch = _ignore_ddl_batch_without_qty(spark, tmp_path)
+    with caplog.at_level(logging.ERROR, logger=job.__name__):
+        with pytest.raises(RuntimeError, match="batch 1 failed") as err:
+            proc.process_batch(batch, 1)
+    [status] = proc.batch_statuses[-1]
+    assert status.error.startswith("AnalysisException: ")
+    assert "qty" in status.error and "qty" in str(err.value)
+    assert [r.exc_info for r in caplog.records if r.name == job.__name__]
+
+
 def test_periodic_compaction_in_batch_loop(spark, sf_dir, tmp_path):
     from kafka_cdc_redshift_spark.operators.layout import _dir_data_files
 
@@ -1027,9 +1085,13 @@ def _job_stage_sites(spark, fn):
 
 def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
     """A steady copy-on-write micro-batch of the 2-rule fan-out runs at
-    most 9 Spark jobs: one entry census, and per table the broadcast of
-    the key side and the publish write. No target read infers its schema
-    (the version pointer carries it), and the row count rides the write."""
+    most 7 Spark jobs: one entry census, and per table the merge's one
+    window shuffle and the publish write. No target read infers its
+    schema (the version pointer carries it), and the row count rides the
+    write. The shuffle's coalesced output keeps each new version at no
+    more files than the first batch's version."""
+    from kafka_cdc_redshift_spark.operators.layout import _dir_data_files
+
     batches = [
         # orders inserts + customer snapshot, then updates, then deletes
         # (each later batch re-upserts the customer images too)
@@ -1039,19 +1101,137 @@ def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
         spark.createDataFrame([(r.value,) for r in b.collect()], "value string")
         for b in batches
     ]
-    jobs = [
-        _job_stage_sites(spark, lambda: processor.process_batch(b, i))
-        for i, b in enumerate(batches)
-    ]
+    store = processor.store
+    jobs, files = [], []
+    for i, b in enumerate(batches):
+        jobs.append(_job_stage_sites(spark, lambda: processor.process_batch(b, i)))
+        files.append({
+            t: len(_dir_data_files(store.path(t))) for t in ("orders", "customer")
+        })
     assert all(
         s.status == "finished"
         for statuses in processor.batch_statuses for s in statuses
     )
     for steady in jobs[1:]:
-        assert len(steady) <= 9, steady
+        assert len(steady) <= 7, steady
+    for steady in files[1:]:
+        assert all(steady[t] <= files[0][t] for t in steady), files
     sites = [site for batch in jobs for job in batch for site in job]
     assert sites  # the call sites were recorded
     assert not [s for s in sites if "DataFrameReader.parquet" in s]
+
+
+def _plan_paths(df):
+    """Node names of `df`'s physical plan (exchanges placed, before
+    adaptive re-planning), one list per root-to-leaf path, root first."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    paths = []
+
+    def walk(node, above):
+        above = above + [node.nodeName()]
+        kids = node.children()
+        if kids.size() == 0:
+            paths.append(above)
+        for i in range(kids.size()):
+            walk(kids.apply(i), above)
+
+    walk(plan, [])
+    return paths
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+def test_cow_merge_is_one_window_shuffle(spark, sf_dir, tmp_path, layout):
+    """A copy-on-write target merges through one window Exchange over
+    target ∪ updates and no anti-join, whatever the store's layout. A
+    bucketed store re-buckets every version it writes, so its bucketing
+    survives the shuffle."""
+    from kafka_cdc_redshift_spark.streaming import BucketedTargetStore
+
+    root = str(tmp_path / "store")
+    store = (
+        BucketedTargetStore(root, {"orders": ["o_orderkey"]}, num_buckets=4)
+        if layout == "bucketed" else ParquetTargetStore(root)
+    )
+    rule = SyncRule(db="salesdb", table="orders", primary_key=("o_orderkey",))
+    proc = CdcBatchProcessor(
+        spark, [rule], store,
+        payload_schemas={"orders": load_table(spark, sf_dir, "orders").schema},
+    )
+    published = []
+    publish = store.publish
+
+    def spy(df, table, **kw):
+        published.append((table, df._jdf.queryExecution().executedPlan().toString(),
+                          _plan_paths(df)))
+        publish(df, table, **kw)
+
+    store.publish = spy
+    for i, op in enumerate(("c", "u")):
+        topic = synth_debezium_topic(spark, sf_dir, ops=(op,), include_customer=False)
+        proc.process_batch(
+            spark.createDataFrame([(r.value,) for r in topic.collect()], "value string"),
+            i,
+        )
+    [(table, plan, paths)] = published[1:]
+    assert table == "orders"
+    assert "LeftAnti" not in plan
+    exchanges = [
+        ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Exchange")
+    ]
+    assert len(exchanges) == 1, plan
+    scans = [p for p in paths if p[-1].startswith("Scan parquet")]
+    assert len(scans) == 1, paths  # the target's file scan
+    assert "Window" in scans[0] and "Exchange" in scans[0]
+    if layout == "bucketed":
+        assert store.current_version("orders") == 1
+        info = {r.col_name: r.data_type
+                for r in spark.sql("DESCRIBE TABLE EXTENDED orders__v1").collect()}
+        assert info.get("Num Buckets") == "4", info
+        assert store.read(spark, "orders").count() > 0
+
+
+def test_maintenance_jobs_carry_maintenance_job_group(spark, sf_dir, tmp_path):
+    """Prune, the fold backstop and compaction run under the batch's
+    maintenance job group `cdc-maint-<batch_id>`, on the maintenance
+    pool's worker threads too."""
+    store = ParquetTargetStore(str(tmp_path / "store"))
+    rules = [
+        SyncRule(db="salesdb", table="orders", primary_key=("o_orderkey",),
+                 save_delete=True),
+        SyncRule(db="salesdb", table="customer", primary_key=("c_custkey",)),
+    ]
+    proc = CdcBatchProcessor(
+        spark, rules, store, max_workers=4, compact_every_n_batches=1,
+        payload_schemas={
+            t: load_table(spark, sf_dir, t).schema for t in ("orders", "customer")
+        },
+    )
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # the maintenance step runs from the first compaction to the last prune
+    span = {}
+    compact, prune = proc._maybe_compact, proc._maybe_prune_versions
+
+    def compact_first():
+        span["start"] = jsc.dagScheduler().numTotalJobs()
+        compact()
+
+    def prune_last():
+        prune()
+        span["end"] = jsc.dagScheduler().numTotalJobs()
+
+    proc._maybe_compact, proc._maybe_prune_versions = compact_first, prune_last
+    for i, op in enumerate(("c", "d")):
+        proc.process_batch(synth_debezium_topic(spark, sf_dir, ops=(op,)), i)
+    assert not proc.compact_errors, proc.compact_errors
+    jsc.listenerBus().waitUntilEmpty()
+    start, end = span["start"], span["end"]
+    assert end > start  # the delete log's fold ran jobs
+    assert set(range(start, end)) <= set(
+        sc.statusTracker().getJobIdsForGroup("cdc-maint-1")
+    )
 
 
 def test_standing_ann_read_job_budget(spark, sf_dir, tmp_path):
