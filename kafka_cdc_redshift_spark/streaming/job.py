@@ -411,11 +411,12 @@ class CdcBatchProcessor:
 
     # -- per-table task ----------------------------------------------------
     def _batch_census(self, batch_df: DataFrame) -> tuple[int, set]:
-        """The batch's entry census, ONE grouped aggregation over the
-        cached batch: returns (total rows, the routed (db, table) keys).
-        It is the first action on the persisted batch, so it also
-        materializes the cache every rule task then reads, and the total
-        decides whether the batch is empty.
+        """The batch's entry census, ONE job over the cached batch: returns
+        (total rows, the routed (db, table) keys), observed on a `noop`
+        write, so no shuffle and no re-planned stages. It is the first
+        action on the persisted batch, so it also materializes the cache
+        every rule task then reads, and the total decides whether the
+        batch is empty.
 
         A row is routed under the format spec's gates — the ones the
         fused parse applies, plus a non-empty image array — so a routed
@@ -427,19 +428,17 @@ class CdcBatchProcessor:
         an N-rule fan-out, 1 job instead of N."""
         spec = self._format
         field = envelopes.json_fields()
-        rows = (
-            batch_df.groupBy(
-                field(spec.db).alias("db"),
-                field(spec.table).alias("tb"),
-                # a NULL predicate (missing field, non-JSON row) is unrouted
-                F.coalesce(spec.yields_rows(field), F.lit(False)).alias("routed"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        return sum(r["cnt"] for r in rows), {
-            (r["db"], r["tb"]) for r in rows if r["routed"]
-        }
+        key = F.struct(field(spec.db).alias("db"), field(spec.table).alias("tb"))
+        census = Observation()
+        batch_df.observe(
+            census,
+            F.count(F.lit(1)).alias("rows"),
+            # a NULL predicate (missing field, non-JSON row) is unrouted:
+            # the NULL the CASE yields is no set element
+            F.collect_set(F.when(spec.yields_rows(field), key)).alias("routed"),
+        ).write.format("noop").mode("overwrite").save()
+        got = census.get
+        return got["rows"], {(k["db"], k["tb"]) for k in got["routed"]}
 
     def _run_table(
         self, batch_df: DataFrame, rule: SyncRule, job_group: str,
@@ -549,9 +548,13 @@ class CdcBatchProcessor:
                                 )
                             target = target.drop(*d.drop)
                 if target is None:
-                    updates = lww_dedup(updates, list(rule.primary_key), order)
-                    out = updates.filter("op != 'd'").drop(
-                        *[c for c in ("op", "ts_ms", "data_index_aws") if c in updates.columns]
+                    # a first batch is the LWW winners; under skip_delete a
+                    # delete winner upserts, as in the merge
+                    out = lww_dedup(updates, list(rule.primary_key), order)
+                    if not rule.skip_delete:
+                        out = out.filter("op != 'd'")
+                    out = out.drop(
+                        *[c for c in ("op", "ts_ms", "data_index_aws") if c in out.columns]
                     )
                 else:
                     out = merge_changes(

@@ -1085,11 +1085,12 @@ def _job_stage_sites(spark, fn):
 
 def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
     """A steady copy-on-write micro-batch of the 2-rule fan-out runs at
-    most 7 Spark jobs: one entry census, and per table the merge's one
-    window shuffle and the publish write. No target read infers its
-    schema (the version pointer carries it), and the row count rides the
-    write. The shuffle's coalesced output keeps each new version at no
-    more files than the first batch's version."""
+    most 5 Spark jobs: the entry census, one job with no shuffle stage,
+    and per table the merge's one window shuffle and the publish write.
+    No target read infers its schema (the version pointer carries it),
+    and the row count rides the write. The shuffle's coalesced output
+    keeps each new version at no more files than the first batch's
+    version."""
     from kafka_cdc_redshift_spark.operators.layout import _dir_data_files
 
     batches = [
@@ -1113,7 +1114,9 @@ def test_cow_batch_job_budget(spark, sf_dir, tmp_path, processor):
         for statuses in processor.batch_statuses for s in statuses
     )
     for steady in jobs[1:]:
-        assert len(steady) <= 7, steady
+        assert len(steady) <= 5, steady
+        census = steady[0]
+        assert len(census) == 1 and "DataFrameWriter.save" in census[0], steady
     for steady in files[1:]:
         assert all(steady[t] <= files[0][t] for t in steady), files
     sites = [site for batch in jobs for job in batch for site in job]
@@ -1190,6 +1193,190 @@ def test_cow_merge_is_one_window_shuffle(spark, sf_dir, tmp_path, layout):
                 for r in spark.sql("DESCRIBE TABLE EXTENDED orders__v1").collect()}
         assert info.get("Num Buckets") == "4", info
         assert store.read(spark, "orders").count() > 0
+
+
+def _kv_batch(spark, events):
+    """(key, value, op, ts) events -> a Debezium topic of table d.t whose
+    payload is `k long, v string`; a delete carries its image in
+    `before`, as the connector emits it."""
+    rows = []
+    for k, v, op, ts in events:
+        img = {"k": k, "v": v}
+        rows.append({
+            "before": img if op == "d" else None,
+            "after": None if op == "d" else img,
+            "source": {"db": "d", "table": "t"}, "op": op, "ts_ms": ts,
+        })
+    return _topic_df(spark, rows)
+
+
+_KV = "k long, v string"
+
+
+def _kv_store(kind: str, root: str):
+    from kafka_cdc_redshift_spark.streaming import MergeOnReadTargetStore
+
+    return (MergeOnReadTargetStore if kind == "mor" else ParquetTargetStore)(root)
+
+
+@pytest.mark.parametrize("kind", ["cow", "mor"])
+@pytest.mark.parametrize("delete_batch", [0, 1], ids=["first", "second"])
+def test_skip_delete_keeps_a_first_batch_delete(spark, tmp_path, kind, delete_batch):
+    """Under skip_delete a delete image upserts like any other image,
+    whichever batch carries it: a copy-on-write bootstrap keeps it, as
+    the merge and the merge-on-read read do."""
+    from pyspark.sql import types as T
+
+    events = [[(1, "a", "c", 1)], [(2, "b", "c", 3)]]
+    events[delete_batch].append((1, "a", "d", 2))
+    store = _kv_store(kind, str(tmp_path / "store"))
+    proc = CdcBatchProcessor(
+        spark,
+        [SyncRule(db="d", table="t", primary_key=("k",), skip_delete=True)],
+        store, payload_schemas={"t": T.StructType.fromDDL(_KV)},
+    )
+    for i, batch in enumerate(events):
+        proc.process_batch(_kv_batch(spark, batch), i)
+    assert {r.k for r in store.read(spark, "t").collect()} == {1, 2}
+
+
+def test_mor_fanout_batch_job_budget(spark, tmp_path):
+    """A steady merge-on-read batch of an N-rule fan-out runs 1 + 2N Spark
+    jobs: the entry census, and per table the LWW dedup's window shuffle
+    and the delta write."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from kafka_cdc_redshift_spark.streaming import MergeOnReadTargetStore
+
+    tables = ["t0", "t1", "t2", "t3"]
+    store = MergeOnReadTargetStore(str(tmp_path / "mor"))
+    proc = CdcBatchProcessor(
+        spark,
+        [SyncRule(db="d", table=t, primary_key=("k",)) for t in tables],
+        store, payload_schemas={t: T.StructType.fromDDL(_KV) for t in tables},
+    )
+
+    def batch(op):
+        return spark.createDataFrame([
+            (json.dumps({
+                "before": None, "after": {"k": k, "v": f"{op}{k}"},
+                "source": {"db": "d", "table": t}, "op": op, "ts_ms": k,
+            }),)
+            for t in tables for k in range(8)
+        ], "value string")
+
+    proc.process_batch(batch("c"), 0)
+    jobs = _job_stage_sites(spark, lambda: proc.process_batch(batch("u"), 1))
+    assert {s.status for s in proc.batch_statuses[-1]} == {"finished"}
+    assert len(jobs) == 1 + 2 * len(tables), jobs
+    assert all(store.delta_count(t) == 2 for t in tables)
+
+
+def _grouped_census(batch, spec):
+    """The grouped-aggregation census: (total rows, routed keys)."""
+    from kafka_cdc_redshift_spark.sources import envelopes
+
+    field = envelopes.json_fields()
+    rows = (
+        batch.groupBy(
+            field(spec.db).alias("db"),
+            field(spec.table).alias("tb"),
+            F.coalesce(spec.yields_rows(field), F.lit(False)).alias("routed"),
+        )
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    )
+    return sum(r["cnt"] for r in rows), {
+        (r["db"], r["tb"]) for r in rows if r["routed"]
+    }
+
+
+def _census_events(fmt):
+    """A mixed batch of `fmt` envelopes, routed and not, and the routed
+    (db, table) keys it holds."""
+    img = {"k": 1, "v": "x"}
+    if fmt in ("FLINK-CDC", "MSK-DEBEZIUM-CDC"):
+        def env(db, table, op):
+            src = {"db": db}
+            if table is not None:
+                src["table"] = table
+            return {"before": None, "after": img, "source": src,
+                    "op": op, "ts_ms": 1}
+        events = [env("d", "ta", "c"), env("d", "ta", "u"), env("d", "tb", "r"),
+                  env("d", "tc", "x"),  # unknown op
+                  env("d", None, "c"),  # no source.table
+                  env(None, "ta", "c"), env("e", "ta", "d")]
+        want = {("d", "ta"), ("d", "tb"), ("d", None), (None, "ta"), ("e", "ta")}
+    elif fmt == "DMS-CDC":
+        def env(db, table, op, rtype="data"):
+            meta = {"timestamp": "2024-01-01 00:00:00", "record-type": rtype,
+                    "operation": op, "schema-name": db}
+            if table is not None:
+                meta["table-name"] = table
+            return {"data": img, "metadata": meta}
+        events = [env("d", "ta", "insert"), env("d", "tb", "load"),
+                  env("d", "tc", "insert", rtype="control"),  # control record
+                  env("d", "td", "truncate"),  # unknown operation
+                  env("d", None, "update"), env(None, "ta", "delete")]
+        want = {("d", "ta"), ("d", "tb"), ("d", None), (None, "ta")}
+    elif fmt == "CANAL-CDC":
+        def env(db, table, typ, data, **kw):
+            e = {"database": db, "type": typ, "ts": 1, "data": data, **kw}
+            if table is not None:
+                e["table"] = table
+            return e
+        events = [env("d", "ta", "INSERT", [img, img]), env("d", "tb", "DELETE", [img]),
+                  env("d", "tc", "CREATE", None, isDdl=True, sql="create table tc"),
+                  env("d", "td", "INSERT", []),  # empty data array
+                  env("d", "te", "UPDATE", None),
+                  env("d", None, "INSERT", [img]), env(None, "ta", "UPDATE", [img])]
+        want = {("d", "ta"), ("d", "tb"), ("d", None), (None, "ta")}
+    else:  # MONGO-CDC
+        def env(db, coll, op):
+            ns = {"db": db}
+            if coll is not None:
+                ns["coll"] = coll
+            return {"operationType": op, "fullDocument": '{"k": 1}',
+                    "documentKey": '{"_id": 1}', "ns": ns, "ts_ms": 1}
+        events = [env("a", "c1", "insert"), env("a", "c2", "replace"),
+                  env("a", "c3", "drop"),  # unknown op
+                  env("a", None, "insert"), env(None, "c1", "delete")]
+        want = {("a", "c1"), ("a", "c2"), ("a", None), (None, "c1")}
+    return events, want
+
+
+@pytest.mark.parametrize(
+    "fmt", ["FLINK-CDC", "DMS-CDC", "CANAL-CDC", "MONGO-CDC"]
+)
+def test_census_matches_grouped_census(spark, tmp_path, fmt):
+    """The one-job observed census counts the rows and routes the keys a
+    grouped aggregation over the batch does, for every format, over
+    unroutable rows too: a non-JSON line, an envelope without its table
+    field, a NULL db, an unknown op, a DMS control record, a Canal DDL
+    and an empty `data` array."""
+    import json
+
+    from kafka_cdc_redshift_spark.sources import envelopes
+
+    events, want = _census_events(fmt)
+    values = [json.dumps(e) for e in events] + ["not json", "{}", "é"]
+    batch = spark.createDataFrame([(v,) for v in values], "value string").persist()
+    got = []
+    try:
+        proc = CdcBatchProcessor(
+            spark, [], ParquetTargetStore(str(tmp_path / "s")), cdc_format=fmt
+        )
+        jobs = _job_stage_sites(spark, lambda: got.append(proc._batch_census(batch)))
+        total, routed = got[0]
+        grouped = _grouped_census(batch, envelopes.cdc_format(fmt))
+    finally:
+        batch.unpersist()
+    assert (total, routed) == grouped
+    assert routed == want
+    assert total == len(values)
+    assert len(jobs) == 1 and len(jobs[0]) == 1, jobs
 
 
 def test_maintenance_jobs_carry_maintenance_job_group(spark, sf_dir, tmp_path):
@@ -1340,15 +1527,19 @@ def test_batch_jobs_carry_batch_job_group(spark, sf_dir, processor):
 
 
 def test_empty_batch_runs_nothing(spark, tmp_path, processor):
-    """An empty batch returns no statuses and triggers no maintenance."""
+    """An empty batch runs one job, the census, returns no statuses and
+    triggers no maintenance."""
     ran = []
     processor._maybe_compact = lambda: ran.append("compact")
     processor._maybe_fold_backstop = lambda: ran.append("fold")
     processor._maybe_prune_versions = lambda: ran.append("prune")
     empty = spark.createDataFrame([], "value string")
-    assert processor.process_batch(empty, 0) == []
-    assert processor.batch_statuses == [[]]
-    assert ran == []
+    jobs = _job_stage_sites(
+        spark, lambda: ran.append(processor.process_batch(empty, 0))
+    )
+    assert ran == [[]] and processor.batch_statuses == [[]]
+    assert len(jobs) == 1, jobs  # the census
+    assert processor._batch_census(empty) == (0, set())
 
 
 def test_unroutable_batch_is_no_data_for_every_rule(spark, sf_dir, tmp_path):
