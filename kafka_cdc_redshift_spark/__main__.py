@@ -82,9 +82,7 @@ emr_ec2/cdc_redshift.py, emr_serverless/cdc_redshift.py), with the same
   target_store_mode         cow (default: copy-on-write versioned store) |
                             mor (merge-on-read: O(batch) delta publishes,
                             resolution at read, folds in the compaction
-                            cycle) | bucketed (pk-bucketed base tables —
-                            no target-side shuffle on merges)
-  bucket_count              bucket count for target_store_mode=bucketed
+                            cycle); anything else is refused
 """
 
 from __future__ import annotations
@@ -100,28 +98,16 @@ from .sources.secrets import resolve_credentials
 from .streaming.catalog_sink import CatalogMergeSink
 from .streaming.job import CdcBatchProcessor, run_file_stream, start_batches
 from .streaming.sinks import BulkLoadOptions, JdbcMergeSink
-from .streaming.store import (
-    BucketedTargetStore,
-    MergeOnReadTargetStore,
-    ParquetTargetStore,
-)
+from .streaming.store import MergeOnReadTargetStore, ParquetTargetStore
 
 
-def _build_store(props: dict[str, str], rules):
+def _build_store(props: dict[str, str]):
     root = props.get("target_store_path", "cdc_target_store")
     mode = props.get("target_store_mode", "cow").strip().lower()
     if mode == "mor":
         return MergeOnReadTargetStore(root)
-    if mode == "bucketed":
-        return BucketedTargetStore(
-            root,
-            {r.target_name: list(r.primary_key) for r in rules},
-            num_buckets=int(props.get("bucket_count", "32")),
-        )
     if mode not in ("cow", ""):
-        raise ValueError(
-            f"unknown target_store_mode {mode!r}: use cow | mor | bucketed"
-        )
+        raise ValueError(f"unknown target_store_mode {mode!r}: use cow | mor")
     return ParquetTargetStore(root)
 
 
@@ -130,7 +116,7 @@ def build_processor(
 ) -> CdcBatchProcessor:
     rules = parse_sync_rules(props["sync_table_list"])
     jdbc_sink = None
-    store = _build_store(props, rules)
+    store = _build_store(props)
     if props.get("redshift_host") or props.get("redshift_secret_id"):
         creds = resolve_credentials(props)  # secret id > env vars > plaintext
         url = "jdbc:redshift://{0}:{1}/{2}".format(

@@ -110,13 +110,7 @@ def compact_table(
     total = sum(sz for _, sz in files)
     if len(files) < min_files_to_compact or total / max(len(files), 1) >= target_bytes:
         return None
-    # a bucketed table's file count is floored at num_buckets (bucketBy
-    # writes >= one file per bucket) — compacting below that floor is a
-    # full-table rewrite that shrinks nothing, re-triggering every cycle
-    floor = 1
-    if getattr(store, "bucket_keys", None) and table in store.bucket_keys:
-        floor = getattr(store, "num_buckets", 1)
-    n = max(floor, math.ceil(total / target_bytes))
+    n = max(1, math.ceil(total / target_bytes))
     if n >= len(files):
         return None
     df = store.read(spark, table)

@@ -8,11 +8,11 @@ SQL-in-Redshift transaction (cdc_util/redshift_sink.py:477-509):
 
 Net effect: target := (target MINUS all batch pks) UNION (surviving non-delete
 rows). Expressed natively either as one LWW window over target ∪ batch
-(`union_window`: one hash shuffle, the batch evaluated once) or as a
-left-anti join + unionByName (`anti_join`: the batch's keys broadcast, the
-target scanned in place). A NULL key matches nothing, as in the
-reference's `t.pk = s.pk`: a target row with a NULL key survives every
-batch under both strategies.
+(the default, `union_window`: one hash shuffle, the batch evaluated once)
+or, with `broadcast_updates=True`, as a broadcast left-anti join +
+unionByName (the batch's keys broadcast, the target scanned in place). A
+NULL key matches nothing, as in the reference's `t.pk = s.pk`: a target
+row with a NULL key survives every batch on both paths.
 
 Delete-mode matrix (SURVEY §3.2; run_task dispatch redshift_sink.py:599-607):
   default            : apply deletes
@@ -22,16 +22,16 @@ Delete-mode matrix (SURVEY §3.2; run_task dispatch redshift_sink.py:599-607):
   save_delete        : also emit last delete image per key -> <table>_delete
   only_save_delete   : emit ONLY the delete stream, no merge
 
-Scale notes: which strategy wins depends on the target's size next to the
+Scale notes: which path wins depends on the target's size next to the
 batch's. `union_window` moves the whole target through one shuffle (AQE
 coalesces its output into few files) but evaluates the batch once and starts
-one job fewer. The anti-join shuffles on the pk unless the updates side is
-broadcastable; broadcast, the target never moves, but the key side is a job
-of its own over a second evaluation of the batch. The streaming shell merges
-every copy-on-write target with `union_window`, measured faster on targets of
-well under a megabyte, where the per-job floor dominates. At 100 TB the
-expected shape is still `updates` (≤ rate-limit rows) broadcast against a
-pk-pruned target scan; that large-target side is unmeasured.
+one job fewer. Under the broadcast anti-join the target never moves, but the
+key side is a job of its own over a second evaluation of the batch. The
+streaming shell merges every copy-on-write target with `union_window`,
+measured faster on targets of well under a megabyte, where the per-job floor
+dominates. At 100 TB the expected shape is still `updates` (≤ rate-limit
+rows) broadcast against a pk-pruned target scan; that large-target side is
+unmeasured.
 """
 
 from __future__ import annotations
@@ -57,7 +57,6 @@ def merge_changes(
     order_by: Sequence[str] = ("ts_ms",),
     dedup_updates: bool = True,
     broadcast_updates: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Apply a changelog batch to a keyed target; returns the new target.
 
@@ -65,31 +64,29 @@ def merge_changes(
     (op / ts_ms / data_index_aws) are dropped from the inserted rows, matching
     the reference's insert column list (redshift_sink.py:445-446).
 
-    Strategies:
-      * "union_window" (default): target ∪ updates -> one LWW window per key
+    Paths:
+      * union window (default): target ∪ updates -> one LWW window per key
         (updates always outrank target rows), winners minus deletes; a
         target row whose key holds a NULL is kept beside the window's
         winner. The updates lineage is evaluated ONCE and the whole merge
         is a single hash shuffle — preferred when the batch isn't tiny
         relative to the target, or when updates sit on an expensive
         lineage (the streaming shell's JSON parse of its cached batch).
-      * "anti_join": target LEFT ANTI updates.keys ∪ surviving updates —
-        with `broadcast_updates` the target never shuffles at all;
-        preferred for a small rate-limited batch against a huge keyed
-        target (the 100 TB streaming shape). The key side is taken from
-        `updates` BEFORE the LWW dedup (dedup keeps one row per key and
-        drops no key, so the key set is the same), so only the incoming
-        side pays the dedup window. `updates` is evaluated twice, once
+      * `broadcast_updates=True`: target LEFT ANTI broadcast(updates.keys)
+        ∪ surviving updates — the target never shuffles at all; meant for
+        a small rate-limited batch against a huge keyed target (the
+        100 TB streaming shape). The key side is taken from `updates`
+        BEFORE the LWW dedup (dedup keeps one row per key and drops no
+        key, so the key set is the same), so only the incoming side pays
+        the `dedup_updates` window. `updates` is evaluated twice, once
         per side, and the key side's broadcast is a job of its own: keep
         the lineage cheap.
     """
     keys = list(keys)
     tiebreak = [c for c in ("data_index_aws",) if c in updates.columns]
     order = list(dict.fromkeys([*order_by, *tiebreak]))
-    if strategy == "auto":
-        strategy = "anti_join" if broadcast_updates else "union_window"
 
-    if strategy == "union_window":
+    if not broadcast_updates:
         # single-pass merge: stamp provenance, one window over the union
         u_side = updates.select(
             *target.columns,
@@ -111,7 +108,7 @@ def merge_changes(
             *[F.desc_nulls_last(f"__o_{c}") for c in order],
         )
         # a NULL key equals no key, so the window's winner does not
-        # replace a target row whose key holds one (anti_join keeps it too)
+        # replace a target row whose key holds one (the anti-join keeps it too)
         null_key = reduce(or_, [F.col(k).isNull() for k in keys])
         winners = (
             t_side.unionByName(u_side)
@@ -124,9 +121,7 @@ def merge_changes(
             )
         return winners.select(*target.columns)
 
-    join_side = updates.select(*keys)
-    if broadcast_updates:
-        join_side = F.broadcast(join_side)
+    join_side = F.broadcast(updates.select(*keys))
     survivors = target.join(join_side, on=keys, how="left_anti")
     if dedup_updates:
         updates = lww_dedup(updates, keys, order)

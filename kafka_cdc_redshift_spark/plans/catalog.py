@@ -508,17 +508,12 @@ def q_top_customers(spark, sf_dir):
        FROM events GROUP BY 1, 2""",
 )
 def q_events_hourly(spark, sf_dir):
+    from ..streaming.windows import hourly_rollup
+
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(_dec(F.col("value"), 18, 2)).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("hour_start"),
-            "event_type", "n_events", "sum_value",
-        )
+    return hourly_rollup(ev).select(
+        F.col("window_start").cast("timestamp_ntz").alias("hour_start"),
+        "event_type", "n_events", "sum_value",
     )
 
 
@@ -759,16 +754,9 @@ def q_events_range_join(spark, sf_dir):
        FROM s GROUP BY user_id, session_id""",
 )
 def q_events_sessionize(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
+    from ..streaming.windows import sessionize
+
+    return sessionize(load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,6 @@ from .job import CdcBatchProcessor, run_file_stream, TaskStatus  # noqa: F401
 from .listener import OffsetCommitListener  # noqa: F401
 from .store import (  # noqa: F401
     AppendLog,
-    BucketedTargetStore,
     MergeOnReadTargetStore,
     ParquetTargetStore,
 )

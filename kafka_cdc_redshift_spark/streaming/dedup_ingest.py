@@ -35,7 +35,8 @@ the SCD2 history's transactional batch_id).
 
 Scale shape: per-ingest cost is proportional to the batch plus its
 matches. The candidate join hits the index on (band, bkey) — store the
-index bucketed on those keys (BucketedTargetStore regime, plan-tested in
+index bucketed on those keys (a raw `bucketBy` table, plan-tested by
+test_incremental_lsh_bucketed_index_no_index_shuffle in
 tests/test_curation.py) and only the batch's bands move; sketches are
 fetched semi-joined to candidate ids only; the tombstone max-join is
 churn-sized between folds. Hot buckets are capped at index-build time

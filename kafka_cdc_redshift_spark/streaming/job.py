@@ -227,7 +227,6 @@ class CdcBatchProcessor:
         payload_schemas: dict[str, T.StructType] | None = None,
         infer_sample_limit: int | None = None,
         max_workers: int = 8,
-        order_by: tuple[str, ...] = ("ts_ms",),
         jdbc_sink=None,
         compact_every_n_batches: int | None = None,
         compact_target_bytes: int = 128 * 1024 * 1024,
@@ -249,7 +248,6 @@ class CdcBatchProcessor:
         self.payload_schemas = payload_schemas or {}
         self.infer_sample_limit = infer_sample_limit
         self.max_workers = max_workers
-        self.order_by = list(order_by)
         # external JDBC target (JdbcMergeSink): the warehouse runs the merge
         # transaction (stage -> DELETE USING -> INSERT re-deduped), so the
         # in-engine target merge is skipped — parity with the reference's
@@ -473,7 +471,8 @@ class CdcBatchProcessor:
             if rule.quality_gate:
                 parsed = self._apply_quality_gate(parsed, rule, batch_id)
 
-            order = self.order_by + (
+            # every CDC format emits ts_ms; data_index_aws breaks its ties
+            order = ["ts_ms"] + (
                 ["data_index_aws"] if "data_index_aws" in parsed.columns else []
             )
             n = 0
@@ -563,7 +562,6 @@ class CdcBatchProcessor:
                         list(rule.primary_key),
                         skip_delete=rule.skip_delete,
                         order_by=order,
-                        strategy="union_window",
                     )
                 # the row count rides the publish write itself (no re-read
                 # or second evaluation of the merge)
@@ -593,7 +591,6 @@ class CdcBatchProcessor:
                     self.store.publish_scd2_delta(
                         parsed, htable, batch_id,
                         keys=list(rule.primary_key),
-                        order_col=self.order_by[0],
                         tiebreak_cols=tiebreak,
                     )
                 else:
@@ -604,7 +601,7 @@ class CdcBatchProcessor:
                         htable, batch_id,
                         lambda prev: scd2_merge_batch(
                             prev, parsed, list(rule.primary_key),
-                            order_col=self.order_by[0], tiebreak_cols=tiebreak,
+                            tiebreak_cols=tiebreak,
                         ),
                     )
             self._fold_derived(batch_df, rule, parsed, schema, batch_id, names)
@@ -821,13 +818,9 @@ class CdcBatchProcessor:
                             t, chain, self.keep_versions,
                             self.keep_versions, self.prune_grace_sec,
                         )
-                # spark is passed EXPLICITLY: this runs on pool worker
-                # threads where getActiveSession() is None (thread-local
-                # through py4j), which silently skipped the bucketed
-                # store's catalog cleanup (r11 ADVICE)
                 self.store.prune_versions(
                     t, keep=self.keep_versions,
-                    min_age_sec=self.prune_grace_sec, spark=self.spark,
+                    min_age_sec=self.prune_grace_sec,
                 )
             except Exception as e:  # noqa: BLE001 - maintenance only
                 self._maintenance_failed(t, e)

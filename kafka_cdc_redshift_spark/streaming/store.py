@@ -2,7 +2,7 @@
 
 Replaces the reference's Redshift staging-table + transactional merge
 (cdc_util/redshift_sink.py:477-509): the merge itself is the in-engine
-left-anti join + union (operators/merge.py); this store provides the
+`merge_changes` (operators/merge.py); this store provides the
 transactional *publish* — each merge writes a new `version=N` directory and
 flips a pointer file, so readers never observe a partial write and a failed
 batch leaves the previous version intact (same effect as the reference's
@@ -311,7 +311,7 @@ class ParquetTargetStore:
         prev = self.current_version(table)
         nxt = 0 if prev is None else prev + 1
         out = os.path.join(self.root, table, f"version={nxt}")
-        self._write_version(df, table, out, nxt)
+        df.write.mode("overwrite").parquet(out)
         meta = {"version": nxt, "schema": _schema_json(df)}
         if batch_id is None:
             batch_id = self.last_batch_id(table)  # carry forward
@@ -323,9 +323,6 @@ class ParquetTargetStore:
             meta["folded_ids"] = list(folded_ids)
         write_json_atomic(self._meta_path(table), meta)  # the pointer flip
         return nxt
-
-    def _write_version(self, df: DataFrame, table: str, out: str, version: int) -> None:
-        df.write.mode("overwrite").parquet(out)
 
     def versions_on_disk(self, table: str) -> list[int]:
         """Version directories currently backing `table`, oldest first —
@@ -342,7 +339,7 @@ class ParquetTargetStore:
 
     def prune_versions(
         self, table: str, *, keep: int = 2, min_age_sec: float = 0.0,
-        grace_max_versions: int = 8, spark: SparkSession | None = None,
+        grace_max_versions: int = 8,
     ) -> list[int]:
         """Retention knob for the copy-on-write version chain: delete
         version directories older than the newest `keep`, NEVER the
@@ -377,10 +374,7 @@ class ParquetTargetStore:
 
         Directories NEWER than the pointer (a crashed publish that
         never flipped) are left alone — the next publish overwrites
-        them. `spark` is accepted for interface uniformity with
-        subclasses that must touch the session catalog
-        (BucketedTargetStore); the base prune is pure filesystem.
-        Returns the pruned version numbers."""
+        them. Returns the pruned version numbers."""
         import shutil
         import time
 
@@ -415,84 +409,6 @@ class ParquetTargetStore:
                 os.path.join(self.root, table, f"version={v}"),
                 ignore_errors=True,
             )
-        return pruned
-
-
-class BucketedTargetStore(ParquetTargetStore):
-    """Target store whose tables are hash-bucketed by primary key.
-
-    The 100 TB merge shape: every micro-batch joins the (huge) target with a
-    (rate-limited) update batch on the pk. With a plain parquet target, the
-    target re-shuffles on every batch; bucketed by pk, the target side scans
-    in place and ONLY the update batch moves — the per-batch network cost
-    drops from O(|target|) to O(|batch|). Equivalent to the reference's
-    `sortkey(pk)` CTAS decision (redshift_sink.py:498-501) re-expressed as
-    Spark bucketing; production formats (Delta/Iceberg) express the same via
-    clustering/sorted files.
-
-    Bucketing metadata lives in the session catalog (`{table}__v{N}`
-    external tables over the store's version directories).
-    """
-
-    def __init__(self, root: str, bucket_keys: dict[str, list[str]],
-                 num_buckets: int = 32):
-        super().__init__(root)
-        self.bucket_keys = bucket_keys
-        self.num_buckets = num_buckets
-
-    def _catalog_name(self, table: str, version: int) -> str:
-        return f"{table}__v{version}"
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        v = self.current_version(table)
-        if v is None:
-            return None
-        name = self._catalog_name(table, v)
-        if table in self.bucket_keys and spark.catalog.tableExists(name):
-            return spark.table(name)  # bucketed scan — no exchange on pk ops
-        return super().read(spark, table)
-
-    def _write_version(self, df: DataFrame, table: str, out: str, version: int) -> None:
-        keys = self.bucket_keys.get(table)
-        if keys is None:
-            super()._write_version(df, table, out, version)
-            return
-        name = self._catalog_name(table, version)
-        (
-            df.write.mode("overwrite")
-            .option("path", out)
-            .bucketBy(self.num_buckets, *keys)
-            .sortBy(*keys)
-            .saveAsTable(name, format="parquet")
-        )
-        spark = df.sparkSession
-        prev = self.current_version(table)
-        if prev is not None:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {self._catalog_name(table, prev)}"
-            )
-
-    def prune_versions(
-        self, table: str, *, keep: int = 2, min_age_sec: float = 0.0,
-        grace_max_versions: int = 8, spark: SparkSession | None = None,
-    ) -> list[int]:
-        pruned = super().prune_versions(
-            table, keep=keep, min_age_sec=min_age_sec,
-            grace_max_versions=grace_max_versions,
-        )
-        # publish already dropped the previous catalog entry; this only
-        # clears entries a crashed publish left behind for pruned dirs.
-        # The session comes from the CALLER: getActiveSession() is
-        # thread-local through py4j and returns None from the worker
-        # threads the maintenance pool runs prunes on (r11 ADVICE) —
-        # relying on it here silently skipped exactly this cleanup in
-        # the code path that does all the pruning.
-        spark = spark or SparkSession.getActiveSession()
-        if spark is not None:
-            for v in pruned:
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {self._catalog_name(table, v)}"
-                )
         return pruned
 
 

@@ -103,8 +103,8 @@ def test_anti_join_key_side_under_duplicate_keys(spark, skip_delete):
         out = merge_changes(target, updates, ["k"], skip_delete=skip_delete, **kw)
         return sorted(map(tuple, out.collect()))
 
-    expected = merged(strategy="union_window")
-    assert merged(strategy="anti_join", broadcast_updates=True) == expected
+    expected = merged()
+    assert merged(broadcast_updates=True) == expected
     assert expected == (
         [(1, "b"), (2, "n2"), (3, "t3"), (4, "y"), (5, "t5")] if skip_delete
         else [(2, "n2"), (3, "t3"), (4, "y")]
@@ -115,7 +115,7 @@ def test_anti_join_key_side_under_duplicate_keys(spark, skip_delete):
 def test_null_key_never_matches_under_both_strategies(spark, skip_delete):
     """A NULL key equals no key (the reference's `WHERE t.pk = s.pk`):
     the target row with a NULL key survives the batch, and the batch's
-    NULL-key image is appended beside it — under both strategies, so the
+    NULL-key image is appended beside it — on both merge paths, so the
     streaming shell's choice between them changes no result."""
     target = spark.createDataFrame(
         [(None, "t_null"), (1, "t1"), (2, "t2")], "k long, v string"
@@ -132,8 +132,8 @@ def test_null_key_never_matches_under_both_strategies(spark, skip_delete):
     expected = [(None, "t_null"), (None, "u_null"), (1, "u1"), (2, "t2")]
     if skip_delete:
         expected.append((3, "u3"))
-    assert merged(strategy="union_window") == expected
-    assert merged(strategy="anti_join", broadcast_updates=True) == expected
+    assert merged() == expected
+    assert merged(broadcast_updates=True) == expected
 
 
 def test_union_window_takes_tiebreak_in_order_by(spark):
@@ -145,12 +145,12 @@ def test_union_window_takes_tiebreak_in_order_by(spark):
         [(1, "a", "u", 10, 2), (1, "b", "u", 10, 1)],
         "k long, v string, op string, ts_ms long, data_index_aws long",
     )
-    for strategy in ("union_window", "anti_join"):
+    for broadcast in (False, True):
         out = merge_changes(
             target, updates, ["k"], order_by=("ts_ms", "data_index_aws"),
-            strategy=strategy,
+            broadcast_updates=broadcast,
         )
-        assert [tuple(r) for r in out.collect()] == [(1, "a")], strategy
+        assert [tuple(r) for r in out.collect()] == [(1, "a")], broadcast
 
 
 def test_latest_deletes(spark, sf_dir):

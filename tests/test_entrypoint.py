@@ -89,9 +89,10 @@ def test_bulk_writer_options_match_reference_copy_surface():
     assert "region 'us-east-1'" in eco and "dateformat 'auto'" in eco
 
 
-def test_jdbc_sink_built_from_redshift_properties(spark):
+def test_jdbc_sink_built_from_redshift_properties(spark, tmp_path):
     props = {
         "sync_table_list": '[{"db": "d", "table": "t", "primary_key": "pid"}]',
+        "target_store_path": str(tmp_path / "store"),
         "redshift_host": "h", "redshift_port": "5439",
         "redshift_database": "dev", "redshift_username": "u",
         "redshift_password": "p", "redshift_tmpdir": "s3://b/tmp/",
@@ -104,7 +105,7 @@ def test_jdbc_sink_built_from_redshift_properties(spark):
     assert sink.bulk.maxerror == 100 and sink.bulk.tempformat == "CSV"
 
 
-def test_catalog_sink_built_from_properties(spark):
+def test_catalog_sink_built_from_properties(spark, tmp_path):
     """catalog_target_provider routes the external-sink slot to the
     lakehouse MERGE INTO sink (streaming/catalog_sink); the duck-typed
     apply_batch surface accepts the job's JdbcMergeSink call shape."""
@@ -116,6 +117,7 @@ def test_catalog_sink_built_from_properties(spark):
 
     props = {
         "sync_table_list": '[{"db": "d", "table": "t", "primary_key": "pid"}]',
+        "target_store_path": str(tmp_path / "store"),
         "catalog_target_provider": "delta",
         "catalog_target_namespace": "lake",
     }
@@ -221,7 +223,6 @@ def test_compaction_knobs_parsed_from_properties(spark, tmp_path):
 
 def test_target_store_mode_selection(spark, tmp_path):
     from kafka_cdc_redshift_spark.streaming.store import (
-        BucketedTargetStore,
         MergeOnReadTargetStore,
         ParquetTargetStore,
     )
@@ -237,13 +238,9 @@ def test_target_store_mode_selection(spark, tmp_path):
         ).store,
         MergeOnReadTargetStore,
     )
-    bstore = build_processor(
-        spark, dict(base, target_store_mode="bucketed", bucket_count="8")
-    ).store
-    assert isinstance(bstore, BucketedTargetStore)
-    assert bstore.bucket_keys == {"t": ["pid"]} and bstore.num_buckets == 8
-    with pytest.raises(ValueError, match="target_store_mode"):
-        build_processor(spark, dict(base, target_store_mode="nope"))
+    for mode in ("bucketed", "nope"):
+        with pytest.raises(ValueError, match=r"target_store_mode.*cow \| mor"):
+            build_processor(spark, dict(base, target_store_mode=mode))
 
 
 def test_entrypoint_mor_mode_end_to_end(spark, tmp_path):

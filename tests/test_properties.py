@@ -8,7 +8,7 @@ Verifies the invariants SURVEY §7.3 calls out as the hard parts:
     ONE merge equals applying it as any sequence of time-split merges —
     the documented cross-batch correctness condition (ts monotonicity
     across batches per key)
-  * union_window and anti_join merge strategies agree
+  * union_window and the broadcast anti-join merge paths agree
 """
 
 import pytest
@@ -92,15 +92,12 @@ def test_lww_dedup_is_per_key_argmax(spark, cl):
 def test_merge_strategies_agree_and_match_model(spark, t, cl):
     target, changes = _t_df(spark, t), _cl_df(spark, cl)
     exp = _apply_model(t, cl)
-    for strategy, broadcast in (
-        ("union_window", False), ("anti_join", False), ("anti_join", True),
-    ):
+    for broadcast in (False, True):
         merged = merge_changes(
-            target, changes, ["k"], strategy=strategy,
-            broadcast_updates=broadcast,
+            target, changes, ["k"], broadcast_updates=broadcast,
         )
         got = {r.k: r.v for r in merged.collect()}
-        assert got == exp, (strategy, broadcast)
+        assert got == exp, broadcast
 
 
 @given(t=targets, cl=changelogs)

@@ -226,35 +226,6 @@ def test_cast_to_target_digit_guard(spark):
     assert got == {"x": 12, "y": None}
 
 
-def test_bucketed_store_avoids_target_shuffle(spark, sf_dir, tmp_path):
-    """The 100 TB merge shape: a pk-bucketed target scans in place — the
-    anti-join against an update batch exchanges ONLY the batch side."""
-    from pyspark.sql import functions as F
-
-    from kafka_cdc_redshift_spark.sources import load_table
-    from kafka_cdc_redshift_spark.streaming import BucketedTargetStore
-
-    store = BucketedTargetStore(
-        str(tmp_path / "store"), {"orders": ["o_orderkey"]}, num_buckets=8
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    store.publish(orders, "orders")
-    target = store.read(spark, "orders")
-    assert target is not None and target.count() == orders.count()
-
-    batch = orders.limit(50).select("o_orderkey")
-    survivors = target.join(batch.hint("merge"), "o_orderkey", "left_anti")
-    plan = survivors._jdf.queryExecution().executedPlan().toString()
-    # bucketed side: no hash exchange on the target scan; batch side may move
-    assert plan.count("Exchange hashpartitioning") <= 1
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-
-    # versioned swap keeps working under bucketing
-    store.publish(survivors, "orders")
-    assert store.current_version("orders") == 1
-    assert store.read(spark, "orders").count() == orders.count() - 50
-
-
 def test_approx_distinct_error_bound(spark, sf_dir):
     """The HLL sketch has no cross-engine oracle (sketches differ), so the
     catalog query folds the error bound INTO its output: assert the raw

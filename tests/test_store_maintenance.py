@@ -782,44 +782,6 @@ def test_prune_versions_grace_storage_cap(spark, tmp_path):
     assert store.versions_on_disk("t") == [6, 7]
 
 
-def test_bucketed_prune_catalog_cleanup_from_worker_thread(spark, tmp_path):
-    """r11 ADVICE: BucketedTargetStore.prune_versions is invoked from the
-    maintenance pool's worker threads, where getActiveSession() is None
-    (active-session state is thread-local through py4j) — the catalog
-    cleanup of entries left by crashed publishes silently stopped
-    happening exactly where all the pruning now runs. The session must
-    come from the CALLER (the processor passes self.spark)."""
-    import concurrent.futures as cf
-
-    from kafka_cdc_redshift_spark.streaming.store import BucketedTargetStore
-
-    store = BucketedTargetStore(
-        str(tmp_path / "store"), {"t": ["pid"]}, num_buckets=2
-    )
-    for i in range(4):
-        store.publish(_rows(spark, [(1, f"v{i}")]), "t", batch_id=i)
-    # simulate a crashed publish's leftover: re-register a catalog entry
-    # for a superseded version dir (publish normally drops it)
-    import os
-
-    leftover = store._catalog_name("t", 1)
-    spark.sql(
-        f"CREATE TABLE {leftover} (pid int, val string) USING parquet "
-        f"LOCATION '{os.path.join(store.root, 't', 'version=1')}'"
-    )
-    assert spark.catalog.tableExists(leftover)
-
-    def prune_in_thread():
-        return store.prune_versions("t", keep=2, spark=spark)
-
-    with cf.ThreadPoolExecutor(max_workers=1) as pool:
-        pruned = pool.submit(prune_in_thread).result()
-    assert pruned == [0, 1]
-    # the crashed-publish leftover is gone even though the prune ran on
-    # a worker thread with no active session of its own
-    assert not spark.catalog.tableExists(leftover)
-
-
 def test_maintenance_marker_simultaneous_begin_race(tmp_path):
     """r12 review: begin_maintenance must be atomic, not
     check-then-replace — two SIMULTANEOUS begins of the same op must
@@ -943,19 +905,49 @@ def test_pointer_schema_after_append_fold(spark, tmp_path):
 
 
 def test_pointer_schema_bucketed_store(spark, tmp_path):
-    from kafka_cdc_redshift_spark.streaming.store import BucketedTargetStore
+    """Upgrade: a version written pk-bucketed (a `bucketBy` catalog table
+    over the version dir, as the retired bucketed target mode wrote it)
+    reads back through `ParquetTargetStore` with no catalog entry, and
+    the next copy-on-write merge batch publishes over it."""
+    import json
+    import os
 
-    store = BucketedTargetStore(
-        str(tmp_path / "store"), {"t": ["pid"]}, num_buckets=2
+    from kafka_cdc_redshift_spark.streaming.store import _schema_json
+
+    store = ParquetTargetStore(str(tmp_path / "store"))
+    df = _rows(spark, [(1, "a"), (2, "b")])
+    (
+        df.write.mode("overwrite")
+        .option("path", os.path.join(store.root, "t", "version=0"))
+        .bucketBy(2, "pid")
+        .sortBy("pid")
+        .saveAsTable("t__v0", format="parquet")
     )
-    store.publish(_rows(spark, [(1, "a"), (2, "b")]), "t")
-    store.publish(_rows(spark, [(1, "c"), (3, "d")]), "t")
-    # the catalog entry serves the bucketed scan; without it (another
-    # session, a crashed publish) the pointer's schema opens the files
-    _assert_pointer_read_matches_inference(spark, store, "t")
-    spark.sql(f"DROP TABLE {store._catalog_name('t', 1)}")
+    with open(store._meta_path("t"), "w") as f:
+        json.dump({"version": 0, "schema": _schema_json(df)}, f)
+    spark.sql("DROP TABLE t__v0")  # external: the version's files stay
     got = _assert_pointer_read_matches_inference(spark, store, "t")
-    assert sorted(r.val for r in got.collect()) == ["c", "d"]
+    assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
+
+    def event(op, before, after):
+        return (json.dumps({
+            "before": before, "after": after,
+            "source": {"db": "d", "table": "t"}, "op": op, "ts_ms": 10,
+        }),)
+
+    batch = spark.createDataFrame([
+        event("u", None, {"pid": 1, "val": "c"}),
+        event("d", {"pid": 2, "val": "b"}, None),
+        event("c", None, {"pid": 3, "val": "d"}),
+    ], "value string")
+    proc = CdcBatchProcessor(
+        spark, [SyncRule(db="d", table="t", primary_key=("pid",))], store
+    )
+    [status] = proc.process_batch(batch, 0)
+    assert status.status == "finished", status
+    assert store.current_version("t") == 1
+    got = _assert_pointer_read_matches_inference(spark, store, "t")
+    assert sorted(map(tuple, got.collect())) == [(1, "c"), (3, "d")]
 
 
 def test_legacy_pointer_without_schema_still_reads(spark, tmp_path):

@@ -1144,19 +1144,11 @@ def _plan_paths(df):
     return paths
 
 
-@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+@pytest.mark.parametrize("layout", ["plain"])
 def test_cow_merge_is_one_window_shuffle(spark, sf_dir, tmp_path, layout):
     """A copy-on-write target merges through one window Exchange over
-    target ∪ updates and no anti-join, whatever the store's layout. A
-    bucketed store re-buckets every version it writes, so its bucketing
-    survives the shuffle."""
-    from kafka_cdc_redshift_spark.streaming import BucketedTargetStore
-
-    root = str(tmp_path / "store")
-    store = (
-        BucketedTargetStore(root, {"orders": ["o_orderkey"]}, num_buckets=4)
-        if layout == "bucketed" else ParquetTargetStore(root)
-    )
+    target ∪ updates and no anti-join."""
+    store = ParquetTargetStore(str(tmp_path / "store"))
     rule = SyncRule(db="salesdb", table="orders", primary_key=("o_orderkey",))
     proc = CdcBatchProcessor(
         spark, [rule], store,
@@ -1187,12 +1179,6 @@ def test_cow_merge_is_one_window_shuffle(spark, sf_dir, tmp_path, layout):
     scans = [p for p in paths if p[-1].startswith("Scan parquet")]
     assert len(scans) == 1, paths  # the target's file scan
     assert "Window" in scans[0] and "Exchange" in scans[0]
-    if layout == "bucketed":
-        assert store.current_version("orders") == 1
-        info = {r.col_name: r.data_type
-                for r in spark.sql("DESCRIBE TABLE EXTENDED orders__v1").collect()}
-        assert info.get("Num Buckets") == "4", info
-        assert store.read(spark, "orders").count() > 0
 
 
 def _kv_batch(spark, events):
