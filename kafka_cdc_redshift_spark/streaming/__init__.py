@@ -8,7 +8,6 @@ from .store import (  # noqa: F401
 from .windows import (  # noqa: F401
     hourly_rollup,
     seen_keys_dedup,
-    seen_keys_dedup_tws,
     sessionize,
     watermarked_dedup,
 )

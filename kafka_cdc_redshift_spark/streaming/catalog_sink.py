@@ -16,7 +16,7 @@ e2e test self-enables via importorskip when the jar appears. The SQL
 generation (`merge_into_sql`) is pure and unit-tested either way — the
 spelling is standard Spark SQL MERGE, identical for both formats.
 
-Semantics match the JDBC dialects on a key-deduped batch (operators/
+Semantics match the JDBC sink's merge on a key-deduped batch (operators/
 dedup.lww_dedup upstream): matched + delete-image -> DELETE (unless
 skip_delete), matched -> UPDATE, not-matched non-delete -> INSERT.
 """
@@ -28,6 +28,8 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+
+from .sinks import DELETE_OP, OP_COL
 
 
 class TransactionalTableUnavailable(RuntimeError):
@@ -51,15 +53,13 @@ def merge_into_sql(
     source: str,
     columns: Sequence[str],
     keys: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "d",
     skip_delete: bool = False,
 ) -> str:
     """One standard Spark-SQL MERGE statement (runs unchanged on Delta and
     Iceberg): the single-statement form of the reference's staged
     DELETE+INSERT transaction. `source` is a view/table name holding the
     key-deduped batch; the op column never lands in the target (P5)."""
-    cols_no_op = [c for c in columns if c != op_col]
+    cols_no_op = [c for c in columns if c != OP_COL]
     collist = ", ".join(_bq(c) for c in cols_no_op)
     on = " AND ".join(f"t.{_bq(k)} = s.{_bq(k)}" for k in keys)
     set_cols = [c for c in cols_no_op if c not in keys]
@@ -69,7 +69,7 @@ def merge_into_sql(
     ]
     if not skip_delete:
         parts.append(
-            f"WHEN MATCHED AND s.{_bq(op_col)} = '{delete_op}' THEN DELETE"
+            f"WHEN MATCHED AND s.{_bq(OP_COL)} = '{DELETE_OP}' THEN DELETE"
         )
     if set_cols:
         parts.append(
@@ -77,7 +77,7 @@ def merge_into_sql(
             + ", ".join(f"t.{_bq(c)} = s.{_bq(c)}" for c in set_cols)
         )
     not_matched = (
-        "" if skip_delete else f" AND s.{_bq(op_col)} <> '{delete_op}'"
+        "" if skip_delete else f" AND s.{_bq(OP_COL)} <> '{DELETE_OP}'"
     )
     parts.append(
         f"WHEN NOT MATCHED{not_matched} THEN INSERT ({collist}) VALUES ("
@@ -106,7 +106,7 @@ class CatalogMergeSink:
     """Merge CDC batches into a session-catalog transactional table.
 
     The lakehouse twin of `JdbcMergeSink`: same upstream contract (each
-    batch key-deduped by LWW, delete images carried in `op_col`), but the
+    batch key-deduped by LWW, delete images carried in `OP_COL`), but the
     target is a Delta/Iceberg table and the whole upsert is ONE atomic
     MERGE INTO — the table format's commit protocol supplies the
     transaction the reference got from Redshift's server-side BEGIN/END.
@@ -121,15 +121,9 @@ class CatalogMergeSink:
         self,
         *,
         provider: str = "delta",
-        op_col: str = "op",
-        delete_op: str = "d",
-        bootstrap: bool = True,
         namespace: str | None = None,
     ):
         self.provider = provider
-        self.op_col = op_col
-        self.delete_op = delete_op
-        self.bootstrap = bootstrap
         # optional catalog namespace the targets live in; the JDBC sink's
         # `db` is the SOURCE database (it only names the staging table),
         # so the duck-typed apply_batch ignores it — target placement is
@@ -153,7 +147,7 @@ class CatalogMergeSink:
         view = f"cdc_stage_{uuid.uuid4().hex}"
         df.createOrReplaceTempView(view)
         try:
-            if self.bootstrap and not spark.catalog.tableExists(table):
+            if not spark.catalog.tableExists(table):
                 if self.namespace:
                     # the JDBC path's DDL bootstrap tolerates a missing
                     # schema; give the catalog path the same courtesy so
@@ -163,7 +157,7 @@ class CatalogMergeSink:
                         f"{_qualify(self.namespace)}"
                     )
                 cols = ", ".join(
-                    _bq(c) for c in df.columns if c != self.op_col
+                    _bq(c) for c in df.columns if c != OP_COL
                 )
                 # WHERE 1=3: the reference's empty-CTAS bootstrap spelling
                 # (redshift_sink.py CTAS), provider-qualified
@@ -173,7 +167,6 @@ class CatalogMergeSink:
                 )
             stmt = merge_into_sql(
                 target=table, source=view, columns=df.columns, keys=keys,
-                op_col=self.op_col, delete_op=self.delete_op,
                 skip_delete=skip_delete,
             )
             try:

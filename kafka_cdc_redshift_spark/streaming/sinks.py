@@ -1,18 +1,24 @@
 """JDBC merge sink: staged upsert into an external keyed table.
 
 Parity with the reference's Redshift write path (cdc_util/redshift_sink.py:
-244-253, 477-527): stage the batch, then one transaction of
-  DELETE FROM target USING stage ON <pk>   (J2)
-  INSERT INTO target SELECT ... FROM (re-deduped stage) WHERE op != delete (J3/W6)
-  TRUNCATE stage                            (D8)
-with target bootstrap CTAS (D7) and a drop-staging-and-retry-once wrapper
-(error path :528-547).
+244-253, 477-527): stage the batch, bootstrap the target with an empty
+CTAS (D7), then run one transaction
+  DELETE FROM target WHERE EXISTS (delete image in stage on <pk>)  (J2)
+  DELETE FROM stage WHERE op = 'd'
+  MERGE INTO target USING stage ON <pk>                            (J3)
+    WHEN MATCHED THEN UPDATE ... WHEN NOT MATCHED THEN INSERT ...
+  DELETE FROM stage                                                (D8)
+with a drop-staging-and-retry-once wrapper (error path :528-547).
+
+That is the restricted MERGE Redshift accepts, and it is valid SQL:2008,
+so the statement list production sends is the one the tests execute live
+on embedded Derby. Only the bootstrap CTAS is spelled per engine, chosen
+from the JDBC URL (see build_merge_sql).
 
 The SQL generation is pure and unit-tested; execution needs a JDBC driver
 jar + live database, so `JdbcMergeSink.apply_batch` stages via
 `df.write.jdbc` and runs post-actions through the JVM DriverManager — both
-skipped gracefully (raising JdbcUnavailable) when no driver is present, as
-in this test environment.
+raising JdbcUnavailable when no driver is present.
 """
 
 from __future__ import annotations
@@ -117,7 +123,7 @@ def write_bulk_staged(
     this test environment)."""
     stage = stage_table_name(db, table)
     stmts = build_merge_sql(
-        target=table, stage=stage, columns=df.columns, keys=keys,
+        url=url, target=table, stage=stage, columns=df.columns, keys=keys,
         skip_delete=skip_delete,
     )
     opts = bulk_writer_options(
@@ -196,6 +202,12 @@ def _q(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'  # quoted identifiers (P6)
 
 
+#: the staged batch's change-type column and its delete-image value; the
+#: op column is never written to the target (P5)
+OP_COL = "op"
+DELETE_OP = "d"
+
+
 def stage_table_name(db: str, table: str) -> str:
     return f"stage_table_{db}_{table}"  # redshift_sink.py:385-389
 
@@ -209,270 +221,60 @@ def merge_condition(stage: str, target: str, keys: Sequence[str]) -> str:
 
 def build_merge_sql(
     *,
+    url: str,
     target: str,
     stage: str,
     columns: Sequence[str],
     keys: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "d",
     skip_delete: bool = False,
-    bootstrap: bool = True,
-    dialect: str = "redshift",
-    portable: bool = False,
 ) -> list[str]:
-    """Transactional post-actions for one staged batch.
-
-    `dialect="redshift"` (default) reproduces the reference's statement
-    shape (DELETE USING + re-deduped INSERT, redshift_sink.py:477-509).
-    `dialect="ansi_merge"` emits one standard `MERGE INTO` instead —
-    runnable on engines with full SQL:2008 MERGE (Derby, Postgres 15+;
-    executed live against embedded Derby in the test suite). NOTE: it
-    uses multiple refined WHEN MATCHED branches and a refined WHEN NOT
-    MATCHED, which Redshift's restricted MERGE (one matched + one
-    not-matched clause, no refinement predicates) does not accept — the
-    `redshift` dialect is the documented Redshift path.
-    The MERGE form relies on the stage being unique per key (the
-    pipeline lww_dedups before staging; a duplicate key trips the
-    engine's standard MERGE cardinality error instead of the redshift
-    dialect's in-SQL re-dedup guard).
-    `dialect="delete_insert"` is the reference's DELETE-then-INSERT
-    statement SHAPE in portable SQL:2003 — correlated-EXISTS delete plus
-    DISTINCT INSERT SELECT — so the reference's merge strategy itself
-    (not just the MERGE INTO rewrite) is executable and execution-tested
-    on engines without Redshift's syntax extensions (live on Derby).
-    `dialect="redshift_merge"` emits the RESTRICTED MERGE shape Redshift
-    actually accepts — exactly one unrefined WHEN MATCHED and one
-    unrefined WHEN NOT MATCHED clause — with delete images applied ahead
-    of the merge (see _build_redshift_merge_sql); the restricted shape is
-    also valid SQL:2008, so it is execution-tested live on Derby.
-
-    `portable` (redshift_merge only): False (default) emits the spellings
-    real Redshift runs — `WHERE 1 = 3` CTAS (Redshift CTAS has no WITH NO
-    DATA) and a transactional `DELETE FROM stage` cleanup (TRUNCATE
-    implicitly COMMITS on Redshift, breaking the BEGIN/END atomicity);
-    True keeps the SQL-standard spellings (WITH NO DATA CTAS, TRUNCATE)
-    the live Derby tests execute.
-    """
-    if dialect == "ansi_merge":
-        return _build_ansi_merge_sql(
-            target=target, stage=stage, columns=columns, keys=keys,
-            op_col=op_col, delete_op=delete_op, skip_delete=skip_delete,
-            bootstrap=bootstrap,
-        )
-    if dialect == "delete_insert":
-        return _build_delete_insert_sql(
-            target=target, stage=stage, columns=columns, keys=keys,
-            op_col=op_col, delete_op=delete_op, skip_delete=skip_delete,
-            bootstrap=bootstrap,
-        )
-    if dialect == "redshift_merge":
-        return _build_redshift_merge_sql(
-            target=target, stage=stage, columns=columns, keys=keys,
-            op_col=op_col, delete_op=delete_op, skip_delete=skip_delete,
-            bootstrap=bootstrap, portable=portable,
-        )
-    cols_no_op = [c for c in columns if c != op_col]  # op never lands (P5)
-    collist = ", ".join(_q(c) for c in cols_no_op)
-    on = merge_condition(stage, target, keys)
-    pklist = ", ".join(_q(k) for k in keys)
-    stmts: list[str] = []
-    if bootstrap:
-        # empty CTAS bootstrap (D7, redshift_sink.py:498-501)
-        stmts.append(
-            f"CREATE TABLE IF NOT EXISTS {target} AS "
-            f"SELECT {collist} FROM {stage} WHERE 1 = 3"
-        )
-    stmts.append("BEGIN")
-    stmts.append(f"DELETE FROM {target} USING {stage} WHERE {on}")
-    delete_filter = "" if skip_delete else f" WHERE {_q(op_col)} != '{delete_op}'"
-    # staging re-dedup guard (W6, redshift_sink.py:474-476, 494-496)
-    stmts.append(
-        f"INSERT INTO {target} ({collist}) "
-        f"SELECT {collist} FROM ("
-        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY {pklist} ORDER BY {pklist}) AS seqnum_aws "
-        f"FROM {stage}{delete_filter}) s WHERE seqnum_aws = 1"
-    )
-    stmts.append(f"TRUNCATE TABLE {stage}")
-    stmts.append("END")
-    return stmts
-
-
-def _build_ansi_merge_sql(
-    *,
-    target: str,
-    stage: str,
-    columns: Sequence[str],
-    keys: Sequence[str],
-    op_col: str,
-    delete_op: str,
-    skip_delete: bool,
-    bootstrap: bool,
-) -> list[str]:
-    """SQL:2003 MERGE form of the staged upsert (see build_merge_sql).
-
-    Semantics match the redshift dialect on a key-deduped stage:
-    matched + delete-image -> DELETE (unless skip_delete), matched ->
-    UPDATE, not-matched non-delete -> INSERT. Bootstrap is a WITH NO DATA
-    CTAS (no IF NOT EXISTS in the standard — run_sql tolerates the
-    already-exists error on CREATE statements)."""
-    cols_no_op = [c for c in columns if c != op_col]  # op never lands (P5)
-    collist = ", ".join(_q(c) for c in cols_no_op)
-    on = merge_condition(stage, target, keys)
-    set_cols = [c for c in cols_no_op if c not in keys]
-    # the op column is staged as whatever the writer's string mapping is
-    # (CLOB on Derby, which '=' can't compare) — CAST to VARCHAR for the
-    # refinement predicates; a no-op on engines that staged VARCHAR
-    op_ref = f"CAST({stage}.{_q(op_col)} AS VARCHAR(32))"
-    stmts: list[str] = []
-    if bootstrap:
-        stmts.append(
-            f"CREATE TABLE {target} AS "
-            f"SELECT {collist} FROM {stage} WITH NO DATA"
-        )
-    stmts.append("BEGIN")
-    merge = [f"MERGE INTO {target} USING {stage} ON {on}"]
-    if not skip_delete:
-        merge.append(
-            f"WHEN MATCHED AND {op_ref} = '{delete_op}' THEN DELETE"
-        )
-    if set_cols:
-        merge.append(
-            "WHEN MATCHED THEN UPDATE SET "
-            + ", ".join(f"{_q(c)} = {stage}.{_q(c)}" for c in set_cols)
-        )
-    not_matched = "" if skip_delete else f" AND {op_ref} <> '{delete_op}'"
-    merge.append(
-        f"WHEN NOT MATCHED{not_matched} THEN INSERT ({collist}) VALUES ("
-        + ", ".join(f"{stage}.{_q(c)}" for c in cols_no_op)
-        + ")"
-    )
-    stmts.append(" ".join(merge))
-    stmts.append(f"TRUNCATE TABLE {stage}")
-    stmts.append("END")
-    return stmts
-
-
-def _build_delete_insert_sql(
-    *,
-    target: str,
-    stage: str,
-    columns: Sequence[str],
-    keys: Sequence[str],
-    op_col: str,
-    delete_op: str,
-    skip_delete: bool,
-    bootstrap: bool,
-) -> list[str]:
-    """Portable SQL:2003 form of the reference's DELETE-then-INSERT merge
-    (the `redshift` dialect's statement SHAPE, redshift_sink.py:477-509)
-    with the warehouse-only syntax replaced: a correlated-EXISTS DELETE
-    instead of `DELETE ... USING`, a `WITH NO DATA` CTAS instead of
-    `CREATE TABLE IF NOT EXISTS ... AS` (run_sql tolerates the
-    already-exists error), and a DISTINCT projection instead of the
-    in-SQL ROW_NUMBER re-dedup guard (W6) — Derby's window support has no
-    PARTITION BY. DISTINCT collapses the guard's actual W6 case (a
-    re-staged batch's identical rows); same-key-DIFFERENT-payload
-    duplicates still rely on the pipeline's lww_dedup-before-staging
-    contract: unlike MERGE they trip no engine cardinality error and
-    would all land in the target.
-    Executed live against embedded Derby in the test suite."""
-    cols_no_op = [c for c in columns if c != op_col]  # op never lands (P5)
-    collist = ", ".join(_q(c) for c in cols_no_op)
-    on = merge_condition(stage, target, keys)
-    # CLOB-staged op columns can't be compared with '=' on Derby (see
-    # _build_ansi_merge_sql) — CAST for the filter predicate
-    op_ref = f"CAST({_q(op_col)} AS VARCHAR(32))"
-    stmts: list[str] = []
-    if bootstrap:
-        stmts.append(
-            f"CREATE TABLE {target} AS "
-            f"SELECT {collist} FROM {stage} WITH NO DATA"
-        )
-    stmts.append("BEGIN")
-    stmts.append(
-        f"DELETE FROM {target} WHERE EXISTS "
-        f"(SELECT 1 FROM {stage} WHERE {on})"
-    )
-    delete_filter = "" if skip_delete else f" WHERE {op_ref} <> '{delete_op}'"
-    stmts.append(
-        f"INSERT INTO {target} ({collist}) "
-        f"SELECT DISTINCT {collist} FROM {stage}{delete_filter}"
-    )
-    stmts.append(f"TRUNCATE TABLE {stage}")
-    stmts.append("END")
-    return stmts
-
-
-def _build_redshift_merge_sql(
-    *,
-    target: str,
-    stage: str,
-    columns: Sequence[str],
-    keys: Sequence[str],
-    op_col: str,
-    delete_op: str,
-    skip_delete: bool,
-    bootstrap: bool,
-    portable: bool,
-) -> list[str]:
-    """Redshift's RESTRICTED MERGE: the engine accepts exactly one
-    WHEN MATCHED clause and one WHEN NOT MATCHED clause, neither with a
-    refinement predicate — so the ansi_merge dialect's refined branches
-    (`WHEN MATCHED AND op = 'd' THEN DELETE`) are rejected there. This
-    dialect completes the merge-strategy matrix with the shape Redshift
-    actually runs:
+    """Bootstrap CTAS plus the transactional post-actions for one staged
+    batch, in the RESTRICTED MERGE shape Redshift accepts — exactly one
+    unrefined WHEN MATCHED and one unrefined WHEN NOT MATCHED clause:
 
       1. delete images are applied BEFORE the merge: delete matching
-         target keys (portable correlated-EXISTS — valid on Redshift and
-         SQL:2008 engines alike), then delete the images from the stage
-         so the unrefined MERGE cannot re-insert them (the stage is
-         transaction-local and truncated after the merge anyway);
-      2. one restricted `MERGE INTO ... WHEN MATCHED THEN UPDATE ...
-         WHEN NOT MATCHED THEN INSERT ...` upserts the remainder.
+         target keys (correlated EXISTS), then delete the images from the
+         stage so the unrefined MERGE cannot re-insert them;
+      2. one `MERGE INTO ... WHEN MATCHED THEN UPDATE ... WHEN NOT
+         MATCHED THEN INSERT ...` upserts the remainder;
+      3. `DELETE FROM stage` empties the stage (D8) inside the same
+         transaction — TRUNCATE implicitly COMMITS on Redshift, which
+         would break the delete+merge atomicity.
 
     Under skip_delete, step 1 is skipped and delete images upsert like
-    any row — identical semantics to the other dialects. The stage must
-    be key-deduped (the pipeline lww_dedups before staging); a duplicate
-    key trips the engine's MERGE cardinality error.
+    any row. The stage must be key-deduped (the pipeline lww_dedups
+    before staging); a duplicate key trips the engine's MERGE
+    cardinality error and the transaction rolls back.
 
-    `portable=False` (default — the spellings real Redshift runs):
-    `WHERE 1 = 3` / IF-NOT-EXISTS CTAS (Redshift CTAS rejects WITH NO
-    DATA) and a transactional `DELETE FROM stage` cleanup — on Redshift
-    TRUNCATE inside BEGIN/END implicitly COMMITS, which would silently
-    break the delete+merge atomicity this dialect exists to provide.
-    `portable=True` keeps the SQL-standard WITH-NO-DATA CTAS and
-    TRUNCATE: the restricted MERGE is valid SQL:2008, so that whole
-    statement list is execution-tested live on embedded Derby (which has
-    no WHERE-1=3 CTAS)."""
-    cols_no_op = [c for c in columns if c != op_col]  # op never lands (P5)
+    The shape is also valid SQL:2008, so the same list runs live on
+    embedded Derby. The one statement spelled per engine is the empty
+    CTAS bootstrap (D7, redshift_sink.py:498-501), chosen from `url`:
+    Redshift's CTAS has no WITH NO DATA, Derby's has no IF NOT EXISTS
+    (run_sql skips its already-exists error)."""
+    cols_no_op = [c for c in columns if c != OP_COL]  # op never lands (P5)
     collist = ", ".join(_q(c) for c in cols_no_op)
     on = merge_condition(stage, target, keys)
     set_cols = [c for c in cols_no_op if c not in keys]
-    # CLOB-staged op columns can't be '='-compared on Derby — CAST, a
-    # no-op on engines that staged VARCHAR (see _build_ansi_merge_sql)
-    op_ref = f"CAST({_q(op_col)} AS VARCHAR(32))"
-    stmts: list[str] = []
-    if bootstrap:
-        stmts.append(
-            f"CREATE TABLE {target} AS "
-            f"SELECT {collist} FROM {stage} WITH NO DATA"
-            if portable else
-            f"CREATE TABLE IF NOT EXISTS {target} AS "
-            f"SELECT {collist} FROM {stage} WHERE 1 = 3"
-        )
-    stmts.append("BEGIN")
+    # the op column stages as whatever the writer's string mapping is
+    # (CLOB on Derby, which '=' can't compare) — CAST for the predicates,
+    # a no-op on engines that staged VARCHAR
+    op_ref = f"CAST({stage}.{_q(OP_COL)} AS VARCHAR(32))"
+    stmts = [
+        f"CREATE TABLE {target} AS "
+        f"SELECT {collist} FROM {stage} WITH NO DATA"
+        if "derby" in url.lower() else
+        f"CREATE TABLE IF NOT EXISTS {target} AS "
+        f"SELECT {collist} FROM {stage} WHERE 1 = 3",
+        "BEGIN",
+    ]
     if not skip_delete:
         stmts.append(
             f"DELETE FROM {target} WHERE EXISTS "
-            f"(SELECT 1 FROM {stage} WHERE {on} "
-            f"AND CAST({stage}.{_q(op_col)} AS VARCHAR(32)) = '{delete_op}')"
+            f"(SELECT 1 FROM {stage} WHERE {on} AND {op_ref} = '{DELETE_OP}')"
         )
-        stmts.append(
-            f"DELETE FROM {stage} WHERE {op_ref} = '{delete_op}'"
-        )
-    # exactly ONE unrefined matched + ONE unrefined not-matched clause —
-    # the restricted shape. All-key tables update a key to itself (a
-    # no-op) because the restricted form requires both clauses.
+        stmts.append(f"DELETE FROM {stage} WHERE {op_ref} = '{DELETE_OP}'")
+    # both clauses are required by the restricted form: an all-key table
+    # updates a key to itself (a no-op)
     sets = ", ".join(
         f"{_q(c)} = {stage}.{_q(c)}" for c in (set_cols or [keys[0]])
     )
@@ -483,24 +285,22 @@ def _build_redshift_merge_sql(
         + ", ".join(f"{stage}.{_q(c)}" for c in cols_no_op)
         + ")"
     )
-    # stage cleanup: DELETE is transactional on every engine; TRUNCATE
-    # implicitly commits on Redshift (kept only for the portable path,
-    # matching the other Derby-tested dialects)
-    stmts.append(
-        f"TRUNCATE TABLE {stage}" if portable else f"DELETE FROM {stage}"
-    )
+    stmts.append(f"DELETE FROM {stage}")
     stmts.append("END")
     return stmts
 
 
 class JdbcMergeSink:
+    """Merge CDC batches into a JDBC target through a staging table and
+    the one statement list of `build_merge_sql` (restricted MERGE, run as
+    one transaction). The URL picks the bootstrap CTAS spelling — Derby's
+    `WITH NO DATA` or Redshift's `IF NOT EXISTS ... WHERE 1 = 3` — and
+    nothing else differs between engines."""
+
     def __init__(self, url: str, *, user: str, password: str,
                  driver: str = "org.postgresql.Driver",
                  batchsize: int = 10_000,
-                 bulk: BulkLoadOptions | None = None,
-                 dialect: str = "redshift",
-                 extra_jdbc_props: dict[str, str] | None = None,
-                 portable_sql: bool | None = None):
+                 bulk: BulkLoadOptions | None = None):
         self.url = url
         self.user = user
         self.password = password
@@ -512,21 +312,6 @@ class JdbcMergeSink:
         # when set, apply_batch stages through S3+COPY (write_bulk_staged)
         # instead of row-batched JDBC inserts
         self.bulk = bulk
-        # "redshift" (reference statement shape, warehouse syntax),
-        # "ansi_merge" (standard MERGE INTO — Derby/Postgres 15+),
-        # "delete_insert" (reference shape in portable SQL:2003), or
-        # "redshift_merge" (Redshift's RESTRICTED MERGE: one unrefined
-        # matched + one unrefined not-matched clause, deletes pre-applied)
-        self.dialect = dialect
-        # forwarded to the Spark JDBC writer (e.g. createTableColumnTypes
-        # to keep strings VARCHAR on engines whose default mapping is CLOB)
-        self.extra_jdbc_props = dict(extra_jdbc_props or {})
-        # redshift_merge spelling choice (see build_merge_sql `portable`):
-        # None auto-detects — SQL-standard spellings for embedded Derby
-        # (the live test engine), Redshift-native spellings otherwise
-        self.portable_sql = (
-            "derby" in url.lower() if portable_sql is None else portable_sql
-        )
 
     def _props(self) -> dict[str, str]:
         return {
@@ -534,7 +319,6 @@ class JdbcMergeSink:
             "password": self.password,
             "driver": self.driver,
             "batchsize": str(self.batchsize),
-            **self.extra_jdbc_props,
         }
 
     def _connection(self, spark):
@@ -552,17 +336,16 @@ class JdbcMergeSink:
     _EXISTS_ERRS = ("X0Y32", "already exists")
     _MISSING_ERRS = ("42Y55", "42X05", "does not exist")
 
-    def run_sql(self, spark, statements: Sequence[str], *,
-                tolerate_ddl: bool = False) -> None:
+    def run_sql(self, spark, statements: Sequence[str]) -> None:
         """Execute the statement list. "BEGIN"/"END" markers are mapped to
         the JDBC transaction API (setAutoCommit(False) / commit()) — the
         portable form of the reference's server-side BEGIN...END: with
         driver-side autocommit the literal statements would NOT bracket
-        one transaction, and an exception mid-list now rolls back on
-        close instead of leaving half a merge applied. With
-        `tolerate_ddl`, a CREATE TABLE hitting already-exists or a DROP
-        TABLE hitting not-exists is skipped (standard SQL has no IF NOT
-        EXISTS; the redshift dialect bakes it into the statement)."""
+        one transaction, and an exception mid-list rolls back on close
+        instead of leaving half a merge applied. A CREATE TABLE hitting
+        already-exists or a DROP TABLE hitting not-exists is skipped, so
+        the bootstrap CTAS and the stage drop need no IF [NOT] EXISTS
+        (which standard SQL lacks)."""
         conn = self._connection(spark)
         try:
             st = conn.createStatement()
@@ -579,11 +362,11 @@ class JdbcMergeSink:
                 except Exception as e:  # noqa: BLE001
                     msg = str(e)
                     head = sql.lstrip().upper()
-                    if tolerate_ddl and head.startswith("CREATE TABLE") and any(
+                    if head.startswith("CREATE TABLE") and any(
                         s in msg for s in self._EXISTS_ERRS
                     ):
                         continue
-                    if tolerate_ddl and head.startswith("DROP TABLE") and any(
+                    if head.startswith("DROP TABLE") and any(
                         s in msg for s in self._MISSING_ERRS
                     ):
                         continue
@@ -597,6 +380,21 @@ class JdbcMergeSink:
                 pass
             conn.close()
 
+    def _stage_and_merge(self, spark, stage: str, write_stage,
+                         stmts: Sequence[str]) -> None:
+        """`write_stage()` then the merge; on failure drop a possibly
+        half-written staging table and retry once (redshift_sink.py:
+        528-547) — a prior crash's leftover stage poisons the append."""
+        try:
+            write_stage()
+            self.run_sql(spark, stmts)
+        except JdbcUnavailable:
+            raise
+        except Exception:
+            self.run_sql(spark, [f"DROP TABLE {stage}"])
+            write_stage()
+            self.run_sql(spark, stmts)
+
     def apply_batch(
         self,
         df: DataFrame,
@@ -605,57 +403,34 @@ class JdbcMergeSink:
         table: str,
         keys: Sequence[str],
         skip_delete: bool = False,
-        retry: bool = True,
     ) -> None:
         """Stage the batch and merge. Retries once after dropping a possibly
         half-written staging table (redshift_sink.py:528-547)."""
-        if self.bulk is not None:
-            if is_object_store_path(self.bulk.tempdir):
-                write_bulk_staged(
-                    df, url=self.url, db=db, table=table, keys=keys,
-                    user=self.user, password=self.password, bulk=self.bulk,
-                    skip_delete=skip_delete,
-                )
-            else:
-                self._apply_bulk_fs(
-                    df, db=db, table=table, keys=keys,
-                    skip_delete=skip_delete,
-                )
+        if self.bulk is not None and is_object_store_path(self.bulk.tempdir):
+            write_bulk_staged(
+                df, url=self.url, db=db, table=table, keys=keys,
+                user=self.user, password=self.password, bulk=self.bulk,
+                skip_delete=skip_delete,
+            )
             return
-        spark = df.sparkSession
         stage = stage_table_name(db, table)
         stmts = build_merge_sql(
-            target=table, stage=stage, columns=df.columns, keys=keys,
-            skip_delete=skip_delete, dialect=self.dialect,
-            portable=self.portable_sql,
+            url=self.url, target=table, stage=stage, columns=df.columns,
+            keys=keys, skip_delete=skip_delete,
         )
-        props = self._props()
-        tolerant = self.dialect in (
-            "ansi_merge", "delete_insert", "redshift_merge"
+        if self.bulk is not None:
+            self._apply_bulk_fs(df, stage, stmts)
+            return
+        self._stage_and_merge(
+            df.sparkSession, stage,
+            lambda: df.write.jdbc(
+                self.url, stage, mode="append", properties=self._props()
+            ),
+            stmts,
         )
-        drop_stage = (
-            f"DROP TABLE {stage}" if tolerant else f"DROP TABLE IF EXISTS {stage}"
-        )
-        try:
-            df.write.jdbc(self.url, stage, mode="append", properties=props)
-            self.run_sql(spark, stmts, tolerate_ddl=tolerant)
-        except JdbcUnavailable:
-            raise
-        except Exception:
-            if not retry:
-                raise
-            self.run_sql(spark, [drop_stage], tolerate_ddl=True)
-            df.write.jdbc(self.url, stage, mode="append", properties=props)
-            self.run_sql(spark, stmts, tolerate_ddl=tolerant)
 
     def _apply_bulk_fs(
-        self,
-        df: DataFrame,
-        *,
-        db: str,
-        table: str,
-        keys: Sequence[str],
-        skip_delete: bool = False,
+        self, df: DataFrame, stage: str, stmts: Sequence[str]
     ) -> None:
         """Filesystem twin of the S3+COPY bulk path (`write_bulk_staged`),
         taken when `bulk.tempdir` is a plain filesystem prefix: stage the
@@ -672,12 +447,6 @@ class JdbcMergeSink:
         the connector instead (see apply_batch)."""
         assert self.bulk is not None
         spark = df.sparkSession
-        stage = stage_table_name(db, table)
-        stmts = build_merge_sql(
-            target=table, stage=stage, columns=df.columns, keys=keys,
-            skip_delete=skip_delete, dialect=self.dialect,
-            portable=self.portable_sql,
-        )
         csv_opts = bulk_stage_csv_options(self.bulk)
         root = self.bulk.tempdir
         local_root = root[len("file://"):] if root.startswith("file://") else root
@@ -690,40 +459,22 @@ class JdbcMergeSink:
         # read, and the cleanup all target the SAME filesystem even on a
         # cluster whose defaultFS is HDFS/object storage
         stage_uri = "file://" + stage_dir
-        tolerant = self.dialect in (
-            "ansi_merge", "delete_insert", "redshift_merge"
-        )
-        drop_stage = (
-            f"DROP TABLE {stage}" if tolerant
-            else f"DROP TABLE IF EXISTS {stage}"
-        )
 
-        def load_and_merge():
+        def load_stage():
             # the warehouse COPY stand-in: the STAGED BYTES are what load
             # (re-read with the declared format, schema from the batch),
             # so a staging-format infidelity fails the merge result, not
-            # just a unit assertion
+            # just a unit assertion; a retry reloads from the staged files
             staged = spark.read.schema(df.schema).options(**csv_opts).csv(
                 stage_uri
             )
             staged.write.jdbc(
                 self.url, stage, mode="append", properties=self._props()
             )
-            self.run_sql(spark, stmts, tolerate_ddl=tolerant)
 
         try:
             df.write.options(**csv_opts).mode("overwrite").csv(stage_uri)
-            try:
-                load_and_merge()
-            except JdbcUnavailable:
-                raise
-            except Exception:
-                # same crash-window contract as the JDBC path
-                # (redshift_sink.py:528-547): a prior half-written stage
-                # table (or this attempt's) poisons the merge — drop it
-                # and retry once from the staged files
-                self.run_sql(spark, [drop_stage], tolerate_ddl=True)
-                load_and_merge()
+            self._stage_and_merge(spark, stage, load_stage, stmts)
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
 

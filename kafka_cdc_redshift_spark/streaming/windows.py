@@ -153,71 +153,6 @@ def seen_keys_dedup(
     )
 
 
-def seen_keys_dedup_tws(
-    changes: DataFrame,
-    keys: list[str],
-    *,
-    ts_col: str = "ts_ms",
-    output_schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """`seen_keys_dedup` on Spark 4's transformWithStateInPandas API
-    (StatefulProcessor + typed ValueState) instead of the older
-    applyInPandasWithState. Same semantics: emit a row only when `ts_col` is
-    strictly newer than the per-key high-water mark.
-
-    The new API is the forward path for custom stateful operators: typed
-    state handles (value/list/map), state TTL, timers, and it REQUIRES the
-    RocksDB state-store provider — which is exactly what a 100 TB deployment
-    runs anyway (state spills to disk instead of executor heap). Set
-    `spark.sql.streaming.stateStore.providerClass` to
-    `...state.RocksDBStateStoreProvider` on the session before starting the
-    query. Runtime requirement: the `protobuf` Python package (Spark's
-    Python state server speaks protobuf to the JVM); environments without it
-    should use `seen_keys_dedup`, which has identical semantics.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "seen_keys_dedup_tws requires the `protobuf` package (Spark's "
-            "transformWithState Python state server); use seen_keys_dedup "
-            "for identical semantics without it"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    if output_schema is None:
-        output_schema = changes.schema
-
-    class _LwwProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._max = handle.getValueState("max_ts", DEDUP_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            max_seen = self._max.get()[0] if self._max.exists() else None
-            pdf = pd.concat(list(rows), ignore_index=True)
-            kept = _lww_mask(pdf, ts_col, max_seen)
-            new_max = _new_high_water(pdf, ts_col, max_seen)
-            if new_max is not None:
-                self._max.update((new_max,))
-            if len(kept):
-                yield kept
-
-        def close(self) -> None:
-            pass
-
-    return changes.groupBy(*keys).transformWithStateInPandas(
-        statefulProcessor=_LwwProcessor(),
-        outputStructType=output_schema,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def watermarked_dedup(
     stream: DataFrame,
     keys: list[str],
@@ -232,10 +167,10 @@ def watermarked_dedup(
     state size is O(keys per delay window), not O(all keys ever).
 
     This is the zero-custom-code complement to the applyInPandasWithState
-    / transformWithStateInPandas LWW operators above: use it when "drop
-    exact redelivery duplicates" is the need (Kafka at-least-once), and
-    the stateful LWW operators when the per-key *latest image* must win
-    across batches. The reference has no analog (its redelivery safety is
+    LWW operator `seen_keys_dedup` above: use it when "drop exact
+    redelivery duplicates" is the need (Kafka at-least-once), and
+    `seen_keys_dedup` when the per-key *latest image* must win across
+    batches. The reference has no analog (its redelivery safety is
     merge-by-pk idempotency, SURVEY §2.8 T7)."""
     return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
 

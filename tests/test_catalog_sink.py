@@ -1,7 +1,6 @@
 """Catalog (DSv2) MERGE sink: pure SQL-spelling tests, the live
 no-row-level gate on a plain parquet table, and a Delta e2e that
-self-enables via importorskip when the delta jars appear (the protobuf
-xfail convention — re-check at round open)."""
+self-enables via importorskip when the delta jars appear."""
 
 import pytest
 from pyspark.sql import Row

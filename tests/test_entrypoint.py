@@ -89,7 +89,7 @@ def test_bulk_writer_options_match_reference_copy_surface():
     assert "region 'us-east-1'" in eco and "dateformat 'auto'" in eco
 
 
-def test_jdbc_sink_built_from_redshift_properties(spark, tmp_path):
+def test_jdbc_sink_built_from_redshift_properties(spark, tmp_path, monkeypatch):
     props = {
         "sync_table_list": '[{"db": "d", "table": "t", "primary_key": "pid"}]',
         "target_store_path": str(tmp_path / "store"),
@@ -103,6 +103,48 @@ def test_jdbc_sink_built_from_redshift_properties(spark, tmp_path):
     assert sink is not None
     assert sink.url == "jdbc:redshift://h:5439/dev"
     assert sink.bulk.maxerror == 100 and sink.bulk.tempformat == "CSV"
+
+    # the statements production sends equal the ones the live Derby tests
+    # execute, except the bootstrap CTAS: capture the S3 path's postactions
+    # (the connector jar is absent, so the write itself then fails) and
+    # the statements a Derby sink runs for the same batch and table
+    from kafka_cdc_redshift_spark.streaming import sinks
+
+    batch = spark.createDataFrame(
+        [(1, "a", "c"), (2, "b", "d")], "pid long, pname string, op string"
+    )
+    sent = {}
+
+    def capture_postactions(**kw):
+        sent["redshift"] = list(kw["post_actions"])
+        return bulk_writer_options(**kw)
+
+    monkeypatch.setattr(sinks, "bulk_writer_options", capture_postactions)
+    with pytest.raises(sinks.JdbcUnavailable):
+        sink.apply_batch(batch, db="d", table="t", keys=["pid"])
+
+    derby = sinks.JdbcMergeSink(
+        "jdbc:derby:memory:entrypoint;create=true", user="app",
+        password="app", driver="org.apache.derby.jdbc.EmbeddedDriver",
+    )
+    run_sql = derby.run_sql
+
+    def capture_run_sql(spark, statements):
+        sent.setdefault("derby", []).append(list(statements))
+        run_sql(spark, statements)
+
+    monkeypatch.setattr(derby, "run_sql", capture_run_sql)
+    derby.apply_batch(batch, db="d", table="t", keys=["pid"])
+    assert [r.pid for r in spark.read.jdbc(
+        derby.url, "t", properties=derby._props()).collect()] == [1]
+
+    [derby_sent] = sent["derby"]  # one merge, no retry
+    rs_sent = sent["redshift"]
+    assert rs_sent[1:] == derby_sent[1:]
+    assert rs_sent[0].startswith("CREATE TABLE IF NOT EXISTS t AS ")
+    assert rs_sent[0].endswith(" WHERE 1 = 3")
+    assert derby_sent[0].startswith("CREATE TABLE t AS ")
+    assert derby_sent[0].endswith(" WITH NO DATA")
 
 
 def test_catalog_sink_built_from_properties(spark, tmp_path):

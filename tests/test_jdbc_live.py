@@ -2,17 +2,19 @@
 Derby jars ship inside PySpark, so this runs in any Spark install with no
 extra deps). This is the integration the string-shape tests can't give:
 `df.write.jdbc` stages the batch for real, `run_sql` drives the
-bootstrap + MERGE INTO + TRUNCATE transaction through
-java.sql.DriverManager, and the target reads back via `spark.read.jdbc`.
+bootstrap CTAS + delete-images + restricted MERGE + stage-cleanup
+transaction through java.sql.DriverManager, and the target reads back via
+`spark.read.jdbc`.
 
 Covers: target bootstrap (CTAS), insert/update/delete merge semantics
-(reference parity: cdc_util/redshift_sink.py:477-509), skip_delete mode,
-stage truncation, the standard MERGE cardinality guard on a non-deduped
-stage, and transaction rollback on mid-list failure.
+(reference parity: cdc_util/redshift_sink.py:477-509), replay
+idempotency, skip_delete mode, stage cleanup, the standard MERGE
+cardinality guard on a non-deduped stage, and transaction rollback on
+mid-list failure.
 
-The `ansi_merge` dialect used here is SQL:2003 MERGE — the same statement
-runs on Redshift (which has MERGE) and Postgres 15+; only the redshift
-dialect's DELETE USING + re-dedup INSERT shape needs the warehouse.
+The statement list executed here is the one a Redshift target receives:
+the restricted MERGE is valid SQL:2008, and only the bootstrap CTAS is
+spelled differently for Derby (pinned in test_entrypoint).
 """
 
 import pytest
@@ -28,23 +30,15 @@ DERBY_URL = "jdbc:derby:memory:cdclive;create=true"
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def _sink(dialect="ansi_merge", **kw):
-    return JdbcMergeSink(
-        DERBY_URL, user="app", password="app", driver=DERBY_DRIVER,
-        dialect=dialect, **kw,
+def _sink(spark, **kw):
+    s = JdbcMergeSink(
+        DERBY_URL, user="app", password="app", driver=DERBY_DRIVER, **kw,
     )
-
-
-# Derby's default Spark-JDBC string mapping is CLOB, which Derby refuses
-# to compare (no DISTINCT/GROUP BY/'='). The ansi_merge dialect CASTs its
-# op-column predicates, but delete_insert's DISTINCT re-dedup guard runs
-# over the full projection — stage strings as VARCHAR explicitly, exactly
-# what a production target (VARCHAR/TEXT columns) gives for free.
-# Caveat of that workaround: Spark's Derby dialect still binds NULL
-# strings as setNull(CLOB), which Derby rejects against a VARCHAR column
-# (ERROR 22005) — so the VARCHAR-staged tests use non-null payloads, and
-# NULL-image staging keeps its own test on the default CLOB staging below.
-_VARCHAR_STAGE = {"createTableColumnTypes": "pname VARCHAR(64), op VARCHAR(8)"}
+    try:
+        s.run_sql(spark, ["VALUES 1"])
+    except JdbcUnavailable as e:  # pragma: no cover - driver ships w/ pyspark
+        pytest.skip(f"embedded Derby unavailable: {e}")
+    return s
 
 
 def _batch(spark, rows):
@@ -63,33 +57,18 @@ def _read_target(spark, sink, table):
 
 @pytest.fixture(scope="module")
 def sink(spark):
-    s = _sink()
-    try:
-        s.run_sql(spark, ["VALUES 1"])
-    except JdbcUnavailable as e:  # pragma: no cover - driver ships w/ pyspark
-        pytest.skip(f"embedded Derby unavailable: {e}")
-    return s
+    return _sink(spark)
 
 
-# all three executable dialects: the SQL:2003 MERGE INTO rewrite, the
-# reference's own DELETE-then-INSERT statement shape (portable form), AND
-# Redshift's restricted MERGE (one unrefined matched + one unrefined
-# not-matched clause, deletes pre-applied) run the same core upsert/delete
-# semantics against live Derby
-@pytest.fixture(scope="module",
-                params=["ansi_merge", "delete_insert", "redshift_merge"])
-def merge_sink(request, spark):
-    s = _sink(request.param, extra_jdbc_props=_VARCHAR_STAGE)
-    try:
-        s.run_sql(spark, ["VALUES 1"])
-    except JdbcUnavailable as e:  # pragma: no cover
-        pytest.skip(f"embedded Derby unavailable: {e}")
-    return s
+# The case ids are the names of the three statement lists these tests ran
+# before the sink kept one: each case now sends that one list, to a target
+# table of its own, and must reach the outcome every former list reached.
+FORMER_SPELLINGS = ["ansi_merge", "delete_insert", "redshift_merge"]
 
 
-def test_live_merge_bootstrap_upsert_delete(spark, merge_sink):
-    sink = merge_sink
-    tbl = f"product_{sink.dialect}"
+@pytest.mark.parametrize("spelling", FORMER_SPELLINGS)
+def test_live_merge_bootstrap_upsert_delete(spark, sink, spelling):
+    tbl = f"product_{spelling}"
     # batch 1: pure inserts -> bootstrap CTAS + insert path
     sink.apply_batch(
         _batch(spark, [(1, "a", "c"), (2, "b", "c")]),
@@ -105,7 +84,7 @@ def test_live_merge_bootstrap_upsert_delete(spark, merge_sink):
     )
     assert _read_target(spark, sink, tbl) == {1: "a2", 3: "c"}
 
-    # the staging table was truncated inside the same transaction (D8)
+    # the staging table was emptied inside the same transaction (D8)
     stage = stage_table_name("d", tbl)
     assert spark.read.jdbc(sink.url, stage, properties=sink._props()).count() == 0
 
@@ -119,9 +98,9 @@ def test_live_merge_bootstrap_upsert_delete(spark, merge_sink):
 
 
 def test_live_merge_null_image(spark, sink):
-    """NULL-valued payloads stage and merge on the DEFAULT (CLOB) string
-    mapping — the coverage the VARCHAR-staged tests above cannot carry
-    (Spark's Derby dialect binds NULL strings as setNull(CLOB))."""
+    """NULL-valued payloads stage and merge on the default (CLOB) string
+    mapping: an update to NULL lands, a delete image with a NULL payload
+    still deletes."""
     sink.apply_batch(
         _batch(spark, [(1, "a", "c"), (2, "b", "c")]),
         db="d", table="nullimg", keys=["pid"],
@@ -133,9 +112,9 @@ def test_live_merge_null_image(spark, sink):
     assert _read_target(spark, sink, "nullimg") == {1: None}
 
 
-def test_live_merge_skip_delete(spark, merge_sink):
-    sink = merge_sink
-    tbl = f"keepdel_{sink.dialect}"
+@pytest.mark.parametrize("spelling", FORMER_SPELLINGS)
+def test_live_merge_skip_delete(spark, sink, spelling):
+    tbl = f"keepdel_{spelling}"
     sink.apply_batch(
         _batch(spark, [(1, "a", "c")]), db="d", table=tbl,
         keys=["pid"], skip_delete=True,
@@ -148,26 +127,8 @@ def test_live_merge_skip_delete(spark, merge_sink):
     assert _read_target(spark, sink, tbl) == {1: "tomb", 2: "b"}
 
 
-def test_live_delete_insert_distinct_rededup(spark):
-    """The delete_insert dialect's W6 stand-in: a stage holding the SAME
-    row twice (a re-staged batch after a mid-merge failure) lands exactly
-    once — DISTINCT replaces the warehouse ROW_NUMBER guard."""
-    sink = _sink("delete_insert", extra_jdbc_props=_VARCHAR_STAGE)
-    try:
-        sink.run_sql(spark, ["VALUES 1"])
-    except JdbcUnavailable as e:  # pragma: no cover
-        pytest.skip(f"embedded Derby unavailable: {e}")
-    tbl = "rededup_di"
-    sink.apply_batch(
-        _batch(spark, [(1, "a", "c"), (1, "a", "c"), (2, "b", "c")]),
-        db="d", table=tbl, keys=["pid"],
-    )
-    rows = spark.read.jdbc(sink.url, tbl, properties=sink._props()).collect()
-    assert sorted((r.pid, r.pname) for r in rows) == [(1, "a"), (2, "b")]
-
-
 def test_live_merge_duplicate_stage_trips_cardinality_guard(spark, sink):
-    """ansi_merge expects a key-deduped stage (the pipeline lww_dedups
+    """The merge expects a key-deduped stage (the pipeline lww_dedups
     before staging); a duplicate key must surface the engine's standard
     MERGE cardinality error, not silently pick a row."""
     sink.apply_batch(
@@ -183,11 +144,7 @@ def test_live_merge_duplicate_stage_trips_cardinality_guard(spark, sink):
 
 
 def test_live_transaction_rolls_back_on_failure(spark, sink):
-    sink.run_sql(
-        spark,
-        ['CREATE TABLE txprobe ("k" BIGINT)'],
-        tolerate_ddl=True,
-    )
+    sink.run_sql(spark, ['CREATE TABLE txprobe ("k" BIGINT)'])
     with pytest.raises(Exception):
         sink.run_sql(
             spark,
@@ -289,7 +246,6 @@ def test_live_catalog_probe_roundtrip(spark, sink):
         spark,
         ['CREATE TABLE catprobe ("cid" BIGINT, "cname" VARCHAR(32), '
          '"score" DOUBLE, "amt" DECIMAL(10,2))'],
-        tolerate_ddl=True,
     )
     rows = sink.fetch_catalog_columns(spark, "catprobe")
     struct = catalog_to_struct(rows)
@@ -324,11 +280,7 @@ def test_live_retry_drops_poisoned_stage(spark, sink):
 
     stage = stage_table_name("d", "retrytgt")
     # poisoned leftover: same name, incompatible column set/types
-    sink.run_sql(
-        spark,
-        [f'CREATE TABLE {stage} ("wrong" VARCHAR(4))'],
-        tolerate_ddl=True,
-    )
+    sink.run_sql(spark, [f'CREATE TABLE {stage} ("wrong" VARCHAR(4))'])
     sink.apply_batch(
         _batch(spark, [(1, "a", "c"), (2, "b", "c")]),
         db="d", table="retrytgt", keys=["pid"],
@@ -348,18 +300,10 @@ def test_live_bulk_fs_staged_copy_twin(spark, tmp_path):
     apply."""
     from kafka_cdc_redshift_spark.streaming.sinks import BulkLoadOptions
 
-    s = JdbcMergeSink(
-        DERBY_URL, user="app", password="app", driver=DERBY_DRIVER,
-        dialect="ansi_merge",
+    s = _sink(
+        spark,
         bulk=BulkLoadOptions(tempdir=str(tmp_path), tempformat="CSV GZIP"),
-        extra_jdbc_props={
-            "createTableColumnTypes": "pname VARCHAR(64), op VARCHAR(8)"
-        },
     )
-    try:
-        s.run_sql(spark, ["VALUES 1"])
-    except JdbcUnavailable as e:  # pragma: no cover
-        pytest.skip(f"embedded Derby unavailable: {e}")
 
     def batch(rows):
         return spark.createDataFrame(
@@ -431,24 +375,9 @@ def test_live_bulk_fs_retry_drops_poisoned_stage(spark, tmp_path):
         stage_table_name,
     )
 
-    s = JdbcMergeSink(
-        DERBY_URL, user="app", password="app", driver=DERBY_DRIVER,
-        dialect="ansi_merge",
-        bulk=BulkLoadOptions(tempdir=str(tmp_path)),
-        extra_jdbc_props={
-            "createTableColumnTypes": "pname VARCHAR(64), op VARCHAR(8)"
-        },
-    )
-    try:
-        s.run_sql(spark, ["VALUES 1"])
-    except JdbcUnavailable as e:  # pragma: no cover
-        pytest.skip(f"embedded Derby unavailable: {e}")
+    s = _sink(spark, bulk=BulkLoadOptions(tempdir=str(tmp_path)))
     stage = stage_table_name("d", "bulkfs_retrytgt")
-    s.run_sql(
-        spark,
-        [f'CREATE TABLE {stage} ("wrong" VARCHAR(4))'],
-        tolerate_ddl=True,
-    )
+    s.run_sql(spark, [f'CREATE TABLE {stage} ("wrong" VARCHAR(4))'])
     s.apply_batch(
         _batch(spark, [(1, "a", "c"), (2, "b", "c")]),
         db="d", table="bulkfs_retrytgt", keys=["pid"],

@@ -20,68 +20,60 @@ from kafka_cdc_redshift_spark.operators.typeconv import (
 from kafka_cdc_redshift_spark.streaming.sinks import build_merge_sql, merge_condition
 
 
+REDSHIFT_URL = "jdbc:redshift://h:5439/dev"
+DERBY_URL = "jdbc:derby:memory:cdclive;create=true"
+
+
+def _merge_sql(url=REDSHIFT_URL, **kw):
+    args = dict(target="product", stage="st",
+                columns=["pid", "pname", "op"], keys=["pid"])
+    return build_merge_sql(url=url, **{**args, **kw})
+
+
 def test_merge_sql_shape():
-    stmts = build_merge_sql(
-        target="product", stage="stage_table_db_product",
-        columns=["pid", "pname", "op"], keys=["pid"],
-    )
-    joined = ";".join(stmts)
-    assert 'DELETE FROM product USING stage_table_db_product WHERE stage_table_db_product."pid" = product."pid"' in joined
-    assert "ROW_NUMBER() OVER (PARTITION BY \"pid\"" in joined
-    assert '"op"' not in stmts[-3].split("SELECT", 1)[0]  # op not inserted
+    """The one statement list: bootstrap CTAS, then one BEGIN/END holding
+    the delete images, the merge and the stage cleanup; op never lands in
+    the target (P5)."""
+    stmts = _merge_sql()
+    assert stmts[0].startswith("CREATE TABLE ")
     assert stmts[1] == "BEGIN" and stmts[-1] == "END"
-    assert "TRUNCATE TABLE stage_table_db_product" in joined
-    assert "WHERE \"op\" != 'd'" in joined
-
-
-def test_merge_sql_skip_delete():
-    stmts = build_merge_sql(
-        target="t", stage="s", columns=["pid", "op"], keys=["pid"], skip_delete=True
-    )
-    assert "!= 'd'" not in ";".join(stmts)
+    assert [s.split(" ", 1)[0] for s in stmts[2:-1]] == [
+        "DELETE", "DELETE", "MERGE", "DELETE",
+    ]
+    merge = stmts[4]
+    assert merge.startswith('MERGE INTO product USING st ON st."pid" = product."pid" ')
+    assert 'INSERT ("pid", "pname") VALUES (st."pid", st."pname")' in merge
+    assert '"op"' not in stmts[0]  # the bootstrap target has no op column
 
 
 def test_merge_sql_delete_insert_dialect_shape():
-    """Portable form of the reference's DELETE-then-INSERT statement
-    shape: correlated-EXISTS delete, DISTINCT insert (the W6 guard's
-    portable stand-in), WITH NO DATA CTAS bootstrap."""
-    stmts = build_merge_sql(
-        target="product", stage="stage_table_db_product",
-        columns=["pid", "pname", "op"], keys=["pid"],
-        dialect="delete_insert",
-    )
+    """The delete half of the reference's DELETE-then-INSERT shape, as the
+    kept list spells it: a correlated-EXISTS delete of the delete images'
+    keys (no DELETE ... USING, no ROW_NUMBER window), portable to Derby,
+    whose bootstrap is the WITH NO DATA CTAS."""
+    stmts = _merge_sql(stage="stage_table_db_product")
     joined = ";".join(stmts)
-    assert (
+    assert stmts[2] == (
         "DELETE FROM product WHERE EXISTS "
         "(SELECT 1 FROM stage_table_db_product "
-        'WHERE stage_table_db_product."pid" = product."pid")' in joined
+        'WHERE stage_table_db_product."pid" = product."pid" '
+        'AND CAST(stage_table_db_product."op" AS VARCHAR(32)) = \'d\')'
     )
-    assert "SELECT DISTINCT" in joined
-    assert "WITH NO DATA" in joined
-    assert "USING" not in joined and "MERGE" not in joined
+    assert "USING" not in stmts[2]
     assert "ROW_NUMBER" not in joined  # Derby-portable: no window
-    assert stmts[-1] == "END" and "TRUNCATE TABLE stage_table_db_product" in joined
-    # op filtered out of the insert and never lands as a column
-    assert "<> 'd'" in joined
-    skip = build_merge_sql(
-        target="t", stage="s", columns=["pid", "op"], keys=["pid"],
-        skip_delete=True, dialect="delete_insert",
-    )
+    derby = _merge_sql(DERBY_URL, stage="stage_table_db_product")
+    assert derby[0].endswith(" WITH NO DATA")
+    # skip_delete: no delete-image statement names the op at all
+    skip = _merge_sql(stage="s", columns=["pid", "op"], skip_delete=True)
     assert "'d'" not in ";".join(skip)
 
 
 def test_merge_sql_redshift_merge_restricted_shape():
     """Redshift's restricted MERGE: exactly ONE unrefined WHEN MATCHED and
-    ONE unrefined WHEN NOT MATCHED clause (no refinement predicates —
-    what Redshift rejects in ansi_merge), with delete images applied
+    ONE unrefined WHEN NOT MATCHED clause, with delete images applied
     ahead of the merge (target delete via correlated EXISTS, then purged
     from the stage so the unrefined merge can't re-insert them)."""
-    stmts = build_merge_sql(
-        target="product", stage="st",
-        columns=["pid", "pname", "op"], keys=["pid"],
-        dialect="redshift_merge",
-    )
-    joined = ";".join(stmts)
+    stmts = _merge_sql()
     merge = next(s for s in stmts if s.startswith("MERGE"))
     assert merge.count("WHEN MATCHED") == 1
     assert merge.count("WHEN NOT MATCHED") == 1
@@ -93,60 +85,53 @@ def test_merge_sql_redshift_merge_restricted_shape():
     # delete images: target keys deleted, then images purged from stage,
     # BEFORE the merge (statement order matters)
     i_del_t = next(i for i, s in enumerate(stmts) if s.startswith("DELETE FROM product"))
-    i_del_s = next(i for i, s in enumerate(stmts) if s.startswith("DELETE FROM st"))
+    i_del_s = next(i for i, s in enumerate(stmts) if s.startswith("DELETE FROM st "))
     i_merge = stmts.index(merge)
-    assert i_del_t < i_del_s < i_merge
-    assert "EXISTS" in stmts[i_del_t] and "= 'd'" in stmts[i_del_t]
-    assert stmts[-1] == "END"
-    # skip_delete: delete images upsert — no delete-image statements
-    # (the stage-cleanup DELETE remains; it carries no op predicate)
-    skip = build_merge_sql(
-        target="t", stage="s", columns=["pid", "op"], keys=["pid"],
-        skip_delete=True, dialect="redshift_merge",
-    )
-    assert not any(s.startswith("DELETE") and "'d'" in s for s in skip)
-    # all-key table still emits both (required) clauses via a no-op SET
-    allkey = build_merge_sql(
-        target="t", stage="s", columns=["pid", "op"], keys=["pid"],
-        dialect="redshift_merge",
-    )
-    m = next(s for s in allkey if s.startswith("MERGE"))
-    assert 'UPDATE SET "pid" = s."pid"' in m
+    assert 1 < i_del_t < i_del_s < i_merge
+    assert "EXISTS" in stmts[i_del_t]
+    assert "= 'd'" in stmts[i_del_t] and "= 'd'" in stmts[i_del_s]
 
 
 def test_merge_sql_redshift_merge_spellings():
-    """The redshift_merge dialect's two spellings: the DEFAULT is what
-    real Redshift runs — `WHERE 1 = 3` CTAS (Redshift CTAS has no WITH
-    NO DATA) and a transactional `DELETE FROM stage` cleanup (TRUNCATE
-    inside BEGIN/END implicitly COMMITS on Redshift, silently breaking
-    the delete+merge atomicity); `portable=True` keeps the SQL-standard
-    spellings the live Derby tests execute."""
-    native = build_merge_sql(
-        target="product", stage="st",
-        columns=["pid", "pname", "op"], keys=["pid"],
-        dialect="redshift_merge",
+    """The list's one engine-dependent statement is the bootstrap CTAS,
+    chosen from the URL: Redshift gets `IF NOT EXISTS ... WHERE 1 = 3`
+    (its CTAS has no WITH NO DATA), Derby `WITH NO DATA` (run_sql skips
+    its already-exists error). The stage cleanup is a transactional
+    `DELETE FROM stage` on both: TRUNCATE inside BEGIN/END implicitly
+    COMMITS on Redshift, silently breaking the delete+merge atomicity."""
+    stmts = _merge_sql()
+    joined = ";".join(stmts)
+    assert stmts[0] == (
+        'CREATE TABLE IF NOT EXISTS product AS SELECT "pid", "pname" '
+        "FROM st WHERE 1 = 3"
     )
-    nj = ";".join(native)
-    assert "WITH NO DATA" not in nj and "TRUNCATE" not in nj
-    assert native[0].startswith("CREATE TABLE IF NOT EXISTS product AS ")
-    assert native[0].endswith("WHERE 1 = 3")
+    assert "WITH NO DATA" not in joined and "TRUNCATE" not in joined
     # cleanup DELETE FROM st sits INSIDE the transaction, after the merge
-    i_merge = next(i for i, s in enumerate(native) if s.startswith("MERGE"))
-    assert native[i_merge + 1] == "DELETE FROM st"
-    assert native[i_merge + 2] == "END"
+    i_merge = next(i for i, s in enumerate(stmts) if s.startswith("MERGE"))
+    assert stmts[i_merge + 1:] == ["DELETE FROM st", "END"]
+    derby = _merge_sql(DERBY_URL)
+    assert derby[0] == (
+        'CREATE TABLE product AS SELECT "pid", "pname" FROM st WITH NO DATA'
+    )
+    assert "1 = 3" not in ";".join(derby)
+    assert derby[1:] == stmts[1:]
 
-    portable = build_merge_sql(
-        target="product", stage="st",
-        columns=["pid", "pname", "op"], keys=["pid"],
-        dialect="redshift_merge", portable=True,
-    )
-    pj = ";".join(portable)
-    assert "WITH NO DATA" in pj and "TRUNCATE TABLE st" in pj
-    assert "1 = 3" not in pj
-    # both spellings share the identical restricted MERGE statement
-    assert next(s for s in native if s.startswith("MERGE")) == next(
-        s for s in portable if s.startswith("MERGE")
-    )
+
+def test_merge_sql_skip_delete():
+    """skip_delete: delete images upsert like any row — no delete-image
+    statements (the stage-cleanup DELETE remains; it carries no op
+    predicate). An all-key table still emits both required clauses via a
+    no-op SET."""
+    skip = _merge_sql(stage="s", columns=["pid", "op"], skip_delete=True)
+    assert "'d'" not in ";".join(skip)
+    assert skip[1:] == [
+        "BEGIN",
+        'MERGE INTO product USING s ON s."pid" = product."pid" '
+        'WHEN MATCHED THEN UPDATE SET "pid" = s."pid" '
+        'WHEN NOT MATCHED THEN INSERT ("pid") VALUES (s."pid")',
+        "DELETE FROM s",
+        "END",
+    ]
 
 
 def test_merge_condition_multi_key():

@@ -12,7 +12,6 @@ from kafka_cdc_redshift_spark.sources import load_table
 from kafka_cdc_redshift_spark.streaming import (
     hourly_rollup,
     seen_keys_dedup,
-    seen_keys_dedup_tws,
 )
 
 
@@ -89,61 +88,6 @@ def test_seen_keys_dedup_suppresses_cross_batch_replays(spark, tmp_path):
 
     got = {(r.k, r.ts_ms): r.v for r in spark.table("dedup_sink").collect()}
     assert got == {(1, 100): "a", (2, 50): "b", (1, 200): "c"}
-
-
-def test_seen_keys_dedup_tws_suppresses_cross_batch_replays(spark, tmp_path):
-    # Spark's transformWithStateInPandas runs a protobuf-based Python state
-    # server; without the protobuf runtime the query worker cannot start.
-    # The dep is auditable-absent in this container (no network: pip
-    # resolution fails, verified round 6 — NOTES.md), so the gate is an
-    # XFAIL carrying the concrete import error rather than a silent skip;
-    # where protobuf exists the test RUNS (strict xfail would then flag
-    # an unexpected pass, so the gate stays non-strict).
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        pytest.xfail(f"transformWithStateInPandas needs the protobuf "
-                     f"runtime, absent in this container: {e!r}")
-    src = tmp_path / "cdc_json"
-    src.mkdir()
-    b1 = [
-        {"k": 1, "ts_ms": 100, "v": "a"},
-        {"k": 2, "ts_ms": 50, "v": "b"},
-    ]
-    b2 = [
-        {"k": 1, "ts_ms": 100, "v": "replayed-drop"},
-        {"k": 1, "ts_ms": 200, "v": "c"},
-        {"k": 2, "ts_ms": 40, "v": "out-of-order-drop"},
-    ]
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in b1) + "\n")
-    (src / "b2.json").write_text("\n".join(json.dumps(r) for r in b2) + "\n")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema("k long, ts_ms long, v string").option(
-            "maxFilesPerTrigger", 1
-        ).json(str(src))
-        deduped = seen_keys_dedup_tws(stream, ["k"], ts_col="ts_ms")
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("dedup_tws_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {(r.k, r.ts_ms): r.v for r in spark.table("dedup_tws_sink").collect()}
-        assert got == {(1, 100): "a", (2, 50): "b", (1, 200): "c"}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_seen_keys_dedup_rejects_batch_dataframe(spark):
