@@ -66,6 +66,21 @@ _DRIVER_CHECK_FIRST = [
     # a stale green row is only bookkeeping. cdc_bm25_tombstones rides
     # along because it shares retrieval.py lineage even though its own
     # plan is byte-identical.
+    # -- lineage changed by the one near-dup spelling (every MinHash,
+    # Jaccard and containment operator reads built shingle sets; the
+    # contamination score reads built hash relations; the streamed dedup
+    # ingest shingles and signs each batch once) --
+    "dedup_ngram_jaccard",
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "dedup_lsh_incremental",
+    "dedup_keep_one",
+    "dedup_keep_best",
+    "dedup_containment",
+    "doc_contamination",
+    "curation_pipeline_v2",
+    "cdc_dedup_tombstones",
+    "cdc_containment_tombstones",
     # -- the plan/lineage-changed queries of the r13 optimization round --
     "text_bm25_topk",
     "sim_hybrid_rrf",

@@ -315,8 +315,9 @@ def doc_shingle_hashes(
     the shared input of every contamination probe (exact membership join
     AND bloom prefilter read exactly these rows). Exposed so a caller
     that runs BOTH probes over the same corpus can build the explode
-    once, `localCheckpoint` it, and thread it through the `_from_hashes`
-    variants instead of paying the tokenize+shingle+hash pass per probe.
+    once, `localCheckpoint` it, and hand it to `contamination_score` and
+    `membership.contamination_prefilter_from_hashes` instead of paying the
+    tokenize+shingle+hash pass per probe.
     """
     from .dedup_text import shingles_col
 
@@ -355,13 +356,22 @@ def eval_shingle_hashes(
     )
 
 
-def contamination_score_from_hashes(
-    tr: DataFrame, ev_gh: DataFrame
-) -> DataFrame:
-    """`contamination_score` over ALREADY-BUILT hash relations: `tr` =
-    (doc_id, gh) from `doc_shingle_hashes`, `ev_gh` = (gh) from
-    `eval_shingle_hashes` (pre-distinct; deduplicated here). Lets the
-    audit query share one checkpointed explode with the bloom prefilter."""
+def contamination_score(tr: DataFrame, ev_gh: DataFrame) -> DataFrame:
+    """Per-document eval-set contamination ratio (the scored variant of
+    `decontaminate`): fraction of a training doc's distinct word n-grams
+    that appear anywhere in the eval corpus. `tr` = (doc_id, gh) from
+    `doc_shingle_hashes(train)`, `ev_gh` = (gh) from
+    `eval_shingle_hashes(eval_df)` (pre-distinct; deduplicated here), so
+    a caller running several probes over one corpus builds each explode
+    once. Emits (doc_id, n_shingles, n_matched, contamination) for docs
+    with >= n tokens; a threshold filter on `contamination` is the usual
+    next step.
+
+    The eval side reduces to distinct 60-bit shingle hashes BEFORE the
+    join (eval/benchmark sets are tiny next to a training corpus), so the
+    membership probe is a broadcast join on longs — no eval text shuffles
+    and the train side is a single explode + rollup on doc_id.
+    """
     ev = ev_gh.select("gh").distinct().withColumn("__hit", F.lit(1))
     return (
         tr.join(F.broadcast(ev), "gh", "left")
@@ -374,30 +384,6 @@ def contamination_score_from_hashes(
             "contamination", F.col("n_matched") / F.col("n_shingles")
         )
     )
-
-
-def contamination_score(
-    train: DataFrame,
-    eval_df: DataFrame,
-    *,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-document eval-set contamination ratio (the scored variant of
-    `decontaminate`): fraction of a training doc's distinct word n-grams
-    that appear anywhere in the eval corpus. Emits
-    (doc_id, n_shingles, n_matched, contamination) for docs with >= n
-    tokens; a threshold filter on `contamination` is the usual next step.
-
-    The eval side reduces to distinct 60-bit shingle hashes BEFORE the
-    join (eval/benchmark sets are tiny next to a training corpus), so the
-    membership probe is a broadcast join on longs — no eval text shuffles
-    and the train side is a single explode + rollup on doc_id.
-    """
-    tr = doc_shingle_hashes(train, n=n, id_col=id_col, text_col=text_col)
-    ev = eval_shingle_hashes(eval_df, n=n, text_col=text_col)
-    return contamination_score_from_hashes(tr, ev)
 
 
 def sample_k_per_stratum(

@@ -1,6 +1,11 @@
 """Document deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
 SimHash.
 
+Every near-dup operator (jaccard_pairs, containment_pairs, lsh_band_index,
+minhash_lsh_pairs, minhash_lsh_incremental) reads the (doc_id, sh_set)
+relation of `shingle_sketches`, the one shingle builder: a job that runs
+several of them over one corpus shingles it once.
+
 Scale design (100 TB of documents):
   * exact_dedup — one hash-shuffle on md5(text); map-side partial agg.
   * jaccard_pairs — shingle-explode + self-join on shingle. The join key is
@@ -55,7 +60,17 @@ def exact_dedup(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def shingle_sketches(
+    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """(doc_id, sh_set): the distinct word n-gram set of every document
+    with >= n tokens — the one shingle builder, and the only input of
+    every near-dup operator below. Build it once per corpus and hand the
+    same relation to each consumer; materialize it when two or more
+    consumers read it. Persisted next to the band index
+    (`lsh_band_index`), the sets are the verification sketches that let
+    `minhash_lsh_incremental` check candidates without the corpus text.
+    """
     return spread(df).filter(F.size(tokens_col(text_col)) >= n).select(
         F.col(id_col).alias("doc_id"), shingles_col(text_col, n).alias("sh_set")
     )
@@ -71,62 +86,22 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
 DEFAULT_MAX_DF = 1000
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = DEFAULT_MAX_DF,
-    cut_strategy: str = "window",
+def _shared_shingle_counts(
+    sets_: DataFrame, max_df: int | None, min_size_ratio: float | None = None
 ) -> DataFrame:
-    """All pairs with shingle-set Jaccard >= threshold.
+    """(doc_a, doc_b, sz_a, sz_b, inter) for every doc_a < doc_b pair
+    sharing a kept shingle: the posting-list self-join under
+    `jaccard_pairs` and `containment_pairs`.
 
-    Exact when max_df is None: any pair with Jaccard > 0 shares >= 1
-    shingle, so the shingle-keyed self-join loses nothing. With the
-    (default) stop-shingle cut, the intersection is counted over surviving
-    shingles while set sizes stay pre-cut, so the reported jaccard is a
-    conservative lower bound — a pair can only be dropped if its overlap
-    rides on corpus-hot shingles.
-
-    cut_strategy picks how df counts are computed:
-      * "window" (default): count() over Window.partitionBy(sh) — the df
-        annotation rides the SAME hash-partitioning the sort-merge self-join
-        needs, so the whole pipeline pays ONE shuffle of the posting list
-        (measured 3x faster than the exact no-cut join at sf0.1). A
-        corpus-hot shingle concentrates its rows in one counting task
-        before being dropped; that pass is linear and spill-safe — the
-        quadratic pair blowup the cut exists to prevent never happens.
-      * "prefilter": aggregate dfs (map-side combinable, no skewed task)
-        and broadcast-anti-join the hot set BEFORE the join shuffle. Costs
-        a second pass over the shingle explode; use when single hot
-        shingles are so extreme (df in the 10^8 range) that even one
-        linear pass through one task is unacceptable.
-    """
-    return jaccard_pairs_from_sets(
-        _shingle_sets(df, id_col, text_col, n),
-        threshold=threshold, max_df=max_df, cut_strategy=cut_strategy,
-    )
-
-
-def jaccard_pairs_from_sets(
-    sets_: DataFrame,
-    *,
-    threshold: float = 0.5,
-    max_df: int | None = DEFAULT_MAX_DF,
-    cut_strategy: str = "window",
-) -> DataFrame:
-    """The exact-Jaccard pair reduction over ALREADY-BUILT (doc_id,
-    sh_set) shingle sets — the sharing path: when a job runs BOTH the
-    exact pipeline and an LSH pipeline over the same corpus (e.g. the
-    dedup_minhash_eval recall audit), build the shingle relation once
-    (`shingle_sketches`), localCheckpoint it, and feed it to both — the
-    tokenize+shingle pass over the corpus then runs once instead of once
-    per pipeline. Semantics identical to `jaccard_pairs`."""
-    # carry the set size on every exploded row: the pair join can then
-    # (a) prune by the size-ratio bound j <= min(sz)/max(sz) BEFORE the
-    # aggregation, and (b) compute jaccard without re-joining sizes.
+    The stop-shingle df count is a window over the join's own key, so it
+    rides the SAME hash partitioning the sort-merge self-join needs and
+    the pipeline pays ONE shuffle of the posting list. A corpus-hot
+    shingle concentrates its rows in one counting task before being
+    dropped; that pass is linear and spill-safe. `min_size_ratio` t
+    prunes pairs whose min/max set size is below t before the
+    aggregation (a pair that cannot reach Jaccard t)."""
+    # carry the set size on every exploded row: the pair join can prune by
+    # size and the reduction needs no re-join of sizes.
     # explode_outer: the non-outer Generate gets an inferred `size(sh_set)>0`
     # filter whose pushdown substitutes the WHOLE shingle expression below the
     # spread() repartition — recomputing it single-task. Sets are provably
@@ -135,37 +110,25 @@ def jaccard_pairs_from_sets(
         "doc_id", F.size("sh_set").alias("sz"), F.explode_outer("sh_set").alias("sh")
     )
     if max_df is not None:
-        if cut_strategy == "window":
-            from pyspark.sql import Window
-
-            ex = (
-                ex.withColumn(
-                    "__df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-                )
-                .filter(F.col("__df") <= max_df)
-                .drop("__df")
-            )
-        elif cut_strategy == "prefilter":
-            hot = (
-                ex.groupBy("sh").count().filter(F.col("count") > max_df).select("sh")
-            )
-            ex = ex.join(F.broadcast(hot), "sh", "left_anti")
-        else:
-            raise ValueError(f"unknown cut_strategy: {cut_strategy!r}")
-    t = F.lit(float(threshold))
+        ex = (
+            ex.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
+            .filter(F.col("__df") <= max_df)
+            .drop("__df")
+        )
+    cond = (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    if min_size_ratio is not None:
+        t = F.lit(float(min_size_ratio))
+        cond = (
+            cond
+            & (F.col("b.sz").cast("double") >= t * F.col("a.sz"))
+            & (F.col("a.sz").cast("double") >= t * F.col("b.sz"))
+        )
     # sort-merge, not broadcast: the exploded posting list is NOT a dim table
     # — broadcasting it is unstable here and impossible at corpus scale; SMJ
     # shuffles both sides by shingle once and streams matches
-    pairs = (
+    return (
         ex.alias("a")
-        .join(
-            ex.hint("merge").alias("b"),
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # size-ratio pruning: if min/max < t the pair can't reach t
-            & (F.col("b.sz").cast("double") >= t * F.col("a.sz"))
-            & (F.col("a.sz").cast("double") >= t * F.col("b.sz")),
-        )
+        .join(ex.hint("merge").alias("b"), cond)
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -174,94 +137,64 @@ def jaccard_pairs_from_sets(
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    ).cast("double")
+
+
+def _jaccard(inter: Column, sz_a: Column, sz_b: Column) -> Column:
+    return inter.cast("double") / (sz_a + sz_b - inter).cast("double")
+
+
+def jaccard_pairs(
+    sets_: DataFrame,
+    *,
+    threshold: float = 0.5,
+    max_df: int | None = DEFAULT_MAX_DF,
+) -> DataFrame:
+    """All pairs (doc_a < doc_b, jaccard) of `shingle_sketches` sets with
+    Jaccard >= threshold.
+
+    Exact when max_df is None: any pair with Jaccard > 0 shares >= 1
+    shingle, so the shingle-keyed self-join loses nothing. With the
+    (default) stop-shingle cut, the intersection is counted over surviving
+    shingles while set sizes stay pre-cut, so the reported jaccard is a
+    conservative lower bound — a pair can only be dropped if its overlap
+    rides on corpus-hot shingles.
+    """
+    pairs = _shared_shingle_counts(sets_, max_df, min_size_ratio=threshold)
+    jac = _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b"))
     return pairs.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
 
 
 def containment_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = DEFAULT_MAX_DF,
-) -> DataFrame:
-    """All pairs whose shingle-set CONTAINMENT max(|A∩B|/|A|, |A∩B|/|B|)
-    >= threshold — the asymmetric near-dup relation Jaccard misses: a
-    short document quoted or embedded verbatim inside a long one has
-    tiny Jaccard (the union is dominated by the long doc) but containment
-    ~1 on the short side. Emits (doc_a, doc_b, containment_a,
-    containment_b, jaccard) with doc_a < doc_b; containment_a = the
-    fraction of doc_a's shingles found in doc_b.
-
-    Same posting-list shape as `jaccard_pairs` (one shingle-keyed SMJ
-    shuffle, the stop-shingle cut bounding hot buckets) EXCEPT the
-    size-ratio prune: size asymmetry is exactly the signal here, so no
-    pair is pruned by size. At corpus scale that makes the hot-shingle
-    cut (`max_df`) load-bearing, not optional — a boilerplate shingle
-    joins every tiny quote to every big page."""
-    return containment_pairs_from_sets(
-        _shingle_sets(df, id_col, text_col, n),
-        threshold=threshold, max_df=max_df,
-    )
-
-
-def containment_pairs_from_sets(
     sets_: DataFrame,
     *,
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_MAX_DF,
 ) -> DataFrame:
-    """The containment reduction over ALREADY-MATERIALIZED (doc_id,
-    sh_set) shingle sets — the serving path: `containment_pairs`
-    shingles a corpus into it, and the streamed dedup state
-    (streaming/dedup_ingest.DedupIngest.containment) serves its
-    standing verification sketches through the same code, so streamed
-    containment == one-shot containment_pairs over the live corpus."""
-    ex = sets_.select(
-        "doc_id", F.size("sh_set").alias("sz"), F.explode_outer("sh_set").alias("sh")
-    )
-    if max_df is not None:
-        from pyspark.sql import Window
+    """All pairs of `shingle_sketches` sets whose CONTAINMENT
+    max(|A∩B|/|A|, |A∩B|/|B|) >= threshold — the asymmetric near-dup
+    relation Jaccard misses: a short document quoted or embedded verbatim
+    inside a long one has tiny Jaccard (the union is dominated by the
+    long doc) but containment ~1 on the short side. Emits (doc_a, doc_b,
+    containment_a, containment_b, jaccard) with doc_a < doc_b;
+    containment_a = the fraction of doc_a's shingles found in doc_b.
 
-        ex = (
-            ex.withColumn(
-                "__df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-            )
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
-    pairs = (
-        ex.alias("a")
-        .join(
-            ex.hint("merge").alias("b"),
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    Same posting-list join as `jaccard_pairs` EXCEPT the size-ratio
+    prune: size asymmetry is exactly the signal here, so no pair is
+    pruned by size. At corpus scale that makes the hot-shingle cut
+    (`max_df`) load-bearing, not optional — a boilerplate shingle joins
+    every tiny quote to every big page. The streamed dedup state serves
+    its standing sketches through this same operator
+    (streaming/dedup_ingest.DedupIngest.containment)."""
     inter_d = F.col("inter").cast("double")
-    c_a = inter_d / F.col("sz_a").cast("double")
-    c_b = inter_d / F.col("sz_b").cast("double")
-    jac = inter_d / (
-        F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    ).cast("double")
     return (
-        pairs.select(
+        _shared_shingle_counts(sets_, max_df)
+        .select(
             "doc_a", "doc_b",
-            c_a.alias("containment_a"), c_b.alias("containment_b"),
-            jac.alias("jaccard"),
+            (inter_d / F.col("sz_a").cast("double")).alias("containment_a"),
+            (inter_d / F.col("sz_b").cast("double")).alias("containment_b"),
+            _jaccard(F.col("inter"), F.col("sz_a"), F.col("sz_b")).alias("jaccard"),
         )
         .filter(
             F.greatest(F.col("containment_a"), F.col("containment_b"))
@@ -289,8 +222,8 @@ def minhash_signatures(sets_: DataFrame, num_hashes: int) -> DataFrame:
     no per-seed row explosion, ONE groupBy with k min() aggregates. Shuffle
     volume is O(docs * k ints) instead of O(shingles * k rows).
     """
-    # explode_outer: see jaccard_pairs — keeps the inferred-filter pushdown
-    # from duplicating the shingle computation below the repartition
+    # explode_outer: see _shared_shingle_counts — keeps the inferred-filter
+    # pushdown from duplicating the shingle computation below the repartition
     ex = sets_.select("doc_id", F.explode_outer("sh_set").alias("sh"))
     h30 = (hash60("sh") % _MH_H30).alias("h30")
     ex = ex.select("doc_id", h30)
@@ -303,49 +236,21 @@ def minhash_signatures(sets_: DataFrame, num_hashes: int) -> DataFrame:
     return ex.groupBy("doc_id").agg(*aggs)
 
 
-def shingle_sketches(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(doc_id, sh_set) verification sketches — persist alongside the band
-    index (`lsh_band_index`) so future ingest batches can exact-verify
-    candidates without the original corpus text (see
-    `minhash_lsh_incremental(sketches=...)`). Size is the distinct
-    n-gram set per doc; at corpus scale store it bucketed by doc_id."""
-    return _shingle_sets(df, id_col, text_col, n)
-
-
 def lsh_band_index(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 12,
-    band_size: int = 2,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded-signature index of a corpus: one (doc_id, band, bkey) row per
-    band — the persistable artifact of MinHash-LSH. Build it ONCE for the
-    standing corpus (and store it partitioned/bucketed by (band, bkey));
-    every new ingest batch then dedups against the corpus by joining its
-    own (tiny) band relation to this index — see
-    `minhash_lsh_incremental`. Size is exactly docs x n_bands rows of
-    (id, int, short string), independent of document length."""
-    return lsh_band_index_from_sets(
-        _shingle_sets(df, id_col, text_col, n),
-        num_hashes=num_hashes, band_size=band_size, max_bucket=max_bucket,
-    )
-
-
-def lsh_band_index_from_sets(
     sets_: DataFrame,
     *,
     num_hashes: int = 12,
     band_size: int = 2,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """`lsh_band_index` over ALREADY-BUILT (doc_id, sh_set) shingle sets
-    — the sharing path (see `jaccard_pairs_from_sets`)."""
+    """Banded-signature index of `shingle_sketches` sets: one (doc_id,
+    band, bkey) row per band — the persistable artifact of MinHash-LSH.
+    Build it ONCE for the standing corpus (and store it
+    partitioned/bucketed by (band, bkey)); every new ingest batch then
+    dedups against the corpus by joining its own (tiny) band relation to
+    this index — see `minhash_lsh_incremental`. Size is exactly docs x
+    n_bands rows of (id, int, short string), independent of document
+    length."""
     sig = minhash_signatures(sets_, num_hashes)
     n_bands = num_hashes // band_size
     band_rows = [
@@ -392,71 +297,61 @@ def _cap_hot_buckets(bands: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
+def verified_band_pairs(
+    bands: DataFrame,
+    sets_: DataFrame,
+    index: DataFrame | None = None,
+    sketches: DataFrame | None = None,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 12,
-    band_size: int = 2,
     threshold: float = 0.5,
-    max_bucket: int | None = None,
 ) -> DataFrame:
-    """MinHash + banded LSH candidate generation, exact-Jaccard verification.
+    """LSH candidates from BUILT band relations, exact-Jaccard verified —
+    the one candidate-verification body of `minhash_lsh_pairs`,
+    `minhash_lsh_incremental` and the streaming ingest, which builds a
+    batch's sets and bands once and reads both pair kinds from them.
 
-    Candidates: pairs agreeing on ALL rows of >= 1 band (classic banding,
-    P(candidate) = 1-(1-j^r)^b). Each candidate is then verified with exact
-    shingle Jaccard, so the output has no false positives — only bounded
-    false-negative probability, which is the documented LSH trade-off.
-    `max_bucket` (optional) caps candidate-bucket size for hot-key safety
-    at corpus scale — see `_cap_hot_buckets`; None preserves exact
-    recall-parity with the SQL oracle.
-    """
-    bands = lsh_band_index(
-        df, id_col=id_col, text_col=text_col, n=n,
-        num_hashes=num_hashes, band_size=band_size, max_bucket=max_bucket,
-    )
+    Without `index`: pairs within `bands` (doc_a < doc_b, jaccard),
+    verified against `sets_`. With `index` (+ its `sketches`): pairs
+    between `bands` and the index (doc_new, doc_old, jaccard), the new
+    side verified against `sets_`, the old side against `sketches`.
+    Verification fetches the sets of candidate docs only (broadcast
+    semi-join on the candidate ids), so a standing corpus contributes a
+    few rows per match, not a scan."""
+    if index is None:
+        index, sketches = bands, sets_
+        new, old = "doc_a", "doc_b"
+        keep = F.col("a.doc_id") < F.col("b.doc_id")
+    else:
+        new, old = "doc_new", "doc_old"
+        keep = F.col("a.doc_id") != F.col("b.doc_id")
     cand = (
         bands.alias("a")
-        .join(bands.alias("b"), ["band", "bkey"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        .join(index.alias("b"), ["band", "bkey"])
+        .filter(keep)
+        .select(F.col("a.doc_id").alias(new), F.col("b.doc_id").alias(old))
         .distinct()
         # materialize: LSH shrinks the corpus to a small candidate set, and
-        # both the id-restriction below and the final pair join consume it —
-        # without this the band join would run once per consumer
+        # the id restrictions below and the final pair join all consume it
         .localCheckpoint()
     )
-    # verify ONLY candidate docs: recompute shingle sets for the (small)
-    # id set that survived banding instead of the whole corpus — at corpus
-    # scale the full shingle relation exists once for signatures and never
-    # again; the semi-joined rebuild touches a tiny fraction of documents
-    cand_ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .union(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    cand_sets = _shingle_sets(
-        df.join(F.broadcast(cand_ids), id_col, "semi"), id_col, text_col, n
-    )
-    seta = cand_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"))
-    setb = cand_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    jac = inter.cast("double") / (
-        F.size("set_a") + F.size("set_b") - inter
-    ).cast("double")
+
+    def candidate_sets(src: DataFrame, col: str, alias: str) -> DataFrame:
+        ids = cand.select(F.col(col).alias("doc_id")).distinct()
+        return src.join(F.broadcast(ids), "doc_id", "semi").select(
+            F.col("doc_id").alias(col), F.col("sh_set").alias(alias)
+        )
+
+    inter = F.size(F.array_intersect("set_n", "set_o"))
+    jac = _jaccard(inter, F.size("set_n"), F.size("set_o"))
     return (
-        cand.join(seta, "doc_a")
-        .join(setb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        cand.join(candidate_sets(sets_, new, "set_n"), new)
+        .join(candidate_sets(sketches, old, "set_o"), old)
+        .select(new, old, jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-def minhash_lsh_pairs_from_sets(
+def minhash_lsh_pairs(
     sets_: DataFrame,
     *,
     num_hashes: int = 12,
@@ -464,144 +359,59 @@ def minhash_lsh_pairs_from_sets(
     threshold: float = 0.5,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """`minhash_lsh_pairs` over ALREADY-BUILT (doc_id, sh_set) shingle
-    sets — the sharing path (see `jaccard_pairs_from_sets`): signatures
-    derive from `sets_`, and exact-Jaccard verification semi-joins the
-    SAME relation on the candidate ids instead of re-shingling the
-    corpus text. Pass a localCheckpoint'ed `sets_` when another pipeline
-    consumes it too; results are identical to `minhash_lsh_pairs` (the
-    candidate ids are a subset of sets_'s doc ids by construction)."""
-    bands = lsh_band_index_from_sets(
+    """MinHash + banded LSH candidate generation over `shingle_sketches`
+    sets, exact-Jaccard verification: (doc_a < doc_b, jaccard).
+
+    Candidates: pairs agreeing on ALL rows of >= 1 band (classic banding,
+    P(candidate) = 1-(1-j^r)^b). Each candidate is then verified with exact
+    shingle Jaccard, so the output has no false positives — only bounded
+    false-negative probability, which is the documented LSH trade-off.
+    `max_bucket` (optional) caps candidate-bucket size for hot-key safety
+    at corpus scale — see `_cap_hot_buckets`; None preserves exact
+    recall-parity with the SQL oracle. `sets_` is read twice (signatures,
+    verification): hand in a materialized relation unless it is cheap.
+    """
+    bands = lsh_band_index(
         sets_, num_hashes=num_hashes, band_size=band_size,
         max_bucket=max_bucket,
     )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band", "bkey"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        # materialize: the id restriction below and the final pair join
-        # both consume it (see minhash_lsh_pairs)
-        .localCheckpoint()
-    )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    cand_sets = sets_.join(F.broadcast(cand_ids), "doc_id", "semi")
-    seta = cand_sets.select(
-        F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a")
-    )
-    setb = cand_sets.select(
-        F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    jac = inter.cast("double") / (
-        F.size("set_a") + F.size("set_b") - inter
-    ).cast("double")
-    return (
-        cand.join(seta, "doc_a")
-        .join(setb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verified_band_pairs(bands, sets_, threshold=threshold)
 
 
 def minhash_lsh_incremental(
-    new_docs: DataFrame,
-    corpus: DataFrame | None = None,
+    new_sets: DataFrame,
+    index: DataFrame,
+    sketches: DataFrame,
     *,
-    index: DataFrame | None = None,
-    sketches: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     num_hashes: int = 12,
     band_size: int = 2,
     threshold: float = 0.5,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs (doc_new, doc_old, jaccard) between a NEW ingest
-    batch and the EXISTING corpus — the crawl-ingest shape: the standing
-    corpus is never re-signed, only joined through its prebuilt
-    `lsh_band_index` (pass `index=` to reuse a stored one; built here
-    from `corpus` otherwise).
+    batch's `shingle_sketches` sets and the EXISTING corpus — the
+    crawl-ingest shape: the standing corpus is never re-signed, only
+    joined through its prebuilt `lsh_band_index` (`index`), and verified
+    against its stored sets (`sketches`); the corpus text is never read.
 
-    Per-ingest cost is proportional to the batch (its shingles + bands)
+    Per-ingest cost is proportional to the batch (its signatures + bands)
     plus the matched candidates: the candidate join hits the index on
     (band, bkey) — with the index stored bucketed on those keys, only
-    the batch's bands move — and exact-Jaccard verification rebuilds
-    shingle sets ONLY for docs that appear in a candidate pair (semi-
-    joined on both sides), so a 100 TB corpus contributes a few rows per
-    match, not a scan. Output has no false positives (every candidate is
-    exact-verified); false-negative probability is the banding bound
-    1-(1-j^r)^b, identical to `minhash_lsh_pairs`.
+    the batch's bands move — and exact-Jaccard verification fetches sets
+    ONLY for docs that appear in a candidate pair (semi-joined on both
+    sides). Output has no false positives; false-negative probability is
+    the banding bound 1-(1-j^r)^b, identical to `minhash_lsh_pairs`.
 
     Within-batch duplicates are NOT reported — run `minhash_lsh_pairs`
     on the batch for that (cheap: the batch is small); this operator's
     contract is strictly batch-vs-corpus.
-
-    The corpus side can be given three ways: raw docs (`corpus` — index
-    and verification sets built here), a stored `index` (bands reused,
-    verification rebuilt from `corpus`), or fully doc-free: `index` +
-    `sketches` ((doc_id, sh_set) rows, e.g. `shingle_sketches` persisted
-    at ingest) — then the original corpus TEXT is never needed at all,
-    which is the streaming-ingest shape (streaming/dedup_ingest.py).
     """
-    if corpus is None and (index is None or sketches is None):
-        raise ValueError(
-            "minhash_lsh_incremental needs either `corpus` docs or both "
-            "`index` and `sketches`"
-        )
-    if index is None:
-        index = lsh_band_index(
-            corpus, id_col=id_col, text_col=text_col, n=n,
-            num_hashes=num_hashes, band_size=band_size,
-            max_bucket=max_bucket,
-        )
     new_bands = lsh_band_index(
-        new_docs, id_col=id_col, text_col=text_col, n=n,
-        num_hashes=num_hashes, band_size=band_size, max_bucket=max_bucket,
+        new_sets, num_hashes=num_hashes, band_size=band_size,
+        max_bucket=max_bucket,
     )
-    cand = (
-        new_bands.alias("a")
-        .join(index.alias("b"), ["band", "bkey"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_new"),
-            F.col("b.doc_id").alias("doc_old"),
-        )
-        .distinct()
-        # two consumers below (each side's id restriction) + the final
-        # pair join — materialize the small candidate set once
-        .localCheckpoint()
-    )
-    new_ids = cand.select(F.col("doc_new").alias(id_col)).distinct()
-    old_ids = cand.select(F.col("doc_old").alias(id_col)).distinct()
-    new_sets = _shingle_sets(
-        new_docs.join(F.broadcast(new_ids), id_col, "semi"), id_col, text_col, n
-    ).select(F.col("doc_id").alias("doc_new"), F.col("sh_set").alias("set_n"))
-    if sketches is not None:
-        old_sets = sketches.join(F.broadcast(old_ids), id_col, "semi").select(
-            F.col("doc_id").alias("doc_old"), F.col("sh_set").alias("set_o")
-        )
-    else:
-        old_sets = _shingle_sets(
-            corpus.join(F.broadcast(old_ids), id_col, "semi"), id_col, text_col, n
-        ).select(F.col("doc_id").alias("doc_old"), F.col("sh_set").alias("set_o"))
-    inter = F.size(F.array_intersect("set_n", "set_o"))
-    jac = inter.cast("double") / (
-        F.size("set_n") + F.size("set_o") - inter
-    ).cast("double")
-    return (
-        cand.join(new_sets, "doc_new")
-        .join(old_sets, "doc_old")
-        .select("doc_new", "doc_old", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return verified_band_pairs(
+        new_bands, new_sets, index, sketches, threshold=threshold
     )
 
 

@@ -141,7 +141,7 @@ def contamination_prefilter_from_hashes(
     guaranteed UPPER bound on the exact match count (one-sided; the
     audit query pins bloom_matched >= n_matched), so `bloom_matched = 0`
     certifies a doc clean with zero join work — route only the rest
-    through the exact `contamination_score_from_hashes` join. The
+    through the exact `curation.contamination_score` join. The
     bloom-vs-exact audit builds the explode once, checkpoints it, and
     threads it through both.
 

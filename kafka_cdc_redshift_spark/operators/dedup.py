@@ -23,6 +23,16 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: the changelog vocabulary every CDC format emits (sources/envelopes):
+#: the change-type column and its delete code, the event time, and the
+#: arrival position that breaks equal-time ties
+OP_COL = "op"
+DELETE_OP = "d"
+TS_COL = "ts_ms"
+TIEBREAK_COL = "data_index_aws"
+#: the bookkeeping columns that never land in a merged target
+BOOKKEEPING = (OP_COL, TS_COL, TIEBREAK_COL)
+
 
 def _order_cols(order_by: Sequence[str | Column]) -> list[Column]:
     return [F.col(c).desc() if isinstance(c, str) else c for c in order_by]
@@ -31,7 +41,7 @@ def _order_cols(order_by: Sequence[str | Column]) -> list[Column]:
 def lww_dedup(
     df: DataFrame,
     keys: Sequence[str],
-    order_by: Sequence[str | Column] = ("ts_ms",),
+    order_by: Sequence[str | Column] = (TS_COL,),
 ) -> DataFrame:
     """Keep the last write per key. `order_by` strings mean DESC on that
     column (highest wins); pass Column expressions for custom direction."""
@@ -46,11 +56,8 @@ def lww_dedup(
 def latest_deletes(
     df: DataFrame,
     keys: Sequence[str],
-    order_by: Sequence[str | Column] = ("ts_ms",),
-    *,
-    op_col: str = "op",
-    delete_op: str = "d",
+    order_by: Sequence[str | Column] = (TS_COL,),
 ) -> DataFrame:
     """Last delete image per key (save_delete / only_save_delete modes,
     cdc_util/redshift_sink.py:213-227): pre-filter to deletes, then LWW."""
-    return lww_dedup(df.filter(F.col(op_col) == delete_op), keys, order_by)
+    return lww_dedup(df.filter(F.col(OP_COL) == DELETE_OP), keys, order_by)

@@ -43,7 +43,7 @@ from operator import or_
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import lww_dedup
+from .dedup import BOOKKEEPING, DELETE_OP, OP_COL, TIEBREAK_COL, TS_COL, lww_dedup
 
 
 def merge_changes(
@@ -51,10 +51,8 @@ def merge_changes(
     updates: DataFrame,
     keys: Sequence[str],
     *,
-    op_col: str = "op",
-    delete_op: str = "d",
     skip_delete: bool = False,
-    order_by: Sequence[str] = ("ts_ms",),
+    order_by: Sequence[str] = (TS_COL,),
     dedup_updates: bool = True,
     broadcast_updates: bool = False,
 ) -> DataFrame:
@@ -83,7 +81,7 @@ def merge_changes(
         the lineage cheap.
     """
     keys = list(keys)
-    tiebreak = [c for c in ("data_index_aws",) if c in updates.columns]
+    tiebreak = [c for c in (TIEBREAK_COL,) if c in updates.columns]
     order = list(dict.fromkeys([*order_by, *tiebreak]))
 
     if not broadcast_updates:
@@ -91,7 +89,7 @@ def merge_changes(
         u_side = updates.select(
             *target.columns,
             F.lit(1).alias("__is_new"),
-            F.col(op_col).alias("__op"),
+            F.col(OP_COL).alias("__op"),
             *[F.col(c).alias(f"__o_{c}") for c in order],
         )
         t_side = target.select(
@@ -117,7 +115,7 @@ def merge_changes(
         )
         if not skip_delete:
             winners = winners.filter(
-                (F.col("__is_new") == 0) | (F.col("__op") != delete_op)
+                (F.col("__is_new") == 0) | (F.col("__op") != DELETE_OP)
             )
         return winners.select(*target.columns)
 
@@ -125,9 +123,8 @@ def merge_changes(
     survivors = target.join(join_side, on=keys, how="left_anti")
     if dedup_updates:
         updates = lww_dedup(updates, keys, order)
-    incoming = updates if skip_delete else updates.filter(F.col(op_col) != delete_op)
-    drop_cols = [c for c in (op_col, "ts_ms", "data_index_aws") if c in incoming.columns]
-    incoming = incoming.drop(*drop_cols)
+    incoming = updates if skip_delete else updates.filter(F.col(OP_COL) != DELETE_OP)
+    incoming = incoming.drop(*BOOKKEEPING)  # absent columns: no-op
     return survivors.unionByName(incoming.select(*target.columns))
 
 
@@ -135,9 +132,7 @@ def scd2_history(
     changelog: DataFrame,
     keys: Sequence[str],
     *,
-    order_col: str = "ts_ms",
-    op_col: str = "op",
-    delete_op: str = "d",
+    order_col: str = TS_COL,
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Slowly-changing-dimension type-2 history from a flat changelog: one
@@ -164,10 +159,10 @@ def scd2_history(
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         changelog.withColumn("valid_to", F.lead(order_col).over(w))
-        .filter(F.col(op_col) != delete_op)
+        .filter(F.col(OP_COL) != DELETE_OP)
         .withColumn("valid_from", F.col(order_col))
         .withColumn("is_current", F.col("valid_to").isNull())
-        .drop(op_col, order_col, *tiebreak_cols)
+        .drop(OP_COL, order_col, *tiebreak_cols)
     )
 
 
@@ -176,9 +171,7 @@ def scd2_merge_batch(
     batch: DataFrame,
     keys: Sequence[str],
     *,
-    order_col: str = "ts_ms",
-    op_col: str = "op",
-    delete_op: str = "d",
+    order_col: str = TS_COL,
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Incrementally maintain an SCD2 history table from one micro-batch of
@@ -210,8 +203,7 @@ def scd2_merge_batch(
     batch-local. `history=None` bootstraps from empty.
     """
     new_versions = scd2_history(
-        batch, keys, order_col=order_col, op_col=op_col, delete_op=delete_op,
-        tiebreak_cols=tiebreak_cols,
+        batch, keys, order_col=order_col, tiebreak_cols=tiebreak_cols,
     )
     first_ts = batch.groupBy(*[F.col(k) for k in keys]).agg(
         F.min(order_col).alias("__batch_start")

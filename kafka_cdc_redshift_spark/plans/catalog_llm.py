@@ -274,7 +274,8 @@ def q_dedup_exact(spark, sf_dir):
     SELECT doc_a, doc_b, jaccard FROM pj WHERE jaccard >= 0.5""",
 )
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    return dedup_text.jaccard_pairs(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup_text.jaccard_pairs(dedup_text.shingle_sketches(docs))
 
 
 @_spec(
@@ -293,7 +294,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 )
 def q_dedup_clusters(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup_text.jaccard_pairs(docs)
+    pairs = dedup_text.jaccard_pairs(dedup_text.shingle_sketches(docs))
     return dedup_text.duplicate_clusters(docs, pairs)
 
 
@@ -346,7 +347,11 @@ _MINHASH_ORACLE = _minhash_oracle()
     _MINHASH_ORACLE,
 )
 def q_dedup_minhash_lsh(spark, sf_dir):
-    return dedup_text.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+    docs = load_table(spark, sf_dir, "documents")
+    # two consumers read the sets (signatures, candidate verification):
+    # materialize them once instead of re-shingling the corpus
+    sets_ = dedup_text.shingle_sketches(docs).localCheckpoint(eager=False)
+    return dedup_text.minhash_lsh_pairs(sets_)
 
 
 def _minhash_incremental_oracle(num_hashes: int = 12, band_size: int = 2) -> str:
@@ -401,9 +406,16 @@ SELECT doc_new, doc_old, jaccard FROM j WHERE jaccard >= 0.5"""
 )
 def q_dedup_lsh_incremental(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return dedup_text.minhash_lsh_incremental(new, corpus)
+    new = dedup_text.shingle_sketches(docs.filter(F.col("doc_id") % 10 == 0))
+    # the index build and the candidate verification both read the corpus
+    # sets: materialize them once. The batch side is small enough that
+    # re-shingling it costs less than a checkpoint (measured at sf0.1)
+    corpus = dedup_text.shingle_sketches(
+        docs.filter(F.col("doc_id") % 10 != 0)
+    ).localCheckpoint(eager=False)
+    return dedup_text.minhash_lsh_incremental(
+        new, dedup_text.lsh_band_index(corpus), corpus
+    )
 
 
 def _simhash_oracle(bits: int = 16) -> str:
@@ -833,7 +845,8 @@ def q_emb_normalize(spark, sf_dir):
 )
 def q_dedup_keep_one(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    clusters = dedup_text.duplicate_clusters(docs, dedup_text.jaccard_pairs(docs))
+    pairs = dedup_text.jaccard_pairs(dedup_text.shingle_sketches(docs))
+    clusters = dedup_text.duplicate_clusters(docs, pairs)
     return curation.keep_canonical(docs, clusters)
 
 
@@ -1208,22 +1221,20 @@ SELECT (SELECT count(*) FROM pe) AS n_exact,
 )
 def q_dedup_minhash_eval(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    # ONE shingle relation for both pipelines (r13, guide §2.2): the
-    # exact-jaccard and LSH pipelines each used to tokenize+shingle the
-    # corpus themselves; build the (doc_id, sh_set) relation once,
-    # materialize it, and thread it through the *_from_sets variants —
-    # the LSH verification leg also stops re-reading the corpus text
-    # (it semi-joins the same materialized sets on candidate ids)
+    # ONE shingle relation for both pipelines: build the (doc_id, sh_set)
+    # relation once, materialize it, and hand it to both — the LSH
+    # verification leg semi-joins the same materialized sets on
+    # candidate ids instead of re-reading the corpus text
     sets_ = dedup_text.shingle_sketches(docs).localCheckpoint(eager=False)
     # each pair set feeds two consumers (its own count + the overlap join);
     # materialize the tiny pair relations once instead of replaying the
     # full jaccard/LSH pipelines per consumer
     exact = (
-        dedup_text.jaccard_pairs_from_sets(sets_).select("doc_a", "doc_b")
+        dedup_text.jaccard_pairs(sets_).select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )
     lsh = (
-        dedup_text.minhash_lsh_pairs_from_sets(sets_)
+        dedup_text.minhash_lsh_pairs(sets_)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )
@@ -1369,7 +1380,9 @@ def q_doc_chunk_dedup(spark, sf_dir):
 def q_doc_contamination(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 97 == 0)
-    return curation.contamination_score(docs, eval_df)
+    return curation.contamination_score(
+        curation.doc_shingle_hashes(docs), curation.eval_shingle_hashes(eval_df)
+    )
 
 
 @_spec(
@@ -1430,7 +1443,9 @@ def q_curation_pipeline_v2(spark, sf_dir):
     kept = docs.join(keep_ids, "doc_id", "left_semi")
     ev = docs.filter(F.col("doc_id") % 97 == 0)
     clean_ids = (
-        curation.contamination_score(kept, ev)
+        curation.contamination_score(
+            curation.doc_shingle_hashes(kept), curation.eval_shingle_hashes(ev)
+        )
         .filter(F.col("contamination") < 0.5)
         .select("doc_id")
     )
@@ -1649,7 +1664,8 @@ def q_text_repeated_spans(spark, sf_dir):
 )
 def q_dedup_keep_best(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    clusters = dedup_text.duplicate_clusters(docs, dedup_text.jaccard_pairs(docs))
+    pairs = dedup_text.jaccard_pairs(dedup_text.shingle_sketches(docs))
+    clusters = dedup_text.duplicate_clusters(docs, pairs)
     return curation.keep_best(docs, clusters, score_col="n_chars")
 
 
@@ -1745,7 +1761,7 @@ def q_doc_contamination_bloom(spark, sf_dir):
     evh = curation.eval_shingle_hashes(eval_df).localCheckpoint(eager=False)
     bloom = membership.bloom_from_hashes(evh, "gh")
     pre = membership.contamination_prefilter_from_hashes(tr, bloom)
-    exact = curation.contamination_score_from_hashes(tr, evh).select(
+    exact = curation.contamination_score(tr, evh).select(
         "doc_id", "n_matched"
     )
     return pre.join(exact, "doc_id").select(
@@ -2768,8 +2784,9 @@ def q_doc_temperature_mix(spark, sf_dir):
                    CAST(inter AS DOUBLE) / CAST(sz_b AS DOUBLE)) >= 0.6""",
 )
 def q_dedup_containment(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
     return dedup_text.containment_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.6
+        dedup_text.shingle_sketches(docs), threshold=0.6
     )
 
 

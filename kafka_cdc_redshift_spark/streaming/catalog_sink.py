@@ -29,7 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from .sinks import DELETE_OP, OP_COL
+from ..operators.dedup import DELETE_OP, OP_COL
 
 
 class TransactionalTableUnavailable(RuntimeError):

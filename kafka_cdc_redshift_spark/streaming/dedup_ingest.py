@@ -3,25 +3,29 @@ CDC document stream — inserts, UPDATES, and DELETES — against the
 standing corpus, doc-free.
 
 This is the crawl-ingest shape the batch operators in
-`functions/dedup_text.py` were built for, wired into a micro-batch loop:
-each arriving batch is
+`functions/dedup_text.py` were built for, wired into a micro-batch loop.
+Each arriving batch is shingled once (`shingle_sketches`) and signed
+once (`lsh_band_index`); those two relations are materialized and every
+step below reads them:
 
-  1. deduped AGAINST THE CORPUS via `minhash_lsh_incremental` in doc-free
-     mode — the corpus is represented only by its persisted band index
-     ((doc_id, band, bkey)) and shingle sketches ((doc_id, sh_set)); the
-     original corpus text is never re-read, let alone re-signed. The
-     corpus view is TOMBSTONE-RESOLVED (streaming/tombstones.py): a
-     batch never pairs against the superseded bands of a document it —
-     or an earlier batch — updated or deleted,
-  2. deduped WITHIN ITSELF via `minhash_lsh_pairs` (the incremental
-     operator's contract is strictly batch-vs-corpus; skipping this would
-     silently admit intra-batch near-dups),
-  3. folded into the corpus state: its band rows and sketches APPEND to
-     the standing tables through `AppendLog`'s atomic per-batch commit —
-     O(|batch|) written per ingest, the standing state never rewritten
-     on the hot path — and its updated/deleted keys land as O(|batch|)
-     tombstones, applied lazily at read and physically at
-     `compact_state` (the merge-on-read fold).
+  1. deduped AGAINST THE CORPUS through `verified_band_pairs` (the body
+     of `minhash_lsh_incremental`) — the corpus is represented only by
+     its persisted band index ((doc_id, band, bkey)) and shingle sketches
+     ((doc_id, sh_set)); the original corpus text is never re-read, let
+     alone re-signed. The corpus view is TOMBSTONE-RESOLVED
+     (streaming/tombstones.py): a batch never pairs against the
+     superseded bands of a document it — or an earlier batch — updated
+     or deleted,
+  2. deduped WITHIN ITSELF from the same bands (the body of
+     `minhash_lsh_pairs`; the incremental contract is strictly
+     batch-vs-corpus, so skipping this would silently admit intra-batch
+     near-dups),
+  3. folded into the corpus state: its bands and sets APPEND to the
+     standing band and sketch tables through `AppendLog`'s atomic
+     per-batch commit — O(|batch|) written per ingest, the standing
+     state never rewritten on the hot path — and its updated/deleted
+     keys land as O(|batch|) tombstones, applied lazily at read and
+     physically at `compact_state` (the merge-on-read fold).
 
 Replaying the stream batch-by-batch reports EXACTLY the pair set of a
 one-shot `minhash_lsh_pairs` rebuild over the FINAL corpus (every cross-
@@ -57,11 +61,10 @@ from pyspark.sql import functions as F
 
 from ..functions.dedup_text import (
     DEFAULT_MAX_DF,
-    containment_pairs_from_sets,
+    containment_pairs,
     lsh_band_index,
-    minhash_lsh_incremental,
-    minhash_lsh_pairs,
     shingle_sketches,
+    verified_band_pairs,
 )
 from .store import AppendLog, write_json_atomic
 from .tombstones import (
@@ -134,13 +137,6 @@ class DedupIngest:
     @property
     def dead_table(self) -> str:
         return self._dead.table
-
-    def _lsh_kwargs(self) -> dict:
-        return dict(
-            id_col=self.id_col, text_col=self.text_col, n=self.n,
-            num_hashes=self.num_hashes, band_size=self.band_size,
-            threshold=self.threshold, max_bucket=self.max_bucket,
-        )
 
     # -- LSH-parameter manifest --------------------------------------------
     # The band layout is VALUE-compatible only under identical parameters:
@@ -243,16 +239,21 @@ class DedupIngest:
         self.log.check_no_maintenance(self.name)
         self._check_or_adopt_params()
         spark = batch_df.sparkSession
-        # several consumers (cross pairs, within pairs, bands, sketches)
-        # — materialize the rate-limited batch once
-        batch = batch_df.select(self.id_col, self.text_col).localCheckpoint()
+        # the batch's sets and bands are built once: both feed the cross
+        # and within pairs and land as the batch's sketches and bands
+        sets_ = shingle_sketches(
+            batch_df, id_col=self.id_col, text_col=self.text_col, n=self.n
+        ).localCheckpoint()
+        bands = lsh_band_index(
+            sets_, num_hashes=self.num_hashes, band_size=self.band_size,
+            max_bucket=self.max_bucket,
+        ).localCheckpoint()
         if tombstones is not None:
             tombstones = tombstones.select(
                 F.col(self.id_col).alias("doc_id")
             ).distinct().localCheckpoint()
         self._dead.append(tombstones, batch_id)
 
-        kw = self._lsh_kwargs()
         index = self._corpus_view(
             spark, self.bands_table, batch_id, tombstones
         )
@@ -261,8 +262,8 @@ class DedupIngest:
         )
         pairs = None
         if index is not None and sketches is not None:
-            cross = minhash_lsh_incremental(
-                batch, index=index, sketches=sketches, **kw
+            cross = verified_band_pairs(
+                bands, sets_, index, sketches, threshold=self.threshold
             )
             # normalize orientation to (doc_a < doc_b) so the streamed
             # union is set-comparable with a one-shot rebuild
@@ -271,7 +272,7 @@ class DedupIngest:
                 F.greatest("doc_new", "doc_old").alias("doc_b"),
                 "jaccard",
             )
-        intra = minhash_lsh_pairs(batch, **kw)
+        intra = verified_band_pairs(bands, sets_, threshold=self.threshold)
         pairs = intra if pairs is None else pairs.unionByName(intra)
         self.log.append(
             stamp_seq(
@@ -280,26 +281,9 @@ class DedupIngest:
             ),
             self.pairs_table, batch_id,
         )
+        self.log.append(stamp_seq(bands, batch_id), self.bands_table, batch_id)
         self.log.append(
-            stamp_seq(
-                lsh_band_index(
-                    batch, id_col=self.id_col, text_col=self.text_col,
-                    n=self.n, num_hashes=self.num_hashes,
-                    band_size=self.band_size, max_bucket=self.max_bucket,
-                ),
-                batch_id,
-            ),
-            self.bands_table, batch_id,
-        )
-        self.log.append(
-            stamp_seq(
-                shingle_sketches(
-                    batch, id_col=self.id_col, text_col=self.text_col,
-                    n=self.n,
-                ),
-                batch_id,
-            ),
-            self.sketches_table, batch_id,
+            stamp_seq(sets_, batch_id), self.sketches_table, batch_id
         )
 
     def _resolve_pairs(
@@ -336,12 +320,11 @@ class DedupIngest:
         max_df: int | None = DEFAULT_MAX_DF,
     ) -> DataFrame:
         """Asymmetric containment near-dups of the LIVE corpus, served
-        from the STANDING verification sketches — the streamed twin of
+        from the STANDING verification sketches through
         functions/dedup_text.containment_pairs: the corpus is never
         re-read or re-shingled (the sketches were persisted at ingest),
-        tombstone resolution drops superseded/deleted documents first,
-        and the reduction is the same single shingle-keyed posting-list
-        SMJ with the load-bearing hot-shingle cut. Unlike the LSH pair
+        and tombstone resolution drops superseded/deleted documents
+        before the operator's posting-list join. Unlike the LSH pair
         stream (find-at-ingest, incremental), containment is a RELATION
         over the whole live corpus — a quote becomes containing only
         relative to what else is live — so it serves as a snapshot scan
@@ -353,7 +336,7 @@ class DedupIngest:
             raise ValueError(
                 f"dedup state {self.name!r} has no ingested batches"
             )
-        return containment_pairs_from_sets(
+        return containment_pairs(
             sk.drop(SEQ_COL), threshold=threshold, max_df=max_df
         )
 
@@ -489,17 +472,24 @@ class DedupIngest:
                 f"for live doc ids of {self.name!r} — supply exactly one "
                 "(latest) text per document"
             )
-        if new["n"] == self.n:
-            chk = shingle_sketches(
+        seqmap = live_sk.select("doc_id", SEQ_COL)
+        # the corpus's sets and bands are built once: the drift check, the
+        # one-shot pairs and the swapped-in tables all read them. Both are
+        # checkpointed BEFORE any swap: their lineage reads the standing
+        # tables, whose old segment dirs are deleted as each compact commits
+        new_sk = (
+            shingle_sketches(
                 corpus_live, id_col=self.id_col, text_col=self.text_col,
-                n=self.n,
+                n=new["n"],
             )
+            .join(seqmap, "doc_id")
+            .localCheckpoint()
+        )
+        sets_ = new_sk.drop(SEQ_COL)
+        if new["n"] == self.n:
             drift = (
                 live_sk.select("doc_id", "sh_set")
-                .join(
-                    chk.select("doc_id", F.col("sh_set").alias("__r")),
-                    "doc_id",
-                )
+                .join(sets_.select("doc_id", F.col("sh_set").alias("__r")), "doc_id")
                 .filter(
                     F.size(F.array_except("sh_set", "__r"))
                     + F.size(F.array_except("__r", "sh_set"))
@@ -515,32 +505,16 @@ class DedupIngest:
                     "this index indexed; bands from drifted text would "
                     "be silently wrong"
                 )
-        seqmap = live_sk.select("doc_id", SEQ_COL)
-        kw = dict(
-            id_col=self.id_col, text_col=self.text_col, n=new["n"],
-            num_hashes=new["num_hashes"], band_size=new["band_size"],
-        )
-        # checkpoint all three rebuilds BEFORE any swap: their lineage
-        # reads the standing tables, whose old segment dirs are deleted
-        # as each compact commits
-        new_sk = (
-            shingle_sketches(
-                corpus_live, id_col=self.id_col, text_col=self.text_col,
-                n=new["n"],
-            )
-            .join(seqmap, "doc_id")
-            .localCheckpoint()
-        )
         new_bands = (
             lsh_band_index(
-                corpus_live, max_bucket=new["max_bucket"], **kw
+                sets_, num_hashes=new["num_hashes"],
+                band_size=new["band_size"], max_bucket=new["max_bucket"],
             )
             .join(seqmap, "doc_id")
             .localCheckpoint()
         )
-        oneshot = minhash_lsh_pairs(
-            corpus_live, threshold=new["threshold"],
-            max_bucket=new["max_bucket"], **kw,
+        oneshot = verified_band_pairs(
+            new_bands.drop(SEQ_COL), sets_, threshold=new["threshold"]
         )
         sa = seqmap.select(
             F.col("doc_id").alias("doc_a"), F.col(SEQ_COL).alias("__sa")

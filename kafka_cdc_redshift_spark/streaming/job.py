@@ -32,7 +32,13 @@ from pyspark.sql import functions as F
 from ..config import SyncRule
 from ..functions import incremental as inc
 from ..functions.membership import bloom_from_hashes, merge_blooms
-from ..operators.dedup import latest_deletes, lww_dedup
+from ..operators.dedup import (
+    BOOKKEEPING,
+    TIEBREAK_COL,
+    TS_COL,
+    latest_deletes,
+    lww_dedup,
+)
 from ..operators.merge import merge_changes, scd2_merge_batch
 from ..operators.normalize import route_parse
 from ..operators.schema_evolution import cast_to_target, diff_schemas
@@ -112,6 +118,17 @@ def _derived_folds(
     ):
         state = [e for e in _STATE_FOLDS if getattr(rule, e[1])]
     return event, state
+
+
+def _sink_ignored_flags(
+    rule: SyncRule, spec: envelopes.CdcFormat
+) -> list[str]:
+    """The rule's flags whose tables live in the engine store: SCD2
+    history, the derived stats folds and the derived-state ingests."""
+    event, state = _derived_folds(rule, spec)
+    flags = ["scd2_history"] if rule.scd2_history else []
+    flags += dict.fromkeys(e[1] for e in event + state)
+    return flags + [k for k in _INGESTS if getattr(rule, k)]
 
 
 _JOB_GROUP_KEYS = (
@@ -251,7 +268,19 @@ class CdcBatchProcessor:
         # external JDBC target (JdbcMergeSink): the warehouse runs the merge
         # transaction (stage -> DELETE USING -> INSERT re-deduped), so the
         # in-engine target merge is skipped — parity with the reference's
-        # Redshift write path (cdc_util/redshift_sink.py:477-527)
+        # Redshift write path (cdc_util/redshift_sink.py:477-527). Such a
+        # sink syncs the target and its delete log only: a rule whose flags
+        # promise engine-side tables is refused rather than half-synced
+        if jdbc_sink is not None:
+            for rule in rules:
+                ignored = _sink_ignored_flags(rule, self._format)
+                if ignored:
+                    raise ValueError(
+                        f"rule {rule.target_name!r}: an external sink syncs "
+                        "only the target and its delete log, so "
+                        f"{', '.join(ignored)} would never be written; drop "
+                        "these flags or the sink"
+                    )
         self.jdbc_sink = jdbc_sink
         # periodic small-file compaction (operators/layout.py): every batch
         # publish writes a fresh file-set, so long-running jobs accrue tiny
@@ -472,15 +501,14 @@ class CdcBatchProcessor:
                 parsed = self._apply_quality_gate(parsed, rule, batch_id)
 
             # every CDC format emits ts_ms; data_index_aws breaks its ties
-            order = ["ts_ms"] + (
-                ["data_index_aws"] if "data_index_aws" in parsed.columns else []
+            order = [TS_COL] + (
+                [TIEBREAK_COL] if TIEBREAK_COL in parsed.columns else []
             )
             n = 0
             if self.jdbc_sink is not None:
                 if not rule.only_save_delete:
                     updates = lww_dedup(parsed, list(rule.primary_key), order)
-                    if "data_index_aws" in updates.columns:
-                        updates = updates.drop("data_index_aws")  # P4
+                    updates = updates.drop(TIEBREAK_COL)  # P4; absent: no-op
                     self.jdbc_sink.apply_batch(
                         updates, db=rule.db, table=rule.target_name,
                         keys=list(rule.primary_key),
@@ -504,7 +532,7 @@ class CdcBatchProcessor:
                     if base is not None:
                         updates = cast_to_target(
                             updates, base.schema,
-                            passthrough=("op", "ts_ms", "data_index_aws"),
+                            passthrough=BOOKKEEPING,
                         )
                 self.store.publish_delta(
                     updates, rule.target_name, batch_id,
@@ -522,9 +550,8 @@ class CdcBatchProcessor:
                 updates = parsed
                 target = self.store.read(self.spark, rule.target_name)
                 if target is not None:
-                    bookkeeping = {"op", "ts_ms", "data_index_aws"}
                     incoming = T.StructType(
-                        [f for f in updates.schema.fields if f.name not in bookkeeping]
+                        [f for f in updates.schema.fields if f.name not in BOOKKEEPING]
                     )
                     if rule.ignore_ddl:
                         # fixed-schema mode: cast incoming to the target's
@@ -532,7 +559,7 @@ class CdcBatchProcessor:
                         # columns null-filled with the target's types
                         # (redshift_schema_evolution.py:137-155)
                         updates = cast_to_target(
-                            updates, target.schema, passthrough=tuple(bookkeeping)
+                            updates, target.schema, passthrough=BOOKKEEPING
                         )
                     else:
                         # schema evolution: ADD new columns to the target
@@ -552,9 +579,7 @@ class CdcBatchProcessor:
                     out = lww_dedup(updates, list(rule.primary_key), order)
                     if not rule.skip_delete:
                         out = out.filter("op != 'd'")
-                    out = out.drop(
-                        *[c for c in ("op", "ts_ms", "data_index_aws") if c in out.columns]
-                    )
+                    out = out.drop(*BOOKKEEPING)  # absent columns: no-op
                 else:
                     out = merge_changes(
                         target,

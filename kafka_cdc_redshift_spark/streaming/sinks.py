@@ -31,6 +31,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from ..operators.dedup import DELETE_OP, OP_COL
+
 
 class JdbcUnavailable(RuntimeError):
     pass
@@ -200,12 +202,6 @@ def is_object_store_path(path: str) -> bool:
 
 def _q(ident: str) -> str:
     return '"' + ident.replace('"', '""') + '"'  # quoted identifiers (P6)
-
-
-#: the staged batch's change-type column and its delete-image value; the
-#: op column is never written to the target (P5)
-OP_COL = "op"
-DELETE_OP = "d"
 
 
 def stage_table_name(db: str, table: str) -> str:

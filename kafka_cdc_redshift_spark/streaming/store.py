@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dedup import BOOKKEEPING, DELETE_OP, OP_COL, TS_COL
+
 
 def write_json_atomic(path: str, obj) -> None:
     """Write `obj` as JSON to `path` so a reader sees the old file or the
@@ -161,16 +163,18 @@ class ParquetTargetStore:
                 deltas.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
             )
-            if not cfg.get("skip_delete", False) and "op" in res.columns:
-                res = res.filter(F.col("op").isNull() | (F.col("op") != "d"))
-            return res.drop("__rn", "__seq", *self._BOOK)  # absent: no-op
+            if not cfg.get("skip_delete", False) and OP_COL in res.columns:
+                res = res.filter(
+                    F.col(OP_COL).isNull() | (F.col(OP_COL) != DELETE_OP)
+                )
+            return res.drop("__rn", "__seq", *BOOKKEEPING)  # absent: no-op
         deltas = deltas.drop("__seq")
         if cfg["kind"] == "scd2":
             from ..operators.merge import scd2_merge_batch
 
             return scd2_merge_batch(
                 base, deltas, cfg["keys"],
-                order_col=cfg.get("order_col", "ts_ms"),
+                order_col=cfg.get("order_col", TS_COL),
                 tiebreak_cols=[
                     c for c in cfg.get("tiebreak", ()) if c in deltas.columns
                 ],
@@ -794,8 +798,9 @@ class MergeOnReadTargetStore(ParquetTargetStore):
     the batch. Here a batch instead commits its LWW-deduped changelog
     (`publish_delta`) or its raw SCD2 events (`publish_scd2_delta`) as a
     delta, O(|batch|) written, and `read` resolves base ∪ deltas lazily;
-    bookkeeping columns (`_BOOK`) never surface. `fold_deltas` pays the
-    copy-on-write cost once per N batches instead of every batch — the
+    the changelog bookkeeping columns (`operators.dedup.BOOKKEEPING`)
+    never surface. `fold_deltas` pays the copy-on-write cost once per N
+    batches instead of every batch — the
     copy-on-write vs merge-on-read trade a transactional table format
     (Hudi/Iceberg/Delta) exposes, under the same atomic-pointer publish.
 
@@ -807,7 +812,6 @@ class MergeOnReadTargetStore(ParquetTargetStore):
     """
 
     _DELTA_DIR = "_delta"
-    _BOOK = ("op", "ts_ms", "data_index_aws")
 
     def publish_delta(
         self, updates: DataFrame, table: str, batch_id, *,

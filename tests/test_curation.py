@@ -117,20 +117,17 @@ def test_jaccard_stop_shingle_cut_preserves_recall(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from kafka_cdc_redshift_spark.functions import dedup_text
-    from kafka_cdc_redshift_spark.functions.dedup_text import (
-        _shingle_sets,
-    )
 
-    d = docs(spark, sf_dir)
+    sets_ = dedup_text.shingle_sketches(docs(spark, sf_dir))
     exact = {(r.doc_a, r.doc_b)
-             for r in dedup_text.jaccard_pairs(d, max_df=None).collect()}
+             for r in dedup_text.jaccard_pairs(sets_, max_df=None).collect()}
     assert exact  # corpus contains synthetic near-dups
 
-    default = {(r.doc_a, r.doc_b) for r in dedup_text.jaccard_pairs(d).collect()}
+    default = {(r.doc_a, r.doc_b)
+               for r in dedup_text.jaccard_pairs(sets_).collect()}
     assert default == exact
 
     # an aggressive cut that provably DROPS shingles still finds every pair
-    sets_ = _shingle_sets(d, "doc_id", "text", 3)
     df_counts = (
         sets_.select(F.explode("sh_set").alias("sh"))
         .groupBy("sh").count()
@@ -138,7 +135,7 @@ def test_jaccard_stop_shingle_cut_preserves_recall(spark, sf_dir):
     n_cut = df_counts.filter(F.col("count") > 8).count()
     assert n_cut > 0, "test corpus has no shingle with df > 8; pick a lower cut"
     active = {(r.doc_a, r.doc_b)
-              for r in dedup_text.jaccard_pairs(d, max_df=8).collect()}
+              for r in dedup_text.jaccard_pairs(sets_, max_df=8).collect()}
     assert active == exact
 
 
@@ -175,25 +172,6 @@ def test_chunk_documents_covers_every_token_with_overlap(spark, sf_dir):
         # last chunk reaches the end of the doc
         last = chunks[len(chunks) - 1]
         assert (len(chunks) - 1) * stride + last.n_chunk_tokens == len(toks)
-
-
-def test_jaccard_cut_strategies_agree(spark, sf_dir):
-    """'window' (shared-shuffle df count) and 'prefilter' (broadcast-anti
-    hot set) are two physical plans for the same cut — identical output."""
-    from kafka_cdc_redshift_spark.functions import dedup_text
-
-    d = docs(spark, sf_dir)
-    win = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 12))
-        for r in dedup_text.jaccard_pairs(d, max_df=6, cut_strategy="window").collect()
-    }
-    pre = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 12))
-        for r in dedup_text.jaccard_pairs(
-            d, max_df=6, cut_strategy="prefilter"
-        ).collect()
-    }
-    assert win == pre and win
 
 
 # ---------------------------------------------------------------------------
@@ -242,7 +220,9 @@ def test_chunk_dedup_flags_verbatim_copies(spark):
 def test_contamination_score_bounds_and_eval_self_hit(spark, sf_dir):
     d = docs(spark, sf_dir)
     ev = d.filter(F.col("doc_id") % 97 == 0)
-    out = curation.contamination_score(d, ev).collect()
+    out = curation.contamination_score(
+        curation.doc_shingle_hashes(d), curation.eval_shingle_hashes(ev)
+    ).collect()
     eval_ids = {r.doc_id for r in ev.select("doc_id").collect()}
     for r in out:
         assert 0 <= r.n_matched <= r.n_shingles
@@ -375,8 +355,8 @@ def test_incremental_lsh_bucketed_index_no_index_shuffle(spark, sf_dir, tmp_path
     from kafka_cdc_redshift_spark.functions import dedup_text
 
     docs = load_table(spark, sf_dir, "documents")
-    new = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    new = dedup_text.shingle_sketches(docs.filter(F.col("doc_id") % 10 == 0))
+    corpus = dedup_text.shingle_sketches(docs.filter(F.col("doc_id") % 10 != 0))
 
     idx = dedup_text.lsh_band_index(corpus)
     name = "lsh_idx_bucketed_test"
@@ -388,8 +368,8 @@ def test_incremental_lsh_bucketed_index_no_index_shuffle(spark, sf_dir, tmp_path
     )
     try:
         stored = spark.table(name)
-        got = dedup_text.minhash_lsh_incremental(new, corpus, index=stored)
-        want = dedup_text.minhash_lsh_incremental(new, corpus)
+        got = dedup_text.minhash_lsh_incremental(new, stored, corpus)
+        want = dedup_text.minhash_lsh_incremental(new, idx, corpus)
         key = lambda r: (r.doc_new, r.doc_old, round(r.jaccard, 9))  # noqa: E731
         assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
 
@@ -433,13 +413,13 @@ def test_lsh_hot_bucket_cap_recall_and_degenerate(spark, sf_dir):
     is hot at test SF), and a degenerate cap of 1 kills every candidate."""
     from kafka_cdc_redshift_spark.functions import dedup_text
 
-    docs = load_table(spark, sf_dir, "documents")
+    sets_ = dedup_text.shingle_sketches(load_table(spark, sf_dir, "documents"))
     key = lambda r: (r.doc_a, r.doc_b, round(r.jaccard, 9))  # noqa: E731
-    base = sorted(map(key, dedup_text.minhash_lsh_pairs(docs).collect()))
+    base = sorted(map(key, dedup_text.minhash_lsh_pairs(sets_).collect()))
     capped = sorted(map(key, dedup_text.minhash_lsh_pairs(
-        docs, max_bucket=1000).collect()))
+        sets_, max_bucket=1000).collect()))
     assert capped == base and base  # generous cap: pair set unchanged
-    assert dedup_text.minhash_lsh_pairs(docs, max_bucket=1).count() == 0
+    assert dedup_text.minhash_lsh_pairs(sets_, max_bucket=1).count() == 0
 
 
 def test_pq_trained_codebooks(spark, sf_dir):
@@ -568,19 +548,19 @@ def test_containment_pairs_catches_embedded_doc(spark):
         + short
         + " thirteen fourteen fifteen sixteen seventeen eighteen nineteen"
     )
-    docs = spark.createDataFrame(
+    sets_ = dedup_text.shingle_sketches(spark.createDataFrame(
         [(1, short), (2, long_), (3, "unrelated words entirely different here")],
         "doc_id long, text string",
-    )
+    ))
     got = {(r.doc_a, r.doc_b): r
-           for r in dedup_text.containment_pairs(docs, threshold=0.8).collect()}
+           for r in dedup_text.containment_pairs(sets_, threshold=0.8).collect()}
     assert set(got) == {(1, 2)}
     r = got[(1, 2)]
     assert r.containment_a == 1.0          # every shingle of 1 is in 2
     assert r.containment_b < 0.5           # but 2 is mostly NOT 1
     assert r.jaccard < 0.5                 # jaccard would have missed it
     # and jaccard_pairs at its default threshold indeed reports nothing
-    assert dedup_text.jaccard_pairs(docs, threshold=0.5).count() == 0
+    assert dedup_text.jaccard_pairs(sets_, threshold=0.5).count() == 0
 
 
 def test_temperature_mix_flattens_sources(spark):

@@ -14,6 +14,12 @@ from kafka_cdc_redshift_spark.sources import load_table
 from kafka_cdc_redshift_spark.streaming.dedup_ingest import DedupIngest
 from kafka_cdc_redshift_spark.streaming.store import AppendLog
 
+
+def _oneshot_pairs(docs, **kw):
+    """One-shot minhash_lsh_pairs over raw (doc_id, text) rows."""
+    return dedup_text.minhash_lsh_pairs(dedup_text.shingle_sketches(docs), **kw)
+
+
 # multi-minute churn/e2e module: marked slow, but it runs in the default
 # suite like every test; deselect it for a quick loop with -m "not slow"
 pytestmark = pytest.mark.slow
@@ -69,7 +75,7 @@ def docs(spark, sf_dir):
 
 
 def test_streamed_ingest_equals_one_shot_rebuild(spark, docs, tmp_path):
-    want = sorted(map(_pair_key, dedup_text.minhash_lsh_pairs(docs).collect()))
+    want = sorted(map(_pair_key, _oneshot_pairs(docs).collect()))
     assert want, "fixture must contain near-dup pairs for this test to bite"
 
     ing = DedupIngest(AppendLog(str(tmp_path / "state")), name="docs")
@@ -90,7 +96,7 @@ def test_streamed_ingest_within_batch_pairs_found(spark, docs, tmp_path):
     """One batch containing near-dups INSIDE it: the incremental operator
     alone is blind to them (its contract is batch-vs-corpus); the wiring
     must catch them via the batch-local pass."""
-    want = dedup_text.minhash_lsh_pairs(docs).count()
+    want = _oneshot_pairs(docs).count()
     assert want > 0
     ing = DedupIngest(AppendLog(str(tmp_path / "state")), name="docs")
     ing.process_batch(docs, 0)  # whole corpus as ONE batch
@@ -110,6 +116,42 @@ def test_streamed_ingest_replay_is_noop(spark, docs, tmp_path):
     ing.process_batch(b1, 1)
     assert sorted(map(_pair_key, ing.pairs(spark).collect())) == base
     assert ing.log.read(spark, ing.bands_table).count() == n_bands
+
+
+def test_ingest_shingles_and_signs_each_batch_once(
+    spark, docs, tmp_path, monkeypatch
+):
+    """One process_batch against a standing corpus, and one migrate_lsh
+    over the live corpus, build their shingle sets once and their MinHash
+    signatures once: the cross pairs, the within pairs, the appended
+    bands and the sketches all read those two relations."""
+    import kafka_cdc_redshift_spark.streaming.dedup_ingest as di
+
+    calls = {"shingle_sketches": 0, "minhash_signatures": 0}
+
+    def count(module, name):
+        real = getattr(module, name)
+
+        def hooked(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(module, name, hooked)
+
+    for module in (di, dedup_text):
+        count(module, "shingle_sketches")
+    count(dedup_text, "minhash_signatures")
+
+    ing = DedupIngest(AppendLog(str(tmp_path / "state")), name="docs")
+    ing.process_batch(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    calls.update(shingle_sketches=0, minhash_signatures=0)
+    ing.process_batch(docs.filter(F.col("doc_id") % 2 == 1), 1)
+    assert ing.pairs(spark).count() > 0
+    assert calls == {"shingle_sketches": 1, "minhash_signatures": 1}
+
+    calls.update(shingle_sketches=0, minhash_signatures=0)
+    ing.migrate_lsh(docs, num_hashes=18, band_size=3)
+    assert calls == {"shingle_sketches": 1, "minhash_signatures": 1}
 
 
 def test_ingest_partial_commit_heals_on_retry(spark, docs, tmp_path):
@@ -144,7 +186,7 @@ def test_ingest_partial_commit_heals_on_retry(spark, docs, tmp_path):
     ing.process_batch(b1, 1)  # the checkpoint retry
     assert ing.log.has_batch(ing.bands_table, 1)
     assert ing.log.has_batch(ing.sketches_table, 1)
-    want = sorted(map(_pair_key, dedup_text.minhash_lsh_pairs(docs).collect()))
+    want = sorted(map(_pair_key, _oneshot_pairs(docs).collect()))
     assert sorted(map(_pair_key, ing.pairs(spark).collect())) == want
 
 
@@ -203,7 +245,7 @@ def test_e2e_cdc_stream_dedup_ingest(spark, sf_dir, tmp_path):
     ing = proc._ingestor(rules[0], "dedup_ingest")
     got = sorted(map(_pair_key, ing.pairs(spark).collect()))
     want = sorted(
-        map(_pair_key, dedup_text.minhash_lsh_pairs(docs).collect())
+        map(_pair_key, _oneshot_pairs(docs).collect())
     )
     assert got == want and want
     # the latest-state target landed too (dedup ingest rides alongside the
@@ -300,7 +342,7 @@ def test_dedup_ingest_equality_survives_mid_stream_compaction(
     """Ingest, compact the standing state, keep ingesting: the streamed
     pair set still equals the one-shot rebuild, and a replay of a
     pre-compaction batch is still a no-op."""
-    want = sorted(map(_pair_key, dedup_text.minhash_lsh_pairs(docs).collect()))
+    want = sorted(map(_pair_key, _oneshot_pairs(docs).collect()))
     ing = DedupIngest(AppendLog(str(tmp_path / "state")), name="docs")
     ing.process_batch(docs.filter(F.col("doc_id") % 3 == 0), 0)
     ing.process_batch(docs.filter(F.col("doc_id") % 3 == 1), 1)

@@ -184,6 +184,47 @@ class _FakeSecretsClient:
         return self.payload
 
 
+def test_external_sink_refuses_rules_with_engine_side_tables(spark, tmp_path):
+    """An external sink syncs the target and its delete log only, so a
+    rule whose flags promise engine-store tables (SCD2 history, stats
+    folds, derived-state ingests) is refused by name at build time
+    instead of silently never writing them; the flags the sink does
+    honour still build."""
+    redshift = {
+        "target_store_path": str(tmp_path / "store"),
+        "redshift_host": "h", "redshift_port": "5439",
+        "redshift_database": "dev", "redshift_username": "u",
+        "redshift_password": "p",
+    }
+    scd2 = '[{"db": "d", "table": "t", "primary_key": "pid", "scd2_history": true}]'
+    with pytest.raises(ValueError, match=r"rule 't'.*scd2_history"):
+        build_processor(spark, dict(redshift, sync_table_list=scd2))
+
+    catalog = {
+        "target_store_path": str(tmp_path / "store"),
+        "catalog_target_provider": "delta",
+    }
+    derived = json.dumps([{
+        "db": "d", "table": "t", "primary_key": "pid",
+        "stats_group_columns": "g", "stats_value_column": "v",
+        "stats_topk_column": "v", "dedup_ingest": True,
+    }])
+    with pytest.raises(ValueError) as err:
+        build_processor(spark, dict(catalog, sync_table_list=derived))
+    for flag in ("stats_value_column", "stats_topk_column", "dedup_ingest"):
+        assert flag in str(err.value)
+
+    honoured = json.dumps([
+        {"db": "d", "table": "t", "primary_key": "pid",
+         "quality_gate": True, "save_delete": True},
+        {"db": "d", "table": "u", "primary_key": "pid",
+         "only_save_delete": True},
+    ])
+    for props in (redshift, catalog):
+        proc = build_processor(spark, dict(props, sync_table_list=honoured))
+        assert proc.jdbc_sink is not None
+
+
 def test_secrets_source_resolution_order():
     """S8: secret id > env vars > plaintext config
     (reference _get_secret, cdc_util/redshift_sink.py:621-645)."""
@@ -422,7 +463,9 @@ sync_table_list = [\\
     }
     want_pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup_text.minhash_lsh_pairs(seen).collect()
+        for r in dedup_text.minhash_lsh_pairs(
+            dedup_text.shingle_sketches(seen)
+        ).collect()
     }
     assert (100, 101) in got_pairs
     assert got_pairs == want_pairs
@@ -593,7 +636,8 @@ def test_dedup_lsh_params_properties_drivable(spark, tmp_path):
     want = sorted(
         (r.doc_a, r.doc_b, round(r.jaccard, 9))
         for r in dedup_text.minhash_lsh_pairs(
-            corpus, num_hashes=18, band_size=3, threshold=0.4, max_bucket=5
+            dedup_text.shingle_sketches(corpus),
+            num_hashes=18, band_size=3, threshold=0.4, max_bucket=5,
         ).collect()
     )
     assert got == want and (100, 101) in {(a, b) for a, b, _ in got}

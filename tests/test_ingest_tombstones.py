@@ -23,6 +23,12 @@ from kafka_cdc_redshift_spark.streaming.dedup_ingest import DedupIngest
 from kafka_cdc_redshift_spark.streaming.retrieval_ingest import RetrievalIngest
 from kafka_cdc_redshift_spark.streaming.store import AppendLog
 
+
+def _oneshot_pairs(docs, **kw):
+    """One-shot minhash_lsh_pairs over raw (doc_id, text) rows."""
+    return dedup_text.minhash_lsh_pairs(dedup_text.shingle_sketches(docs), **kw)
+
+
 # multi-minute churn/e2e module: marked slow, but it runs in the default
 # suite like every test; deselect it for a quick loop with -m "not slow"
 pytestmark = pytest.mark.slow
@@ -126,7 +132,7 @@ def test_dedup_ingest_tracks_updates_and_deletes(spark, docs, tmp_path):
     got2 = {(r.doc_a, r.doc_b) for r in ing.pairs(spark).collect()}
     assert (2, 11) in got2
     want2 = sorted(map(_pair_key,
-                       dedup_text.minhash_lsh_pairs(_mk(spark, mid.items()))
+                       _oneshot_pairs(_mk(spark, mid.items()))
                        .collect()))
     assert sorted(map(_pair_key, ing.pairs(spark).collect())) == want2
 
@@ -139,7 +145,7 @@ def test_dedup_ingest_tracks_updates_and_deletes(spark, docs, tmp_path):
     final = {k: v for k, v in mid.items() if k != 11}
     final[2] = "qqq www eee rrr ttt unique island"
     want = sorted(map(_pair_key,
-                      dedup_text.minhash_lsh_pairs(_mk(spark, final.items()))
+                      _oneshot_pairs(_mk(spark, final.items()))
                       .collect()))
     got = sorted(map(_pair_key, ing.pairs(spark).collect()))
     assert got == want
@@ -435,7 +441,7 @@ def test_dedup_ingest_serves_containment_through_churn(spark, docs, tmp_path):
     expected = {
         key(r)
         for r in dedup_text.containment_pairs(
-            final_df, threshold=0.5
+            dedup_text.shingle_sketches(final_df), threshold=0.5
         ).collect()
     }
     assert any(a == 2 or b == 2 for a, b, *_ in expected)  # quote found
@@ -710,7 +716,7 @@ def test_dedup_ingest_migrate_lsh_live(spark, docs, tmp_path):
     new_kw = dict(num_hashes=18, band_size=3, threshold=0.4)
     ing.migrate_lsh(live_df, **new_kw)
     want = sorted(map(_pair_key,
-                      dedup_text.minhash_lsh_pairs(live_df, **new_kw)
+                      _oneshot_pairs(live_df, **new_kw)
                       .collect()))
     assert sorted(map(_pair_key, ing.pairs(spark).collect())) == want
     # the manifest now records the new tuning: the OLD parameters refuse
@@ -727,8 +733,7 @@ def test_dedup_ingest_migrate_lsh_live(spark, docs, tmp_path):
     final = dict(live)
     final[5] = t[20]
     want2 = sorted(map(_pair_key,
-                       dedup_text.minhash_lsh_pairs(
-                           _mk(spark, final.items()), **new_kw)
+                       _oneshot_pairs(_mk(spark, final.items()), **new_kw)
                        .collect()))
     assert sorted(map(_pair_key, reopened.pairs(spark).collect())) == want2
 
@@ -902,7 +907,7 @@ def test_migration_single_writer_guard_dedup(spark, docs, tmp_path, monkeypatch)
     healed = DedupIngest(log, name="docs")
     healed.migrate_lsh(_mk(spark, final.items()), **new_kw)
     want = sorted(map(_pair_key,
-                      dedup_text.minhash_lsh_pairs(
+                      _oneshot_pairs(
                           _mk(spark, final.items()), **new_kw).collect()))
     assert sorted(map(_pair_key, healed.pairs(spark).collect())) == want
     assert log.active_maintenance("docs") is None
@@ -1014,7 +1019,7 @@ def test_migration_crash_takeover_requires_force(spark, docs, tmp_path):
     ing.migrate_lsh(live_df, force=True, **new_kw)
     assert log.active_maintenance("docs") is None
     want = sorted(map(_pair_key,
-                      dedup_text.minhash_lsh_pairs(live_df, **new_kw)
+                      _oneshot_pairs(live_df, **new_kw)
                       .collect()))
     assert sorted(map(_pair_key, ing.pairs(spark).collect())) == want
     # ingest resumes under the new tuning
@@ -1065,6 +1070,6 @@ def test_migrate_lsh_holds_marker_after_partial_swap(
     assert log.active_maintenance("docs") is None
     healed = DedupIngest(log, name="docs", **new_kw)
     want = sorted(map(_pair_key,
-                      dedup_text.minhash_lsh_pairs(live_df, **new_kw)
+                      _oneshot_pairs(live_df, **new_kw)
                       .collect()))
     assert sorted(map(_pair_key, healed.pairs(spark).collect())) == want
