@@ -161,14 +161,14 @@ def _lloyd(
     """`iters` assign+update rounds; returns the converged centroid list
     (see `kmeans` for the determinism contract).
 
-    Re-scanning the input per action is DELIBERATE: an r13 A/B probe
-    (plans/r13/probe_kmeans_ab.py, 4M vectors) measured a
-    localCheckpoint'ed (id, double-cast vector) relation 29% SLOWER than
-    replaying the scan — the materialized rows store EXPANDED double
-    arrays (2x the float parquet bytes plus block overhead), while the
-    column-pruned compressed scan parallelizes perfectly and assignment
-    is compute-bound anyway. Unlike the engine's other checkpoint wins,
-    nothing expensive (explode, hash, join) is saved here."""
+    Re-scanning the input per action is DELIBERATE: an r13 A/B probe (4M
+    vectors) measured a localCheckpoint'ed (id, double-cast vector)
+    relation 29% SLOWER than replaying the scan — the materialized rows
+    store EXPANDED double arrays (2x the float parquet bytes plus block
+    overhead), while the column-pruned compressed scan parallelizes
+    perfectly and assignment is compute-bound anyway. Unlike the engine's
+    other checkpoint wins, nothing expensive (explode, hash, join) is
+    saved here."""
     seed = (
         emb.select(F.col(id_col), _dbl(F.col(vec_col)).alias("e"))
         .orderBy(id_col)

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import DELETE_OP, OP_COL, UPDATE_OP
+
 #: columns of a stats table for value column v: n, sum, sumsq, min, max
 _PARTS = ("n", "sum", "sumsq", "min", "max")
 
@@ -558,10 +560,10 @@ def _signed_images(
     parse once per branch (a union's children are independent
     subtrees; the JSON parse is the expensive node), which doubled the
     hot-path cost of every current-state fold."""
-    op = F.col("op")
+    op = F.col(OP_COL)
     before = F.col(before_col)
     a_entry = F.when(
-        op != "d",
+        op != DELETE_OP,
         F.struct(
             *[F.col(k).alias(k) for k in keys],
             F.col(value_col).cast(cast).alias("v"),
@@ -569,7 +571,7 @@ def _signed_images(
         ),
     )
     r_entry = F.when(
-        op.isin("u", "d") & before.isNotNull(),
+        op.isin(UPDATE_OP, DELETE_OP) & before.isNotNull(),
         F.struct(
             *[before[k].alias(k) for k in keys],
             before[value_col].cast(cast).alias("v"),

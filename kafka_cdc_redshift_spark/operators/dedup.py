@@ -24,10 +24,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: the changelog vocabulary every CDC format emits (sources/envelopes):
-#: the change-type column and its delete code, the event time, and the
-#: arrival position that breaks equal-time ties
+#: the change-type column and its delete and update codes, the event time,
+#: and the arrival position that breaks equal-time ties
 OP_COL = "op"
 DELETE_OP = "d"
+UPDATE_OP = "u"
 TS_COL = "ts_ms"
 TIEBREAK_COL = "data_index_aws"
 #: the bookkeeping columns that never land in a merged target

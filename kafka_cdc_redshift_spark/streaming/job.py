@@ -34,8 +34,11 @@ from ..functions import incremental as inc
 from ..functions.membership import bloom_from_hashes, merge_blooms
 from ..operators.dedup import (
     BOOKKEEPING,
+    DELETE_OP,
+    OP_COL,
     TIEBREAK_COL,
     TS_COL,
+    UPDATE_OP,
     latest_deletes,
     lww_dedup,
 )
@@ -51,6 +54,13 @@ from .retrieval_ingest import RetrievalIngest
 from .store import AppendLog, ParquetTargetStore
 
 _log = logging.getLogger(__name__)
+
+
+def _non_deletes(df: DataFrame) -> DataFrame:
+    """The frame's non-delete images, if it carries a change-type column."""
+    if OP_COL not in df.columns:
+        return df
+    return df.filter(F.col(OP_COL) != DELETE_OP)
 
 
 def _bloom_sketch(obs: DataFrame, keys, col: str) -> DataFrame:
@@ -410,8 +420,7 @@ class CdcBatchProcessor:
             v = rule.extra.get(f"quality_{k}")
             if v is not None:
                 kw[k] = float(v) if "len" in k or "ttr" in k else int(v)
-        has_op = "op" in parsed.columns
-        docs = parsed.filter(F.col("op") != "d") if has_op else parsed
+        docs = _non_deletes(parsed)
         flags = gopher_flag_cols(rule.dedup_text_column, **kw)
         flagged = docs.select(
             "*", *[c.alias(n) for n, c in flags.items()]
@@ -432,8 +441,10 @@ class CdcBatchProcessor:
             rejected, f"{rule.target_name}_rejected", batch_id
         )
         passing = flagged.filter(keep).drop(*flags.keys())
-        if has_op:
-            passing = passing.unionByName(parsed.filter(F.col("op") == "d"))
+        if OP_COL in parsed.columns:
+            passing = passing.unionByName(
+                parsed.filter(F.col(OP_COL) == DELETE_OP)
+            )
         return passing
 
     # -- per-table task ----------------------------------------------------
@@ -578,7 +589,7 @@ class CdcBatchProcessor:
                     # delete winner upserts, as in the merge
                     out = lww_dedup(updates, list(rule.primary_key), order)
                     if not rule.skip_delete:
-                        out = out.filter("op != 'd'")
+                        out = out.filter(F.col(OP_COL) != DELETE_OP)
                     out = out.drop(*BOOKKEEPING)  # absent columns: no-op
                 else:
                     out = merge_changes(
@@ -643,14 +654,11 @@ class CdcBatchProcessor:
                 # tombstone pattern (streaming/tombstones.py); replay-
                 # idempotent via each log's committed-batch manifest.
                 images = lww_dedup(parsed, list(rule.primary_key), order)
-                has_op = "op" in images.columns
-                docs = (
-                    images.filter(F.col("op") != "d") if has_op else images
-                )
+                docs = _non_deletes(images)
                 tombs = (
-                    images.filter(F.col("op").isin("u", "d"))
+                    images.filter(F.col(OP_COL).isin(UPDATE_OP, DELETE_OP))
                     .select(rule.primary_key[0])
-                    if has_op else None
+                    if OP_COL in images.columns else None
                 )
                 for kind in kinds:
                     self._ingestor(rule, kind).process_batch(
@@ -699,10 +707,7 @@ class CdcBatchProcessor:
         in O(|groups| + |batch|) each, the corpus never rescanned."""
         event, state = _derived_folds(rule, self._format)
         keys = list(rule.stats_group_columns)
-        obs = (
-            parsed.filter(F.col("op") != "d")
-            if "op" in parsed.columns else parsed
-        )
+        obs = _non_deletes(parsed)
         for suffix, field, sketch, fold in event:
             col = getattr(rule, field)
             if sketch is None:  # _topk, ranked by the _cms just folded

@@ -500,7 +500,7 @@ sync_table_list = [\\
     assert store.read(spark, "docs_ndv") is not None
 
 
-def test_bench_round_label_from_explicit_marker():
+def test_bench_round_label_from_explicit_marker(monkeypatch):
     """The bench detail artifact's round label comes from the ONE explicit
     `__spark_entry__.ROUND` marker, never inference (r11 verdict: every
     inference scheme desynced once — BENCH_r* appears mid-round,
@@ -525,6 +525,15 @@ def test_bench_round_label_from_explicit_marker():
         bench.default_detail_path()
         == f"BENCH_DETAIL_r{entry.ROUND:02d}_c{cpus}.json"
     )
+    # the unqualified name the per-query PERF table reads: written by a
+    # 32-core (or unsized) run only, never by the low-core scaling run
+    unqualified = f"BENCH_DETAIL_r{entry.ROUND:02d}.json"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert bench.round_detail_path() == unqualified
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert bench.round_detail_path() == unqualified
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert bench.round_detail_path() is None
 
     here = os.path.dirname(os.path.abspath(bench.__file__))
     nums = [

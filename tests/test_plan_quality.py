@@ -498,7 +498,7 @@ def test_collocations_shared_census_and_mapside_totals(spark, sf_dir):
 def test_kmeans_rescans_rather_than_checkpointing(spark, sf_dir):
     """r13 adjudication pin: kmeans deliberately REPLAYS the embeddings
     scan per Lloyd action instead of checkpointing a prepared relation —
-    the A/B probe (plans/r13/probe_kmeans_ab.py, 4M vectors) measured
+    the A/B probe (4M vectors) measured
     the checkpointed shape 29% slower (materialized double arrays cost
     more than the compressed column-pruned scan; nothing expensive is
     saved). The final plan must read the parquet scan, not a
